@@ -9,7 +9,6 @@ import org.apache.spark.sql.SparkSession
   * query) plus encode/decode/verify/stats over parquet inputs.
   *
   *   spark-submit --class graft.Cli app.jar encode <in.parquet> <out.btr> [rangeCols,...]
-  *   spark-submit --class graft.Cli app.jar encode-blocks <in.parquet> <out.btr> [rangeCols,...]
   *   spark-submit --class graft.Cli app.jar decode <in.btr> <out.parquet> [col,...]
   *   spark-submit --class graft.Cli app.jar from-csv <in.csv> <out.btr> <name:type,...>
   *   spark-submit --class graft.Cli app.jar to-csv <in.btr> <out.csv>
@@ -35,12 +34,6 @@ object Cli {
 
   private def run(spark: SparkSession, args: Array[String]): Unit = args(0) match {
     case "encode" =>
-      val rangeCols = if (args.length > 3) args(3).split(",").toSeq else Nil
-      val m = BtrTable.write(spark.read.parquet(args(1)), args(2),
-        BtrConfig.default, rangeCols = rangeCols)
-      println(s"encoded rows=${m.numRows} raw=${m.rawBytes} enc=${m.encBytes} ratio=${m.ratio}")
-    case "encode-blocks" =>
-      // raw block-file layout read back via spark.read.format("btr");
       // range keys shuffle COMPRESSED frames (the 100 TB ingest shape)
       val rangeCols = if (args.length > 3) args(3).split(",").toSeq else Nil
       val m = graft.engine.BlockFiles.write(spark.read.parquet(args(1)), args(2),
@@ -96,7 +89,7 @@ object Cli {
             val rows = e.cols.headOption.map(_.rows).getOrElse(-1L)
             println(s"  ${e.file}${if (rows >= 0) s" rows=$rows" else ""}: ${zs.mkString(" ")}")
           }
-        case None => println("file-level zone index: none (parts layout or pre-index table)")
+        case None => println("file-level zone index: none (no zoned block file, or a pre-index table)")
       }
     case "verify" =>
       import org.apache.spark.sql.functions._

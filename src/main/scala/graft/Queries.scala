@@ -146,9 +146,10 @@ object Queries {
       .toDF("doc_id", "text")
   }
 
-  /** Full engine path: encode documents into a btr dir (parts parquet +
-    * manifest), decode via the groupByKey chunk reassembly, return the
-    * decoded table. Oracle = identity SELECT.
+  /** Full engine path: encode documents into a btr dir through the public
+    * BtrTable API (block files + manifest, raw-row range exchange), decode
+    * through the DSv2 source, return the decoded table. Oracle = identity
+    * SELECT.
     */
   private def rtEngine(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents").select(
@@ -162,10 +163,11 @@ object Queries {
   }
 
   /** Codec-choice/ratio health over the encoded documents table (north
-    * rule: metrics persisted per column). Emitted as per-column BOOLEANS
-    * with conservative floors so the oracle is a closed-form VALUES table;
-    * the raw ratios/schemes stay available via BtrTable.stats (asserted in
-    * EngineSpec against FIXTURES.md targets).
+    * rule: metrics persisted per column — BtrTable.stats reads the
+    * per-column totals the write folded into the manifest). Emitted as
+    * per-column BOOLEANS with conservative floors so the oracle is a
+    * closed-form VALUES table; the raw ratios/schemes stay available via
+    * BtrTable.stats.
     */
   private def encStats(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents").select(
@@ -624,11 +626,12 @@ object Queries {
     * files, and every later scan of it into 32+ tasks of pure per-file
     * fixed cost; a 100 TB input still fans out to the full width.
     */
-  private def scratchPartitions(s: SparkSession, input: DataFrame): Int = {
+  private[graft] def scratchPartitions(s: SparkSession, input: DataFrame): Int = {
     val bytes = input.queryExecution.optimizedPlan.stats.sizeInBytes
     val target = BigInt(writePartitionBytes(s).toLong)
-    val n = ((bytes + target - 1) / target).toInt
-    math.max(1, math.min(n, s.sessionState.conf.numShufflePartitions))
+    // clamp in BigInt space: unknown size stats report Long.MaxValue, whose
+    // quotient does not fit an Int
+    ((bytes + target - 1) / target).max(1).min(s.sessionState.conf.numShufflePartitions).toInt
   }
 
   private def nullDocs(s: SparkSession, dir: String): DataFrame =

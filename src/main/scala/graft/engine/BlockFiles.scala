@@ -1,10 +1,12 @@
 package graft.engine
 
 import graft.codec.BtrConfig
-import graft.format.{BtrManifest, ColumnMeta, CompressedPart, FileZone, ZoneAccumulator, ZoneIndex}
+import graft.format.{BtrManifest, ColumnMeta, ColumnStat, CompressedPart, FileZone, ZoneAccumulator, ZoneIndex}
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.connector.write.WriterCommitMessage
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.graftshim.ConfShim
 import org.apache.hadoop.fs.Path
 import java.nio.charset.StandardCharsets.UTF_8
@@ -56,23 +58,28 @@ object BlockFiles {
   final val Magic = 0x53525442 // "BTRS" little-endian
   final val Version = 6
 
-  /** One encoded chunk as a self-contained frame plus its stats — the unit
-    * that the compressed range exchange shuffles (a frame is ~ratio×
-    * smaller than the rows it encodes).
+  /** One encoded chunk as a self-contained frame plus its per-column stats
+    * (one chunk each) — the unit that the compressed range exchange
+    * shuffles (a frame is ~ratio× smaller than the rows it encodes).
     */
-  final case class Frame(bytes: Array[Byte], rawBytes: Long, encBytes: Long, numRows: Int)
+  final case class Frame(bytes: Array[Byte], numRows: Int, cols: Array[ColumnStat])
 
-  /** One block file's write result: totals plus the file-level zone fold
-    * (None when any chunk lacked a zone for every column).
+  /** One block file's write result, and the task commit message of the
+    * DSv2 writers: rows, the file-level zone fold (None when any chunk
+    * lacked a zone for every column) and the per-column stats fold (empty
+    * when the task wrote no chunk).
     */
   final case class BlockWriteStat(
-      pid: Int, rawBytes: Long, encBytes: Long, numRows: Long,
-      zones: Option[IndexedSeq[graft.format.ColZone]])
+      pid: Int, numRows: Long,
+      zones: Option[IndexedSeq[graft.format.ColZone]],
+      cols: IndexedSeq[ColumnStat] = IndexedSeq.empty)
+    extends WriterCommitMessage {
+    def rawBytes: Long = cols.map(_.rawBytes).sum
+    def encBytes: Long = cols.map(_.encBytes).sum
+  }
 
   /** Serialize one chunk's column parts into a v5 frame (CRC'd, nullable). */
   def frameChunk(chunkParts: Seq[CompressedPart]): Frame = {
-    var rawBytes = 0L
-    var encBytes = 0L
     var size = 4 + 1 + 4 // numRows, nCols, headerCrc
     val zones = new Array[Array[Byte]](chunkParts.length)
     var i = 0
@@ -80,8 +87,6 @@ object BlockFiles {
       zones(i) = zonePayload(p) // includes its leading zoneKind byte
       size += 1 + 4 + 4 + zones(i).length + 4 + p.bytes.length
       if (p.nullCount > 0) size += (p.numRows + 7) >> 3
-      rawBytes += p.rawBytes
-      encBytes += p.bytes.length
       i += 1
     }
     val out = new Array[Byte](size)
@@ -136,7 +141,8 @@ object BlockFiles {
       o += p.bytes.length
     }
     require(o == size, s"frame size mismatch: wrote $o of $size")
-    Frame(out, rawBytes, encBytes, chunkParts.head.numRows)
+    Frame(out, numRows, chunkParts.map(p =>
+      ColumnStat(p.rawBytes, p.bytes.length, 1L, p.numRows, Seq(p.scheme))).toArray)
   }
 
   /** [u8 zoneKind][payload] for one part (see frame doc above). */
@@ -237,30 +243,45 @@ object BlockFiles {
           if (rows.isEmpty) Iterator.empty
           else {
             val tc = TaskContext.get()
-            val frames = new BtrEncoder.PartitionEncodeIterator(rows, schema, colTypes, cfg)
-              .grouped(schema.length).map(frameChunk)
-            Iterator.single(writeFrames(
-              ConfShim.conf(confB), blocksDir, tc.partitionId(), tc.taskAttemptId(), frames))
+            Iterator.single(writeOneBlockFile(ConfShim.conf(confB), blocksDir,
+              tc.partitionId(), tc.taskAttemptId(), rows, schema, colTypes, cfg))
           }
         }.collect()
       }
 
-    // file-level zone index first, manifest (the publish marker) last
-    val entries = stats.collect {
-      case s if s.numRows > 0 && s.zones.isDefined => FileZone(f"part-${s.pid}%05d", s.zones.get)
+    publish(spark, dir, schema, colTypes, cfg, stats.toSeq)
+  }
+
+  /** Publish a written table: the file-level zone index first, the manifest
+    * (the publish marker readers gate on) last, with totals and per-column
+    * stats summed over the block files' write results. Shared by every
+    * write path: this RDD writer, the DSv2 batch commit and each streaming
+    * epoch commit.
+    */
+  private[graft] def publish(
+      spark: SparkSession,
+      dir: String,
+      schema: StructType,
+      colTypes: Array[Int],
+      cfg: BtrConfig,
+      stats: Seq[BlockWriteStat]): BtrManifest = {
+    val written = stats.filter(_.numRows > 0)
+    val entries = written.collect {
+      case s if s.zones.isDefined => FileZone(f"part-${s.pid}%05d", s.zones.get)
     }
     if (entries.nonEmpty)
-      ZoneIndex.write(spark.sparkContext.hadoopConfiguration, dir, entries.toSeq)
-
+      ZoneIndex.write(spark.sparkContext.hadoopConfiguration, dir, entries)
     val m = BtrManifest(
       columns = schema.fields.zip(colTypes).map { case (f, t) => ColumnMeta(f.name, t, f.nullable) }.toSeq,
-      numPartitions = stats.length,
+      numPartitions = written.length,
       blockSize = cfg.blockSize,
       maxCascadeDepth = cfg.maxCascadeDepth,
-      numRows = stats.map(_.numRows).sum,
-      rawBytes = stats.map(_.rawBytes).sum,
-      encBytes = stats.map(_.encBytes).sum,
-      completedPartitions = Seq(0))
+      numRows = written.map(_.numRows).sum,
+      rawBytes = written.map(_.rawBytes).sum,
+      encBytes = written.map(_.encBytes).sum,
+      completedPartitions = Seq(0),
+      columnStats = written.map(_.cols).reduceOption((a, b) => a.zip(b).map { case (x, y) => x + y })
+        .getOrElse(colTypes.toSeq.map(_ => ColumnStat(0L, 0L, 0L, 0L, Nil))))
     BtrTable.writeManifest(spark, dir, m)
     m
   }
@@ -373,10 +394,9 @@ object BlockFiles {
         val enc = new BtrEncoder.PartitionEncodeIterator(
           rows, schema, colTypes, cfg, keyIdx)
         enc.grouped(schema.length).zipWithIndex.map { case (chunkParts, ci) =>
-          val f = frameChunk(chunkParts)
           // key captured from the chunk's FIRST row before its buffers were
           // reused (PartitionEncodeIterator.chunkKey)
-          (enc.chunkKey(ci) :+ (ci % 16).toByte, (f.bytes, f.rawBytes, f.encBytes, f.numRows))
+          (enc.chunkKey(ci) :+ (ci % 16).toByte, frameChunk(chunkParts))
         }
       }
     }
@@ -384,9 +404,8 @@ object BlockFiles {
       if (it.isEmpty) Iterator.empty
       else {
         val tc = TaskContext.get()
-        val fs = it.map { case (_, (bytes, raw, enc, rows)) => Frame(bytes, raw, enc, rows) }
         Iterator.single(writeFrames(
-          ConfShim.conf(confB), blocksDir, tc.partitionId(), tc.taskAttemptId(), fs))
+          ConfShim.conf(confB), blocksDir, tc.partitionId(), tc.taskAttemptId(), it.map(_._2)))
       }
     }.collect()
   }
@@ -440,36 +459,62 @@ object BlockFiles {
       pid: Int,
       attemptId: Long,
       frames: Iterator[Frame]): BlockWriteStat = {
-    val fs = new Path(blocksDir).getFileSystem(conf)
-    val finalPath = new Path(blocksDir, f"part-$pid%05d")
-    val tmpPath = new Path(blocksDir, f".tmp-part-$pid%05d-attempt-$attemptId")
-    val out = fs.create(tmpPath, true)
-    var rawBytes = 0L
-    var encBytes = 0L
-    var numRows = 0L
-    val zoneAcc = new ZoneAccumulator
-    var committed = false
-    try {
-      out.write(Array[Byte](
-        (Magic & 0xff).toByte, ((Magic >>> 8) & 0xff).toByte,
-        ((Magic >>> 16) & 0xff).toByte, ((Magic >>> 24) & 0xff).toByte,
-        Version.toByte))
-      frames.foreach { f =>
-        out.write(f.bytes)
-        zoneAcc.fold(f.bytes)
-        rawBytes += f.rawBytes
-        encBytes += f.encBytes
-        numRows += f.numRows
+    val w = new BlockFileWriter(conf, blocksDir, pid, attemptId)
+    try { frames.foreach(w.append); w.commit() }
+    finally w.close()
+  }
+
+  /** One task attempt's block file, fed a frame at a time: the file is
+    * created under an attempt-unique temp name with the first frame (an
+    * empty partition writes no file), each frame is folded into the zone
+    * and per-column stats, and `commit` renames the file into place if
+    * absent. `close` drops an uncommitted temp file. Shared by writeFrames
+    * and the push-shaped DSv2 DataWriter.
+    */
+  private[graft] final class BlockFileWriter(
+      conf: org.apache.hadoop.conf.Configuration,
+      blocksDir: String,
+      pid: Int,
+      attemptId: Long) {
+    private val fs = new Path(blocksDir).getFileSystem(conf)
+    private val finalPath = new Path(blocksDir, f"part-$pid%05d")
+    private val tmpPath = new Path(blocksDir, f".tmp-part-$pid%05d-attempt-$attemptId")
+    private var out: org.apache.hadoop.fs.FSDataOutputStream = _
+    private var numRows = 0L
+    private val zoneAcc = new ZoneAccumulator
+    private var cols: Array[ColumnStat] = Array.empty
+
+    def append(f: Frame): Unit = {
+      if (out == null) {
+        out = fs.create(tmpPath, true)
+        out.write(Array[Byte](
+          (Magic & 0xff).toByte, ((Magic >>> 8) & 0xff).toByte,
+          ((Magic >>> 16) & 0xff).toByte, ((Magic >>> 24) & 0xff).toByte,
+          Version.toByte))
       }
-      out.close()
-      committed = commitRename(conf, fs, tmpPath, finalPath)
-      if (!committed)
-        sys.error(s"could not commit $tmpPath -> $finalPath")
-    } finally {
-      try out.close() catch { case _: java.io.IOException => () }
+      out.write(f.bytes)
+      zoneAcc.fold(f.bytes)
+      cols = if (cols.isEmpty) f.cols else cols.zip(f.cols).map { case (a, b) => a + b }
+      numRows += f.numRows
+    }
+
+    def commit(): BlockWriteStat = {
+      if (out != null) {
+        out.close()
+        out = null
+        if (!commitRename(conf, fs, tmpPath, finalPath))
+          sys.error(s"could not commit $tmpPath -> $finalPath")
+      }
+      BlockWriteStat(pid, numRows, zoneAcc.result(), cols.toIndexedSeq)
+    }
+
+    def close(): Unit = {
+      if (out != null) {
+        try out.close() catch { case _: java.io.IOException => () }
+        out = null
+      }
       if (fs.exists(tmpPath)) fs.delete(tmpPath, false)
     }
-    BlockWriteStat(pid, rawBytes, encBytes, numRows, zoneAcc.result())
   }
 
   /** Commit via rename-if-absent: FileContext's default rename FAILS when

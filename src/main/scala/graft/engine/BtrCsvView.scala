@@ -44,8 +44,8 @@ final class BtrCsvView(spark: SparkSession, dir: String, cacheLimit: Int = 8 << 
   /** Rendered byte length of each Spark partition (lazy, one distributed
     * counting job). This is the backward-seek index: the reference's
     * realtime fs replays from row 0 on every backward seek
-    * (/root/reference/src/mount/realtime_fs.rs:117-124); here the manifest-
-    * planned partitioning lets a seek re-enter at the right partition, so a
+    * (its src/mount/realtime_fs.rs:117-124); here the scan's one partition
+    * per block file lets a seek re-enter at the right partition, so a
     * backward read costs O(one partition), not O(table).
     */
   private var partLens: Array[Long] = _

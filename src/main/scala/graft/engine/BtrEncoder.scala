@@ -3,11 +3,10 @@ package graft.engine
 import graft.codec.{BtrConfig, ColType}
 import graft.format.CompressedPart
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 
-/** Distributed encode: DataFrame → Dataset[CompressedPart].
+/** Per-task encode: InternalRows → CompressedParts, chunk by chunk.
   *
   * Spark-first re-expression of the reference's Btr::from_csv encode path
   * (/root/reference/src/btrblocks.rs:382-539). The reference parallelizes
@@ -33,6 +32,12 @@ object BtrEncoder {
     case DoubleType  => Some(ColType.Double)
     case StringType  => Some(ColType.String)
     case _           => None
+  }
+
+  def sparkType(colType: Int): DataType = colType match {
+    case ColType.Integer => IntegerType
+    case ColType.Double  => DoubleType
+    case ColType.String  => StringType
   }
 
   def validateSchema(schema: StructType): Array[Int] =
@@ -128,7 +133,7 @@ object BtrEncoder {
     /** Encode the buffered rows (one part per column) and reset; buffers
       * are reused across chunks, no reallocation.
       */
-    def build(partitionId: Int, chunkIdx: Int, firstRow: Long): Array[CompressedPart] = {
+    def build(): Array[CompressedPart] = {
       val len = n
       val parts = new Array[CompressedPart](nCols)
       var c = 0
@@ -136,11 +141,11 @@ object BtrEncoder {
         val nw = if (nullCnt(c) > 0) nullWords(c) else null
         parts(c) = colTypes(c) match {
           case ColType.Integer =>
-            ChunkEncoder.encodeInt(partitionId, chunkIdx, firstRow, c, schema(c).name, intBuf(c), len, cfg, nw, nullCnt(c))
+            ChunkEncoder.encodeInt(schema(c).name, intBuf(c), len, cfg, nw, nullCnt(c))
           case ColType.Double =>
-            ChunkEncoder.encodeDouble(partitionId, chunkIdx, firstRow, c, schema(c).name, dblBuf(c), len, cfg, nw, nullCnt(c))
+            ChunkEncoder.encodeDouble(schema(c).name, dblBuf(c), len, cfg, nw, nullCnt(c))
           case ColType.String =>
-            ChunkEncoder.encodeStringSlices(partitionId, chunkIdx, firstRow, c, schema(c).name, strBuf(c).result(), cfg, nw, nullCnt(c))
+            ChunkEncoder.encodeStringSlices(schema(c).name, strBuf(c).result(), cfg, nw, nullCnt(c))
         }
         c += 1
       }
@@ -175,10 +180,8 @@ object BtrEncoder {
       keyCols: Array[Int] = Array.emptyIntArray)
     extends Iterator[CompressedPart] {
 
-    private val partitionId = TaskContext.getPartitionId()
-    private val builder = new ChunkBuilder(schema, colTypes, cfg, s" at partition $partitionId")
-    private var chunkIdx = 0
-    private var firstRow = 0L
+    private val builder =
+      new ChunkBuilder(schema, colTypes, cfg, s" at partition ${TaskContext.getPartitionId()}")
     private var pending: Iterator[CompressedPart] = Iterator.empty
     private val chunkKeys = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
 
@@ -201,11 +204,7 @@ object BtrEncoder {
         if (builder.isEmpty && keyCols.nonEmpty) chunkKeys += captureKey(row)
         builder.add(row)
       }
-      val len = builder.size
-      val parts = builder.build(partitionId, chunkIdx, firstRow)
-      chunkIdx += 1
-      firstRow += len
-      pending = parts.iterator
+      pending = builder.build().iterator
     }
   }
 
@@ -244,25 +243,5 @@ object BtrEncoder {
       k += 1
     }
     out.toByteArray
-  }
-
-  /** Encode every column of `df` into compressed parts. The input's
-    * partitioning is preserved — repartition upstream (see BtrTable.write's
-    * repartitionByRange + salting) to control part layout and skew.
-    */
-  def encodeToParts(df: DataFrame, cfg: BtrConfig = BtrConfig.default): Dataset[CompressedPart] = {
-    val schema = df.schema
-    val colTypes = validateSchema(schema)
-    val spark = df.sparkSession
-    import spark.implicits._
-    // queryExecution.toRdd = the physical plan's InternalRow output, i.e.
-    // mapPartitions minus the Row deserializer (no per-row object tree, no
-    // string transcode). This is the "genuine per-partition imperative
-    // logic" case where dropping below the Dataset API is warranted.
-    val parts = df.queryExecution.toRdd.mapPartitions { rows =>
-      if (rows.isEmpty) Iterator.empty
-      else new PartitionEncodeIterator(rows, schema, colTypes, cfg)
-    }
-    spark.createDataset(parts)
   }
 }

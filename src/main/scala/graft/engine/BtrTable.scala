@@ -1,23 +1,26 @@
 package graft.engine
 
 import graft.codec.BtrConfig
-import graft.format.{BtrManifest, BucketStat, ColumnMeta, CompressedPart}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import graft.format.BtrManifest
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 import org.apache.hadoop.fs.Path
 
-/** The btr-spark "file": a directory of compressed parts (parquet) plus a
-  * JSON manifest — Spark-native analog of the reference's btr directory
-  * (`metadata` + `column{i}_part{j}`, /root/reference/src/btrblocks.rs:668-672).
+/** The btr-spark "file": a directory of raw block files plus a JSON
+  * manifest (graft.format) — Spark-native analog of the reference's btr
+  * directory (`metadata` + `column{i}_part{j}`, reference
+  * src/btrblocks.rs:668-672). This object is the public
+  * table API, a thin caller of the one write core (BlockFiles.write) and
+  * the one read core (the DSv2 `btr` source).
   *
   * Checkpoint/resume (north rule): `writeResumable` splits the input into
-  * deterministic hash buckets, writes each bucket's parts under
-  * `parts/bucket=N/`, and appends the bucket id to the manifest's
-  * completedPartitions after the bucket's parquet commit — a restart skips
-  * completed buckets (anti-join on lineage), so a 100 TB encode killed
-  * mid-run resumes where it stopped. Uses Hadoop FileSystem APIs so the
-  * same code addresses file:/, hdfs:/, s3a:/ (the reference's object-store
-  * matrix, /root/reference/src/util.rs:60-96, comes free from Hadoop).
+  * deterministic hash buckets and writes each as its own `batch=<b>/`
+  * sub-table, published by its manifest — a restart skips the published
+  * buckets, so a 100 TB encode killed mid-run resumes where it stopped.
+  * Uses Hadoop FileSystem APIs so the same code addresses file:/, hdfs:/,
+  * s3a:/ (the reference's object-store matrix, src/util.rs:60-96, comes
+  * free from Hadoop).
   */
 object BtrTable {
   final val ManifestFile = "_btr_manifest.json"
@@ -64,172 +67,89 @@ object BtrTable {
     } finally in.close()
   }
 
+  /** Ids of the `batch=<id>/` sub-tables under `dir` whose manifest is
+    * published, ascending (one glob, independent of table history).
+    */
+  private[graft] def publishedBatches(conf: org.apache.hadoop.conf.Configuration, dir: String): Array[Long] = {
+    val base = new Path(dir)
+    val ms = base.getFileSystem(conf).globStatus(new Path(base, "batch=*/" + ManifestFile))
+    if (ms == null) Array.empty
+    else ms.map(_.getPath.getParent.getName.stripPrefix("batch=").toLong).sorted
+  }
+
+  /** Length k of the contiguous prefix batch=0..k-1 of ascending `ids`: a
+    * batch whose manifest is missing (in flight or crashed) hides itself
+    * and every later batch, so readers never see a gap.
+    */
+  private[graft] def contiguousPrefix(ids: Array[Long]): Long = {
+    var k = 0L
+    while (k < ids.length && ids(k.toInt) == k) k += 1
+    k
+  }
+
   // ------------------------------------------------------------------ write
 
-  /** One-shot encode+write. `rangeCols` triggers an explicit
-    * repartitionByRange (locality: same repo/path ranges share parts) with a
-    * trailing salt column so a single hot key cannot serialize one task —
-    * the skew policy from SURVEY §7.
+  /** One-shot encode+write through the block-file core. `rangeCols` adds
+    * BlockFiles.write's raw-row range exchange (locality: same repo/path
+    * ranges share chunks) with a row-varying salt so a single hot key
+    * cannot serialize one task — the skew policy from SURVEY §7.
     */
   def write(
       df: DataFrame,
       dir: String,
       cfg: BtrConfig = BtrConfig.default,
       rangeCols: Seq[String] = Nil,
-      numPartitions: Int = 0): BtrManifest = {
-    val spark = df.sparkSession
-    val n = if (numPartitions > 0) numPartitions
-            else spark.sessionState.conf.numShufflePartitions
-    val prepared =
-      if (rangeCols.isEmpty) df
-      else {
-        // salt must vary per ROW of a hot key (not per key) so a single hot
-        // (repo, path) cannot serialize one task; hash over all columns is
-        // deterministic (resume/retry-safe) yet row-varying
-        val salted = df.withColumn("__salt", pmod(hash(df.columns.map(col): _*), lit(16)))
-        val keys = rangeCols.map(col) :+ col("__salt")
-        salted.repartitionByRange(n, keys: _*).drop("__salt")
-      }
-    val (parts, obs) = observed(BtrEncoder.encodeToParts(prepared, cfg))
-    parts.write.mode("overwrite").parquet(s"$dir/parts")
-    val s = statsOf(obs)
-    finishManifest(spark, dir, prepared.schema, cfg, Seq(0), s,
-      Seq(BucketStat(0, s._1, s._2, s._3, s._4)))
-  }
+      numPartitions: Int = 0): BtrManifest =
+    BlockFiles.write(df, dir, cfg, rangeCols, numPartitions = numPartitions)
 
-  /** Resumable encode+write over deterministic hash buckets. */
+  /** Resumable encode+write over deterministic hash buckets: bucket b is
+    * one BlockFiles.write into `dir/batch=b/`, and a bucket whose manifest
+    * is already published is skipped, so a restart re-encodes only the
+    * buckets a crash left unpublished. Reads see the buckets as one table
+    * (the source's `batch=*` layout); the returned manifest is their sum.
+    */
   def writeResumable(
       df: DataFrame,
       dir: String,
       cfg: BtrConfig = BtrConfig.default,
       buckets: Int = 8): BtrManifest = {
     val spark = df.sparkSession
-    val schema = df.schema
-    BtrEncoder.validateSchema(schema)
-    val prev: Option[BtrManifest] =
-      if (exists(spark, dir)) Some(readManifest(spark, dir)) else None
-    val done: Set[Int] = prev.map(_.completedPartitions.toSet).getOrElse(Set.empty)
-    val allCols = df.columns.map(col)
-    val bucketed = df.withColumn("__bucket", pmod(hash(allCols: _*), lit(buckets)))
-    var completed = done.toSeq.sorted
-    // per-bucket stats live in the manifest lineage: each bucket's numbers
-    // come from ITS OWN write job (observe metrics, exactly-once), and the
-    // totals are re-derived from the COMPLETED buckets' recorded stats —
-    // a rewound lineage (crash between parquet commit and manifest write)
-    // self-corrects with no re-scan of written parts
-    var statsByBucket: Map[Int, BucketStat] =
-      prev.map(_.bucketStats.map(s => s.bucket -> s).toMap).getOrElse(Map.empty)
-    // manifests from before per-bucket lineage existed have completed
-    // buckets with no stat entry; derive those (once) from the written
-    // parts so resumed totals never undercount
-    val unstated = done.filterNot(statsByBucket.contains)
-    if (unstated.nonEmpty) {
-      val legacy = spark.read.parquet(s"$dir/parts")
-        .filter(col("bucket").isin(unstated.toSeq: _*))
-        .groupBy(col("bucket"))
-        .agg(
-          sum("rawBytes").as("raw"), sum("encBytes").as("enc"),
-          sum(when(col("colIdx") === 0, col("numRows")).otherwise(0L)).as("rows"),
-          sum(when(col("colIdx") === 0 && col("chunkIdx") === 0, 1L).otherwise(0L)).as("nparts"))
-        .collect()
-      legacy.foreach { r =>
-        val b = r.getInt(0)
-        statsByBucket += b -> BucketStat(b, r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
+    BtrEncoder.validateSchema(df.schema)
+    val bucketed = df.withColumn("__bucket", pmod(hash(df.columns.map(col): _*), lit(buckets)))
+    combine((0 until buckets).map { b =>
+      val bdir = s"$dir/batch=$b"
+      try readManifest(spark, bdir)
+      catch {
+        case _: java.io.FileNotFoundException =>
+          BlockFiles.write(bucketed.filter(col("__bucket") === b).drop("__bucket"), bdir, cfg)
       }
-    }
-    def totalsOf(c: Seq[Int]): (Long, Long, Long, Long) =
-      c.flatMap(statsByBucket.get).foldLeft((0L, 0L, 0L, 0L)) { (t, s) =>
-        (t._1 + s.rawBytes, t._2 + s.encBytes, t._3 + s.numRows, t._4 + s.numPartitions)
-      }
-    import spark.implicits._
-    for (b <- 0 until buckets if !done.contains(b)) {
-      val slice = bucketed.filter(col("__bucket") === b).drop("__bucket")
-      // partitionId must be globally unique across buckets: decode groups
-      // chunks by (partitionId, chunkIdx), and each bucket restarts Spark's
-      // partition numbering at 0
-      val (parts, obs) = observed(
-        BtrEncoder.encodeToParts(slice, cfg)
-          .map(p => p.copy(partitionId = p.partitionId * buckets + b)))
-      parts.write.mode("overwrite").parquet(s"$dir/parts/bucket=$b")
-      val s = statsOf(obs)
-      statsByBucket += b -> BucketStat(b, s._1, s._2, s._3, s._4)
-      completed = completed :+ b
-      finishManifest(spark, dir, schema, cfg, completed, totalsOf(completed),
-        completed.flatMap(statsByBucket.get))
-    }
-    readManifest(spark, dir)
+    })
   }
 
-  private def exists(spark: SparkSession, dir: String): Boolean = {
-    val p = new Path(dir, ManifestFile)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  /** Attach manifest-stat metrics to the encode plan: collected DURING the
-    * write job (exactly-once plan-level aggregation, retry-safe), so a
-    * write is ONE job — the former re-scan of the parts parquet was a ~10%
-    * serial fraction after every encode. numPartitions counts the
-    * (colIdx=0, chunkIdx=0) part each non-empty partition emits exactly
-    * once (observe forbids distinct aggregates).
-    */
-  private def observed(parts: Dataset[CompressedPart])
-    : (Dataset[CompressedPart], org.apache.spark.sql.Observation) = {
-    val obs = org.apache.spark.sql.Observation()
-    (parts.observe(obs,
-      sum("rawBytes").as("raw"),
-      sum("encBytes").as("enc"),
-      sum(when(col("colIdx") === 0, col("numRows")).otherwise(0L)).as("rows"),
-      sum(when(col("colIdx") === 0 && col("chunkIdx") === 0, 1L).otherwise(0L)).as("nparts")),
-      obs)
-  }
-
-  /** (raw, enc, rows, nparts) from the completed write's observation. */
-  private def statsOf(obs: org.apache.spark.sql.Observation): (Long, Long, Long, Long) = {
-    val m = obs.get
-    def l(k: String): Long = m.get(k) match {
-      case Some(v: java.lang.Number) => v.longValue
-      case _                         => 0L // empty input: sums observe as null
-    }
-    (l("raw"), l("enc"), l("rows"), l("nparts"))
-  }
-
-  private def finishManifest(
-      spark: SparkSession,
-      dir: String,
-      schema: org.apache.spark.sql.types.StructType,
-      cfg: BtrConfig,
-      completed: Seq[Int],
-      totals: (Long, Long, Long, Long),
-      bucketStats: Seq[BucketStat]): BtrManifest = {
-    val colTypes = BtrEncoder.validateSchema(schema)
-    val cols = schema.fields.zip(colTypes).map { case (f, t) => ColumnMeta(f.name, t, f.nullable) }
-    val m = BtrManifest(
-      columns = cols.toSeq,
-      numPartitions = totals._4.toInt,
-      blockSize = cfg.blockSize,
-      maxCascadeDepth = cfg.maxCascadeDepth,
-      numRows = totals._3,
-      rawBytes = totals._1,
-      encBytes = totals._2,
-      completedPartitions = completed,
-      bucketStats = bucketStats)
-    writeManifest(spark, dir, m)
-    m
-  }
+  /** Totals of sub-table manifests, batch ids as completedPartitions. */
+  private def combine(ms: Seq[BtrManifest]): BtrManifest =
+    ms.head.copy(
+      numPartitions = ms.map(_.numPartitions).sum,
+      numRows = ms.map(_.numRows).sum,
+      rawBytes = ms.map(_.rawBytes).sum,
+      encBytes = ms.map(_.encBytes).sum,
+      completedPartitions = ms.indices,
+      columnStats = ms.map(_.columnStats).reduce((a, b) => a.zip(b).map { case (x, y) => x + y }))
 
   // ------------------------------------------------------------------- read
 
+  /** Decode a btr directory through the DSv2 source, optionally projecting
+    * columns (unknown names throw; pruned columns' bytes are never read).
+    */
   def load(spark: SparkSession, dir: String, columns: Seq[String] = Nil): DataFrame =
-    BtrDecoder.load(spark, dir, columns)
+    project(spark.read.format("btr").load(dir), dir, columns)
 
-  /** Zone-map pruned load: decode only chunks whose per-part min/max on
-    * `pruneCol` intersects [lo, hi]. This is the data-skipping extension
-    * the reference's scan lacks entirely
-    * (/root/reference/src/datafusion.rs:64-73 ignores filters): the
-    * predicate reaches the parts parquet scan as min/max filters, so
-    * non-matching chunks' compressed bytes are never read or decoded.
-    * The caller still applies the row-level filter on the result —
-    * pruning is an IO/decode optimization, not the filter itself.
+  /** Range-pruned load over an INT column: the inclusive [lo, hi] filter
+    * reaches the DSv2 scan, which drops whole block files by the zone
+    * index and whole chunks by their zone maps before decoding, and
+    * returns exactly the rows in range. This is the data-skipping
+    * extension the reference's scan lacks entirely
+    * (its src/datafusion.rs:64-73 ignores filters).
     */
   def loadPruned(
       spark: SparkSession,
@@ -237,127 +157,49 @@ object BtrTable {
       pruneCol: String,
       lo: Long,
       hi: Long,
-      columns: Seq[String] = Nil): DataFrame =
-    loadPrunedImpl(spark, dir, pruneCol, graft.codec.ColType.Integer, "an INT",
-      "minLong", "maxLong", lit(lo), lit(hi), columns)
-
-  /** Zone-map pruned load over a DOUBLE column (inclusive [lo, hi]).
-    * Chunks containing NaN carry no zone and are conservatively kept.
-    */
-  def loadPrunedDouble(
-      spark: SparkSession,
-      dir: String,
-      pruneCol: String,
-      lo: Double,
-      hi: Double,
-      columns: Seq[String] = Nil): DataFrame =
-    loadPrunedImpl(spark, dir, pruneCol, graft.codec.ColType.Double, "a DOUBLE",
-      "minDouble", "maxDouble", lit(lo), lit(hi), columns)
-
-  /** Zone-map pruned load over a STRING column (inclusive [lo, hi] in
-    * binary-collation order). Chunks whose extrema exceed 64 bytes or are
-    * not faithful UTF-8 carry no zone and are conservatively kept.
-    */
-  def loadPrunedString(
-      spark: SparkSession,
-      dir: String,
-      pruneCol: String,
-      lo: String,
-      hi: String,
-      columns: Seq[String] = Nil): DataFrame =
-    loadPrunedImpl(spark, dir, pruneCol, graft.codec.ColType.String, "a STRING",
-      "minStr", "maxStr", lit(lo), lit(hi), columns)
-
-  private def loadPrunedImpl(
-      spark: SparkSession,
-      dir: String,
-      pruneCol: String,
-      expectType: Byte,
-      typeName: String,
-      minColName: String,
-      maxColName: String,
-      lo: Column,
-      hi: Column,
-      columns: Seq[String]): DataFrame = {
-    import spark.implicits._
-    val manifest = readManifest(spark, dir)
+      columns: Seq[String] = Nil): DataFrame = {
+    val df = spark.read.format("btr").load(dir)
     // validate up front: a misspelled or wrongly-typed pruneCol must throw,
-    // not silently prune everything (its zone-map columns would be null)
-    val pruneMeta = manifest.columns.find(_.name == pruneCol).getOrElse(
+    // not silently match nothing
+    val f = df.schema.find(_.name == pruneCol).getOrElse(
       throw new IllegalArgumentException(s"no column '$pruneCol' in $dir"))
-    require(pruneMeta.colType == expectType,
-      s"this zone-map range pruning overload needs $typeName column; '$pruneCol' is type ${pruneMeta.colType}")
-    // same projection validation as load(): unknown names throw
-    val byName = manifest.columns.map(c => c.name -> c).toMap
-    val selected =
-      if (columns.isEmpty) manifest.columns
-      else columns.map(n =>
-        byName.getOrElse(n, throw new IllegalArgumentException(s"no column '$n' in $dir")))
-    val allParts = parts(spark, dir)
-    // Surviving chunks, aggregated to per-partition chunkIdx RANGES. The
-    // collect is bounded by the PARTITION count (not the chunk count — a
-    // 100 TB table has ~10^9 chunks but ~10^4-10^5 partitions), and for
-    // range-partitioned data the survivors are contiguous so the ranges are
-    // tight. A chunk with a null zone map is conservatively kept.
-    val ranges = allParts
-      .filter(col("colName") === pruneCol &&
-        (col(minColName).isNull || col(maxColName).isNull ||
-          !(col(maxColName) < lo || col(minColName) > hi)))
-      .groupBy(col("partitionId"))
-      .agg(min(col("chunkIdx")).as("c0"), max(col("chunkIdx")).as("c1"))
-      .as[(Int, Int, Int)]
-      .collect()
-    val advisory = BtrDecoder.advisoryPartitions(spark, manifest.encBytes)
-    if (ranges.isEmpty)
-      return BtrDecoder.decode(
-        allParts.filter(lit(false)).as[graft.format.CompressedPart], selected, advisory)
-    // Predicate pushed straight into the parts scan — no join, no exchange.
-    // With very many partitions a giant OR would choke Catalyst, so beyond
-    // a cap we fall back to the partition-id envelope plus the global chunk
-    // envelope (weaker pruning, still no join).
-    val pred =
-      if (ranges.length <= 256)
-        ranges.map { case (p, c0, c1) =>
-          col("partitionId") === p && col("chunkIdx").between(c0, c1)
-        }.reduce(_ || _)
-      else {
-        val ps = ranges.map(_._1)
-        col("partitionId").between(ps.min, ps.max) &&
-          col("chunkIdx").between(ranges.map(_._2).min, ranges.map(_._3).max)
-      }
-    BtrDecoder.decode(allParts.filter(pred).as[graft.format.CompressedPart], selected, advisory)
+    require(f.dataType == IntegerType,
+      s"zone-map range pruning needs an INT column; '$pruneCol' is ${f.dataType.sql}")
+    project(df.where(ref(pruneCol).between(lo, hi)), dir, columns)
   }
 
-  def parts(spark: SparkSession, dir: String): Dataset[CompressedPart] = {
-    import spark.implicits._
-    import org.apache.spark.sql.types.{BinaryType, DoubleType, IntegerType, LongType}
-    // CompressedPart gained defaulted fields across rounds (nulls, sums);
-    // tables written before a field existed lack its parquet column — add
-    // it as its default so one Dataset type reads every generation
-    val raw = spark.read.parquet(s"$dir/parts")
-    val defaults: Seq[(String, org.apache.spark.sql.Column)] = Seq(
-      "nullCount" -> lit(0).cast(IntegerType),
-      "nullBits" -> lit(null).cast(BinaryType),
-      "sumLong" -> lit(null).cast(LongType),
-      "sumDouble" -> lit(null).cast(DoubleType))
-    val have = raw.columns.toSet
-    defaults.foldLeft(raw) { case (df, (n, c)) =>
-      if (have(n)) df else df.withColumn(n, c)
-    }.as[CompressedPart]
-  }
+  private def ref(name: String): Column = col(s"`${name.replace("`", "``")}`")
 
-  /** Per-column codec-choice/ratio metrics (north rule: persisted metrics).
-    * Returned as a DataFrame so it can be written alongside the manifest.
+  private def project(df: DataFrame, dir: String, columns: Seq[String]): DataFrame =
+    if (columns.isEmpty) df
+    else df.select(columns.map { n =>
+      if (!df.columns.contains(n)) throw new IllegalArgumentException(s"no column '$n' in $dir")
+      ref(n)
+    }: _*)
+
+  /** Per-column codec-choice/ratio metrics (north rule: persisted metrics),
+    * read from the manifest's per-column stats — no scan. A `batch=*`
+    * table sums its contiguous published batches. Returned as a DataFrame
+    * so it can be written alongside the manifest.
     */
-  def stats(spark: SparkSession, dir: String): DataFrame =
-    parts(spark, dir)
-      .groupBy(col("colName"))
-      .agg(
-        sum("rawBytes").as("raw_bytes"),
-        sum("encBytes").as("enc_bytes"),
-        round(sum("rawBytes") / sum("encBytes"), 3).as("ratio"),
-        count(lit(1)).as("n_parts"),
-        sum("numRows").as("n_values"),
-        sort_array(collect_set(col("scheme"))).as("schemes"))
+  def stats(spark: SparkSession, dir: String): DataFrame = {
+    val m =
+      try readManifest(spark, dir)
+      catch {
+        case e: java.io.FileNotFoundException =>
+          val n = contiguousPrefix(publishedBatches(spark.sparkContext.hadoopConfiguration, dir))
+          if (n == 0) throw e
+          combine((0L until n).map(b => readManifest(spark, s"$dir/batch=$b")))
+      }
+    require(m.columnStats.length == m.columns.length,
+      s"$dir has no per-column stats in its manifest (written before they existed); rewrite it")
+    import spark.implicits._
+    m.columns.zip(m.columnStats).collect {
+      case (c, s) if s.chunks > 0 => (c.name, s.rawBytes, s.encBytes, s.chunks, s.rows, s.schemes)
+    }.toDF("colName", "raw_bytes", "enc_bytes", "n_parts", "n_values", "schemes")
+      .select(col("colName"), col("raw_bytes"), col("enc_bytes"),
+        round(col("raw_bytes") / col("enc_bytes"), 3).as("ratio"),
+        col("n_parts"), col("n_values"), col("schemes"))
       .orderBy("colName")
+  }
 }

@@ -32,8 +32,7 @@ object ChunkEncoder {
     nullWords != null && ((nullWords(i >> 6) >>> (i & 63)) & 1L) == 1L
 
   def encodeInt(
-      partitionId: Int, chunkIdx: Int, firstRow: Long,
-      colIdx: Int, colName: String,
+      colName: String,
       v: Array[Int], len: Int, cfg: BtrConfig,
       nullWords: Array[Long] = null, nullCount: Int = 0): CompressedPart = {
     val out = new BufWriter(len * 2 + 64)
@@ -55,8 +54,8 @@ object ChunkEncoder {
     }
     val hasRange = nullCount < len && len > 0
     CompressedPart(
-      partitionId, chunkIdx, firstRow, len, colIdx, colName, ColType.Integer,
-      IntCodec.describe(new BufReader(bytes)), 4L * len, bytes.length, bytes,
+      len, colName, ColType.Integer,
+      IntCodec.describe(new BufReader(bytes)), 4L * len, bytes,
       if (hasRange) Some(mn) else None, if (hasRange) Some(mx) else None,
       None, None, None, None,
       nullCount, bitmapBytes(nullWords, nullCount, len),
@@ -64,8 +63,7 @@ object ChunkEncoder {
   }
 
   def encodeDouble(
-      partitionId: Int, chunkIdx: Int, firstRow: Long,
-      colIdx: Int, colName: String,
+      colName: String,
       v: Array[Double], len: Int, cfg: BtrConfig,
       nullWords: Array[Long] = null, nullCount: Int = 0): CompressedPart = {
     val out = new BufWriter(len * 4 + 64)
@@ -95,8 +93,8 @@ object ChunkEncoder {
     }
     val hasRange = len > 0 && !sawNaN && nullCount < len && mn <= mx
     CompressedPart(
-      partitionId, chunkIdx, firstRow, len, colIdx, colName, ColType.Double,
-      DoubleCodec.describe(new BufReader(bytes)), 8L * len, bytes.length, bytes,
+      len, colName, ColType.Double,
+      DoubleCodec.describe(new BufReader(bytes)), 8L * len, bytes,
       None, None,
       if (hasRange) Some(mn) else None, if (hasRange) Some(mx) else None,
       None, None,
@@ -106,8 +104,7 @@ object ChunkEncoder {
 
   /** Arena-based string chunk encode (the engine's hot path). */
   def encodeStringSlices(
-      partitionId: Int, chunkIdx: Int, firstRow: Long,
-      colIdx: Int, colName: String,
+      colName: String,
       s: StrSlices, cfg: BtrConfig,
       nullWords: Array[Long] = null, nullCount: Int = 0): CompressedPart = {
     val len = s.count
@@ -130,8 +127,8 @@ object ChunkEncoder {
         (utf8Faithful(s.copy(mn)), utf8Faithful(s.copy(mx)))
       else (None, None))
     CompressedPart(
-      partitionId, chunkIdx, firstRow, len, colIdx, colName, ColType.String,
-      StringCodec.describeBlock(bytes), raw, bytes.length, bytes,
+      len, colName, ColType.String,
+      StringCodec.describeBlock(bytes), raw, bytes,
       None, None, None, None, minS, maxS,
       nullCount, bitmapBytes(nullWords, nullCount, len))
   }
@@ -156,8 +153,7 @@ object ChunkEncoder {
   }
 
   def encodeString(
-      partitionId: Int, chunkIdx: Int, firstRow: Long,
-      colIdx: Int, colName: String,
+      colName: String,
       v: Array[Array[Byte]], len: Int, cfg: BtrConfig): CompressedPart = {
     var raw = 0L
     var i = 0
@@ -179,8 +175,8 @@ object ChunkEncoder {
         (utf8Faithful(mn), utf8Faithful(mx))
       else (None, None))
     CompressedPart(
-      partitionId, chunkIdx, firstRow, len, colIdx, colName, ColType.String,
-      StringCodec.describeBlock(bytes), raw, bytes.length, bytes,
+      len, colName, ColType.String,
+      StringCodec.describeBlock(bytes), raw, bytes,
       None, None, None, None, minS, maxS)
   }
 }

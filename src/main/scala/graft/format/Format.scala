@@ -1,27 +1,29 @@
 package graft.format
 
 /** On-disk btr-spark format: a directory holding
-  *   - `parts/` — parquet Dataset[CompressedPart] (one row per column-chunk)
-  *   - `_btr_manifest.json` — schema + config + lineage + stats
+  *   - `blocks/part-NNNNN` — one raw block file per writer task, a sequence
+  *     of CRC'd v6 chunk frames with per-column zone maps (BlockFiles)
+  *   - `_btr_zones.bin` — the file-level zone index (ZoneIndex)
+  *   - `_btr_manifest.json` — schema + config + stats, the publish marker
+  * or, for incremental and resumable writes, `batch=<id>/` sub-tables of
+  * that same shape, read as the contiguous published prefix.
   *
   * Spark-native re-expression of the reference's btr directory
   * (`metadata` + `column{i}_part{j}` blobs, /root/reference/src/btrblocks.rs:668-672,
   * metadata layout :121-199). We keep real column names in the manifest — the
   * reference loses them (/root/reference/src/btrblocks.rs:181-198) — and add
-  * per-part zone maps (min/max) the reference lacks, enabling part pruning
+  * per-chunk zone maps (min/max) the reference lacks, enabling chunk pruning
   * before decode.
+  *
+  * `CompressedPart` is the in-memory result of encoding one column of one
+  * chunk; `BlockFiles.frameChunk` serializes a chunk's parts into a frame.
   */
 final case class CompressedPart(
-    partitionId: Int,
-    chunkIdx: Int,
-    firstRow: Long, // offset within the encode partition
     numRows: Int,
-    colIdx: Int,
     colName: String,
     colType: Int, // ColType: 0=int, 1=double, 2=string
     scheme: String, // human-readable scheme tree (lineage/metrics)
     rawBytes: Long,
-    encBytes: Long,
     bytes: Array[Byte],
     // zone maps (nullable; only for the matching type, strings <= 64 chars;
     // with nulls present, extrema cover the NON-NULL values only)
@@ -48,13 +50,16 @@ final case class CompressedPart(
 
 final case class ColumnMeta(name: String, colType: Int, nullable: Boolean = false)
 
-/** Per-bucket write stats, persisted in the manifest lineage (north rule:
-  * per-partition lineage + metrics). Totals are derived from the COMPLETED
-  * buckets' recorded stats, never by re-scanning written parts — so a
-  * rewound/crashed lineage stays self-consistent.
+/** Per-column write totals (north rule: persisted codec-choice metrics):
+  * folded per block file next to the zone fold and summed into the
+  * manifest, so `BtrTable.stats` reads them without scanning the data.
   */
-final case class BucketStat(
-    bucket: Int, rawBytes: Long, encBytes: Long, numRows: Long, numPartitions: Long)
+final case class ColumnStat(
+    rawBytes: Long, encBytes: Long, chunks: Long, rows: Long, schemes: Seq[String]) {
+  def +(o: ColumnStat): ColumnStat =
+    ColumnStat(rawBytes + o.rawBytes, encBytes + o.encBytes, chunks + o.chunks,
+      rows + o.rows, (schemes ++ o.schemes).distinct.sorted)
+}
 
 /** Manifest mirroring the reference's FileMetadata{num_columns, num_chunks,
   * parts} (/root/reference/src/btrblocks.rs:121-199) plus checkpoint lineage
@@ -69,7 +74,7 @@ final case class BtrManifest(
     rawBytes: Long,
     encBytes: Long,
     completedPartitions: Seq[Int],
-    bucketStats: Seq[BucketStat] = Nil) {
+    columnStats: Seq[ColumnStat] = Nil) { // index-aligned with columns
   def ratio: Double = if (encBytes == 0) 0.0 else rawBytes.toDouble / encBytes
 }
 
@@ -91,14 +96,14 @@ object BtrManifest {
     val done = m.completedPartitions.mkString("[", ",", "]")
     // inner keys deliberately differ from the top-level field names: the
     // minimal parser matches fields by first regex occurrence
-    val stats = m.bucketStats
-      .map(s => s"""{"b":${s.bucket},"raw":${s.rawBytes},"enc":${s.encBytes},""" +
-        s""""rows":${s.numRows},"nparts":${s.numPartitions}}""")
+    val stats = m.columnStats
+      .map(s => s"""{"raw":${s.rawBytes},"enc":${s.encBytes},"chunks":${s.chunks},""" +
+        s""""rows":${s.rows},"schemes":${s.schemes.map(x => s""""${esc(x)}"""").mkString("[", ",", "]")}}""")
       .mkString("[", ",", "]")
     s"""{"columns":$cols,"numPartitions":${m.numPartitions},"blockSize":${m.blockSize},""" +
       s""""maxCascadeDepth":${m.maxCascadeDepth},"numRows":${m.numRows},""" +
       s""""rawBytes":${m.rawBytes},"encBytes":${m.encBytes},"completedPartitions":$done,""" +
-      s""""bucketStats":$stats}"""
+      s""""columnStats":$stats}"""
   }
 
   /** Minimal JSON parse (manifest is machine-written, flat, known shape). */
@@ -122,12 +127,13 @@ object BtrManifest {
       .filter(_.nonEmpty)
       .map(_.split(",").map(_.trim.toInt).toSeq)
       .getOrElse(Seq.empty)
+    val str = "\"((?:[^\"\\\\]|\\\\.)*)\""
     val statRe =
-      ("\\{\"b\":(-?\\d+),\"raw\":(-?\\d+),\"enc\":(-?\\d+)," +
-        "\"rows\":(-?\\d+),\"nparts\":(-?\\d+)\\}").r
+      ("\\{\"raw\":(-?\\d+),\"enc\":(-?\\d+),\"chunks\":(-?\\d+)," +
+        "\"rows\":(-?\\d+),\"schemes\":\\[((?:" + str + ",?)*)\\]\\}").r
     val stats = statRe.findAllMatchIn(json).map(m =>
-      BucketStat(m.group(1).toInt, m.group(2).toLong, m.group(3).toLong,
-        m.group(4).toLong, m.group(5).toLong)).toSeq
+      ColumnStat(m.group(1).toLong, m.group(2).toLong, m.group(3).toLong, m.group(4).toLong,
+        str.r.findAllMatchIn(m.group(5)).map(x => unesc(x.group(1))).toSeq)).toSeq
     BtrManifest(
       columns = cols,
       numPartitions = longField("numPartitions").toInt,
@@ -137,7 +143,7 @@ object BtrManifest {
       rawBytes = longField("rawBytes"),
       encBytes = longField("encBytes"),
       completedPartitions = done,
-      bucketStats = stats)
+      columnStats = stats)
   }
 
   private def unesc(s: String): String = {

@@ -64,7 +64,8 @@ object StreamingOps {
     * state-store writes dominate the micro-batch wall (the same shared-
     * disk argument as the bench's tmpfs spill; a real cluster gives
     * executors local disks). Production paths (windowedEventCountsToFiles,
-    * streamToBtr*) take explicit DURABLE checkpoint dirs — unaffected.
+    * the btr streaming sink) take explicit DURABLE checkpoint dirs —
+    * unaffected.
     * Override via spark.graft.streamCheckpointDir / SPARK_GRAFT_TMPFS.
     */
   def ephemeralCheckpoint(spark: SparkSession, name: String): String = {
@@ -136,72 +137,6 @@ object StreamingOps {
       col("max_value"))
   }
 
-  /** Stream-ingest into the btr format: each micro-batch encodes into its
-    * own `dir/batch=<id>` btr table. Idempotent by construction — after a
-    * restart the checkpointed source replays the last batch, which finds
-    * its manifest (written LAST, so its presence proves a complete
-    * encode) and skips: exactly-once btr output on an at-least-once
-    * replay. The complement of the reference's batch-only ingest — a
-    * training-data firehose lands directly in compressed columnar form.
-    */
-  def streamToBtr(
-      stream: DataFrame,
-      dir: String,
-      checkpointDir: String,
-      cfg: graft.codec.BtrConfig = graft.codec.BtrConfig.default)
-    : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val out = s"$dir/batch=$id"
-        val spark = batch.sparkSession
-        // done = a VALID manifest exists. Manifest publish is an atomic
-        // rename (BtrTable.writeManifest) and the columns check rejects a
-        // degenerate parse; only manifest-ABSENT counts as not-done — any
-        // other read failure (throttling, network) must propagate rather
-        // than trigger a destructive re-encode under a live manifest.
-        val done =
-          try graft.engine.BtrTable.readManifest(spark, out).columns.nonEmpty
-          catch { case _: java.io.FileNotFoundException => false }
-        if (!done) graft.engine.BtrTable.write(batch.toDF(), out, cfg)
-        ()
-      }
-      .start()
-
-  /** Read every completed micro-batch of a streamToBtr directory as one
-    * DataFrame (batches without a manifest — in-flight or crashed — are
-    * invisible, never half-read; manifest publish is atomic).
-    *
-    * Scales to many batches: ONE glob for the manifests, ONE manifest
-    * read for the shared schema, the parts scans unioned as a BALANCED
-    * tree (a left-deep 10^4-way union chokes Catalyst analysis), batch
-    * partition ids remapped to disjoint ranges, and a single decode pass
-    * over all parts — not one job per batch.
-    */
-  def loadStreamed(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val base = new Path(dir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val manifests = fs.globStatus(new Path(base, "batch=*/" + graft.engine.BtrTable.ManifestFile))
-    require(manifests != null && manifests.nonEmpty, s"no completed btr batches under $dir")
-    val dirs = manifests.map(_.getPath.getParent.toString).sorted
-    val columns = graft.engine.BtrTable.readManifest(spark, dirs.head).columns
-    require(columns.nonEmpty, s"empty manifest under ${dirs.head}")
-    val n = dirs.length
-    // decode groups chunks by (partitionId, chunkIdx); every batch numbers
-    // its partitions from 0, so spread them into disjoint id ranges
-    val partScans = dirs.zipWithIndex.map { case (d, i) =>
-      spark.read.parquet(s"$d/parts")
-        .withColumn("partitionId", col("partitionId") * n + i)
-    }
-    def balanced(xs: Seq[DataFrame]): DataFrame =
-      if (xs.lengthCompare(1) == 0) xs.head
-      else balanced(xs.grouped(2).map(_.reduce(_ unionByName _)).toSeq)
-    import spark.implicits._
-    graft.engine.BtrDecoder.decode(
-      balanced(partScans).as[graft.format.CompressedPart], columns)
-  }
-
   /** Sessionization per user with a 30-minute gap rule, as a pure window-
     * function plan: lag over (user_id, ts) + conditional sum. Unlike a
     * mapGroups that materializes every event of a user in task memory (a
@@ -223,31 +158,4 @@ object StreamingOps {
           sum(when(col("gap") > GapUs, 1L).otherwise(0L)), lit(0L))).as("n_sessions"),
         count(lit(1)).as("n_events"))
   }
-
-  /** streamToBtr twin for the DSv2 `btr` layout (round-5): each micro-batch
-    * becomes `batch=<id>/` written through `df.write.format("btr")` —
-    * staged overwrite with manifest-on-commit, so publish is atomic and a
-    * replayed batch id is detected by its manifest and skipped
-    * (exactly-once). The output is directly consumable, incrementally, by
-    * `spark.readStream.format("btr").load(dir)` (BtrMicroBatchStream):
-    * ingest firehose → compressed columnar batches → standing decode
-    * queries, the full streaming loop over the block format.
-    */
-  def streamToBtrSource(
-      stream: DataFrame,
-      dir: String,
-      checkpointDir: String)
-    : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val out = s"$dir/batch=$id"
-        val spark = batch.sparkSession
-        val done =
-          try graft.engine.BtrTable.readManifest(spark, out).columns.nonEmpty
-          catch { case _: java.io.FileNotFoundException => false }
-        if (!done) batch.toDF().write.format("btr").mode("overwrite").save(out)
-        ()
-      }
-      .start()
 }

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.codec._
-import graft.engine.{BlockFiles, BtrDecoder, BtrTable}
+import graft.engine.{BlockFiles, BtrEncoder, BtrTable}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -47,20 +47,15 @@ class BtrDataSource extends TableProvider with DataSourceRegister {
       try BtrTable.readManifest(SparkSession.active, dir)
       catch {
         case e: java.io.FileNotFoundException =>
-          // streaming layout (streamToBtr): per-batch sub-tables under
-          // batch=<id>/, each with its own manifest — use the first
-          // completed batch's schema (all batches share the upstream one)
-          val base = new Path(dir)
-          val fs = base.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
-          val ms = fs.globStatus(new Path(base, "batch=*/" + BtrTable.ManifestFile))
-          if (ms == null || ms.isEmpty) throw e
-          val first = ms.map(_.getPath.getParent.toString).minBy { d =>
-            d.substring(d.lastIndexOf('=') + 1).toLong
-          }
-          BtrTable.readManifest(SparkSession.active, first)
+          // batch layout (streaming sink, resumable write): per-batch
+          // sub-tables under batch=<id>/, each with its own manifest — use
+          // the first published batch's schema (all batches share one)
+          val ids = BtrTable.publishedBatches(SparkSession.active.sparkContext.hadoopConfiguration, dir)
+          if (ids.isEmpty) throw e
+          BtrTable.readManifest(SparkSession.active, s"$dir/batch=${ids.head}")
       }
     StructType(manifest.columns.map(c =>
-      StructField(c.name, BtrDecoder.sparkType(c.colType), nullable = c.nullable)))
+      StructField(c.name, BtrEncoder.sparkType(c.colType), nullable = c.nullable)))
   }
 
   /** Writes pass the dataframe's schema straight through (no manifest to
@@ -641,15 +636,53 @@ object ZonePredEval {
 }
 
 object BtrScan {
-  def listBlockFiles(dir: String): Array[InputPartition] = {
-    val spark = SparkSession.active
-    val blocks = new Path(s"$dir/blocks")
-    val fs = blocks.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(blocks)
-      .filter(_.getPath.getName.startsWith("part-"))
-      .sortBy(_.getPath.getName)
-      .map(st => BtrInputPartition(st.getPath.toString): InputPartition)
+  /** Block files of the table at `dir`: its own `blocks/`, or — for a
+    * `batch=<id>/` layout, which has none — those of the contiguous
+    * published batch prefix (an unpublished batch and every later one stay
+    * invisible). A single-table dir costs exactly one listing.
+    */
+  def listBlockFiles(dir: String): Array[InputPartition] =
+    try listBlockFiles(Seq(dir))
+    catch {
+      case e: java.io.FileNotFoundException =>
+        val ids = BtrTable.publishedBatches(SparkSession.active.sparkContext.hadoopConfiguration, dir)
+        if (ids.isEmpty) throw e
+        listBlockFiles((0L until BtrTable.contiguousPrefix(ids)).map(b => s"$dir/batch=$b"))
+    }
+
+  /** Block files of each table dir, in dir then file-name order. */
+  def listBlockFiles(tableDirs: Seq[String]): Array[InputPartition] = {
+    val conf = SparkSession.active.sparkContext.hadoopConfiguration
+    tableDirs.toArray.flatMap { d =>
+      val blocks = new Path(s"$d/blocks")
+      blocks.getFileSystem(conf).listStatus(blocks)
+        .filter(_.getPath.getName.startsWith("part-"))
+        .sortBy(_.getPath.getName)
+        .map(st => BtrInputPartition(st.getPath.toString): InputPartition)
+    }
   }
+
+  /** PLANNING-time file pruning: drop the files whose entry in their
+    * table's file-level zone index (`_btr_zones.bin`, one read per table
+    * dir) rejects `zones`. No index (pre-index tables, unreadable sidecar)
+    * keeps every file of that table; the chunk-level zone skip still
+    * applies inside each reader.
+    */
+  def pruneFiles(files: Array[InputPartition], zones: Array[ZonePred]): Array[InputPartition] =
+    if (zones.isEmpty) files
+    else {
+      val conf = SparkSession.active.sparkContext.hadoopConfiguration
+      val cols = Some(zones.flatMap(_.cols).toSet)
+      def path(ip: InputPartition) = new Path(ip.asInstanceOf[BtrInputPartition].file)
+      val index = files.map(path(_).getParent.getParent.toString).distinct.map { d =>
+        d -> graft.format.ZoneIndex.read(conf, d, cols).map(_.map(e => e.file -> e.cols).toMap)
+      }.toMap
+      files.filter { ip =>
+        val p = path(ip)
+        index(p.getParent.getParent.toString).forall(
+          _.get(p.getName).forall(cs => !ZonePredEval.rejects(zones, cs)))
+      }
+    }
 }
 
 class BtrScan(
@@ -715,8 +748,8 @@ class BtrScan(
     * a small decoded dimension) instead of guessing from file sizes.
     */
   override def estimateStatistics(): Statistics = {
-    // a streaming-layout dir (batch=* sub-tables) has no top-level
-    // manifest: report unknown rather than fail
+    // a batch-layout dir (batch=* sub-tables) has no top-level manifest:
+    // report unknown rather than fail
     val m = try Some(BtrTable.readManifest(SparkSession.active, dir))
             catch { case _: java.io.FileNotFoundException => None }
     val frac =
@@ -736,32 +769,16 @@ class BtrScan(
 
   private lazy val allFiles: Array[InputPartition] = BtrScan.listBlockFiles(dir)
 
-  /** PLANNING-time file pruning: the write paths fold each file's chunk
-    * zones into a `_btr_zones.bin` index, so a selective pushed (or
-    * runtime) filter can drop whole block files before a single task
-    * launches — at 100 TB this is the level above per-chunk skipping
-    * (which still opens every file). No index (pre-index tables,
-    * unreadable sidecar) → all files, and the chunk-level zone skip still
-    * applies inside each reader. Cached, invalidated when runtime filters
-    * arrive (Spark re-calls planInputPartitions after filter()).
+  /** PLANNING-time file pruning (BtrScan.pruneFiles): a selective pushed
+    * (or runtime) filter drops whole block files before a single task
+    * launches — at 100 TB the level above per-chunk skipping (which still
+    * opens every file). Cached, invalidated when runtime filters arrive
+    * (Spark re-calls planInputPartitions after filter()).
     */
   private def plannedFiles: Array[InputPartition] = {
     var p = plannedCache
     if (p == null) {
-      val az = activeZones
-      p =
-        if (az.isEmpty) allFiles
-        else graft.format.ZoneIndex.read(
-          SparkSession.active.sparkContext.hadoopConfiguration, dir,
-          Some(az.flatMap(_.cols).toSet)) match {
-          case Some(entries) =>
-            val byName = entries.map(e => e.file -> e.cols).toMap
-            allFiles.filter { ip =>
-              val name = new Path(ip.asInstanceOf[BtrInputPartition].file).getName
-              byName.get(name).forall(cols => !ZonePredEval.rejects(az, cols))
-            }
-          case None => allFiles
-        }
+      p = BtrScan.pruneFiles(allFiles, activeZones)
       plannedCache = p
     }
     p
@@ -795,8 +812,8 @@ class BtrScan(
     f
   }
 
-  /** `spark.readStream.format("btr").load(dir)` over a streamToBtr
-    * directory — the decode twin of the manifest-gated streaming ingest.
+  /** `spark.readStream.format("btr").load(dir)` over a `batch=<id>/`
+    * directory — the decode twin of the manifest-gated streaming sink.
     */
   override def toMicroBatchStream(checkpointLocation: String)
     : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
@@ -805,12 +822,12 @@ class BtrScan(
   }
 }
 
-/** Micro-batch streaming source over a streamToBtr directory (round-5):
-  * `dir/batch=<id>/` per-batch sub-tables, each published by an ATOMIC
-  * manifest rename (BtrTable.writeManifest), so a batch is either fully
-  * visible or fully invisible — never half-read. Offsets count the
-  * CONTIGUOUSLY completed batch prefix: foreachBatch commits ids 0,1,2…
-  * serially, and the contiguity guard makes an out-of-order or in-flight
+/** Micro-batch streaming source over a `batch=<id>/` directory (round-5):
+  * per-batch sub-tables, each published by an ATOMIC manifest rename
+  * (BtrTable.writeManifest), so a batch is either fully visible or fully
+  * invisible — never half-read. Offsets count the CONTIGUOUSLY completed
+  * batch prefix: the btr sink commits epochs 0,1,2… serially, and the
+  * contiguity guard makes an out-of-order or in-flight
   * manifest invisible rather than letting a later batch be read before an
   * earlier gap. Each micro-batch plans only the NEW batches' block files,
   * through the same pushed zone/claimed-filter machinery as the batch
@@ -836,19 +853,8 @@ class BtrMicroBatchStream(
   }
 
   /** Length of the contiguous completed-batch prefix 0..k-1. */
-  private def completed(): Long = {
-    val base = new Path(dir)
-    val fs = base.getFileSystem(conf)
-    val ms = fs.globStatus(new Path(base, "batch=*/" + BtrTable.ManifestFile))
-    if (ms == null || ms.isEmpty) 0L
-    else {
-      val ids = ms.map(_.getPath.getParent.getName.stripPrefix("batch=").toLong).sorted
-      var k = 0L
-      var i = 0
-      while (i < ids.length && ids(i) == k) { k += 1; i += 1 }
-      k
-    }
-  }
+  private def completed(): Long =
+    BtrTable.contiguousPrefix(BtrTable.publishedBatches(conf, dir))
 
   override def initialOffset(): Offset = BatchOffset(0L)
   override def latestOffset(): Offset = BatchOffset(completed())
@@ -859,20 +865,7 @@ class BtrMicroBatchStream(
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[BatchOffset].batches
     val e = end.asInstanceOf[BatchOffset].batches
-    (s until e).flatMap { id =>
-      val bdir = s"$dir/batch=$id"
-      val files = BtrScan.listBlockFiles(bdir)
-      if (zones.isEmpty) files
-      else graft.format.ZoneIndex.read(conf, bdir, Some(zones.flatMap(_.cols).toSet)) match {
-        case Some(entries) =>
-          val byName = entries.map(e0 => e0.file -> e0.cols).toMap
-          files.filter { ip =>
-            val name = new Path(ip.asInstanceOf[BtrInputPartition].file).getName
-            byName.get(name).forall(cs => !ZonePredEval.rejects(zones, cs))
-          }
-        case None => files
-      }
-    }.toArray
+    BtrScan.pruneFiles(BtrScan.listBlockFiles((s until e).map(id => s"$dir/batch=$id")), zones)
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
@@ -1004,19 +997,7 @@ class BtrAggScan(dir: String, fullSchema: StructType, specs: Seq[AggSpec],
   }
 
   private lazy val allFiles: Array[InputPartition] = BtrScan.listBlockFiles(dir)
-  private lazy val plannedFiles: Array[InputPartition] =
-    if (zones.isEmpty) allFiles
-    else graft.format.ZoneIndex.read(
-      SparkSession.active.sparkContext.hadoopConfiguration, dir,
-      Some(zones.flatMap(_.cols).toSet)) match {
-      case Some(entries) =>
-        val byName = entries.map(e => e.file -> e.cols).toMap
-        allFiles.filter { ip =>
-          val name = new Path(ip.asInstanceOf[BtrInputPartition].file).getName
-          byName.get(name).forall(cols => !ZonePredEval.rejects(zones, cols))
-        }
-      case None => allFiles
-    }
+  private lazy val plannedFiles: Array[InputPartition] = BtrScan.pruneFiles(allFiles, zones)
 
   override def planInputPartitions(): Array[InputPartition] = plannedFiles
 

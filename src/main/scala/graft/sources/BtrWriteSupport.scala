@@ -2,7 +2,7 @@ package graft.sources
 
 import graft.codec.BtrConfig
 import graft.engine.{BlockFiles, BtrEncoder, BtrTable}
-import graft.format.{BtrManifest, BucketStat, ColZone, ColumnMeta, FileZone, ZoneAccumulator, ZoneIndex}
+import graft.format.ZoneIndex
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
@@ -198,26 +198,8 @@ class BtrWrite(
       if (!fs.rename(new Path(stagingDir), blocks))
         sys.error(s"could not swap $stagingDir -> $blocks")
     }
-    val ms = messages.collect { case m: BtrWriteCommit => m }
-    val raw = ms.map(_.rawBytes).sum
-    val enc = ms.map(_.encBytes).sum
-    val rows = ms.map(_.numRows).sum
-    val nparts = ms.count(_.numRows > 0)
-    // file-level zone index before the manifest (the publish marker)
-    val entries = ms.collect {
-      case m if m.numRows > 0 && m.zones.isDefined => FileZone(f"part-${m.pid}%05d", m.zones.get)
-    }
-    if (entries.nonEmpty) ZoneIndex.write(conf, dir, entries.toSeq)
-    BtrTable.writeManifest(spark, dir, BtrManifest(
-      columns = outSchema.fields.zip(outColTypes).map { case (f, t) => ColumnMeta(f.name, t, f.nullable) }.toSeq,
-      numPartitions = nparts,
-      blockSize = cfg.blockSize,
-      maxCascadeDepth = cfg.maxCascadeDepth,
-      numRows = rows,
-      rawBytes = raw,
-      encBytes = enc,
-      completedPartitions = Seq(0),
-      bucketStats = Seq(BucketStat(0, raw, enc, rows, nparts))))
+    BlockFiles.publish(spark, dir, outSchema, outColTypes, cfg,
+      messages.toSeq.collect { case m: BlockFiles.BlockWriteStat => m })
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
@@ -277,23 +259,8 @@ class BtrStreamingWrite(
     // exists for listings
     val blocks = new Path(s"$edir/blocks")
     blocks.getFileSystem(conf).mkdirs(blocks)
-    val ms = messages.collect { case m: BtrWriteCommit => m }
-    val entries = ms.collect {
-      case m if m.numRows > 0 && m.zones.isDefined => FileZone(f"part-${m.pid}%05d", m.zones.get)
-    }
-    if (entries.nonEmpty) ZoneIndex.write(conf, edir, entries.toSeq)
-    val nparts = ms.count(_.numRows > 0)
-    BtrTable.writeManifest(spark, edir, BtrManifest(
-      columns = schema.fields.zip(colTypes).map { case (f, t) => ColumnMeta(f.name, t, f.nullable) }.toSeq,
-      numPartitions = nparts,
-      blockSize = cfg.blockSize,
-      maxCascadeDepth = cfg.maxCascadeDepth,
-      numRows = ms.map(_.numRows).sum,
-      rawBytes = ms.map(_.rawBytes).sum,
-      encBytes = ms.map(_.encBytes).sum,
-      completedPartitions = Seq(0),
-      bucketStats = Seq(BucketStat(0, ms.map(_.rawBytes).sum, ms.map(_.encBytes).sum,
-        ms.map(_.numRows).sum, nparts))))
+    BlockFiles.publish(spark, edir, schema, colTypes, cfg,
+      messages.toSeq.collect { case m: BlockFiles.BlockWriteStat => m })
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
@@ -324,11 +291,6 @@ case class BtrStreamingWriterFactory(
       partitionId, taskId, schema, colTypes, cfg, keptIdx)
 }
 
-case class BtrWriteCommit(
-    pid: Int, rawBytes: Long, encBytes: Long, numRows: Long,
-    zones: Option[IndexedSeq[ColZone]] = None)
-  extends WriterCommitMessage
-
 case class BtrWriterFactory(
     confB: org.apache.spark.broadcast.Broadcast[ConfShim.SerConf],
     blocksDir: String,
@@ -343,9 +305,10 @@ case class BtrWriterFactory(
 }
 
 /** One task's writer: rows push through the ChunkBuilder; each full chunk
-  * is framed (v3, typed zone maps included) and appended to this
-  * partition's block file. Memory is bounded by one chunk. An empty
-  * partition creates no file.
+  * is framed and appended to this partition's block file through the same
+  * BlockFileWriter as the RDD path (attempt-unique temp name, zone and
+  * stats fold, rename-if-absent commit). Memory is bounded by one chunk.
+  * An empty partition creates no file.
   */
 class BtrDataWriter(
     conf: org.apache.hadoop.conf.Configuration,
@@ -366,35 +329,12 @@ class BtrDataWriter(
     if (project == null) null
     else new org.apache.spark.sql.catalyst.ProjectingInternalRow(
       schema, scala.collection.immutable.ArraySeq.unsafeWrapArray(project))
-  private val zoneAcc = new ZoneAccumulator
-  private val fs = new Path(blocksDir).getFileSystem(conf)
-  private val finalPath = new Path(blocksDir, f"part-$pid%05d")
-  private val tmpPath = new Path(blocksDir, f".tmp-part-$pid%05d-attempt-$taskId")
-  private var out: org.apache.hadoop.fs.FSDataOutputStream = _
-  private var chunkIdx = 0
-  private var firstRow = 0L
-  private var rawBytes = 0L
-  private var encBytes = 0L
+  private val file = new BlockFiles.BlockFileWriter(conf, blocksDir, pid, taskId)
 
-  private def flushChunk(): Unit = {
-    if (builder.isEmpty) return
-    if (out == null) {
-      out = fs.create(tmpPath, true)
-      out.write(Array[Byte](
-        (BlockFiles.Magic & 0xff).toByte, ((BlockFiles.Magic >>> 8) & 0xff).toByte,
-        ((BlockFiles.Magic >>> 16) & 0xff).toByte, ((BlockFiles.Magic >>> 24) & 0xff).toByte,
-        BlockFiles.Version.toByte))
-    }
-    val len = builder.size
-    val f = BlockFiles.frameChunk(
-      scala.collection.immutable.ArraySeq.unsafeWrapArray(builder.build(pid, chunkIdx, firstRow)))
-    out.write(f.bytes)
-    zoneAcc.fold(f.bytes)
-    chunkIdx += 1
-    firstRow += len
-    rawBytes += f.rawBytes
-    encBytes += f.encBytes
-  }
+  private def flushChunk(): Unit =
+    if (!builder.isEmpty)
+      file.append(BlockFiles.frameChunk(
+        scala.collection.immutable.ArraySeq.unsafeWrapArray(builder.build())))
 
   override def write(row: InternalRow): Unit = {
     if (builder.isFull) flushChunk()
@@ -404,22 +344,10 @@ class BtrDataWriter(
 
   override def commit(): WriterCommitMessage = {
     flushChunk()
-    if (out != null) {
-      out.close()
-      out = null
-      if (!BlockFiles.commitRename(conf, fs, tmpPath, finalPath))
-        sys.error(s"could not commit $tmpPath -> $finalPath")
-    }
-    BtrWriteCommit(pid, rawBytes, encBytes, firstRow, zoneAcc.result())
+    file.commit()
   }
 
   override def abort(): Unit = close()
 
-  override def close(): Unit = {
-    if (out != null) {
-      try out.close() catch { case _: java.io.IOException => () }
-      out = null
-    }
-    if (fs.exists(tmpPath)) fs.delete(tmpPath, false)
-  }
+  override def close(): Unit = file.close()
 }

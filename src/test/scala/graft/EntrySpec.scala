@@ -29,6 +29,18 @@ class EntrySpec extends AnyFunSuite {
     assert(enc < raw, s"total compressed $enc must be < raw $raw")
   }
 
+  test("scratch tables get the full writer width when the input size is unknown") {
+    // an RDD-backed frame reports the default Long.MaxValue size estimate
+    val rdd = spark.sparkContext.parallelize(Seq(org.apache.spark.sql.Row(1)))
+    val df = spark.createDataFrame(rdd,
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("x", org.apache.spark.sql.types.IntegerType))))
+    assert(df.queryExecution.optimizedPlan.stats.sizeInBytes > BigInt(Int.MaxValue) * 128)
+    assert(Queries.scratchPartitions(spark, df) == spark.sessionState.conf.numShufflePartitions)
+    // a known small input still gets one writer
+    assert(Queries.scratchPartitions(spark, spark.range(10).toDF()) == 1)
+  }
+
   test("queries and oracles are consistent") {
     val qs = SparkEntry.queries
     val os = SparkEntry.oracleSql

@@ -88,25 +88,6 @@ class EngineSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] { BtrTable.loadPruned(spark, dir, "row_id", 0, 1, columns = Seq("nope")) }
   }
 
-  test("loadPrunedDouble / loadPrunedString: typed zone pruning") {
-    import spark.implicits._
-    val dir = tmpDir("zprune_typed")
-    val df = (0 until 3000).map(i => (i, f"k$i%05d", i * 0.5)).toDF("id", "s", "d")
-    BtrTable.write(df, dir, cfg, rangeCols = Seq("id"))
-
-    val pd = BtrTable.loadPrunedDouble(spark, dir, "d", 500.0, 549.5)
-    assert(pd.filter(col("d").between(500.0, 549.5)).count() == 100)
-    assert(pd.count() < 3000, "double zones must skip chunks")
-
-    val ps = BtrTable.loadPrunedString(spark, dir, "s", "k01000", "k01099")
-    assert(ps.filter(col("s").between("k01000", "k01099")).count() == 100)
-    assert(ps.count() < 3000, "string zones must skip chunks")
-
-    // wrong-type validation for the typed overloads too
-    intercept[IllegalArgumentException] { BtrTable.loadPrunedDouble(spark, dir, "id", 0, 1) }
-    intercept[IllegalArgumentException] { BtrTable.loadPrunedString(spark, dir, "d", "a", "b") }
-  }
-
   test("resumable write: restart after partial completion finishes the table") {
     val dir = tmpDir("resume")
     val src = sourceDf
@@ -114,26 +95,33 @@ class EngineSpec extends AnyFunSuite {
     assert(m1.completedPartitions.sorted == Seq(0, 1, 2, 3))
     assert(m1.numRows == 3000)
 
-    // simulate a crash after bucket 1: drop buckets 2,3 and rewind lineage
+    // simulate a crash after bucket 1: buckets 2,3 never published
     val base = dir.stripPrefix("file:")
     def rmrf(p: java.io.File): Unit = {
       if (p.isDirectory) p.listFiles().foreach(rmrf)
       p.delete()
     }
-    rmrf(Paths.get(base, "parts", "bucket=2").toFile)
-    rmrf(Paths.get(base, "parts", "bucket=3").toFile)
-    val crashed = m1.copy(completedPartitions = Seq(0, 1))
-    BtrTable.writeManifest(spark, dir, crashed)
-    val partial = BtrTable.readManifest(spark, dir)
-    assert(partial.completedPartitions == Seq(0, 1))
+    rmrf(Paths.get(base, "batch=2").toFile)
+    rmrf(Paths.get(base, "batch=3").toFile)
+    def stamps(b: Int) = {
+      val d = Paths.get(base, s"batch=$b")
+      val files = Seq(d.resolve(BtrTable.ManifestFile)) ++
+        d.resolve("blocks").toFile.listFiles().map(_.toPath).filter(_.getFileName.toString.startsWith("part-"))
+      files.map(f => f.toString -> java.nio.file.Files.getLastModifiedTime(f)).toMap
+    }
+    val before = Seq(0, 1).map(stamps)
+    assert(BtrTable.load(spark, dir).count() < 3000, "the published prefix is readable alone")
+    Thread.sleep(20) // a rewrite would carry a later mtime
 
-    // resume: only buckets 2,3 are re-encoded
+    // resume: only buckets 2,3 are encoded; 0,1 are not rewritten
     val m2 = BtrTable.writeResumable(src, dir, cfg, buckets = 4)
     assert(m2.completedPartitions.sorted == Seq(0, 1, 2, 3))
-    assert(m2.numRows == 3000)
+    assert(m2.numRows == 3000 && m2.encBytes == m1.encBytes && m2.columnStats == m1.columnStats)
+    assert(Seq(0, 1).map(stamps) == before, "published buckets must not be rewritten")
     val decoded = BtrTable.load(spark, dir)
     assert(decoded.count() == 3000)
     assert(decoded.select("row_id").distinct().count() == 3000)
+    assert(BtrTable.stats(spark, dir).select(sum("n_values")).head().getLong(0) == 3000L * 6)
   }
 
   test("nullable input round-trips (null extension; non-null model is per-column)") {
@@ -167,12 +155,25 @@ class EngineSpec extends AnyFunSuite {
       .repartition(1)
     val wide = BtrConfig(blockSize = 65536, maxChunkBytes = 1L << 20)
     BtrTable.write(df, dir, wide)
-    val nChunks = BtrTable.parts(spark, dir)
-      .filter(col("colIdx") === 0).count()
+    val nChunks = frameCount(dir)
     assert(nChunks >= 8, s"1MB budget must split 10MB of rows into many chunks: $nChunks")
     val back = BtrTable.load(spark, dir)
     assert(back.count() == 100)
     assert(back.except(df).count() == 0 && df.except(back).count() == 0)
+  }
+
+  /** Chunk count of a table, read from its block files' frame headers. */
+  private def frameCount(dir: String): Int = {
+    import org.apache.hadoop.fs.Path
+    val conf = spark.sparkContext.hadoopConfiguration
+    val blocks = new Path(s"$dir/blocks")
+    blocks.getFileSystem(conf).listStatus(blocks).map(_.getPath)
+      .filter(_.getName.startsWith("part-")).map { p =>
+        val r = new graft.sources.FrameReader(p.toString, conf)
+        var n = 0
+        try while (r.nextHeader()) { r.finishChunk(); n += 1 } finally r.close()
+        n
+      }.sum
   }
 
   test("BtrCsvView: random-access csv reads with bounded cache (S7/S8 semantics)") {
@@ -203,16 +204,7 @@ class EngineSpec extends AnyFunSuite {
     assert(view.read(full.length + 10L, 5).isEmpty, "past-EOF read is empty")
   }
 
-  /** The seek tests need a MULTI-partition decode (a seek re-enters at a
-    * partition boundary); the scale-adaptive decode width would give this
-    * kilobyte table one partition, so pin a tiny per-partition byte target.
-    */
-  private def withTinyDecodePartitions[T](body: => T): T = {
-    spark.conf.set("spark.graft.decodePartitionBytes", "4096")
-    try body finally spark.conf.unset("spark.graft.decodePartitionBytes")
-  }
-
-  test("BtrCsvView backward seek re-enters at the covering partition, not row 0") { withTinyDecodePartitions {
+  test("BtrCsvView backward seek re-enters at the covering partition, not row 0") {
     import spark.implicits._
     val dir = tmpDir("csvview_seek")
     // 8 distinct block files => 8 scan partitions for the view's rdd
@@ -232,9 +224,9 @@ class EngineSpec extends AnyFunSuite {
     // a seek into the header region still replays from the top
     assert(new String(view.read(0, 10), "UTF-8") == full.take(10))
     assert(view.lastReplayFrom == 0)
-  } }
+  }
 
-  test("BtrCsvView far-forward seek re-enters at the covering partition, not a driver drain") { withTinyDecodePartitions {
+  test("BtrCsvView far-forward seek re-enters at the covering partition, not a driver drain") {
     import spark.implicits._
     val dir = tmpDir("csvview_fwd")
     val df = (0 until 4000).map(i => (i, s"name_$i")).toDF("id", "name").repartition(8)
@@ -258,7 +250,7 @@ class EngineSpec extends AnyFunSuite {
     assert(new String(view.read(nearOff, 50), "UTF-8")
       == full.substring(nearOff.toInt, nearOff.toInt + 50))
     assert(view.lastReplayFrom == entered, "no re-init for an in-partition gap")
-  } }
+  }
 
   test("manifest json round-trips") {
     import graft.format._
@@ -267,13 +259,13 @@ class EngineSpec extends AnyFunSuite {
       numPartitions = 4, blockSize = 65536, maxCascadeDepth = 3,
       numRows = 123456789L, rawBytes = 1000L, encBytes = 250L,
       completedPartitions = Seq(0, 2),
-      bucketStats = Seq(BucketStat(0, 600L, 150L, 70000000L, 3),
-        BucketStat(2, 400L, 100L, 53456789L, 1)))
+      columnStats = Seq(ColumnStat(600L, 150L, 3L, 70000000L, Seq("FBP(w=15)", "RLE(v=One,r=Raw)")),
+        ColumnStat(400L, 100L, 1L, 53456789L, Seq("Dict(d=FSST)", "we\"ird\\"))))
     val back = BtrManifest.fromJson(BtrManifest.toJson(m))
     assert(back == m)
     assert(back.ratio == 4.0)
-    // pre-bucketStats manifests stay parseable
-    val legacy = BtrManifest.fromJson(BtrManifest.toJson(m.copy(bucketStats = Nil)))
-    assert(legacy.bucketStats.isEmpty && legacy.numRows == m.numRows)
+    // manifests without per-column stats stay parseable
+    val legacy = BtrManifest.fromJson(BtrManifest.toJson(m.copy(columnStats = Nil)))
+    assert(legacy.columnStats.isEmpty && legacy.numRows == m.numRows)
   }
 }

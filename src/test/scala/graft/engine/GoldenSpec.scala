@@ -1,7 +1,6 @@
 package graft.engine
 
 import graft.codec._
-import graft.format.CompressedPart
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -78,6 +77,35 @@ class GoldenSpec extends AnyFunSuite {
     assert(rows.length == 3 && rows(2).getString(1) == "Jack")
   }
 
+  /** Every frame of a table's block files, each column decoded on its own
+    * through FrameReader: (file, chunk, column name, numRows, decoded).
+    */
+  private def decodedFrames(dir: String): Seq[(String, Int, String, Int, AnyRef)] = {
+    import org.apache.hadoop.fs.Path
+    val conf = spark.sparkContext.hadoopConfiguration
+    val names = BtrTable.readManifest(spark, dir).columns.map(_.name)
+    val blocks = new Path(s"$dir/blocks")
+    blocks.getFileSystem(conf).listStatus(blocks).map(_.getPath)
+      .filter(_.getName.startsWith("part-")).toSeq.flatMap { p =>
+        val r = new graft.sources.FrameReader(p.toString, conf)
+        val out = Seq.newBuilder[(String, Int, String, Int, AnyRef)]
+        var chunk = 0
+        try while (r.nextHeader()) {
+          for (c <- 0 until r.nCols) {
+            val blob = r.readBlob(c)
+            val values: AnyRef = r.colType(c) match {
+              case ColType.Integer => IntCodec.decode(blob)
+              case ColType.Double  => DoubleCodec.decode(blob)
+              case ColType.String  => StringCodec.decode(blob)
+            }
+            out += ((p.getName, chunk, names(c), r.numRows, values))
+          }
+          chunk += 1
+        } finally r.close()
+        out.result()
+      }
+  }
+
   test("part-wise decode ≡ whole-column decode (multi-chunk)") {
     import spark.implicits._
     val dir = tmp("parts")
@@ -88,29 +116,27 @@ class GoldenSpec extends AnyFunSuite {
     val df = (0 until 1000).map(i => (i, s"name_${i % 7}", i / 3.0))
       .toDF("id", "name", "score").repartition(2)
     BtrTable.write(df, dir, cfg)
-    val parts = BtrTable.parts(spark, dir).collect()
-    assert(parts.map(_.chunkIdx).max >= 7, "fixture must span multiple chunks per partition")
-    // per column: concat of per-part decodes == whole decoded column (multiset
-    // by partition order)
-    val byCol = parts.groupBy(_.colName)
+    val parts = decodedFrames(dir)
+    assert(parts.map(_._2).max >= 7, "fixture must span multiple chunks per block file")
+    // per column: concat of per-chunk decodes == whole decoded column
+    // (multiset by file order)
+    val byCol = parts.groupBy(_._3)
     val whole = BtrTable.load(spark, dir).collect()
     byCol.foreach { case (colName, colParts) =>
-      val concatLen = colParts.map(_.numRows).sum
-      assert(concatLen == 1000, s"$colName parts must cover all rows")
-      colParts.foreach { p =>
-        val decoded = BtrDecoder.decodePartValues(p)
+      val concatLen = colParts.map(_._4).sum
+      assert(concatLen == 1000, s"$colName chunks must cover all rows")
+      colParts.foreach { case (file, chunk, _, numRows, decoded) =>
         val n = decoded match {
           case a: Array[Int]         => a.length
           case a: Array[Double]      => a.length
           case a: Array[Array[Byte]] => a.length
         }
-        assert(n == p.numRows, s"$colName part ${p.chunkIdx}: decoded $n != ${p.numRows}")
+        assert(n == numRows, s"$colName $file chunk $chunk: decoded $n != $numRows")
       }
     }
     // value-level check for the int column: sorted concat == sorted whole
-    val intConcat = byCol("id").flatMap(p =>
-      BtrDecoder.decodePartValues(p).asInstanceOf[Array[Int]]).sorted
-    assert(intConcat.toSeq == whole.map(_.getInt(0)).sorted.toSeq)
+    val intConcat = byCol("id").flatMap(_._5.asInstanceOf[Array[Int]]).sorted
+    assert(intConcat == whole.map(_.getInt(0)).sorted.toSeq)
   }
 
   test("zone-map pruned load decodes fewer chunks, same filtered result") {
@@ -121,15 +147,18 @@ class GoldenSpec extends AnyFunSuite {
     val df = (0 until 2000).map(i => (i, s"v$i")).toDF("id", "v")
       .repartitionByRange(4, col("id"))
     BtrTable.write(df, dir, cfg)
-    val totalChunks = BtrTable.parts(spark, dir)
-      .select("partitionId", "chunkIdx").distinct().count()
+    val totalChunks = decodedFrames(dir).map(f => (f._1, f._2)).distinct.length
     val pruned = BtrTable.loadPruned(spark, dir, "id", 100, 199)
-    val prunedRows = pruned.count()
-    assert(prunedRows < 2000, s"pruning must skip chunks ($prunedRows rows decoded)")
-    assert(prunedRows >= 100)
-    val got = pruned.filter(col("id").between(100, 199)).orderBy("id")
-      .as[(Int, String)].collect()
+    assert(pruned.queryExecution.executedPlan.toString.contains("zoneFilters=id:"),
+      "the range must reach the scan as a zone filter")
+    val got = pruned.collect().map(r => (r.getInt(0), r.getString(1))).sortBy(_._1)
     assert(got.length == 100 && got.head == ((100, "v100")) && got.last == ((199, "v199")))
+    // chunks outside the range are skipped by their zone maps, unread
+    val scan = pruned.queryExecution.executedPlan.collectFirst {
+      case s: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => s
+    }.get
+    val skipped = scan.metrics("chunksSkipped").value
+    assert(skipped > 0 && skipped < totalChunks, s"pruning must skip chunks ($skipped of $totalChunks)")
     assert(totalChunks >= 20, s"fixture sanity: $totalChunks chunks")
   }
 

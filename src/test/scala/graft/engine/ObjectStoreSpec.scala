@@ -10,8 +10,8 @@ import java.nio.file.Paths
   * underneath) registered via `fs.<scheme>.impl` — exactly how s3a/gs/abfs
   * resolve (reference object-store matrix /root/reference/src/util.rs:60-96).
   * Proves the engine's write/load paths address object stores through
-  * Hadoop URIs with zero engine code: manifest IO, parts parquet, raw block
-  * files, and the DSv2 source all run against the foreign scheme, including
+  * Hadoop URIs with zero engine code: manifest IO, raw block files, the
+  * zone index and the DSv2 source all run against the foreign scheme, including
   * task-side FS access through the broadcast conf.
   */
 class MockFs extends org.apache.hadoop.fs.RawLocalFileSystem {

@@ -227,7 +227,7 @@ class OpsSpec extends AnyFunSuite {
     assert(recall >= 0.6, s"IVF must keep recall on the high-id shard: $recall")
   }
 
-  test("streamToBtr: micro-batches land as idempotent btr tables") {
+  test("btr stream sink: micro-batches land as idempotent btr tables") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val base = {
@@ -237,15 +237,16 @@ class OpsSpec extends AnyFunSuite {
       "file:" + p.toAbsolutePath
     }
     val mem = MemoryStream[(Int, String)]
-    val q = StreamingOps.streamToBtr(
-      mem.toDF().toDF("id", "s"), s"$base/btr", s"$base/ckpt")
+    def start() = mem.toDF().toDF("id", "s").writeStream.format("btr")
+      .option("checkpointLocation", s"$base/ckpt").start(s"$base/btr")
+    val q = start()
     try {
       mem.addData((1, "a"), (2, "bb"))
       q.processAllAvailable()
       mem.addData((3, "ccc"))
       q.processAllAvailable()
     } finally q.stop()
-    val back = StreamingOps.loadStreamed(spark, s"$base/btr")
+    def back = spark.read.format("btr").load(s"$base/btr")
     assert(back.count() == 3)
     assert(back.orderBy("id").as[(Int, String)].collect().toSeq ==
       Seq((1, "a"), (2, "bb"), (3, "ccc")))
@@ -254,11 +255,10 @@ class OpsSpec extends AnyFunSuite {
     // checkpoint (no new data, and batch dirs are idempotent)
     val m0 = s"$base/btr/batch=0/${graft.engine.BtrTable.ManifestFile}".stripPrefix("file:")
     val mtime = java.nio.file.Files.getLastModifiedTime(java.nio.file.Paths.get(m0))
-    val q2 = StreamingOps.streamToBtr(
-      mem.toDF().toDF("id", "s"), s"$base/btr", s"$base/ckpt")
+    val q2 = start()
     try q2.processAllAvailable() finally q2.stop()
     assert(java.nio.file.Files.getLastModifiedTime(java.nio.file.Paths.get(m0)) == mtime)
-    assert(StreamingOps.loadStreamed(spark, s"$base/btr").count() == 3)
+    assert(back.count() == 3)
   }
 
   test("bruteForceTopK matches naive exact computation") {

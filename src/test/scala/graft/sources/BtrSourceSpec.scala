@@ -290,6 +290,17 @@ class BtrSourceSpec extends AnyFunSuite {
       "EqualNullSafe must reach the scan")
     assert(qn.collect().map(_.getInt(0)).toSeq == Seq(4321))
 
+    // inclusive ranges on both typed columns, bounds included exactly
+    val qdr = spark.read.format("btr").load(dir).where(col("d").between(750.0, 899.5))
+    assert(qdr.queryExecution.executedPlan.toString.contains("zoneFilters=d:"))
+    assert(qdr.collect().map(_.getInt(0)).sorted.toSeq == (500 until 600).toSeq)
+    val qsr = spark.read.format("btr").load(dir).where(col("s").between("k01000", "k01099"))
+    assert(qsr.queryExecution.executedPlan.toString.contains("zoneFilters=s:"))
+    assert(qsr.collect().map(_.getInt(0)).sorted.toSeq == (1000 until 1100).toSeq)
+    // the INT-only BtrTable.loadPruned rejects the other column types
+    intercept[IllegalArgumentException] { graft.engine.BtrTable.loadPruned(spark, dir, "d", 0, 1) }
+    intercept[IllegalArgumentException] { graft.engine.BtrTable.loadPruned(spark, dir, "s", 0, 1) }
+
     // reader-level evidence for both predicate kinds
     import org.apache.hadoop.fs.Path
     val conf = spark.sparkContext.hadoopConfiguration
@@ -506,8 +517,7 @@ class BtrSourceSpec extends AnyFunSuite {
     val dirV = tmp("aggsum_legacy")
     val conf = spark.sparkContext.hadoopConfiguration
     val vals = Array.tabulate(500)(identity)
-    val part = graft.engine.ChunkEncoder.encodeInt(
-      0, 0, 0L, 0, "v", vals, 500, BtrConfig.default)
+    val part = graft.engine.ChunkEncoder.encodeInt("v", vals, 500, BtrConfig.default)
     assert(part.sumLong.contains(vals.map(_.toLong).sum), "encoder must carry the chunk sum")
     val legacy = BlockFiles.frameChunk(Seq(part.copy(sumLong = None)))
     BlockFiles.writeFrames(conf, s"$dirV/blocks", 0, 0L, Iterator(legacy))
@@ -780,9 +790,9 @@ class BtrSourceSpec extends AnyFunSuite {
     import java.nio.charset.StandardCharsets.UTF_8
     val cfg = BtrConfig.default
     def chunk(base: Int) = Seq(
-      ChunkEncoder.encodeInt(0, 0, 0L, 0, "i", Array(base, base + 5, base + 9), 3, cfg),
-      ChunkEncoder.encodeDouble(0, 0, 0L, 1, "d", Array(base * 1.5, base * 2.5, base * 0.5), 3, cfg),
-      ChunkEncoder.encodeString(0, 0, 0L, 2, "s",
+      ChunkEncoder.encodeInt("i", Array(base, base + 5, base + 9), 3, cfg),
+      ChunkEncoder.encodeDouble("d", Array(base * 1.5, base * 2.5, base * 0.5), 3, cfg),
+      ChunkEncoder.encodeString("s",
         Array(s"a$base".getBytes(UTF_8), s"z$base".getBytes(UTF_8), "m".getBytes(UTF_8)), 3, cfg))
     val acc = new graft.format.ZoneAccumulator
     acc.fold(BlockFiles.frameChunk(chunk(100)).bytes)
@@ -799,8 +809,8 @@ class BtrSourceSpec extends AnyFunSuite {
     val longs = Array(("x" * 100).getBytes(UTF_8), ("y" * 100).getBytes(UTF_8))
     val acc2 = new graft.format.ZoneAccumulator
     acc2.fold(BlockFiles.frameChunk(Seq(
-      ChunkEncoder.encodeInt(0, 0, 0L, 0, "i", Array(1, 2), 2, cfg),
-      ChunkEncoder.encodeString(0, 0, 0L, 1, "t", longs, 2, cfg))).bytes)
+      ChunkEncoder.encodeInt("i", Array(1, 2), 2, cfg),
+      ChunkEncoder.encodeString("t", longs, 2, cfg))).bytes)
     val zs2 = acc2.result().get
     assert(zs2(0).kind == 1 && zs2(1).kind == 0)
   }
@@ -938,11 +948,36 @@ class BtrSourceSpec extends AnyFunSuite {
     assert(java.lang.Double.doubleToRawLongBits(ours.getDouble(1)) ==
       java.lang.Double.doubleToRawLongBits(ref.getDouble(1)))
     // codec-level: total-order extrema on a chunk that really holds -0.0
-    val part = graft.engine.ChunkEncoder.encodeDouble(0, 0, 0L, 0, "d",
+    val part = graft.engine.ChunkEncoder.encodeDouble("d",
       Array(0.0, -0.0, 3.5), 3, BtrConfig.default)
     assert(part.minDouble.exists(m => java.lang.Double.doubleToRawLongBits(m) ==
       java.lang.Double.doubleToRawLongBits(-0.0)), s"zone min: ${part.minDouble}")
     assert(part.maxDouble.contains(3.5))
+  }
+
+  test("batch read of a batch=* table returns exactly its contiguous published prefix") {
+    import spark.implicits._
+    import org.apache.hadoop.fs.Path
+    val dir = tmp("batches")
+    def ids(lo: Int) = (lo until lo + 100).map(i => (i, s"v$i")).toDF("id", "v").coalesce(1)
+    for (b <- 0 until 4) BlockFiles.write(ids(b * 100), s"$dir/batch=$b", BtrConfig(blockSize = 32))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new Path(dir).getFileSystem(conf)
+    // batch 2 unpublished (in flight or crashed): it and every later batch
+    // stay invisible; batch 4 has block files but no manifest
+    fs.delete(new Path(s"$dir/batch=2/${graft.engine.BtrTable.ManifestFile}"), false)
+    BlockFiles.write(ids(400), s"$dir/batch=4", BtrConfig(blockSize = 32))
+    fs.delete(new Path(s"$dir/batch=4/${graft.engine.BtrTable.ManifestFile}"), false)
+    val t = spark.read.format("btr").load(dir)
+    assert(t.as[(Int, String)].collect().map(_._1).sorted.toSeq == (0 until 200).toSeq)
+    // pushdown plans over the same prefix, per-batch zone index included
+    val q = t.where(col("id").between(120, 129))
+    assert(q.queryExecution.executedPlan.toString.contains("files=1/2"), q.queryExecution.executedPlan)
+    assert(q.count() == 10 && t.count() == 200)
+    assert(t.agg(max("id")).head().getInt(0) == 199)
+    // the batch lands: batches 2 and 3 become visible, 4 still not
+    BlockFiles.write(ids(200), s"$dir/batch=2", BtrConfig(blockSize = 32))
+    assert(spark.read.format("btr").load(dir).count() == 400)
   }
 
   test("range-partitioned blocks write") {

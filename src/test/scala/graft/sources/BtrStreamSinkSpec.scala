@@ -104,9 +104,9 @@ class BtrStreamSinkSpec extends AnyFunSuite {
     val colTypes = graft.engine.BtrEncoder.validateSchema(schema)
     val w = new BtrStreamingWrite(dir, schema, colTypes,
       graft.codec.BtrConfig.default, Array.emptyIntArray)
-    w.commit(7L, Array(BtrWriteCommit(0, 100L, 10L, 5L)))
+    w.commit(7L, Array(graft.engine.BlockFiles.BlockWriteStat(0, 5L, None)))
     val rows0 = BtrTable.readManifest(spark, s"$dir/batch=7").numRows
-    w.commit(7L, Array(BtrWriteCommit(0, 999L, 99L, 50L)))
+    w.commit(7L, Array(graft.engine.BlockFiles.BlockWriteStat(0, 50L, None)))
     assert(BtrTable.readManifest(spark, s"$dir/batch=7").numRows == rows0,
       "replayed commit republished under a live manifest")
     // abort of a published epoch must not delete its blocks

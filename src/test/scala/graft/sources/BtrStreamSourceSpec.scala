@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Paths
 
 /** Micro-batch btr source (round-5): `readStream.format("btr")` over a
-  * streamToBtr directory — completed batches stream in offset order,
+  * `batch=<id>/` directory — completed batches stream in offset order,
   * checkpoint resume reads only NEW batches, manifest-less (in-flight or
   * crashed) batch dirs stay invisible, and pushed filters reach the
   * streaming readers.

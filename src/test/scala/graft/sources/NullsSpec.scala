@@ -57,7 +57,7 @@ class NullsSpec extends AnyFunSuite {
     assert(back.except(df).count() == 0 && df.except(back).count() == 0)
   }
 
-  test("nulls round-trip through the engine parts path (BtrTable.write/load)") {
+  test("nulls round-trip through the BtrTable.write/load path") {
     val dir = tmp("engine")
     val df = nullDf
     BtrTable.write(df.coalesce(2), dir, BtrConfig(blockSize = 256))
@@ -170,9 +170,10 @@ class NullsSpec extends AnyFunSuite {
     // the fold (dead -> None) instead of producing wrong file zones
     val df = spark.range(512).selectExpr("CAST(id AS INT) AS id",
       "CASE WHEN id % 2 = 0 THEN NULL ELSE CAST(id AS DOUBLE) END AS d")
-    val parts = graft.engine.BtrEncoder.encodeToParts(df.coalesce(1), BtrConfig(blockSize = 512))
-      .collect().sortBy(_.colIdx)
-    val frame = BlockFiles.frameChunk(parts.toSeq).bytes
+    val rows = df.queryExecution.toRdd.map(_.copy()).collect()
+    val parts = new graft.engine.BtrEncoder.PartitionEncodeIterator(rows.iterator, df.schema,
+      graft.engine.BtrEncoder.validateSchema(df.schema), BtrConfig(blockSize = 512)).toSeq
+    val frame = BlockFiles.frameChunk(parts).bytes
     val ok = new ZoneAccumulator
     ok.fold(frame)
     val folded = ok.result()
