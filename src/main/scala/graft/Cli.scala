@@ -89,7 +89,7 @@ object Cli {
             val rows = e.cols.headOption.map(_.rows).getOrElse(-1L)
             println(s"  ${e.file}${if (rows >= 0) s" rows=$rows" else ""}: ${zs.mkString(" ")}")
           }
-        case None => println("file-level zone index: none (no zoned block file, or a pre-index table)")
+        case None => println("file-level zone index: none (no zoned block file, or a corrupt or older-build index)")
       }
     case "verify" =>
       import org.apache.spark.sql.functions._

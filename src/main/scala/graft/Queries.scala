@@ -395,8 +395,8 @@ object Queries {
   }
 
   /** Typed zone-map pushdown INTO the DSv2 source beyond ints: a string
-    * equality and a double range reach the scan and skip chunks via the v3
-    * frame zones (the reference pushes nothing). Oracle = plain WHERE.
+    * equality and a double range reach the scan and skip chunks via the
+    * typed frame zones (the reference pushes nothing). Oracle = plain WHERE.
     */
   private def qPruneTyped(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents").select(
@@ -594,7 +594,7 @@ object Queries {
 
   /** Null-extension round trip (round-5; the reference model is non-null,
     * SURVEY §1.2 — this engine extends it): NULLs injected into all three
-    * types, written through the DSv2 path (v5 frames carry per-chunk
+    * types, written through the DSv2 path (frames carry per-chunk
     * validity bitmaps; zones cover non-nulls), read back via the source.
     * Oracle = the same CASE projection in DuckDB (identity round trip,
     * null positions included in the hash compare).
@@ -641,7 +641,7 @@ object Queries {
       "CASE WHEN doc_id % 5 = 0 THEN NULL ELSE CAST(n_chars AS DOUBLE) * 0.5 END AS score_n",
       "CASE WHEN doc_id % 3 = 0 THEN NULL ELSE lang END AS lang_n")
 
-  /** COUNT(col) pushdown (round-5): non-null counts fold from the v5
+  /** COUNT(col) pushdown (round-5): non-null counts fold from the frame
     * headers' exact per-column null counts — `SELECT count(x)` decodes
     * NOTHING, and under a claimed WHERE only boundary chunks consult the
     * (header-resident) validity bitmap. `count(col)/count(*)` is the
@@ -687,7 +687,7 @@ object Queries {
 
   /** IS NULL pushdown through the DSv2 source: the predicate reaches the
     * scan as a null-statistics zone predicate — null-free FILES drop at
-    * planning (v2 zone index carries per-file null totals) and null-free
+    * planning (the zone index carries per-file null totals) and null-free
     * CHUNKS are skipped by their exact frame null counts. Oracle = plain
     * WHERE ... IS NULL.
     */

@@ -18,41 +18,35 @@ import java.nio.charset.StandardCharsets.UTF_8
   * with per-column byte lengths so a reader can skip (prune) columns
   * without decoding them. Schema/stats live in the same JSON manifest.
   *
-  * Frame layout per chunk (v5):
+  * Frame layout per chunk (format version 6, the only one written or
+  * read):
   *   [i32 numRows][u8 nCols][i32 headerCrc]
   *   [per col: u8 colType, i32 blobLen, i32 blobCrc, u8 zoneKind,
   *    zone payload, i32 nullCount, validity bitmap (⌈numRows/8⌉ bytes,
   *    present iff nullCount > 0; bit i set = row i NULL)]
   *   [col blobs…]
-  * zoneKind: 0 = none; 1 = long [i64 min][i64 max]; 2 = double
-  * [f64bits min][f64bits max]; 3 = string [u8 len][bytes][u8 len][bytes]
-  * (UTF-8, each ≤ 64 bytes — longer extrema are dropped, not truncated);
-  * v6 adds 4 = long [i64 min][i64 max][i64 sum] and 5 = double
-  * [f64bits min][f64bits max][f64bits sum] — numeric zones carrying the
-  * chunk's exact NON-NULL sum, so SUM(col) folds from headers exactly
-  * like MIN/MAX/COUNT (current writers always emit 4/5 for numeric
-  * zones; 1/2 remain readable from v3-v5 files).
+  * zoneKind: 0 = none; 3 = string [u8 len][bytes][u8 len][bytes] (UTF-8,
+  * each ≤ 64 bytes — longer extrema are dropped, not truncated); 4 = long
+  * [i64 min][i64 max][i64 sum]; 5 = double [f64bits min][f64bits max]
+  * [f64bits sum]. A numeric zone always carries the chunk's exact NON-NULL
+  * sum, so SUM(col) folds from headers exactly like MIN/MAX/COUNT.
   * With nulls present, zones cover the NON-NULL values only (null rows
   * store placeholders in the blob and can never satisfy a comparison).
   * The per-column zone maps let a reader skip whole chunks against pushed
   * range filters without touching their blobs — data skipping the
   * reference's scan lacks entirely (/root/reference/src/datafusion.rs:64-73).
   *
-  * CHECKSUMS: blobCrc is CRC32C of that column's blob. v5 headerCrc is
-  * CRC32C over the WHOLE frame header — numRows, nCols, and the per-column
-  * meta section (zones + validity bitmaps) — closing the v4 gap where
-  * numRows/nCols were unchecked and a bit flip in numRows could feed a
-  * silently wrong COUNT(*) through the header-only aggregate reader
-  * (round-4 advice #1; v4's crc starts after its own slot and covers only
-  * the meta section). At 100 TB a flipped bit in a zone map would
-  * silently SKIP matching chunks and a flipped blob byte would silently
-  * corrupt decoded values — the CRCs turn both into a contextual error.
-  * A reader verifies exactly what it touches: the header always, each blob
-  * only when actually read (pruned/skipped bytes stay unread).
+  * CHECKSUMS: blobCrc is CRC32C of that column's blob; headerCrc is CRC32C
+  * over the WHOLE frame header — numRows, nCols and the per-column meta
+  * section (zones + validity bitmaps), so a bit flip in numRows cannot feed
+  * a silently wrong COUNT(*) through the header-only aggregate reader. At
+  * 100 TB a flipped bit in a zone map would silently SKIP matching chunks
+  * and a flipped blob byte would silently corrupt decoded values — the CRCs
+  * turn both into a contextual error. A reader verifies exactly what it
+  * touches: the header always, each blob only when actually read
+  * (pruned/skipped bytes stay unread).
   *
-  * v1 (no zones), v2 (int-only zones), v3 (typed zones, no CRC), v4
-  * (CRC, no nulls, meta-only headerCrc) and v5 (nulls, no zone sums)
-  * frames remain readable. File header: "BTRS" magic + u8 version.
+  * File header: "BTRS" magic + u8 version.
   */
 object BlockFiles {
   final val Magic = 0x53525442 // "BTRS" little-endian
@@ -78,7 +72,7 @@ object BlockFiles {
     def encBytes: Long = cols.map(_.encBytes).sum
   }
 
-  /** Serialize one chunk's column parts into a v5 frame (CRC'd, nullable). */
+  /** Serialize one chunk's column parts into a frame (CRC'd, nullable). */
   def frameChunk(chunkParts: Seq[CompressedPart]): Frame = {
     var size = 4 + 1 + 4 // numRows, nCols, headerCrc
     val zones = new Array[Array[Byte]](chunkParts.length)
@@ -125,9 +119,8 @@ object BlockFiles {
       }
       i += 1
     }
-    // v5: headerCrc covers the frame from its first byte — numRows + nCols
-    // + the whole meta section (v4 covered only the meta section, leaving
-    // the COUNT(*) source unprotected)
+    // headerCrc covers the frame from its first byte — numRows + nCols +
+    // the whole meta section
     val hc = new java.util.zip.CRC32C
     hc.update(out, 0, 5)
     hc.update(out, metaStart, o - metaStart)
@@ -159,20 +152,11 @@ object BlockFiles {
       b
     }
     def bits(d: Double): Long = java.lang.Double.doubleToLongBits(d)
-    (p.minLong, p.maxLong, p.minDouble, p.maxDouble, p.minStr, p.maxStr) match {
-      case (Some(mn), Some(mx), _, _, _, _) =>
-        // current encoders always carry the sum alongside a numeric zone;
-        // the sum-less kinds stay writable for parts from older tables
-        p.sumLong match {
-          case Some(sm) => longs(4, mn, mx, sm)
-          case None     => longs(1, mn, mx)
-        }
-      case (_, _, Some(mn), Some(mx), _, _) =>
-        p.sumDouble match {
-          case Some(sm) => longs(5, bits(mn), bits(mx), bits(sm))
-          case None     => longs(2, bits(mn), bits(mx))
-        }
-      case (_, _, _, _, Some(mn), Some(mx)) =>
+    // the encoder sets a numeric part's sum exactly when it sets its zone
+    (p.minLong, p.maxLong, p.sumLong, p.minDouble, p.maxDouble, p.sumDouble, p.minStr, p.maxStr) match {
+      case (Some(mn), Some(mx), Some(sm), _, _, _, _, _) => longs(4, mn, mx, sm)
+      case (_, _, _, Some(mn), Some(mx), Some(sm), _, _) => longs(5, bits(mn), bits(mx), bits(sm))
+      case (_, _, _, _, _, _, Some(mn), Some(mx)) =>
         val bn = mn.getBytes(UTF_8)
         val bx = mx.getBytes(UTF_8)
         if (bn.length > 64 || bx.length > 64) Array[Byte](0)

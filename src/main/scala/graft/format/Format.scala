@@ -2,11 +2,15 @@ package graft.format
 
 /** On-disk btr-spark format: a directory holding
   *   - `blocks/part-NNNNN` — one raw block file per writer task, a sequence
-  *     of CRC'd v6 chunk frames with per-column zone maps (BlockFiles)
-  *   - `_btr_zones.bin` — the file-level zone index (ZoneIndex)
+  *     of CRC'd chunk frames with per-column zone maps (BlockFiles, frame
+  *     version 6)
+  *   - `_btr_zones.bin` — the CRC'd file-level zone index (ZoneIndex,
+  *     version 3)
   *   - `_btr_manifest.json` — schema + config + stats, the publish marker
   * or, for incremental and resumable writes, `batch=<id>/` sub-tables of
-  * that same shape, read as the contiguous published prefix.
+  * that same shape, read as the contiguous published prefix. Block files
+  * and the zone index are read only at their current version: a table
+  * written by an older build must be rewritten.
   *
   * Spark-native re-expression of the reference's btr directory
   * (`metadata` + `column{i}_part{j}` blobs, /root/reference/src/btrblocks.rs:668-672,

@@ -5,26 +5,28 @@ import org.apache.hadoop.fs.Path
 /** File-level zone index — the planning-time pruning sidecar
   * (`_btr_zones.bin`) for the raw block-file layout.
   *
-  * The v3 block frames carry per-CHUNK zone maps, which lets a reader skip
+  * The block frames carry per-CHUNK zone maps, which lets a reader skip
   * chunks without decoding blobs — but the reader still has to OPEN every
   * block file and stream its frame headers. At 100 TB (thousands of block
   * files) the next pruning level is per FILE: each write folds its chunks'
   * zones into one [min,max] per column and the driver persists them here,
   * so `BtrScan.planInputPartitions` drops whole files before a single task
-  * launches. Absent or unreadable index → no file pruning (chunk-level
-  * skipping still applies), so pre-index tables stay fully readable.
+  * launches. An absent, corrupt or other-version index → no file pruning
+  * (chunk-level skipping, against CRC-checked frame zones, still applies).
   *
   * Binary layout (all little-endian, mirroring the frame zone payloads):
-  *   [i32 magic "BTRZ"][u8 version=2][i32 nFiles]
-  *   per file: [u16 nameLen][name utf8][i64 rows (v2)][u8 nCols]
-  *     per col: [u8 kind][payload][i64 nullCount (v2)]
+  *   [i32 magic "BTRZ"][u8 version=3][i32 nFiles]
+  *   per file: [u16 nameLen][name utf8][i64 rows][u8 nCols]
+  *     per col: [u8 kind][payload][i64 nullCount]
   *       kind 0: none (some chunk lacked a zone — conservative)
   *       kind 1: [i64 min][i64 max]          (long)
   *       kind 2: [i64 minBits][i64 maxBits]  (double)
   *       kind 3: [u8 len][bytes] x2          (UTF-8 string, each <= 64)
-  * v2 adds per-file row counts and per-column null totals so IsNull /
-  * IsNotNull predicates can drop whole files (nullCount == 0 / == rows);
-  * v1 indexes read back with both as -1 (unknown — never prunes on nulls).
+  *   [i32 CRC32C of every preceding byte]
+  * Per-file row counts and per-column null totals let IsNull / IsNotNull
+  * predicates drop whole files (nullCount == 0 / == rows). The CRC makes a
+  * flipped byte a missing index rather than a zone that silently drops a
+  * file holding matching rows.
   */
 final case class ColZone(
     kind: Int,
@@ -40,7 +42,7 @@ final case class FileZone(file: String, cols: IndexedSeq[ColZone])
 object ZoneIndex {
   final val FileName = "_btr_zones.bin"
   final val Magic = 0x5a525442 // "BTRZ" little-endian
-  final val Version = 2
+  final val Version = 3
 
   def toBytes(entries: Seq[FileZone]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
@@ -69,6 +71,9 @@ object ZoneIndex {
         i64(c.nullCount)
       }
     }
+    val crc = new java.util.zip.CRC32C
+    crc.update(out.toByteArray)
+    i32(crc.getValue.toInt)
     out.toByteArray
   }
 
@@ -87,15 +92,20 @@ object ZoneIndex {
     def u16(): Int = u8() | (u8() << 8)
     def i32(): Int = u8() | (u8() << 8) | (u8() << 16) | (u8() << 24)
     def i64(): Long = (i32().toLong & 0xffffffffL) | (i32().toLong << 32)
-    require(i32() == Magic, "not a btr zone index")
+    require(b.length >= 13 && i32() == Magic, "not a btr zone index")
     val v = u8()
-    require(v >= 1 && v <= Version, s"unsupported zone index version $v")
+    require(v == Version, s"unsupported zone index version $v")
+    val crc = new java.util.zip.CRC32C
+    crc.update(b, 0, b.length - 4)
+    p = b.length - 4
+    require(i32() == crc.getValue.toInt, "zone index checksum mismatch")
+    p = 5
     val n = i32()
     val skipped = ColZone(0) // shared placeholder for unrequested columns
     (0 until n).map { _ =>
       val name = new Array[Byte](u16())
       System.arraycopy(b, p, name, 0, name.length); p += name.length
-      val rows = if (v >= 2) i64() else -1L
+      val rows = i64()
       val nCols = u8()
       val cols = (0 until nCols).map { c =>
         val want = needCols.forall(_.contains(c))
@@ -117,7 +127,7 @@ object ZoneIndex {
             }
           case k => sys.error(s"bad zone index kind $k")
         }
-        val nulls = if (v >= 2) i64() else -1L
+        val nulls = i64()
         if (want) z.copy(nullCount = nulls, rows = rows) else skipped
       }
       FileZone(new String(name, "UTF-8"), cols.toIndexedSeq)
@@ -151,8 +161,9 @@ object ZoneIndex {
     */
   final val MaxReadBytes: Long = 256L << 20
 
-  /** None when the index is absent, unreadable or over the size guard —
-    * pruning degrades to the chunk level, never to an error.
+  /** None when the index is absent, unreadable, corrupt (checksum
+    * mismatch), of another version or over the size guard — pruning
+    * degrades to the chunk level, never to an error.
     */
   def read(conf: org.apache.hadoop.conf.Configuration, dir: String,
       needCols: Option[Set[Int]] = None,
@@ -177,11 +188,11 @@ object ZoneIndex {
 }
 
 /** Folds per-frame (chunk) zone maps into one file-level zone per column by
-  * parsing current-version frame headers from their serialized bytes — the single fold
+  * parsing frame headers from their serialized bytes — the single fold
   * implementation shared by every writer (RDD block writer, compressed
-  * exchange reducer, DSv2 DataWriter; writers only ever produce the
-  * current frame version). A column whose ANY chunk lacks a zone folds to
-  * kind 0 (unprunable); null counts and row totals fold by summation.
+  * exchange reducer, DSv2 DataWriter). A column whose ANY chunk lacks a
+  * zone folds to kind 0 (unprunable); null counts and row totals fold by
+  * summation.
   *
   * The frame's headerCrc is VERIFIED before anything folds (round-4
   * advice #2): wrong file-level zones cause unsound planning-time pruning
@@ -218,8 +229,7 @@ final class ZoneAccumulator {
         p += 1 + 4 + 4 // colType, blobLen, blobCrc
         u8() match {
           case 0 => ()
-          case 1 | 2 => p += 16
-          case 4 | 5 => p += 24 // v6: min + max + sum
+          case 4 | 5 => p += 24 // min + max + sum
           case 3 =>
             // NOT `p += u8()`: the left operand of += is read before u8()
             // advances p, which would drop the length byte itself
@@ -254,13 +264,13 @@ final class ZoneAccumulator {
       i32() // blobCrc
       u8() match {
         case 0 => kind(c) = 0
-        case k0 @ (1 | 2 | 4 | 5) =>
-          // v6 sum-carrying kinds fold as their plain 1/2 min/max (the
-          // file-level index stays sum-free; the agg reader takes sums
-          // from the frame headers it streams anyway)
-          val k = if (k0 >= 4) k0 - 3 else k0
+        case k0 @ (4 | 5) =>
+          // numeric frame zones fold as the index's plain long (1) / double
+          // (2) min/max (the file-level index stays sum-free; the agg
+          // reader takes sums from the frame headers it streams anyway)
+          val k = k0 - 3
           val mn = i64(); val mx = i64()
-          if (k0 >= 4) i64() // discard the chunk sum
+          i64() // discard the chunk sum
           if (kind(c) == -1) { kind(c) = k; lmin(c) = mn; lmax(c) = mx }
           else if (kind(c) == k) {
             if (k == 1) {

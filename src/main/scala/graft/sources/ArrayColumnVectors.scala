@@ -54,7 +54,7 @@ final class StringArenaVector(d: DecodedStrings) extends NonNullVector(StringTyp
 }
 
 /** Nullable variants (the null extension): same zero-copy views plus the
-  * chunk's validity bitmap from the v5 frame (bit i set = row i NULL; the
+  * chunk's validity bitmap from the frame (bit i set = row i NULL; the
   * decoded array holds a placeholder there). Chunks without nulls keep the
   * NonNullVector fast path — the reader picks per chunk.
   */

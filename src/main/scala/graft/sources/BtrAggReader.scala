@@ -6,8 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read.PartitionReader
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Min/max/sum fold helpers shared by the grouped and ungrouped aggregate
-  * readers. Orderings are Spark's SQL semantics: ints as ints, doubles via
+/** Min/max/sum fold helpers of the aggregate reader. Orderings are Spark's SQL semantics: ints as ints, doubles via
   * Double.compare (NaN greatest, -0.0 < 0.0), strings via unsigned UTF-8
   * byte comparison. Fold state slots are AnyRef (java.lang boxes / byte
   * arrays; null = no value yet — surfaces as SQL NULL).
@@ -34,7 +33,7 @@ private[sources] object AggFolds {
   }
 
   /** Decode-fallback MIN/MAX fold for chunks without a usable zone (NaN,
-    * long-string extrema, pre-v3 files): folds the column's live values.
+    * long-string extrema): folds the column's live values.
     */
   def foldDecoded(where: String, acc: Array[AnyRef], s: Int, colType: Int,
       blob: Array[Byte], isMin: Boolean, nullBits: Array[Byte]): Unit = {
@@ -54,15 +53,14 @@ private[sources] object AggFolds {
         var i = 0
         while (i < d.count) { if (live(i)) foldBytes(acc, s, d.copy(i), isMin); i += 1 }
       case t =>
-        // pre-CRC (v1-v3) files have no header checksum to catch a flipped
-        // type byte — name the block instead of a bare MatchError
+        // name the block instead of a bare MatchError
         throw new java.io.IOException(
           s"corrupt btr block file $where: unknown column type $t in aggregate fallback")
     }
   }
 
-  /** Decode-fallback SUM fold for chunks without a header sum (pre-v6
-    * files, NaN chunks): sums the column's live (non-null) values.
+  /** Decode-fallback SUM fold for chunks without a header sum (NaN
+    * chunks): sums the column's live (non-null) values.
     */
   def sumDecoded(where: String, sumL: Array[Long], sumD: Array[Double], seen: Array[Boolean],
       s: Int, colType: Int, blob: Array[Byte], nullBits: Array[Byte]): Unit = {
@@ -83,20 +81,28 @@ private[sources] object AggFolds {
   }
 }
 
-/** Grouped aggregate pushdown reader (partial): one block file's chunks
-  * fold into per-group COUNT/COUNT(col)/MIN/MAX/SUM partials; Spark's
-  * final HashAggregate merges partials across files (the scan declares
-  * `supportCompletePushDown = false`).
+/** Aggregate pushdown reader (partial), grouped or not: one block file's
+  * chunks fold into per-group COUNT/COUNT(col)/MIN/MAX/SUM partials;
+  * Spark's final HashAggregate merges partials across files (the scan
+  * declares `supportCompletePushDown = false`). An ungrouped aggregate
+  * (`groupIdx` empty) is a GROUP BY over zero columns — one group, seeded
+  * at construction, so a file yields exactly one partial row even when
+  * every chunk is zone-rejected (count 0, MIN/MAX/SUM NULL).
+  *
+  * Per chunk, three-way: zone-rejected → skipped unread; the zones PROVE
+  * every row matches the claimed filters and the group columns are
+  * CONSTANT (zone min == max, or all-NULL; always so without group
+  * columns) → folded from headers alone, decoding only the zone-less agg
+  * columns (NaN, long-string and all-null cases); otherwise the filter +
+  * group + agg columns decode and rows fold one by one. COUNT(col) never
+  * decodes its column — the validity bitmap is header-resident.
   *
   * The scale shape is `SELECT day, count(*) … GROUP BY day` on a
-  * day-clustered 100 TB table: a chunk whose group columns are CONSTANT
-  * (zone min == max, or all-NULL) and whose filters all-match folds from
-  * headers alone — zero blob decode — exactly like the ungrouped reader.
-  * Only chunks spanning a group boundary (or partially matching a filter)
-  * decode, and then only the filter+group+agg columns.
+  * day-clustered 100 TB table: only chunks spanning a group boundary (or
+  * partially matching a filter) decode.
   *
   * MEMORY IS BOUNDED: partials accumulate in a combine map that flushes to
-  * the output queue when it exceeds [[BtrGroupAggReader.FlushGroups]]
+  * the output queue when it exceeds [[BtrAggReader.FlushGroups]]
   * entries — high-cardinality grouping degrades to per-chunk partial rows
   * (what Spark's own map-side partial aggregation does under the same
   * pressure), never to an unbounded hash table.
@@ -105,20 +111,23 @@ private[sources] object AggFolds {
   * keys normalize -0.0 to 0.0 and all NaNs to one NaN (Spark normalizes
   * floating grouping keys the same way before hashing).
   */
-object BtrGroupAggReader {
+object BtrAggReader {
   final val FlushGroups = 1 << 16
 }
 
-class BtrGroupAggReader(
+class BtrAggReader(
     file: String,
     conf: org.apache.hadoop.conf.Configuration,
-    groupIdx: Array[Int],
-    specs: Array[AggSpec],
+    specs: Seq[AggSpec],
     zones: Array[ZonePred] = Array.empty,
-    exact: Array[ExactPred] = Array.empty)
+    exact: Array[ExactPred] = Array.empty,
+    groupIdx: Array[Int] = Array.empty)
   extends PartitionReader[InternalRow] {
 
-  private val fr = new FrameReader(file, conf)
+  private val aggs = specs.toArray
+  // opened by the first next(), not here: Spark counts a task's input bytes
+  // only from reads made after the reader is constructed
+  private var fr: FrameReader = _
   private var chunksSkipped = 0L
   private var chunksTotal = 0L
   private var chunksHeaderOnly = 0L
@@ -137,11 +146,11 @@ class BtrGroupAggReader(
 
   private final class GState {
     var count = 0L
-    val cnt = new Array[Long](specs.length)
-    val sumL = new Array[Long](specs.length)
-    val sumD = new Array[Double](specs.length)
-    val sumSeen = new Array[Boolean](specs.length)
-    val acc = new Array[AnyRef](specs.length)
+    val cnt = new Array[Long](aggs.length)
+    val sumL = new Array[Long](aggs.length)
+    val sumD = new Array[Double](aggs.length)
+    val sumSeen = new Array[Boolean](aggs.length)
+    val acc = new Array[AnyRef](aggs.length)
   }
 
   private val groups = new java.util.LinkedHashMap[GKey, GState]()
@@ -156,6 +165,12 @@ class BtrGroupAggReader(
     st
   }
 
+  /** The one group of an ungrouped aggregate (null when grouped): seeded
+    * now, so it is emitted even if no chunk folds into it; one group never
+    * reaches the flush threshold before the end of the file.
+    */
+  private val single: GState = if (groupIdx.isEmpty) state(Array.empty) else null
+
   /** Spark groups all NaNs together and -0.0 with 0.0. */
   @inline private def normD(v: Double): Double =
     if (v == 0.0d) 0.0d else if (java.lang.Double.isNaN(v)) Double.NaN else v
@@ -164,13 +179,13 @@ class BtrGroupAggReader(
     val it = groups.entrySet().iterator()
     while (it.hasNext) {
       val e = it.next()
-      val row = new GenericInternalRow(groupIdx.length + specs.length)
+      val row = new GenericInternalRow(groupIdx.length + aggs.length)
       var g = 0
       while (g < groupIdx.length) { row.update(g, e.getKey.vs(g)); g += 1 }
       val st = e.getValue
       var s = 0
-      while (s < specs.length) {
-        val v: AnyRef = specs(s) match {
+      while (s < aggs.length) {
+        val v: AnyRef = aggs(s) match {
           case CountSpec           => Long.box(st.count)
           case _: CountColSpec     => Long.box(st.cnt(s))
           case SumSpec(_, isDouble) =>
@@ -226,14 +241,14 @@ class BtrGroupAggReader(
     Some(vs)
   }
 
-  /** Header-only fold of a fully-matching, constant-group chunk — the
-    * mirror of the ungrouped reader's all-match branch, into one GState.
+  /** Header-only fold of a fully-matching, constant-group chunk into one
+    * GState; only zone-less agg columns decode.
     */
   private def foldHeaders(st: GState): Unit = {
     st.count += fr.numRows
     var s = 0
-    while (s < specs.length) {
-      specs(s) match {
+    while (s < aggs.length) {
+      aggs(s) match {
         case MinMaxSpec(c, isMin) if c < fr.nCols =>
           fr.zKind(c) match {
             case 1 => AggFolds.foldLong(st.acc, s, if (isMin) fr.zLongMin(c) else fr.zLongMax(c), isMin)
@@ -244,7 +259,8 @@ class BtrGroupAggReader(
           }
         case CountColSpec(c) if c < fr.nCols =>
           st.cnt(s) += fr.numRows - fr.nullCount(c)
-        case SumSpec(c, isDouble) if c < fr.nCols && fr.zHasSum(c) =>
+        case SumSpec(c, isDouble) if c < fr.nCols && fr.zKind(c) != 0 =>
+          // a numeric zone always carries the chunk's exact non-null sum
           if (isDouble) st.sumD(s) += java.lang.Double.longBitsToDouble(fr.zSumBits(c))
           else st.sumL(s) += fr.zSumBits(c)
           st.sumSeen(s) = true
@@ -252,21 +268,22 @@ class BtrGroupAggReader(
       }
       s += 1
     }
-    // decode pass for zone-less agg columns, ascending column order
-    // (FrameReader contract); all-NULL columns contribute nothing
-    val needCols = specs.indices
-      .filter(s => specs(s) match {
-        case MinMaxSpec(c, _) => c < fr.nCols && fr.zKind(c) == 0 && fr.nullCount(c) < fr.numRows
-        case SumSpec(c, _)    => c < fr.nCols && !fr.zHasSum(c) && fr.nullCount(c) < fr.numRows
-        case _                => false
+    // decode pass for zone-less MIN/MAX/SUM columns, ascending column
+    // order (FrameReader contract); all-NULL columns contribute nothing
+    val needCols = aggs.indices
+      .filter(s => aggs(s) match {
+        case _: MinMaxSpec | _: SumSpec =>
+          val c = specCol(aggs(s))
+          c < fr.nCols && fr.zKind(c) == 0 && fr.nullCount(c) < fr.numRows
+        case _ => false
       })
-      .sortBy(s => specCol(specs(s)))
+      .sortBy(s => specCol(aggs(s)))
     var lastCol = -1
     var blob: Array[Byte] = null
     needCols.foreach { s =>
-      val c = specCol(specs(s))
+      val c = specCol(aggs(s))
       if (c != lastCol) { blob = fr.readBlob(c); lastCol = c }
-      specs(s) match {
+      aggs(s) match {
         case MinMaxSpec(_, isMin) =>
           AggFolds.foldDecoded(fr.where, st.acc, s, fr.colType(c), blob, isMin, fr.nullBits(c))
         case _: SumSpec =>
@@ -286,12 +303,12 @@ class BtrGroupAggReader(
   }
 
   /** Row-level path: decode filter (when not all-match) + group + agg
-    * columns, route each passing row to its group's state. COUNT(col)
-    * never decodes its column — the validity bitmap is header-resident.
+    * columns, route each passing row to its group's state (the one state
+    * of an ungrouped aggregate, with no per-row key).
     */
   private def decodeRows(evalFilter: Boolean): Unit = {
     chunksDecoded += 1
-    val aggCols = specs.collect {
+    val aggCols = aggs.collect {
       case MinMaxSpec(c, _) => c
       case SumSpec(c, _)    => c
     }
@@ -305,7 +322,7 @@ class BtrGroupAggReader(
         case t if t == ColType.Double.toInt  => DoubleCodec.decode(blob)
         case t if t == ColType.String.toInt  => StringCodec.decodeSlices(new BufReader(blob))
         case t => throw new java.io.IOException(
-          s"corrupt btr block file ${fr.where}: unknown column type $t in grouped aggregate")
+          s"corrupt btr block file ${fr.where}: unknown column type $t in aggregate")
       }
     }
     fr.finishChunk()
@@ -329,24 +346,26 @@ class BtrGroupAggReader(
         }
       }
       if (ok) {
-        val vs = new Array[AnyRef](groupIdx.length)
-        var g = 0
-        while (g < groupIdx.length) {
-          val c = groupIdx(g)
-          vs(g) =
-            if (nullAt(c, i)) null
-            else byCol(c) match {
-              case a: Array[Int]     => Int.box(a(i))
-              case a: Array[Double]  => Double.box(normD(a(i)))
-              case d: DecodedStrings => UTF8String.fromBytes(d.copy(i))
-            }
-          g += 1
+        val st = if (single != null) single else {
+          val vs = new Array[AnyRef](groupIdx.length)
+          var g = 0
+          while (g < groupIdx.length) {
+            val c = groupIdx(g)
+            vs(g) =
+              if (nullAt(c, i)) null
+              else byCol(c) match {
+                case a: Array[Int]     => Int.box(a(i))
+                case a: Array[Double]  => Double.box(normD(a(i)))
+                case d: DecodedStrings => UTF8String.fromBytes(d.copy(i))
+              }
+            g += 1
+          }
+          state(vs)
         }
-        val st = state(vs)
         st.count += 1
         var s = 0
-        while (s < specs.length) {
-          specs(s) match {
+        while (s < aggs.length) {
+          aggs(s) match {
             case MinMaxSpec(c, isMin) if c < fr.nCols && !nullAt(c, i) =>
               byCol(c) match {
                 case a: Array[Int]     => AggFolds.foldLong(st.acc, s, a(i), isMin)
@@ -374,11 +393,12 @@ class BtrGroupAggReader(
   private def processChunk(): Boolean = {
     if (!fr.nextHeader()) return false
     chunksTotal += 1
-    if (zones.exists(_.rejectsCtx(fr.zoneCtx))) {
+    if (zones.exists(_.rejects(fr.zoneCtx))) {
       fr.finishChunk()
       chunksSkipped += 1
-    } else if (exact.forall(_.allMatchCtx(fr.zoneCtx))) {
-      constGroupKey() match {
+    } else if (exact.forall(_.allMatch(fr.zoneCtx))) {
+      if (single != null) foldHeaders(single)
+      else constGroupKey() match {
         case Some(vs) => foldHeaders(state(vs))
         case None     => decodeRows(evalFilter = false)
       }
@@ -387,9 +407,10 @@ class BtrGroupAggReader(
   }
 
   override def next(): Boolean = {
+    if (fr == null) fr = new FrameReader(file, conf)
     while (pending.isEmpty && !eof) {
       if (!processChunk()) { flush(); eof = true }
-      else if (groups.size >= BtrGroupAggReader.FlushGroups) flush()
+      else if (groups.size >= BtrAggReader.FlushGroups) flush()
     }
     cur = pending.poll()
     cur != null
@@ -401,5 +422,5 @@ class BtrGroupAggReader(
     Array(ChunksSkippedTaskMetric(chunksSkipped), ChunksTotalTaskMetric(chunksTotal),
       AggChunksHeaderOnlyTaskMetric(chunksHeaderOnly), AggChunksDecodedTaskMetric(chunksDecoded))
 
-  override def close(): Unit = fr.close()
+  override def close(): Unit = if (fr != null) fr.close()
 }

@@ -88,58 +88,53 @@ class BtrBatchTable(dir: String, schema: StructType)
     new BtrWriteBuilder(dir, info)
 }
 
-/** Zone predicate on one file column (by file column index): decides from a
-  * zone map [min, max] (chunk-level frame zone or file-level index entry)
-  * whether that unit can be skipped whole. `rejects` is the SINGLE dispatch
-  * point shared by both pruning levels — kind: 1 long, 2 double (raw bits
-  * in the long args), 3 string; anything else never skips on range.
-  * `nullCount`/`rows` carry the unit's null statistics (-1 = unknown, e.g.
-  * a v1 file-level index): range predicates ignore them (a NULL row never
-  * satisfies a comparison, and zones cover non-null values only — so a
-  * range skip stays sound in the presence of nulls), null predicates
-  * skip on them exactly.
-  */
 /** Read-only view of one pruning unit's per-column zone statistics — a
-  * chunk's frame header or a file's ColZone row. Lets compound predicates
-  * reference MORE THAN ONE column during rejection (round-5): an OR over
-  * two columns rejects a unit only when each branch rejects it against its
-  * own column's zone.
+  * chunk's frame header or a file's ColZone row. kind: 1 long, 2 double
+  * (raw bits in the long fields), 3 string, 0 none. `nullCount`/`rows`
+  * carry the unit's null statistics (-1 = unknown).
+  *
+  * THE column-width guard: a column beyond the unit's width reads as
+  * zone-less with unknown nulls, so it never rejects a unit and never
+  * proves a match (sound). Predicates read the other accessors only after
+  * `kind` or `nullCount` has accepted the column.
   */
 trait ZoneCtx {
   def nCols: Int
-  def kind(c: Int): Int
+  protected def zoneKind(c: Int): Int
+  protected def nulls(c: Int): Long
+  final def kind(c: Int): Int = if (c < nCols) zoneKind(c) else 0
+  final def nullCount(c: Int): Long = if (c < nCols) nulls(c) else -1L
   def lmin(c: Int): Long
   def lmax(c: Int): Long
   def smin(c: Int): Array[Byte]
   def smax(c: Int): Array[Byte]
-  def nullCount(c: Int): Long
   def rows(c: Int): Long
 }
 
+/** Zone predicate (by file column index): decides from a unit's zone
+  * statistics (chunk-level frame zones or a file-level index row) whether
+  * that unit can be skipped whole. `rejects` is the SINGLE dispatch shared
+  * by both pruning levels. Range predicates ignore the null statistics (a
+  * NULL row never satisfies a comparison, and zones cover non-null values
+  * only — so a range skip stays sound in the presence of nulls); null
+  * predicates skip on them exactly. Compounds reference MORE THAN ONE
+  * column: an OR over two columns rejects a unit only when each branch
+  * rejects it against its own column's zone.
+  */
 sealed trait ZonePred extends Serializable {
   def colIdx: Int
   /** Every column this predicate consults (compounds may span several) —
     * feeds the zone index's column-subset lazy parse.
     */
   def cols: Seq[Int] = Seq(colIdx)
-  def rejects(kind: Int, lmin: Long, lmax: Long, smin: Array[Byte], smax: Array[Byte],
-      nullCount: Long, rows: Long): Boolean
-  /** Ctx-based rejection — THE dispatch every pruning site uses. Leaf
-    * predicates default to their single-column `rejects` against
-    * `colIdx`'s zone; compounds compose across columns. A column beyond
-    * the unit's width never rejects (sound).
-    */
-  def rejectsCtx(ctx: ZoneCtx): Boolean =
-    colIdx < ctx.nCols && rejects(ctx.kind(colIdx), ctx.lmin(colIdx), ctx.lmax(colIdx),
-      ctx.smin(colIdx), ctx.smax(colIdx), ctx.nullCount(colIdx), ctx.rows(colIdx))
+  def rejects(z: ZoneCtx): Boolean
 }
 
 /** Inclusive [lo, hi] over an int column's long zone. */
 case class LongZonePred(colIdx: Int, lo: Long, hi: Long) extends ZonePred {
   def skip(mn: Long, mx: Long): Boolean = mx < lo || mn > hi
-  def rejects(kind: Int, lmin: Long, lmax: Long, smin: Array[Byte], smax: Array[Byte],
-      nullCount: Long, rows: Long): Boolean =
-    kind == 1 && skip(lmin, lmax)
+  def rejects(z: ZoneCtx): Boolean =
+    z.kind(colIdx) == 1 && skip(z.lmin(colIdx), z.lmax(colIdx))
 }
 
 /** Inclusive [lo, hi] over a double column's zone (zone never covers NaN —
@@ -147,21 +142,22 @@ case class LongZonePred(colIdx: Int, lo: Long, hi: Long) extends ZonePred {
   */
 case class DoubleZonePred(colIdx: Int, lo: Double, hi: Double) extends ZonePred {
   def skip(mn: Double, mx: Double): Boolean = mx < lo || mn > hi
-  def rejects(kind: Int, lmin: Long, lmax: Long, smin: Array[Byte], smax: Array[Byte],
-      nullCount: Long, rows: Long): Boolean =
-    kind == 2 && skip(java.lang.Double.longBitsToDouble(lmin), java.lang.Double.longBitsToDouble(lmax))
+  def rejects(z: ZoneCtx): Boolean =
+    z.kind(colIdx) == 2 && skip(java.lang.Double.longBitsToDouble(z.lmin(colIdx)),
+      java.lang.Double.longBitsToDouble(z.lmax(colIdx)))
 }
 
 /** `col IS NULL`: skip any unit KNOWN to hold zero nulls. */
 case class IsNullZonePred(colIdx: Int) extends ZonePred {
-  def rejects(kind: Int, lmin: Long, lmax: Long, smin: Array[Byte], smax: Array[Byte],
-      nullCount: Long, rows: Long): Boolean = nullCount == 0L
+  def rejects(z: ZoneCtx): Boolean = z.nullCount(colIdx) == 0L
 }
 
 /** `col IS NOT NULL`: skip any unit KNOWN to be all-null. */
 case class NotNullZonePred(colIdx: Int) extends ZonePred {
-  def rejects(kind: Int, lmin: Long, lmax: Long, smin: Array[Byte], smax: Array[Byte],
-      nullCount: Long, rows: Long): Boolean = rows > 0 && nullCount == rows
+  def rejects(z: ZoneCtx): Boolean = {
+    val n = z.nullCount(colIdx)
+    n > 0 && n == z.rows(colIdx)
+  }
 }
 
 object StrOp { val GT = 0; val GTE = 1; val LT = 2; val LTE = 3; val EQ = 4 }
@@ -185,9 +181,8 @@ case class StringZonePred(colIdx: Int, op: Int, v: String) extends ZonePred {
       case StrOp.EQ  => cmp(vb, mn) < 0 || cmp(vb, mx) > 0
     }
   }
-  def rejects(kind: Int, lmin: Long, lmax: Long, smin: Array[Byte], smax: Array[Byte],
-      nullCount: Long, rows: Long): Boolean =
-    kind == 3 && skip(smin, smax)
+  def rejects(z: ZoneCtx): Boolean =
+    z.kind(colIdx) == 3 && skip(z.smin(colIdx), z.smax(colIdx))
 }
 
 /** IN-set zone predicates: skip a chunk when EVERY set member misses its
@@ -197,16 +192,15 @@ case class StringZonePred(colIdx: Int, op: Int, v: String) extends ZonePred {
   */
 case class LongInZonePred(colIdx: Int, vs: Seq[Long]) extends ZonePred {
   def skip(mn: Long, mx: Long): Boolean = vs.forall(v => v < mn || v > mx)
-  def rejects(kind: Int, lmin: Long, lmax: Long, smin: Array[Byte], smax: Array[Byte],
-      nullCount: Long, rows: Long): Boolean =
-    kind == 1 && skip(lmin, lmax)
+  def rejects(z: ZoneCtx): Boolean =
+    z.kind(colIdx) == 1 && skip(z.lmin(colIdx), z.lmax(colIdx))
 }
 
 case class DoubleInZonePred(colIdx: Int, vs: Seq[Double]) extends ZonePred {
   def skip(mn: Double, mx: Double): Boolean = vs.forall(v => v < mn || v > mx)
-  def rejects(kind: Int, lmin: Long, lmax: Long, smin: Array[Byte], smax: Array[Byte],
-      nullCount: Long, rows: Long): Boolean =
-    kind == 2 && skip(java.lang.Double.longBitsToDouble(lmin), java.lang.Double.longBitsToDouble(lmax))
+  def rejects(z: ZoneCtx): Boolean =
+    z.kind(colIdx) == 2 && skip(java.lang.Double.longBitsToDouble(z.lmin(colIdx)),
+      java.lang.Double.longBitsToDouble(z.lmax(colIdx)))
 }
 
 case class StringInZonePred(colIdx: Int, vs: Seq[String]) extends ZonePred {
@@ -215,9 +209,8 @@ case class StringInZonePred(colIdx: Int, vs: Seq[String]) extends ZonePred {
   def skip(mn: Array[Byte], mx: Array[Byte]): Boolean =
     bs.forall(b => java.util.Arrays.compareUnsigned(b, mn) < 0 ||
       java.util.Arrays.compareUnsigned(b, mx) > 0)
-  def rejects(kind: Int, lmin: Long, lmax: Long, smin: Array[Byte], smax: Array[Byte],
-      nullCount: Long, rows: Long): Boolean =
-    kind == 3 && skip(smin, smax)
+  def rejects(z: ZoneCtx): Boolean =
+    z.kind(colIdx) == 3 && skip(z.smin(colIdx), z.smax(colIdx))
 }
 
 /** `col LIKE 'p%'` (StringStartsWith): rows starting with prefix p lie in
@@ -234,9 +227,8 @@ case class StringPrefixZonePred(colIdx: Int, prefix: String) extends ZonePred {
   def skip(mn: Array[Byte], mx: Array[Byte]): Boolean =
     java.util.Arrays.compareUnsigned(mx, pb) < 0 ||
       (succ != null && java.util.Arrays.compareUnsigned(mn, succ) >= 0)
-  def rejects(kind: Int, lmin: Long, lmax: Long, smin: Array[Byte], smax: Array[Byte],
-      nullCount: Long, rows: Long): Boolean =
-    kind == 3 && skip(smin, smax)
+  def rejects(z: ZoneCtx): Boolean =
+    z.kind(colIdx) == 3 && skip(z.smin(colIdx), z.smax(colIdx))
 }
 
 object StringPrefixZonePred {
@@ -262,24 +254,19 @@ case class StringHullZonePred(colIdx: Int, lo: String, hi: String) extends ZoneP
   def skip(mn: Array[Byte], mx: Array[Byte]): Boolean =
     java.util.Arrays.compareUnsigned(hib, mn) < 0 ||
       java.util.Arrays.compareUnsigned(lob, mx) > 0
-  def rejects(kind: Int, lmin: Long, lmax: Long, smin: Array[Byte], smax: Array[Byte],
-      nullCount: Long, rows: Long): Boolean =
-    kind == 3 && skip(smin, smax)
+  def rejects(z: ZoneCtx): Boolean =
+    z.kind(colIdx) == 3 && skip(z.smin(colIdx), z.smax(colIdx))
 }
 
 /** Disjunction (`f1 OR f2`, round-5), possibly ACROSS columns: a unit is
   * rejected only when BOTH branches reject it (each against its own
   * column's zone) — no row can satisfy the OR iff none can satisfy either
-  * side. All pruning dispatch is ctx-based; the single-column `rejects`
-  * is never sound for a compound and conservatively never rejects.
+  * side.
   */
 case class OrZonePred(l: ZonePred, r: ZonePred) extends ZonePred {
   def colIdx: Int = l.colIdx
   override def cols: Seq[Int] = (l.cols ++ r.cols).distinct
-  def rejects(kind: Int, lmin: Long, lmax: Long, smin: Array[Byte], smax: Array[Byte],
-      nullCount: Long, rows: Long): Boolean = false
-  override def rejectsCtx(ctx: ZoneCtx): Boolean =
-    l.rejectsCtx(ctx) && r.rejectsCtx(ctx)
+  def rejects(z: ZoneCtx): Boolean = l.rejects(z) && r.rejects(z)
 }
 
 /** Conjunction (nested inside an OR — Spark splits top-level conjuncts
@@ -289,10 +276,7 @@ case class OrZonePred(l: ZonePred, r: ZonePred) extends ZonePred {
 case class AndZonePred(l: ZonePred, r: ZonePred) extends ZonePred {
   def colIdx: Int = l.colIdx
   override def cols: Seq[Int] = (l.cols ++ r.cols).distinct
-  def rejects(kind: Int, lmin: Long, lmax: Long, smin: Array[Byte], smax: Array[Byte],
-      nullCount: Long, rows: Long): Boolean = false
-  override def rejectsCtx(ctx: ZoneCtx): Boolean =
-    l.rejectsCtx(ctx) || r.rejectsCtx(ctx)
+  def rejects(z: ZoneCtx): Boolean = l.rejects(z) || r.rejects(z)
 }
 
 /** One shared size policy for exact-set zone checks: beyond this, numeric
@@ -417,9 +401,8 @@ class BtrScanBuilder(dir: String, fullSchema: StructType)
     case StringStartsWith(a, p) if p != null =>
       colOf(a, StringType).map(StringPrefixZonePred(_, p))
     // ---- null predicates (the null extension): skip units whose null
-    // statistics decide them — chunks carry exact per-column null counts
-    // (v5 frames; v1-v4 are null-free by construction, count 0), the v2
-    // file index carries per-file totals
+    // statistics decide them — chunks carry exact per-column null counts,
+    // the file index carries per-file totals
     case IsNull(a) =>
       val i = fullSchema.fieldNames.indexOf(a)
       if (i >= 0) Some(IsNullZonePred(i)) else None
@@ -516,9 +499,9 @@ class BtrScanBuilder(dir: String, fullSchema: StructType)
     * and zone maps are EXACT chunk extrema (ChunkEncoder), so an unfiltered
     * count/min/max never has to decode a column blob — the reader answers
     * from headers and falls back to decoding ONLY the chunks that lack a
-    * zone (NaN chunks, >64-byte or non-UTF-8-faithful string extrema, v1/v2
-    * files, all-null columns). Partial pushdown — the scan emits one
-    * partial row per block file and Spark combines.
+    * zone (NaN chunks, >64-byte or non-UTF-8-faithful string extrema,
+    * all-null columns). Partial pushdown — the scan emits one partial row
+    * per block file (per group and file under GROUP BY) and Spark combines.
     *
     * FILTERED aggregates (round-5): Spark offers aggregates only when
     * every filter was claimed at the source; with the exact-claim layer
@@ -600,17 +583,16 @@ class BtrScanBuilder(dir: String, fullSchema: StructType)
 sealed trait AggSpec extends Serializable
 case object CountSpec extends AggSpec
 case class MinMaxSpec(colIdx: Int, isMin: Boolean) extends AggSpec
-/** COUNT(col) — non-null count: v5 headers carry exact per-column null
+/** COUNT(col) — non-null count: frame headers carry exact per-column null
   * counts, so this folds as rows − nullCount with ZERO decode for every
   * fully-matching chunk; mixed chunks consult the validity bitmap (also
   * header-resident) per matching row, still never decoding the counted
   * column's blob.
   */
 case class CountColSpec(colIdx: Int) extends AggSpec
-/** SUM(col) — v6 numeric zones (kinds 4/5) carry the chunk's exact
-  * NON-NULL sum, so fully-matching chunks fold from headers with zero
-  * decode; zone-less chunks (NaN, all-null, pre-v6 files) decode the one
-  * column and sum its live values. The partial is exact for int columns
+/** SUM(col) — numeric frame zones carry the chunk's exact NON-NULL sum,
+  * so fully-matching chunks fold from headers with zero decode; zone-less
+  * chunks (NaN) decode the one column and sum its live values. The partial is exact for int columns
   * (i64 over ≤2^16-row chunks cannot overflow); double partials
   * accumulate in chunk row order, the order a decode would visit.
   */
@@ -623,15 +605,15 @@ object ZonePredEval {
   def rejects(preds: Array[ZonePred], cols: IndexedSeq[graft.format.ColZone]): Boolean = {
     val ctx: ZoneCtx = new ZoneCtx {
       def nCols: Int = cols.length
-      def kind(c: Int): Int = cols(c).kind
+      protected def zoneKind(c: Int): Int = cols(c).kind
+      protected def nulls(c: Int): Long = cols(c).nullCount
       def lmin(c: Int): Long = cols(c).lmin
       def lmax(c: Int): Long = cols(c).lmax
       def smin(c: Int): Array[Byte] = cols(c).smin
       def smax(c: Int): Array[Byte] = cols(c).smax
-      def nullCount(c: Int): Long = cols(c).nullCount
       def rows(c: Int): Long = cols(c).rows
     }
-    preds.exists(_.rejectsCtx(ctx))
+    preds.exists(_.rejects(ctx))
   }
 }
 
@@ -664,8 +646,8 @@ object BtrScan {
 
   /** PLANNING-time file pruning: drop the files whose entry in their
     * table's file-level zone index (`_btr_zones.bin`, one read per table
-    * dir) rejects `zones`. No index (pre-index tables, unreadable sidecar)
-    * keeps every file of that table; the chunk-level zone skip still
+    * dir) rejects `zones`. No usable index (absent, corrupt or of another
+    * version) keeps every file of that table; the chunk-level zone skip still
     * applies inside each reader.
     */
   def pruneFiles(files: Array[InputPartition], zones: Array[ZonePred]): Array[InputPartition] =
@@ -947,8 +929,9 @@ object RuntimePredTranslator {
   }
 }
 
-/** Aggregate scan (COUNT(*)/MIN/MAX, ungrouped; since round-5 also under
-  * exact-claimed filters): one partial row per block file. Counts come from
+/** Aggregate scan (COUNT(*)/COUNT(col)/MIN/MAX/SUM, optionally under
+  * exact-claimed filters and GROUP BY): one partial row per block file, or
+  * per group and file when grouped (BtrAggReader). Counts come from
   * frame headers alone; min/max come from the per-chunk zone maps where
   * present (exact extrema) and fall back to decoding ONLY the zone-less
   * chunks' blobs for the referenced column. With filters, chunks go
@@ -1028,206 +1011,8 @@ case class BtrAggReaderFactory(
     groupIdx: Array[Int] = Array.empty)
   extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    if (groupIdx.nonEmpty)
-      new BtrGroupAggReader(partition.asInstanceOf[BtrInputPartition].file, ConfShim.conf(confB),
-        groupIdx, specs.toArray, zones, exact)
-    else new BtrAggReader(partition.asInstanceOf[BtrInputPartition].file, ConfShim.conf(confB),
-      specs, zones, exact)
-}
-
-/** Streams one block file's frame headers, folding each pushed aggregate.
-  * Per chunk and per min/max spec: zone present → fold the exact extremum;
-  * zone absent → decode that column's blob and fold the values (Spark
-  * orderings: doubles via Double.compare — NaN greatest, -0.0 < 0.0 —
-  * strings via unsigned UTF-8 byte compare). Blobs no spec needs are never
-  * read.
-  */
-class BtrAggReader(file: String, conf: org.apache.hadoop.conf.Configuration, specs: Seq[AggSpec],
-    zones: Array[ZonePred] = Array.empty, exact: Array[ExactPred] = Array.empty)
-  extends PartitionReader[InternalRow] {
-  private var emitted = false
-  private val row = new GenericInternalRow(specs.length)
-  private var chunksSkipped = 0L
-  private var chunksTotal = 0L
-  private var chunksHeaderOnly = 0L
-  private var chunksDecoded = 0L
-
-  override def next(): Boolean = {
-    if (emitted) return false
-    var count = 0L
-    val specArr = specs.toArray
-    // per-spec non-null counts for CountColSpec (CountStar shares `count`)
-    val cnt = new Array[Long](specArr.length)
-    // per-spec SUM state; seen=false surfaces as SQL NULL (no non-null row)
-    val sumL = new Array[Long](specArr.length)
-    val sumD = new Array[Double](specArr.length)
-    val sumSeen = new Array[Boolean](specArr.length)
-    // per-spec fold state (AnyRef: java.lang boxes / byte arrays; null = no
-    // value yet — surfaces as SQL NULL for an empty table)
-    val acc = new Array[AnyRef](specArr.length)
-    val fr = new FrameReader(file, conf)
-    try {
-      while (fr.nextHeader()) {
-        chunksTotal += 1
-        val rejected = zones.exists(_.rejectsCtx(fr.zoneCtx))
-        if (rejected) {
-          fr.finishChunk()
-          chunksSkipped += 1
-        } else if (exact.forall(_.allMatchCtx(fr.zoneCtx))) {
-          // every row matches: fold from headers/zones, decode only
-          // zone-less agg columns (NaN / long-string / all-null cases)
-          count += fr.numRows
-          var s = 0
-          while (s < specArr.length) {
-            specArr(s) match {
-              case MinMaxSpec(c, isMin) if c < fr.nCols =>
-                fr.zKind(c) match {
-                  case 1 => AggFolds.foldLong(acc, s, if (isMin) fr.zLongMin(c) else fr.zLongMax(c), isMin)
-                  case 2 => AggFolds.foldDouble(acc, s,
-                    java.lang.Double.longBitsToDouble(if (isMin) fr.zLongMin(c) else fr.zLongMax(c)), isMin)
-                  case 3 => AggFolds.foldBytes(acc, s, if (isMin) fr.zStrMin(c) else fr.zStrMax(c), isMin)
-                  case _ => () // no zone: decoded below
-                }
-              case CountColSpec(c) if c < fr.nCols =>
-                // exact per-column null count in the header: zero decode
-                cnt(s) += fr.numRows - fr.nullCount(c)
-              case SumSpec(c, isDouble) if c < fr.nCols && fr.zHasSum(c) =>
-                // v6 zone carries the chunk's exact non-null sum
-                if (isDouble) sumD(s) += java.lang.Double.longBitsToDouble(fr.zSumBits(c))
-                else sumL(s) += fr.zSumBits(c)
-                sumSeen(s) = true
-              case _ => ()
-            }
-            s += 1
-          }
-          // decode pass, ascending column order (FrameReader contract). A
-          // zone-less ALL-NULL column contributes nothing (its blob holds
-          // placeholders only); partial nulls fold the non-null positions via
-          // the chunk's validity bitmap.
-          val needCols = specArr.indices
-            .filter(s => specArr(s) match {
-              case MinMaxSpec(c, _) => c < fr.nCols && fr.zKind(c) == 0 && fr.nullCount(c) < fr.numRows
-              case SumSpec(c, _) => c < fr.nCols && !fr.zHasSum(c) && fr.nullCount(c) < fr.numRows
-              case _ => false
-            })
-            .sortBy(s => specCol(specArr(s)))
-          var lastCol = -1
-          var blob: Array[Byte] = null
-          needCols.foreach { s =>
-            val c = specCol(specArr(s))
-            if (c != lastCol) { blob = fr.readBlob(c); lastCol = c }
-            specArr(s) match {
-              case MinMaxSpec(_, isMin) =>
-                AggFolds.foldDecoded(fr.where, acc, s, fr.colType(c), blob, isMin, fr.nullBits(c))
-              case _: SumSpec =>
-                AggFolds.sumDecoded(fr.where, sumL, sumD, sumSeen, s, fr.colType(c), blob, fr.nullBits(c))
-              case _ => ()
-            }
-          }
-          if (needCols.isEmpty) chunksHeaderOnly += 1 else chunksDecoded += 1
-          fr.finishChunk()
-        } else {
-          // mixed chunk: decode filter + agg columns, evaluate row-by-row
-          chunksDecoded += 1
-          val aggCols = specArr.collect {
-            case MinMaxSpec(c, _) => c
-            case SumSpec(c, _) => c
-          }
-          val cols = (exact.flatMap(_.cols) ++ aggCols).distinct.sorted.filter(_ < fr.nCols)
-          val byCol = new Array[AnyRef](fr.nCols)
-          cols.foreach { c =>
-            val blob = fr.readBlob(c)
-            byCol(c) = fr.colType(c) match {
-              case t if t == ColType.Integer.toInt => IntCodec.decode(blob)
-              case t if t == ColType.Double.toInt  => DoubleCodec.decode(blob)
-              case t if t == ColType.String.toInt  => StringCodec.decodeSlices(new BufReader(blob))
-              case t => throw new java.io.IOException(
-                s"corrupt btr block file $file: unknown column type $t in filtered aggregate")
-            }
-          }
-          fr.finishChunk()
-          @inline def nullAt(c: Int, i: Int): Boolean = {
-            val nb = fr.nullBits(c)
-            nb != null && ((nb(i >> 3) >> (i & 7)) & 1) == 1
-          }
-          val dataByCol: Int => AnyRef = c => byCol(c)
-          var i = 0
-          while (i < fr.numRows) {
-            var ok = true
-            var p = 0
-            while (ok && p < exact.length) {
-              val pr = exact(p)
-              ok = if (pr.isLeaf) {
-                val c = pr.colIdx
-                if (nullAt(c, i)) pr.matchesNull else pr.matches(byCol(c), i)
-              } else pr.matchesRow(dataByCol, nullAt, i)
-              p += 1
-            }
-            if (ok) {
-              count += 1
-              var s = 0
-              while (s < specArr.length) {
-                specArr(s) match {
-                  case MinMaxSpec(c, isMin) if c < fr.nCols && !nullAt(c, i) =>
-                    byCol(c) match {
-                      case a: Array[Int]     => AggFolds.foldLong(acc, s, a(i), isMin)
-                      case a: Array[Double]  => AggFolds.foldDouble(acc, s, a(i), isMin)
-                      case d: DecodedStrings => AggFolds.foldBytes(acc, s, d.copy(i), isMin)
-                    }
-                  case CountColSpec(c) if c < fr.nCols && !nullAt(c, i) =>
-                    // validity bitmap is header-resident: still no decode
-                    cnt(s) += 1
-                  case SumSpec(c, _) if c < fr.nCols && !nullAt(c, i) =>
-                    byCol(c) match {
-                      case a: Array[Int]    => sumL(s) += a(i); sumSeen(s) = true
-                      case a: Array[Double] => sumD(s) += a(i); sumSeen(s) = true
-                      case _ => ()
-                    }
-                  case _ => ()
-                }
-                s += 1
-              }
-            }
-            i += 1
-          }
-        }
-      }
-    } finally fr.close()
-    var s = 0
-    while (s < specArr.length) {
-      specArr(s) match {
-        case CountSpec => row.update(s, count)
-        case _: CountColSpec => row.update(s, cnt(s))
-        case SumSpec(_, isDouble) => row.update(s,
-          if (!sumSeen(s)) null
-          else if (isDouble) Double.box(sumD(s))
-          else Long.box(sumL(s)))
-        case _: MinMaxSpec => row.update(s, acc(s) match {
-          case null => null
-          case b: Array[Byte] => UTF8String.fromBytes(b)
-          case v => v
-        })
-      }
-      s += 1
-    }
-    emitted = true
-    true
-  }
-
-  private def specCol(sp: AggSpec): Int = sp match {
-    case MinMaxSpec(c, _) => c
-    case SumSpec(c, _)    => c
-    case CountColSpec(c)  => c
-    case CountSpec        => -1
-  }
-
-  override def get(): InternalRow = row
-
-  override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(ChunksSkippedTaskMetric(chunksSkipped), ChunksTotalTaskMetric(chunksTotal),
-      AggChunksHeaderOnlyTaskMetric(chunksHeaderOnly), AggChunksDecodedTaskMetric(chunksDecoded))
-
-  override def close(): Unit = ()
+    new BtrAggReader(partition.asInstanceOf[BtrInputPartition].file, ConfShim.conf(confB),
+      specs, zones, exact, groupIdx)
 }
 
 case class BtrInputPartition(file: String) extends InputPartition
@@ -1375,15 +1160,15 @@ final class ChunkCursor(
     while (fr.nextHeader()) {
       chunksTotal += 1
       chunkRows = fr.numRows
-      // single shared dispatch (ZonePred.rejectsCtx) with the file-level
+      // single shared dispatch (ZonePred.rejects) with the file-level
       // path; compounds compose across columns through the ctx
-      val skipChunk = zones.exists(_.rejectsCtx(fr.zoneCtx)) ||
+      val skipChunk = zones.exists(_.rejects(fr.zoneCtx)) ||
         (dynSkip != null && dynSkip(fr.zoneCtx))
       if (skipChunk) {
         fr.finishChunk()
         chunksSkipped += 1
       } else {
-        chunkAllMatch = exact.forall(_.allMatchCtx(fr.zoneCtx))
+        chunkAllMatch = exact.forall(_.allMatch(fr.zoneCtx))
         decodedAll = new Array[AnyRef](readCols.length)
         nullBitsAll = new Array[Array[Byte]](readCols.length)
         var c = 0
@@ -1398,8 +1183,8 @@ final class ChunkCursor(
               case t if t == ColType.String.toInt =>
                 StringCodec.decodeSlices(new BufReader(blob)) // arena, no per-string arrays
             }
-            // cross-check decoded length against the frame's declared rows
-            // (v5 CRC covers numRows; this also guards v1-v4 files)
+            // cross-check decoded length against the frame's declared
+            // (CRC-covered) rows: a blob that decodes short is corrupt
             val n = decodedAll(out) match {
               case a: Array[Int]     => a.length
               case a: Array[Double]  => a.length

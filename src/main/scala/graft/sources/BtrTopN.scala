@@ -37,8 +37,8 @@ object BtrTopN {
   * writer produces — an ORDER BY key DESC LIMIT k query reads a handful of
   * chunks per file and skips the rest; at 100 TB that is the difference
   * between a top-k probe and a full decode. Chunks without a usable zone
-  * (NaN, long string extrema, pre-v3 files) always decode — soundness
-  * never depends on a zone existing.
+  * (NaN, long string extrema) always decode — soundness never depends on
+  * a zone existing.
   *
   * Ordering matches Spark's SQL semantics: explicit null ordering,
   * UTF8String binary comparison, doubles with NaN greatest and -0.0
@@ -119,7 +119,7 @@ final class BtrTopNReader(
   cursor.dynSkip = ctx => {
     heap.size == spec.n && {
       val c = primary.colIdx
-      c < ctx.nCols && ctx.kind(c) == primary.kind && {
+      ctx.kind(c) == primary.kind && {
         val worst = heap.peek().ks(0)
         val nullCanTieOrBeat = ctx.nullCount(c) != 0L && cmpKey(primary, null, worst) <= 0
         !nullCanTieOrBeat && {

@@ -49,18 +49,11 @@ sealed trait ExactPred extends Serializable {
     * (even same-column ones) must go through matchesRow.
     */
   def isLeaf: Boolean = true
-  /** Can the zone + null statistics PROVE every row of the chunk matches?
-    * Conservative false. kind/zone args as in ZonePred.rejects.
+  /** Can the unit's zone + null statistics PROVE every row matches?
+    * Conservative false. THE dispatch the readers use; compounds compose
+    * across columns.
     */
-  def allMatch(kind: Int, lmin: Long, lmax: Long, smin: Array[Byte], smax: Array[Byte],
-      nullCount: Long, rows: Long): Boolean
-  /** Ctx-based all-match — THE dispatch the readers use; compounds
-    * compose across columns. A column beyond the unit's width proves
-    * nothing (conservative false).
-    */
-  def allMatchCtx(ctx: ZoneCtx): Boolean =
-    colIdx < ctx.nCols && allMatch(ctx.kind(colIdx), ctx.lmin(colIdx), ctx.lmax(colIdx),
-      ctx.smin(colIdx), ctx.smax(colIdx), ctx.nullCount(colIdx), ctx.rows(colIdx))
+  def allMatch(z: ZoneCtx): Boolean
 }
 
 object ExactPred {
@@ -76,9 +69,8 @@ case class IntCmpPred(colIdx: Int, lo: Long, hi: Long) extends ExactPred {
     val v = decoded.asInstanceOf[Array[Int]](i).toLong
     v >= lo && v <= hi
   }
-  def allMatch(kind: Int, lmin: Long, lmax: Long, smin: Array[Byte], smax: Array[Byte],
-      nullCount: Long, rows: Long): Boolean =
-    kind == 1 && nullCount == 0 && lmin >= lo && lmax <= hi
+  def allMatch(z: ZoneCtx): Boolean =
+    z.kind(colIdx) == 1 && z.nullCount(colIdx) == 0 && z.lmin(colIdx) >= lo && z.lmax(colIdx) <= hi
 }
 
 /** value ∈ [lo, hi] in Spark's double order over a DOUBLE column. An
@@ -92,12 +84,11 @@ case class DoubleCmpPred(colIdx: Int, lo: Double, hi: Double) extends ExactPred 
     val v = decoded.asInstanceOf[Array[Double]](i)
     cmpD(v, lo) >= 0 && cmpD(v, hi) <= 0
   }
-  def allMatch(kind: Int, lmin: Long, lmax: Long, smin: Array[Byte], smax: Array[Byte],
-      nullCount: Long, rows: Long): Boolean =
+  def allMatch(z: ZoneCtx): Boolean =
     // a chunk containing NaN carries no zone (kind 0) -> never proves here
-    kind == 2 && nullCount == 0 &&
-      cmpD(java.lang.Double.longBitsToDouble(lmin), lo) >= 0 &&
-      cmpD(java.lang.Double.longBitsToDouble(lmax), hi) <= 0
+    z.kind(colIdx) == 2 && z.nullCount(colIdx) == 0 &&
+      cmpD(java.lang.Double.longBitsToDouble(z.lmin(colIdx)), lo) >= 0 &&
+      cmpD(java.lang.Double.longBitsToDouble(z.lmax(colIdx)), hi) <= 0
 }
 
 /** One string comparison (op ∈ StrOp) over unsigned UTF-8 byte order. */
@@ -117,16 +108,15 @@ case class StringCmpPred(colIdx: Int, op: Int, v: String) extends ExactPred {
       case StrOp.EQ  => c == 0
     }
   }
-  def allMatch(kind: Int, lmin: Long, lmax: Long, smin: Array[Byte], smax: Array[Byte],
-      nullCount: Long, rows: Long): Boolean = {
-    if (kind != 3 || nullCount != 0) return false
+  def allMatch(z: ZoneCtx): Boolean = {
+    if (z.kind(colIdx) != 3 || z.nullCount(colIdx) != 0) return false
     def cmp(a: Array[Byte], b: Array[Byte]) = java.util.Arrays.compareUnsigned(a, b)
     op match {
-      case StrOp.GT  => cmp(smin, vb) > 0
-      case StrOp.GTE => cmp(smin, vb) >= 0
-      case StrOp.LT  => cmp(smax, vb) < 0
-      case StrOp.LTE => cmp(smax, vb) <= 0
-      case StrOp.EQ  => cmp(smin, vb) == 0 && cmp(smax, vb) == 0
+      case StrOp.GT  => cmp(z.smin(colIdx), vb) > 0
+      case StrOp.GTE => cmp(z.smin(colIdx), vb) >= 0
+      case StrOp.LT  => cmp(z.smax(colIdx), vb) < 0
+      case StrOp.LTE => cmp(z.smax(colIdx), vb) <= 0
+      case StrOp.EQ  => cmp(z.smin(colIdx), vb) == 0 && cmp(z.smax(colIdx), vb) == 0
     }
   }
 }
@@ -137,10 +127,9 @@ case class IntInPred(colIdx: Int, vs: Seq[Long]) extends ExactPred {
   def matchesNull = false
   def matches(decoded: AnyRef, i: Int): Boolean =
     java.util.Arrays.binarySearch(sorted, decoded.asInstanceOf[Array[Int]](i).toLong) >= 0
-  def allMatch(kind: Int, lmin: Long, lmax: Long, smin: Array[Byte], smax: Array[Byte],
-      nullCount: Long, rows: Long): Boolean =
-    kind == 1 && nullCount == 0 && lmin == lmax &&
-      java.util.Arrays.binarySearch(sorted, lmin) >= 0
+  def allMatch(z: ZoneCtx): Boolean =
+    z.kind(colIdx) == 1 && z.nullCount(colIdx) == 0 && z.lmin(colIdx) == z.lmax(colIdx) &&
+      java.util.Arrays.binarySearch(sorted, z.lmin(colIdx)) >= 0
 }
 
 /** IN over a DOUBLE column: members held as canonical bits of the
@@ -156,13 +145,12 @@ case class DoubleInPred(colIdx: Int, vs: Seq[Double]) extends ExactPred {
   def matchesNull = false
   def matches(decoded: AnyRef, i: Int): Boolean =
     java.util.Arrays.binarySearch(bits, memberBits(decoded.asInstanceOf[Array[Double]](i))) >= 0
-  def allMatch(kind: Int, lmin: Long, lmax: Long, smin: Array[Byte], smax: Array[Byte],
-      nullCount: Long, rows: Long): Boolean =
-    kind == 2 && nullCount == 0 &&
-      ExactPred.cmpD(java.lang.Double.longBitsToDouble(lmin),
-        java.lang.Double.longBitsToDouble(lmax)) == 0 &&
-      java.util.Arrays.binarySearch(bits,
-        memberBits(java.lang.Double.longBitsToDouble(lmin))) >= 0
+  def allMatch(z: ZoneCtx): Boolean =
+    z.kind(colIdx) == 2 && z.nullCount(colIdx) == 0 && {
+      val mn = java.lang.Double.longBitsToDouble(z.lmin(colIdx))
+      ExactPred.cmpD(mn, java.lang.Double.longBitsToDouble(z.lmax(colIdx))) == 0 &&
+        java.util.Arrays.binarySearch(bits, memberBits(mn)) >= 0
+    }
 }
 
 /** IN over a STRING column: sorted UTF-8 members, binary search per row. */
@@ -186,11 +174,10 @@ case class StringInPred(colIdx: Int, vs: Seq[String]) extends ExactPred {
     val d = decoded.asInstanceOf[DecodedStrings]
     contains(d.data, d.starts(i), d.starts(i) + d.lens(i))
   }
-  def allMatch(kind: Int, lmin: Long, lmax: Long, smin: Array[Byte], smax: Array[Byte],
-      nullCount: Long, rows: Long): Boolean =
-    kind == 3 && nullCount == 0 &&
-      java.util.Arrays.compareUnsigned(smin, smax) == 0 &&
-      contains(smin, 0, smin.length)
+  def allMatch(z: ZoneCtx): Boolean =
+    z.kind(colIdx) == 3 && z.nullCount(colIdx) == 0 &&
+      java.util.Arrays.compareUnsigned(z.smin(colIdx), z.smax(colIdx)) == 0 &&
+      contains(z.smin(colIdx), 0, z.smin(colIdx).length)
 }
 
 /** `col LIKE 'p%'` — byte-prefix match (Spark's StartsWith is a
@@ -207,11 +194,10 @@ case class StartsWithPred(colIdx: Int, prefix: String) extends ExactPred {
     d.lens(i) >= pb.length && java.util.Arrays.equals(
       d.data, d.starts(i), d.starts(i) + pb.length, pb, 0, pb.length)
   }
-  def allMatch(kind: Int, lmin: Long, lmax: Long, smin: Array[Byte], smax: Array[Byte],
-      nullCount: Long, rows: Long): Boolean =
-    kind == 3 && nullCount == 0 &&
-      java.util.Arrays.compareUnsigned(smin, pb) >= 0 &&
-      (succ == null || java.util.Arrays.compareUnsigned(smax, succ) < 0)
+  def allMatch(z: ZoneCtx): Boolean =
+    z.kind(colIdx) == 3 && z.nullCount(colIdx) == 0 &&
+      java.util.Arrays.compareUnsigned(z.smin(colIdx), pb) >= 0 &&
+      (succ == null || java.util.Arrays.compareUnsigned(z.smax(colIdx), succ) < 0)
 }
 
 /** `col LIKE '%s'` — byte-suffix match (no zone shape; row eval only). */
@@ -225,8 +211,7 @@ case class EndsWithPred(colIdx: Int, suffix: String) extends ExactPred {
     d.lens(i) >= sb.length && java.util.Arrays.equals(
       d.data, off, off + sb.length, sb, 0, sb.length)
   }
-  def allMatch(kind: Int, lmin: Long, lmax: Long, smin: Array[Byte], smax: Array[Byte],
-      nullCount: Long, rows: Long): Boolean = false
+  def allMatch(z: ZoneCtx): Boolean = false
 }
 
 /** `col LIKE '%s%'` — byte substring match, same semantics as
@@ -247,8 +232,7 @@ case class ContainsPred(colIdx: Int, needle: String) extends ExactPred {
     }
     false
   }
-  def allMatch(kind: Int, lmin: Long, lmax: Long, smin: Array[Byte], smax: Array[Byte],
-      nullCount: Long, rows: Long): Boolean = false
+  def allMatch(z: ZoneCtx): Boolean = false
 }
 
 /** Disjunction (`f1 OR f2`, round-5), possibly ACROSS columns. Under SQL
@@ -270,10 +254,7 @@ case class OrPred(l: ExactPred, r: ExactPred) extends ExactPred {
     throw new UnsupportedOperationException("compound predicates evaluate via matchesRow")
   override def matchesRow(data: Int => AnyRef, nullAt: (Int, Int) => Boolean, i: Int): Boolean =
     l.matchesRow(data, nullAt, i) || r.matchesRow(data, nullAt, i)
-  def allMatch(kind: Int, lmin: Long, lmax: Long, smin: Array[Byte], smax: Array[Byte],
-      nullCount: Long, rows: Long): Boolean = false
-  override def allMatchCtx(ctx: ZoneCtx): Boolean =
-    l.allMatchCtx(ctx) || r.allMatchCtx(ctx)
+  def allMatch(z: ZoneCtx): Boolean = l.allMatch(z) || r.allMatch(z)
 }
 
 /** Conjunction (nested inside an OR — Spark splits top-level conjuncts
@@ -290,26 +271,24 @@ case class AndPred(l: ExactPred, r: ExactPred) extends ExactPred {
     throw new UnsupportedOperationException("compound predicates evaluate via matchesRow")
   override def matchesRow(data: Int => AnyRef, nullAt: (Int, Int) => Boolean, i: Int): Boolean =
     l.matchesRow(data, nullAt, i) && r.matchesRow(data, nullAt, i)
-  def allMatch(kind: Int, lmin: Long, lmax: Long, smin: Array[Byte], smax: Array[Byte],
-      nullCount: Long, rows: Long): Boolean = false
-  override def allMatchCtx(ctx: ZoneCtx): Boolean =
-    l.allMatchCtx(ctx) && r.allMatchCtx(ctx)
+  def allMatch(z: ZoneCtx): Boolean = l.allMatch(z) && r.allMatch(z)
 }
 
 /** IS NULL (also `col <=> NULL`). */
 case class IsNullPred(colIdx: Int) extends ExactPred {
   def matchesNull = true
   def matches(decoded: AnyRef, i: Int): Boolean = false
-  def allMatch(kind: Int, lmin: Long, lmax: Long, smin: Array[Byte], smax: Array[Byte],
-      nullCount: Long, rows: Long): Boolean = rows > 0 && nullCount == rows
+  def allMatch(z: ZoneCtx): Boolean = {
+    val n = z.nullCount(colIdx)
+    n > 0 && n == z.rows(colIdx)
+  }
 }
 
 /** IS NOT NULL. */
 case class NotNullPred(colIdx: Int) extends ExactPred {
   def matchesNull = false
   def matches(decoded: AnyRef, i: Int): Boolean = true
-  def allMatch(kind: Int, lmin: Long, lmax: Long, smin: Array[Byte], smax: Array[Byte],
-      nullCount: Long, rows: Long): Boolean = nullCount == 0
+  def allMatch(z: ZoneCtx): Boolean = z.nullCount(colIdx) == 0
 }
 
 /** Classifier: Filter → ExactPred for the shapes the readers can enforce

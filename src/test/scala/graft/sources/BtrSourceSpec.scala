@@ -181,32 +181,6 @@ class BtrSourceSpec extends AnyFunSuite {
     assert(back.where("id = 999").head().getString(1) == "val_999")
   }
 
-  test("v1 block frames (no zone maps) stay readable") {
-    import org.apache.hadoop.fs.Path
-    val dir = tmp("v1compat")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(s"$dir/blocks").getFileSystem(conf)
-    fs.mkdirs(new Path(s"$dir/blocks"))
-    // hand-craft a v1 frame: magic + version=1, one chunk, one int column,
-    // NO per-column zone fields
-    val blob = graft.codec.IntCodec.encode(Array(7, 8, 9), BtrConfig.default)
-    val out = new java.io.ByteArrayOutputStream()
-    def i32(v: Int): Unit = (0 until 4).foreach(k => out.write((v >>> (8 * k)) & 0xff))
-    i32(BlockFiles.Magic); out.write(1) // version 1
-    i32(3); out.write(1) // numRows=3, nCols=1
-    out.write(graft.codec.ColType.Integer); i32(blob.length)
-    out.write(blob)
-    val os = fs.create(new Path(s"$dir/blocks/part-00000"), true)
-    os.write(out.toByteArray); os.close()
-    val m = graft.format.BtrManifest(
-      columns = Seq(graft.format.ColumnMeta("v", graft.codec.ColType.Integer)),
-      numPartitions = 1, blockSize = 65536, maxCascadeDepth = 3,
-      numRows = 3, rawBytes = 12, encBytes = blob.length, completedPartitions = Seq(0))
-    graft.engine.BtrTable.writeManifest(spark, dir, m)
-    val back = spark.read.format("btr").load(dir)
-    assert(back.collect().map(_.getInt(0)).sorted.toSeq == Seq(7, 8, 9))
-  }
-
   test("compressed-frame range exchange: map-side encode + frame shuffle round-trips") {
     import spark.implicits._
     val dir = tmp("cxr")
@@ -267,7 +241,7 @@ class BtrSourceSpec extends AnyFunSuite {
     assert(spark.read.format("btr").load(dir).limit(13).collect().length == 13)
   }
 
-  test("double and string zone maps (v3 frames) skip chunks, results exact") {
+  test("double and string zone maps skip chunks, results exact") {
     import spark.implicits._
     val dir = tmp("zskip3")
     val df = (0 until 8192).map(i => (i, f"k$i%05d", i * 1.5)).toDF("id", "s", "d")
@@ -465,9 +439,32 @@ class BtrSourceSpec extends AnyFunSuite {
     val r3 = spark.read.format("btr").load(dir3).agg(min("d"), max("d")).head()
     assert(r3.getDouble(0) == 0.0)
     assert(r3.getDouble(1).isNaN, s"NaN is the Spark max: ${r3.getDouble(1)}")
+
+    // one file whose every chunk the filter zone-rejects (the file's own
+    // zone spans the gap, so it survives planning): the ungrouped reader
+    // still yields its one partial row — count 0, MIN/SUM NULL
+    val dir4 = tmp("aggmm_gap")
+    val gap = ((0 until 1024) ++ (2048 until 3072)).toDF("id")
+    BlockFiles.write(gap.coalesce(1), dir4, BtrConfig(blockSize = 256))
+    val q4 = spark.read.format("btr").load(dir4).where(col("id").between(1100, 1200))
+      .agg(count(lit(1)), min("id"), sum("id"))
+    assert(q4.queryExecution.executedPlan.toString.contains("BtrAggScan"))
+    val r4 = q4.head()
+    assert(r4.getLong(0) == 0 && r4.isNullAt(1) && r4.isNullAt(2), s"got $r4")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val rd = new BtrAggReader(s"$dir4/blocks/part-00000", conf,
+      Seq(CountSpec, MinMaxSpec(0, isMin = true), SumSpec(0, isDouble = false)),
+      zones = Array(LongZonePred(0, 1100, 1200)), exact = Array(IntCmpPred(0, 1100, 1200)))
+    try {
+      assert(rd.next(), "an ungrouped aggregate emits one row per file")
+      assert(rd.get().getLong(0) == 0 && rd.get().isNullAt(1) && rd.get().isNullAt(2))
+      assert(!rd.next(), "exactly one row")
+      val m = rd.currentMetricsValues().map(x => x.name() -> x.value()).toMap
+      assert(m("chunksTotal") == 8 && m("chunksSkipped") == 8, s"every chunk zone-rejected: $m")
+    } finally rd.close()
   }
 
-  test("SUM pushdown folds v6 header sums; filtered, NaN, null and pre-v6 fallbacks") {
+  test("SUM pushdown folds v6 header sums; filtered, NaN and null fallbacks") {
     import spark.implicits._
     val dir = tmp("aggsum")
     // doubles are multiples of 0.5 with small magnitude: every partial sum
@@ -510,22 +507,6 @@ class BtrSourceSpec extends AnyFunSuite {
     val ru = spark.read.format("btr").load(dirU).agg(sum("v"), sum("dn")).head()
     assert(ru.getLong(0) == (0 until 2000).filter(_ % 3 != 0).map(_.toLong).sum)
     assert(ru.isNullAt(1), "sum of an all-null column is NULL")
-
-    // pre-v6 frames (sum-less kind-1 zones): the reader decodes the column
-    // instead — strip the sum from a part so zonePayload emits the legacy
-    // kind, then drive BtrAggReader directly against the written file
-    val dirV = tmp("aggsum_legacy")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val vals = Array.tabulate(500)(identity)
-    val part = graft.engine.ChunkEncoder.encodeInt("v", vals, 500, BtrConfig.default)
-    assert(part.sumLong.contains(vals.map(_.toLong).sum), "encoder must carry the chunk sum")
-    val legacy = BlockFiles.frameChunk(Seq(part.copy(sumLong = None)))
-    BlockFiles.writeFrames(conf, s"$dirV/blocks", 0, 0L, Iterator(legacy))
-    val rd = new BtrAggReader(s"$dirV/blocks/part-00000", conf,
-      Seq(SumSpec(0, isDouble = false), CountSpec))
-    assert(rd.next())
-    assert(rd.get().getLong(0) == vals.map(_.toLong).sum)
-    assert(rd.get().getLong(1) == 500)
   }
 
   test("chunksSkipped surfaces as a DSv2 custom metric") {
@@ -588,7 +569,7 @@ class BtrSourceSpec extends AnyFunSuite {
       s"magic check must name the file: ${e2.getMessage}")
 
     // a SILENT bit flip deep inside the file (zone map, meta, or blob) is
-    // caught by the v4 CRCs as a named checksum error, never wrong data
+    // caught by the CRCs as a named checksum error, never wrong data
     val ff = new Path(tPath, "part-00002")
     val os3 = fs.create(ff, true)
     val flipped2 = bytes.clone()
@@ -602,6 +583,44 @@ class BtrSourceSpec extends AnyFunSuite {
     assert(e3.getMessage.contains("part-00002") &&
       (e3.getMessage.contains("checksum mismatch") || e3.getMessage.contains("corrupt")),
       s"bit flip must surface as a named corruption: ${e3.getMessage}")
+
+    // only the current frame version is read: a file declaring version 5
+    // is refused up front with the file named
+    val vf = new Path(tPath, "part-00003")
+    val os4 = fs.create(vf, true)
+    val v5 = bytes.clone(); v5(4) = 5
+    os4.write(v5)
+    os4.close()
+    val e4 = intercept[java.io.IOException] {
+      new BtrPartitionReader(vf.toString, conf, Array(0), Array.empty)
+    }
+    assert(e4.getMessage.contains("part-00003") &&
+      e4.getMessage.contains("unsupported btr block version 5"),
+      s"an old version must be named: ${e4.getMessage}")
+
+    // a sum-less numeric zone (kind 1, written by no current encoder) is
+    // refused by name even under a valid header CRC: rewrite a one-column
+    // frame's kind-4 zone [min][max][sum] as kind 1 [min][max]
+    val f6 = BlockFiles.frameChunk(Seq(graft.engine.ChunkEncoder.encodeInt(
+      "v", Array(7, 8, 9), 3, BtrConfig.default))).bytes
+    // [i32 numRows][u8 nCols][i32 headerCrc][u8 colType][i32 blobLen][i32 blobCrc][u8 zoneKind]
+    assert(f6(18) == 4, s"expected a long zone with sum, got kind ${f6(18)}")
+    val f1 = f6.take(18) ++ Array[Byte](1) ++ f6.slice(19, 35) ++ f6.drop(43)
+    val hc = new java.util.zip.CRC32C
+    hc.update(f1, 0, 5)
+    hc.update(f1, 9, 39 - 9) // meta: colType .. nullCount (no bitmap)
+    val crc = hc.getValue.toInt
+    (0 until 4).foreach(k => f1(5 + k) = (crc >>> (8 * k)).toByte)
+    val kf = new Path(tPath, "part-00004")
+    val os5 = fs.create(kf, true)
+    os5.write(bytes.take(5) ++ f1)
+    os5.close()
+    val e5 = intercept[java.io.IOException] {
+      val r = new BtrPartitionReader(kf.toString, conf, Array(0), Array.empty)
+      try while (r.next()) () finally r.close()
+    }
+    assert(e5.getMessage.contains("part-00004") && e5.getMessage.contains("bad zoneKind 1"),
+      s"a sum-less numeric zone must be named: ${e5.getMessage}")
   }
 
   test("corruption property: any single flipped byte yields a named error or untouched data, never silent wrong rows") {
@@ -657,36 +676,6 @@ class BtrSourceSpec extends AnyFunSuite {
     }
     // the CRCs make detection the overwhelmingly common outcome
     assert(named > 30, s"most flips must be detected: named=$named intact=$intact")
-  }
-
-  test("v3 block frames (typed zones, no CRC) stay readable") {
-    import org.apache.hadoop.fs.Path
-    val dir = tmp("v3compat")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(s"$dir/blocks").getFileSystem(conf)
-    fs.mkdirs(new Path(s"$dir/blocks"))
-    // hand-craft a v3 frame: one chunk, one int column with a long zone,
-    // NO header/blob CRCs
-    val blob = graft.codec.IntCodec.encode(Array(7, 8, 9), BtrConfig.default)
-    val out = new java.io.ByteArrayOutputStream()
-    def i32(v: Int): Unit = (0 until 4).foreach(k => out.write((v >>> (8 * k)) & 0xff))
-    def i64(v: Long): Unit = { i32(v.toInt); i32((v >>> 32).toInt) }
-    i32(BlockFiles.Magic); out.write(3) // version 3
-    i32(3); out.write(1) // numRows=3, nCols=1
-    out.write(graft.codec.ColType.Integer); i32(blob.length)
-    out.write(1); i64(7L); i64(9L) // zoneKind=1 long [7,9]
-    out.write(blob)
-    val os = fs.create(new Path(s"$dir/blocks/part-00000"), true)
-    os.write(out.toByteArray); os.close()
-    val m = graft.format.BtrManifest(
-      columns = Seq(graft.format.ColumnMeta("v", graft.codec.ColType.Integer)),
-      numPartitions = 1, blockSize = 65536, maxCascadeDepth = 3,
-      numRows = 3, rawBytes = 12, encBytes = blob.length, completedPartitions = Seq(0))
-    graft.engine.BtrTable.writeManifest(spark, dir, m)
-    val back = spark.read.format("btr").load(dir)
-    assert(back.collect().map(_.getInt(0)).sorted.toSeq == Seq(7, 8, 9))
-    // the v3 zone still prunes
-    assert(back.where(col("v") > 100).collect().isEmpty)
   }
 
   test("failed overwrite leaves the previous table intact (staged swap)") {
@@ -813,6 +802,32 @@ class BtrSourceSpec extends AnyFunSuite {
       ChunkEncoder.encodeString("t", longs, 2, cfg))).bytes)
     val zs2 = acc2.result().get
     assert(zs2(0).kind == 1 && zs2(1).kind == 0)
+  }
+
+  test("a corrupt zone index is ignored, never trusted to drop a file") {
+    import spark.implicits._
+    import org.apache.hadoop.fs.Path
+    val dir = tmp("zidx_corrupt")
+    val df = (0 until 4096).map(i => (i, s"v$i")).toDF("id", "s")
+    BlockFiles.write(df, dir, BtrConfig(blockSize = 256), rangeCols = Seq("id"))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val entry = graft.format.ZoneIndex.read(conf, dir).get
+      .find(e => e.cols(0).lmin <= 5 && e.cols(0).lmax >= 5).get
+    assert(entry.cols(0).kind == 1 && entry.cols(0).lmin >= 0, s"id zone: ${entry.cols(0)}")
+    val idxPath = new Path(dir, graft.format.ZoneIndex.FileName)
+    val fs = idxPath.getFileSystem(conf)
+    val bytes = { val in = fs.open(idxPath); try in.readAllBytes() finally in.close() }
+    // entry: [u16 nameLen][name][i64 rows][u8 nCols], then column 0's
+    // [u8 kind][i64 min]: raise the min's low byte to 6 — the zone now
+    // excludes id = 5
+    val name = entry.file.getBytes("UTF-8")
+    val at = bytes.indexOfSlice(name.toSeq) + name.length + 8 + 1 + 1
+    assert(bytes(at - 1) == 1 && bytes(at) == entry.cols(0).lmin.toByte)
+    bytes(at) = 6
+    val os = fs.create(idxPath, true)
+    try os.write(bytes) finally os.close()
+    assert(spark.read.format("btr").load(dir).where(col("id") === 5).count() == 1)
+    assert(graft.format.ZoneIndex.read(conf, dir).isEmpty, "a corrupt index must read as absent")
   }
 
   test("zone index binary round-trip") {

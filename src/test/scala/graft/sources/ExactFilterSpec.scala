@@ -292,6 +292,7 @@ class ExactFilterSpec extends AnyFunSuite {
     assert(m("aggChunksDecoded") == 2, s"only the 2 boundary chunks decode: $m")
     assert(m("aggChunksHeaderOnly") == 7, s"7 fully-covered chunks fold from headers: $m")
     assert(m("chunksSkipped") == 23, s"23 chunks outside the range skip: $m")
+    r.close()
   }
 
   test("pruning metrics surface in the SQLAppStatusStore (Spark UI): files + chunks ratios") {
@@ -377,7 +378,7 @@ class ExactFilterSpec extends AnyFunSuite {
     assert(back.schema.fieldNames.toSeq == Seq("repo", "path", "id"))
     val orig = df.drop("__salt")
     assert(back.exceptAll(orig).count() == 0 && orig.exceptAll(back).count() == 0)
-    // per-writer row counts from the v2 zone index: no writer got > 2x mean
+    // per-writer row counts from the zone index: no writer got > 2x mean
     val idx = graft.format.ZoneIndex.read(spark.sparkContext.hadoopConfiguration, dir).get
     val perFile = idx.map(_.cols.head.rows)
     val mean = perFile.sum.toDouble / perFile.length
@@ -434,7 +435,7 @@ class ExactFilterSpec extends AnyFunSuite {
   test("headers-only COUNT(*) rejects a flipped numRows: named checksum error, never a wrong count") {
     // The agg reader answers COUNT(*) purely from frame headers — a silent
     // bit flip in numRows would be a silently wrong aggregate if the header
-    // CRC did not cover it. v5 extends the CRC to the whole header
+    // CRC did not cover it. The CRC covers the whole header
     // (numRows + nCols + meta); this drives the AGG path specifically.
     val dir = tmp("aggcorrupt")
     val src = spark.range(2048).selectExpr("CAST(id AS INT) AS id", "concat('v', id % 5) AS s")
@@ -449,6 +450,7 @@ class ExactFilterSpec extends AnyFunSuite {
     // sanity: the clean file counts correctly through the agg reader
     val clean = new BtrAggReader(orig.toString, conf, Seq(CountSpec))
     assert(clean.next() && clean.get().getLong(0) == 2048)
+    clean.close()
 
     // chunk 0's frame begins right after magic(4)+version(1): numRows is
     // bytes 5..8. Flip one bit in it.
@@ -459,7 +461,7 @@ class ExactFilterSpec extends AnyFunSuite {
     val os = fs.create(bf, true); os.write(bad); os.close()
     val e = intercept[java.io.IOException] {
       val r = new BtrAggReader(bf.toString, conf, Seq(CountSpec))
-      while (r.next()) r.get()
+      try while (r.next()) r.get() finally r.close()
     }
     assert(e.getMessage.contains("part-00000") &&
       (e.getMessage.contains("checksum mismatch") || e.getMessage.contains("corrupt")),

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Paths
 
 /** GROUP BY aggregate pushdown (partial): every query here runs through
-  * the btr scan (BtrGroupAggReader emits per-group partials, Spark's final
+  * the btr scan (BtrAggReader emits per-group partials, Spark's final
   * HashAggregate merges) and through Spark's own aggregation on the
   * original DataFrame; results must match exactly. The data carries NULL
   * group keys, NULL agg inputs, NaN/-0.0 doubles and a group-clustered
@@ -137,10 +137,10 @@ class GroupAggPushdownSpec extends AnyFunSuite {
     val conf = spark.sparkContext.hadoopConfiguration
     var rows = 0L
     files.foreach { ip =>
-      val r = new BtrGroupAggReader(
+      val r = new BtrAggReader(
         ip.asInstanceOf[BtrInputPartition].file, conf,
-        groupIdx = Array(0),
-        specs = Array(CountSpec, SumSpec(1, isDouble = false)))
+        specs = Seq(CountSpec, SumSpec(1, isDouble = false)),
+        groupIdx = Array(0))
       while (r.next()) rows += 1
       val m = r.currentMetricsValues().map(v => v.name() -> v.value()).toMap
       val total = m("chunksTotal")

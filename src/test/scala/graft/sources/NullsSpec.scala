@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Paths
 
-/** The null extension (round-5): per-chunk validity bitmaps in v5 frames,
+/** The null extension (round-5): per-chunk validity bitmaps in the frames,
   * null-aware zones (extrema over non-nulls, exact null counts),
   * IsNull / IsNotNull pushdown at chunk AND file level, nullable
   * ColumnVector reads, and null-correct aggregate pushdown. The reference
@@ -124,7 +124,7 @@ class NullsSpec extends AnyFunSuite {
     BlockFiles.write(df.repartitionByRange(2, col("id")), dir, BtrConfig(blockSize = 256))
     val idx = ZoneIndex.read(spark.sparkContext.hadoopConfiguration, dir)
     assert(idx.isDefined && idx.get.length == 2)
-    // v2 index carries exact per-file null totals and row counts
+    // the index carries exact per-file null totals and row counts
     assert(idx.get.map(_.cols(1).nullCount).sum == 100)
     assert(idx.get.map(_.cols(1).rows).sum == 4096)
     val scan = spark.read.format("btr").load(dir).filter(col("i2").isNull)
@@ -165,7 +165,7 @@ class NullsSpec extends AnyFunSuite {
     assert(e.getMessage.contains("declared non-nullable"), e.getMessage)
   }
 
-  test("ZoneAccumulator verifies the v5 header CRC: corruption folds to no entry") {
+  test("ZoneAccumulator verifies the frame header CRC: corruption folds to no entry") {
     // a valid frame folds; the same frame with one flipped meta byte kills
     // the fold (dead -> None) instead of producing wrong file zones
     val df = spark.range(512).selectExpr("CAST(id AS INT) AS id",
@@ -187,7 +187,7 @@ class NullsSpec extends AnyFunSuite {
     assert(bad.result().isEmpty, "corrupt frame meta must fold to no index entry")
   }
 
-  test("corruption property on a null-bearing v5 frame: flips are named or harmless") {
+  test("corruption property on a null-bearing frame: flips are named or harmless") {
     import org.apache.hadoop.fs.Path
     val dir = tmp("fuzz")
     BlockFiles.write(nullDf.limit(1500).coalesce(1), dir, BtrConfig(blockSize = 256))
@@ -225,7 +225,7 @@ class NullsSpec extends AnyFunSuite {
       os.write(mutated)
       os.close()
       try {
-        // a flip in a validity bitmap MUST be caught (the v5 header CRC
+        // a flip in a validity bitmap MUST be caught (the header CRC
         // covers it) — otherwise a value would silently flip to/from NULL
         assert(readAllRows(f.toString) == clean,
           s"flip at byte $posn silently changed data/nullness (trial $trial)")
