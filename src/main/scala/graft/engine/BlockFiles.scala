@@ -287,7 +287,7 @@ object BlockFiles {
     * (~input/ratio bytes written to and re-read from the block-manager)
     * plus a full sampling pass over the persisted frames, two extra stage
     * barriers whose fixed cost capped 2->8-core scaling at ~0.67
-    * (RangeProfile: 3.5 s of non-encode stages at 2 cores, 2.5 s at 8).
+    * (round 6: 3.5 s of non-encode stages at 2 cores, 2.5 s at 8).
     * Bounds quality only affects file-size balance, never correctness:
     * every frame lands in exactly one partition whatever the bounds say.
     */

@@ -1,15 +1,16 @@
 package graft.sources
 
-import graft.codec._
+import graft.codec.DecodedStrings
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read.PartitionReader
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Min/max/sum fold helpers of the aggregate reader. Orderings are Spark's SQL semantics: ints as ints, doubles via
-  * Double.compare (NaN greatest, -0.0 < 0.0), strings via unsigned UTF-8
-  * byte comparison. Fold state slots are AnyRef (java.lang boxes / byte
-  * arrays; null = no value yet — surfaces as SQL NULL).
+/** Min/max fold helpers of the aggregate reader. Orderings are Spark's SQL
+  * semantics: ints as ints, doubles via Double.compare (NaN greatest,
+  * -0.0 < 0.0), strings via unsigned UTF-8 byte comparison. Fold state
+  * slots are AnyRef (java.lang boxes / byte arrays; null = no value yet —
+  * surfaces as SQL NULL).
   */
 private[sources] object AggFolds {
 
@@ -31,54 +32,6 @@ private[sources] object AggFolds {
     val c = if (cur == null) 0 else java.util.Arrays.compareUnsigned(v, cur)
     if (cur == null || (if (isMin) c < 0 else c > 0)) acc(s) = v
   }
-
-  /** Decode-fallback MIN/MAX fold for chunks without a usable zone (NaN,
-    * long-string extrema): folds the column's live values.
-    */
-  def foldDecoded(where: String, acc: Array[AnyRef], s: Int, colType: Int,
-      blob: Array[Byte], isMin: Boolean, nullBits: Array[Byte]): Unit = {
-    @inline def live(i: Int): Boolean =
-      nullBits == null || ((nullBits(i >> 3) >> (i & 7)) & 1) == 0
-    colType match {
-      case t if t == ColType.Integer.toInt =>
-        val a = IntCodec.decode(blob)
-        var i = 0
-        while (i < a.length) { if (live(i)) foldLong(acc, s, a(i), isMin); i += 1 }
-      case t if t == ColType.Double.toInt =>
-        val a = DoubleCodec.decode(blob)
-        var i = 0
-        while (i < a.length) { if (live(i)) foldDouble(acc, s, a(i), isMin); i += 1 }
-      case t if t == ColType.String.toInt =>
-        val d = StringCodec.decodeSlices(new BufReader(blob))
-        var i = 0
-        while (i < d.count) { if (live(i)) foldBytes(acc, s, d.copy(i), isMin); i += 1 }
-      case t =>
-        // name the block instead of a bare MatchError
-        throw new java.io.IOException(
-          s"corrupt btr block file $where: unknown column type $t in aggregate fallback")
-    }
-  }
-
-  /** Decode-fallback SUM fold for chunks without a header sum (NaN
-    * chunks): sums the column's live (non-null) values.
-    */
-  def sumDecoded(where: String, sumL: Array[Long], sumD: Array[Double], seen: Array[Boolean],
-      s: Int, colType: Int, blob: Array[Byte], nullBits: Array[Byte]): Unit = {
-    @inline def live(i: Int): Boolean =
-      nullBits == null || ((nullBits(i >> 3) >> (i & 7)) & 1) == 0
-    colType match {
-      case t if t == ColType.Integer.toInt =>
-        val a = IntCodec.decode(blob)
-        var i = 0
-        while (i < a.length) { if (live(i)) { sumL(s) += a(i); seen(s) = true }; i += 1 }
-      case t if t == ColType.Double.toInt =>
-        val a = DoubleCodec.decode(blob)
-        var i = 0
-        while (i < a.length) { if (live(i)) { sumD(s) += a(i); seen(s) = true }; i += 1 }
-      case t => throw new java.io.IOException(
-        s"corrupt btr block file $where: column type $t under SUM pushdown")
-    }
-  }
 }
 
 /** Aggregate pushdown reader (partial), grouped or not: one block file's
@@ -94,8 +47,11 @@ private[sources] object AggFolds {
   * CONSTANT (zone min == max, or all-NULL; always so without group
   * columns) → folded from headers alone, decoding only the zone-less agg
   * columns (NaN, long-string and all-null cases); otherwise the filter +
-  * group + agg columns decode and rows fold one by one. COUNT(col) never
-  * decodes its column — the validity bitmap is header-resident.
+  * group + agg columns decode and rows fold one by one. Every decode is
+  * `FrameReader.decodeColumn` (length-checked against the frame) and rows
+  * match through `ExactPred.rowMatches`, as in the scan readers.
+  * COUNT(col) never decodes its column — the validity bitmap is
+  * header-resident.
   *
   * The scale shape is `SELECT day, count(*) … GROUP BY day` on a
   * day-clustered 100 TB table: only chunks spanning a group boundary (or
@@ -119,7 +75,7 @@ class BtrAggReader(
     file: String,
     conf: org.apache.hadoop.conf.Configuration,
     specs: Seq[AggSpec],
-    zones: Array[ZonePred] = Array.empty,
+    zones: Array[ExactPred] = Array.empty,
     exact: Array[ExactPred] = Array.empty,
     groupIdx: Array[Int] = Array.empty)
   extends PartitionReader[InternalRow] {
@@ -279,20 +235,37 @@ class BtrAggReader(
       })
       .sortBy(s => specCol(aggs(s)))
     var lastCol = -1
-    var blob: Array[Byte] = null
+    var values: AnyRef = null
     needCols.foreach { s =>
       val c = specCol(aggs(s))
-      if (c != lastCol) { blob = fr.readBlob(c); lastCol = c }
-      aggs(s) match {
-        case MinMaxSpec(_, isMin) =>
-          AggFolds.foldDecoded(fr.where, st.acc, s, fr.colType(c), blob, isMin, fr.nullBits(c))
-        case _: SumSpec =>
-          AggFolds.sumDecoded(fr.where, st.sumL, st.sumD, st.sumSeen, s, fr.colType(c), blob, fr.nullBits(c))
-        case _ => ()
+      if (c != lastCol) { values = fr.decodeColumn(c); lastCol = c }
+      val nb = fr.nullBits(c)
+      var i = 0
+      while (i < fr.numRows) {
+        if (!ExactPred.isNull(nb, i)) foldValue(st, s, values, i)
+        i += 1
       }
     }
     if (needCols.isEmpty) chunksHeaderOnly += 1 else chunksDecoded += 1
     fr.finishChunk()
+  }
+
+  /** Fold row `i` of decoded column `values` into MIN/MAX or SUM slot `s`. */
+  private def foldValue(st: GState, s: Int, values: AnyRef, i: Int): Unit = aggs(s) match {
+    case MinMaxSpec(_, isMin) =>
+      values match {
+        case a: Array[Int]     => AggFolds.foldLong(st.acc, s, a(i), isMin)
+        case a: Array[Double]  => AggFolds.foldDouble(st.acc, s, a(i), isMin)
+        case d: DecodedStrings => AggFolds.foldBytes(st.acc, s, d.copy(i), isMin)
+      }
+    case _: SumSpec =>
+      values match {
+        case a: Array[Int]    => st.sumL(s) += a(i); st.sumSeen(s) = true
+        case a: Array[Double] => st.sumD(s) += a(i); st.sumSeen(s) = true
+        case _ => throw new java.io.IOException(
+          s"corrupt btr block file ${fr.where}: string column under SUM pushdown")
+      }
+    case _ => ()
   }
 
   private def specCol(sp: AggSpec): Int = sp match {
@@ -315,44 +288,19 @@ class BtrAggReader(
     val filterCols = if (evalFilter) exact.flatMap(_.cols) else Array.empty[Int]
     val cols = (filterCols ++ groupIdx ++ aggCols).distinct.sorted.filter(_ < fr.nCols)
     val byCol = new Array[AnyRef](fr.nCols)
-    cols.foreach { c =>
-      val blob = fr.readBlob(c)
-      byCol(c) = fr.colType(c) match {
-        case t if t == ColType.Integer.toInt => IntCodec.decode(blob)
-        case t if t == ColType.Double.toInt  => DoubleCodec.decode(blob)
-        case t if t == ColType.String.toInt  => StringCodec.decodeSlices(new BufReader(blob))
-        case t => throw new java.io.IOException(
-          s"corrupt btr block file ${fr.where}: unknown column type $t in aggregate")
-      }
-    }
+    cols.foreach(c => byCol(c) = fr.decodeColumn(c))
     fr.finishChunk()
-    @inline def nullAt(c: Int, i: Int): Boolean = {
-      val nb = fr.nullBits(c)
-      nb != null && ((nb(i >> 3) >> (i & 7)) & 1) == 1
-    }
-    val dataByCol: Int => AnyRef = c => byCol(c)
+    val nulls = fr.nullBits
     var i = 0
     while (i < fr.numRows) {
-      var ok = true
-      if (evalFilter) {
-        var p = 0
-        while (ok && p < exact.length) {
-          val pr = exact(p)
-          ok = if (pr.isLeaf) {
-            val c = pr.colIdx
-            if (nullAt(c, i)) pr.matchesNull else pr.matches(byCol(c), i)
-          } else pr.matchesRow(dataByCol, nullAt, i)
-          p += 1
-        }
-      }
-      if (ok) {
+      if (!evalFilter || ExactPred.rowMatches(exact, byCol, nulls, i)) {
         val st = if (single != null) single else {
           val vs = new Array[AnyRef](groupIdx.length)
           var g = 0
           while (g < groupIdx.length) {
             val c = groupIdx(g)
             vs(g) =
-              if (nullAt(c, i)) null
+              if (ExactPred.isNull(nulls(c), i)) null
               else byCol(c) match {
                 case a: Array[Int]     => Int.box(a(i))
                 case a: Array[Double]  => Double.box(normD(a(i)))
@@ -365,22 +313,10 @@ class BtrAggReader(
         st.count += 1
         var s = 0
         while (s < aggs.length) {
-          aggs(s) match {
-            case MinMaxSpec(c, isMin) if c < fr.nCols && !nullAt(c, i) =>
-              byCol(c) match {
-                case a: Array[Int]     => AggFolds.foldLong(st.acc, s, a(i), isMin)
-                case a: Array[Double]  => AggFolds.foldDouble(st.acc, s, a(i), isMin)
-                case d: DecodedStrings => AggFolds.foldBytes(st.acc, s, d.copy(i), isMin)
-              }
-            case CountColSpec(c) if c < fr.nCols && !nullAt(c, i) =>
-              st.cnt(s) += 1
-            case SumSpec(c, _) if c < fr.nCols && !nullAt(c, i) =>
-              byCol(c) match {
-                case a: Array[Int]    => st.sumL(s) += a(i); st.sumSeen(s) = true
-                case a: Array[Double] => st.sumD(s) += a(i); st.sumSeen(s) = true
-                case _                => ()
-              }
-            case _ => ()
+          val c = specCol(aggs(s))
+          if (c >= 0 && c < fr.nCols && !ExactPred.isNull(nulls(c), i)) aggs(s) match {
+            case _: CountColSpec => st.cnt(s) += 1
+            case _               => foldValue(st, s, byCol(c), i)
           }
           s += 1
         }

@@ -1,10 +1,9 @@
 package graft.sources
 
-import graft.codec._
+import graft.codec.DecodedStrings
 import graft.engine.{BlockFiles, BtrEncoder, BtrTable}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -15,7 +14,6 @@ import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.graftshim.ConfShim
 import org.apache.hadoop.fs.Path
-import java.nio.charset.StandardCharsets.UTF_8
 import java.util.{Map => JMap}
 
 /** DataSource V2 connector: `spark.read.format("btr").load(dir)` over the
@@ -93,6 +91,9 @@ class BtrBatchTable(dir: String, schema: StructType)
   * (raw bits in the long fields), 3 string, 0 none. `nullCount`/`rows`
   * carry the unit's null statistics (-1 = unknown).
   *
+  * `ExactPred.rejects`/`allMatch` evaluate against this view at both
+  * pruning levels.
+  *
   * THE column-width guard: a column beyond the unit's width reads as
   * zone-less with unknown nulls, so it never rejects a unit and never
   * proves a match (sound). Predicates read the other accessors only after
@@ -111,180 +112,6 @@ trait ZoneCtx {
   def rows(c: Int): Long
 }
 
-/** Zone predicate (by file column index): decides from a unit's zone
-  * statistics (chunk-level frame zones or a file-level index row) whether
-  * that unit can be skipped whole. `rejects` is the SINGLE dispatch shared
-  * by both pruning levels. Range predicates ignore the null statistics (a
-  * NULL row never satisfies a comparison, and zones cover non-null values
-  * only — so a range skip stays sound in the presence of nulls); null
-  * predicates skip on them exactly. Compounds reference MORE THAN ONE
-  * column: an OR over two columns rejects a unit only when each branch
-  * rejects it against its own column's zone.
-  */
-sealed trait ZonePred extends Serializable {
-  def colIdx: Int
-  /** Every column this predicate consults (compounds may span several) —
-    * feeds the zone index's column-subset lazy parse.
-    */
-  def cols: Seq[Int] = Seq(colIdx)
-  def rejects(z: ZoneCtx): Boolean
-}
-
-/** Inclusive [lo, hi] over an int column's long zone. */
-case class LongZonePred(colIdx: Int, lo: Long, hi: Long) extends ZonePred {
-  def skip(mn: Long, mx: Long): Boolean = mx < lo || mn > hi
-  def rejects(z: ZoneCtx): Boolean =
-    z.kind(colIdx) == 1 && skip(z.lmin(colIdx), z.lmax(colIdx))
-}
-
-/** Inclusive [lo, hi] over a double column's zone (zone never covers NaN —
-  * the encoder drops the zone when the chunk contains one).
-  */
-case class DoubleZonePred(colIdx: Int, lo: Double, hi: Double) extends ZonePred {
-  def skip(mn: Double, mx: Double): Boolean = mx < lo || mn > hi
-  def rejects(z: ZoneCtx): Boolean =
-    z.kind(colIdx) == 2 && skip(java.lang.Double.longBitsToDouble(z.lmin(colIdx)),
-      java.lang.Double.longBitsToDouble(z.lmax(colIdx)))
-}
-
-/** `col IS NULL`: skip any unit KNOWN to hold zero nulls. */
-case class IsNullZonePred(colIdx: Int) extends ZonePred {
-  def rejects(z: ZoneCtx): Boolean = z.nullCount(colIdx) == 0L
-}
-
-/** `col IS NOT NULL`: skip any unit KNOWN to be all-null. */
-case class NotNullZonePred(colIdx: Int) extends ZonePred {
-  def rejects(z: ZoneCtx): Boolean = {
-    val n = z.nullCount(colIdx)
-    n > 0 && n == z.rows(colIdx)
-  }
-}
-
-object StrOp { val GT = 0; val GTE = 1; val LT = 2; val LTE = 3; val EQ = 4 }
-
-/** One comparison against a string column's UTF-8 byte-order zone (Spark's
-  * binary collation IS unsigned UTF-8 byte order, so zone compare and row
-  * compare agree). The comparand is held as a String — a case class with an
-  * Array[Byte] field compares by reference, so two semantically equal pushed
-  * predicates would never be equal (round-3 advice) — and re-encoded to
-  * UTF-8 bytes once per reader.
-  */
-case class StringZonePred(colIdx: Int, op: Int, v: String) extends ZonePred {
-  @transient private lazy val vb: Array[Byte] = v.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-  def skip(mn: Array[Byte], mx: Array[Byte]): Boolean = {
-    def cmp(a: Array[Byte], b: Array[Byte]) = java.util.Arrays.compareUnsigned(a, b)
-    op match {
-      case StrOp.GT  => cmp(mx, vb) <= 0
-      case StrOp.GTE => cmp(mx, vb) < 0
-      case StrOp.LT  => cmp(mn, vb) >= 0
-      case StrOp.LTE => cmp(mn, vb) > 0
-      case StrOp.EQ  => cmp(vb, mn) < 0 || cmp(vb, mx) > 0
-    }
-  }
-  def rejects(z: ZoneCtx): Boolean =
-    z.kind(colIdx) == 3 && skip(z.smin(colIdx), z.smax(colIdx))
-}
-
-/** IN-set zone predicates: skip a chunk when EVERY set member misses its
-  * [min, max] zone (the OR of per-value zone checks — round-3 verdict #4).
-  * An empty feasible set skips every zoned chunk: no row can match. Values
-  * are held in canonical Seq/String form so plan-level equality works.
-  */
-case class LongInZonePred(colIdx: Int, vs: Seq[Long]) extends ZonePred {
-  def skip(mn: Long, mx: Long): Boolean = vs.forall(v => v < mn || v > mx)
-  def rejects(z: ZoneCtx): Boolean =
-    z.kind(colIdx) == 1 && skip(z.lmin(colIdx), z.lmax(colIdx))
-}
-
-case class DoubleInZonePred(colIdx: Int, vs: Seq[Double]) extends ZonePred {
-  def skip(mn: Double, mx: Double): Boolean = vs.forall(v => v < mn || v > mx)
-  def rejects(z: ZoneCtx): Boolean =
-    z.kind(colIdx) == 2 && skip(java.lang.Double.longBitsToDouble(z.lmin(colIdx)),
-      java.lang.Double.longBitsToDouble(z.lmax(colIdx)))
-}
-
-case class StringInZonePred(colIdx: Int, vs: Seq[String]) extends ZonePred {
-  @transient private lazy val bs: Array[Array[Byte]] =
-    vs.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toArray
-  def skip(mn: Array[Byte], mx: Array[Byte]): Boolean =
-    bs.forall(b => java.util.Arrays.compareUnsigned(b, mn) < 0 ||
-      java.util.Arrays.compareUnsigned(b, mx) > 0)
-  def rejects(z: ZoneCtx): Boolean =
-    z.kind(colIdx) == 3 && skip(z.smin(colIdx), z.smax(colIdx))
-}
-
-/** `col LIKE 'p%'` (StringStartsWith): rows starting with prefix p lie in
-  * [p, succ(p)) under unsigned byte order (succ = p with its last
-  * non-0xFF byte incremented, trailing 0xFF bytes dropped; all-0xFF has
-  * no upper bound). Skip when the zone lies entirely outside that range —
-  * the natural pushdown for `path LIKE 'org/repo/%'` on a
-  * range-clustered (repo, path) table.
-  */
-case class StringPrefixZonePred(colIdx: Int, prefix: String) extends ZonePred {
-  @transient private lazy val pb: Array[Byte] =
-    prefix.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-  @transient private lazy val succ: Array[Byte] = StringPrefixZonePred.successor(pb)
-  def skip(mn: Array[Byte], mx: Array[Byte]): Boolean =
-    java.util.Arrays.compareUnsigned(mx, pb) < 0 ||
-      (succ != null && java.util.Arrays.compareUnsigned(mn, succ) >= 0)
-  def rejects(z: ZoneCtx): Boolean =
-    z.kind(colIdx) == 3 && skip(z.smin(colIdx), z.smax(colIdx))
-}
-
-object StringPrefixZonePred {
-  /** Smallest byte string > every string with prefix `p`; null if none. */
-  def successor(p: Array[Byte]): Array[Byte] = {
-    var i = p.length - 1
-    while (i >= 0 && p(i) == -1) i -= 1
-    if (i < 0) null
-    else {
-      val s = java.util.Arrays.copyOf(p, i + 1)
-      s(i) = (s(i) + 1).toByte
-      s
-    }
-  }
-}
-
-/** Sound [lo, hi] hull over a string zone — the degrade shape for IN sets
-  * too large to check per value (skip only when the whole hull misses).
-  */
-case class StringHullZonePred(colIdx: Int, lo: String, hi: String) extends ZonePred {
-  @transient private lazy val lob: Array[Byte] = lo.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-  @transient private lazy val hib: Array[Byte] = hi.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-  def skip(mn: Array[Byte], mx: Array[Byte]): Boolean =
-    java.util.Arrays.compareUnsigned(hib, mn) < 0 ||
-      java.util.Arrays.compareUnsigned(lob, mx) > 0
-  def rejects(z: ZoneCtx): Boolean =
-    z.kind(colIdx) == 3 && skip(z.smin(colIdx), z.smax(colIdx))
-}
-
-/** Disjunction (`f1 OR f2`, round-5), possibly ACROSS columns: a unit is
-  * rejected only when BOTH branches reject it (each against its own
-  * column's zone) — no row can satisfy the OR iff none can satisfy either
-  * side.
-  */
-case class OrZonePred(l: ZonePred, r: ZonePred) extends ZonePred {
-  def colIdx: Int = l.colIdx
-  override def cols: Seq[Int] = (l.cols ++ r.cols).distinct
-  def rejects(z: ZoneCtx): Boolean = l.rejects(z) && r.rejects(z)
-}
-
-/** Conjunction (nested inside an OR — Spark splits top-level conjuncts
-  * itself), possibly across columns: rejected as soon as EITHER branch
-  * rejects.
-  */
-case class AndZonePred(l: ZonePred, r: ZonePred) extends ZonePred {
-  def colIdx: Int = l.colIdx
-  override def cols: Seq[Int] = (l.cols ++ r.cols).distinct
-  def rejects(z: ZoneCtx): Boolean = l.rejects(z) || r.rejects(z)
-}
-
-/** One shared size policy for exact-set zone checks: beyond this, numeric
-  * sets degrade to their [min,max] hull and string sets to a string hull
-  * (both sound — a SUBSET would over-skip).
-  */
-object ZonePred { final val MaxExactSet = 1024 }
-
 class BtrScanBuilder(dir: String, fullSchema: StructType)
   extends ScanBuilder
     with SupportsPushDownRequiredColumns
@@ -294,7 +121,7 @@ class BtrScanBuilder(dir: String, fullSchema: StructType)
     with SupportsPushDownAggregates {
   private var required: StructType = fullSchema
   private var pushed: Array[Filter] = Array.empty
-  private var pushedZones: Array[ZonePred] = Array.empty
+  private var pushedZones: Array[ExactPred] = Array.empty
   private var limit: Int = -1
   private var topN: Option[TopNSpec] = None
 
@@ -304,147 +131,27 @@ class BtrScanBuilder(dir: String, fullSchema: StructType)
     required = StructType(fullSchema.fields.filter(f => wanted.contains(f.name)))
   }
 
-  private def colOf(name: String, dt: DataType): Option[Int] = {
-    val i = fullSchema.fieldNames.indexOf(name)
-    if (i >= 0 && fullSchema.fields(i).dataType == dt) Some(i) else None
-  }
-
-  // fractional comparands need ceil/floor, not longValue truncation:
-  // x > 3.5 over ints means x >= 4, x > -3.5 means x >= -3 (longValue-based
-  // lo = -3+1 would wrongly skip chunks containing -3)
-  private def isIntegral(v: Number): Boolean = v match {
-    case _: java.lang.Byte | _: java.lang.Short | _: java.lang.Integer | _: java.lang.Long => true
-    case _ => false
-  }
-  private def lowAbove(v: Number): Long = // smallest int satisfying "x > v"
-    if (isIntegral(v)) v.longValue + 1 else math.ceil(v.doubleValue).toLong +
-      (if (v.doubleValue == math.floor(v.doubleValue)) 1L else 0L)
-  private def lowAtLeast(v: Number): Long = // smallest int satisfying "x >= v"
-    if (isIntegral(v)) v.longValue else math.ceil(v.doubleValue).toLong
-  private def highBelow(v: Number): Long = // largest int satisfying "x < v"
-    if (isIntegral(v)) v.longValue - 1 else math.floor(v.doubleValue).toLong -
-      (if (v.doubleValue == math.ceil(v.doubleValue)) 1L else 0L)
-  private def highAtMost(v: Number): Long = // largest int satisfying "x <= v"
-    if (isIntegral(v)) v.longValue else math.floor(v.doubleValue).toLong
-
-  private def zoneOf(f: Filter): Option[ZonePred] = f match {
-    // ---- int columns: inclusive long range with fractional-bound rounding
-    case GreaterThan(a, v: Number) if colOf(a, IntegerType).isDefined =>
-      colOf(a, IntegerType).map(LongZonePred(_, lowAbove(v), Long.MaxValue))
-    case GreaterThanOrEqual(a, v: Number) if colOf(a, IntegerType).isDefined =>
-      colOf(a, IntegerType).map(LongZonePred(_, lowAtLeast(v), Long.MaxValue))
-    case LessThan(a, v: Number) if colOf(a, IntegerType).isDefined =>
-      colOf(a, IntegerType).map(LongZonePred(_, Long.MinValue, highBelow(v)))
-    case LessThanOrEqual(a, v: Number) if colOf(a, IntegerType).isDefined =>
-      colOf(a, IntegerType).map(LongZonePred(_, Long.MinValue, highAtMost(v)))
-    case EqualTo(a, v: Number) if colOf(a, IntegerType).isDefined =>
-      // non-integral equality can match no int row: empty range skips all
-      colOf(a, IntegerType).map(LongZonePred(_, lowAtLeast(v), highAtMost(v)))
-    // EqualNullSafe over non-null columns (the table model) is EqualTo
-    case EqualNullSafe(a, v: Number) if colOf(a, IntegerType).isDefined =>
-      colOf(a, IntegerType).map(LongZonePred(_, lowAtLeast(v), highAtMost(v)))
-    case EqualNullSafe(a, v: Number) if !v.doubleValue.isNaN =>
-      colOf(a, DoubleType).map(DoubleZonePred(_, v.doubleValue, v.doubleValue))
-    case EqualNullSafe(a, v: String) =>
-      colOf(a, StringType).map(StringZonePred(_, StrOp.EQ, v))
-    // ---- double columns: open bounds via IEEE next-up/down (exact)
-    case GreaterThan(a, v: Number) if !v.doubleValue.isNaN =>
-      colOf(a, DoubleType).map(DoubleZonePred(_, Math.nextUp(v.doubleValue), Double.PositiveInfinity))
-    case GreaterThanOrEqual(a, v: Number) if !v.doubleValue.isNaN =>
-      colOf(a, DoubleType).map(DoubleZonePred(_, v.doubleValue, Double.PositiveInfinity))
-    case LessThan(a, v: Number) if !v.doubleValue.isNaN =>
-      colOf(a, DoubleType).map(DoubleZonePred(_, Double.NegativeInfinity, Math.nextDown(v.doubleValue)))
-    case LessThanOrEqual(a, v: Number) if !v.doubleValue.isNaN =>
-      colOf(a, DoubleType).map(DoubleZonePred(_, Double.NegativeInfinity, v.doubleValue))
-    case EqualTo(a, v: Number) if !v.doubleValue.isNaN =>
-      colOf(a, DoubleType).map(DoubleZonePred(_, v.doubleValue, v.doubleValue))
-    // ---- string columns: op-coded compare over UTF-8 byte order
-    case GreaterThan(a, v: String) =>
-      colOf(a, StringType).map(StringZonePred(_, StrOp.GT, v))
-    case GreaterThanOrEqual(a, v: String) =>
-      colOf(a, StringType).map(StringZonePred(_, StrOp.GTE, v))
-    case LessThan(a, v: String) =>
-      colOf(a, StringType).map(StringZonePred(_, StrOp.LT, v))
-    case LessThanOrEqual(a, v: String) =>
-      colOf(a, StringType).map(StringZonePred(_, StrOp.LTE, v))
-    case EqualTo(a, v: String) =>
-      colOf(a, StringType).map(StringZonePred(_, StrOp.EQ, v))
-    // ---- IN sets: skip when every member misses the zone. Columns are
-    // non-nullable, so null members can never match and drop out of the
-    // feasible set; a non-integral member can never equal an int row.
-    // Sets beyond MaxExactSet keep a SOUND approximation: the [min,max]
-    // hull (never a subset — dropping members would over-skip).
-    case In(a, values) if values != null && colOf(a, IntegerType).isDefined &&
-        values.forall(v => v == null || v.isInstanceOf[Number]) =>
-      // gate on the FEASIBLE set (vs), not the raw member count: null and
-      // non-integral members can never match an int row, so a large IN set
-      // with few integral members still gets the tight exact check
-      // (round-4 advice #3)
-      val vs = values.toSeq.collect {
-        case v: Number if lowAtLeast(v) == highAtMost(v) => lowAtLeast(v)
-      }
-      if (vs.length <= ZonePred.MaxExactSet) colOf(a, IntegerType).map(LongInZonePred(_, vs))
-      else colOf(a, IntegerType).map(LongZonePred(_, vs.min, vs.max))
-    case In(a, values) if values != null && colOf(a, DoubleType).isDefined &&
-        values.forall(v => v == null || v.isInstanceOf[Number]) =>
-      // NaN members only match NaN rows, and NaN-containing chunks carry no
-      // zone (never skipped) — so NaN members are irrelevant to skipping
-      val vs = values.toSeq.collect { case v: Number if !v.doubleValue.isNaN => v.doubleValue }
-      if (vs.length <= ZonePred.MaxExactSet) colOf(a, DoubleType).map(DoubleInZonePred(_, vs))
-      else colOf(a, DoubleType).map(DoubleZonePred(_, vs.min, vs.max))
-    case In(a, values) if values != null && colOf(a, StringType).isDefined &&
-        values.forall(v => v == null || v.isInstanceOf[String]) =>
-      val vs = values.toSeq.collect { case v: String => v }
-      if (vs.length <= ZonePred.MaxExactSet) colOf(a, StringType).map(StringInZonePred(_, vs))
-      else colOf(a, StringType).map(StringHullZonePred(_, vs.min, vs.max))
-    // ---- prefix (LIKE 'p%'): rows with prefix p lie in [p, succ(p))
-    case StringStartsWith(a, p) if p != null =>
-      colOf(a, StringType).map(StringPrefixZonePred(_, p))
-    // ---- null predicates (the null extension): skip units whose null
-    // statistics decide them — chunks carry exact per-column null counts,
-    // the file index carries per-file totals
-    case IsNull(a) =>
-      val i = fullSchema.fieldNames.indexOf(a)
-      if (i >= 0) Some(IsNullZonePred(i)) else None
-    case IsNotNull(a) =>
-      val i = fullSchema.fieldNames.indexOf(a)
-      if (i >= 0) Some(NotNullZonePred(i)) else None
-    // ---- compounds (round-5), cross-column via ZoneCtx. OR prunes when
-    // both sides are zone-able (each branch rejects against its own
-    // column); AND prunes from either side alone — a rejected conjunct
-    // rejects the conjunction, whatever the other side references.
-    case Or(f1, f2) =>
-      for {
-        z1 <- zoneOf(f1)
-        z2 <- zoneOf(f2)
-      } yield OrZonePred(z1, z2)
-    case And(f1, f2) =>
-      (zoneOf(f1), zoneOf(f2)) match {
-        case (Some(a), Some(b)) => Some(AndZonePred(a, b))
-        case (a, b) => a.orElse(b)
-      }
-    case Not(g) => NotRewrite(g).flatMap(zoneOf)
-    case _ => None
-  }
-
-  /** Push filters two ways (round-5):
-    *  - every zone-able shape feeds chunk/file SKIPPING (as before);
-    *  - exactly-evaluable shapes (ExactFilters: comparisons, IN, null
-    *    checks on the three types with literal comparands) are CLAIMED —
-    *    not returned as unhandled — so Spark plans no post-scan Filter and
-    *    will offer aggregate pushdown under a WHERE clause. The readers
-    *    enforce claimed predicates with Spark row semantics (three-way per
-    *    chunk: zone-reject / all-match from zones / per-row eval).
+  /** Push filters two ways (round-5), both as ExactPred:
+    *  - `exact`: exactly-evaluable shapes (ExactFilters.toExact:
+    *    comparisons, IN, null checks, LIKE shapes and their compounds with
+    *    literal comparands) are CLAIMED — not returned as unhandled — so
+    *    Spark plans no post-scan Filter and will offer aggregate pushdown
+    *    under a WHERE clause. The readers enforce them with Spark row
+    *    semantics (three-way per chunk: reject / all-match / per-row eval).
+    *  - `zones`: every prunable filter (ExactFilters.prunable: the claimed
+    *    ones plus sound relaxations of partially claimable compounds)
+    *    rejects files and chunks.
     * Anything not exactly evaluable is returned unhandled and Spark keeps
     * its own Filter on top.
     */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    // classify each filter ONCE (toExact/zoneOf recurse through compound
-    // trees; re-running them per use is wasted planning time)
-    val classified = filters.map(f => (f, ExactFilters.toExact(fullSchema, f), zoneOf(f)))
+    val classified = filters.map { f =>
+      val e = ExactFilters.toExact(fullSchema, f)
+      (f, e, e.orElse(ExactFilters.prunable(fullSchema, f)))
+    }
     exact = classified.flatMap(_._2)
     pushedZones = classified.flatMap(_._3)
-    pushed = classified.collect { case (f, e, z) if e.isDefined || z.isDefined => f }
+    pushed = classified.collect { case (f, _, Some(_)) => f }
     classified.collect { case (f, None, _) => f }
   }
 
@@ -598,11 +305,11 @@ case class CountColSpec(colIdx: Int) extends AggSpec
   */
 case class SumSpec(colIdx: Int, isDouble: Boolean) extends AggSpec
 
-/** Evaluates pushed zone predicates against a FILE-level ColZone row via
-  * the same `ZonePred.rejects` dispatch the chunk-level readers use.
+/** Evaluates pushed predicates against a FILE-level ColZone row via the
+  * same `ExactPred.rejects` dispatch the chunk-level readers use.
   */
 object ZonePredEval {
-  def rejects(preds: Array[ZonePred], cols: IndexedSeq[graft.format.ColZone]): Boolean = {
+  def rejects(preds: Array[ExactPred], cols: IndexedSeq[graft.format.ColZone]): Boolean = {
     val ctx: ZoneCtx = new ZoneCtx {
       def nCols: Int = cols.length
       protected def zoneKind(c: Int): Int = cols(c).kind
@@ -650,7 +357,7 @@ object BtrScan {
     * version) keeps every file of that table; the chunk-level zone skip still
     * applies inside each reader.
     */
-  def pruneFiles(files: Array[InputPartition], zones: Array[ZonePred]): Array[InputPartition] =
+  def pruneFiles(files: Array[InputPartition], zones: Array[ExactPred]): Array[InputPartition] =
     if (zones.isEmpty) files
     else {
       val conf = SparkSession.active.sparkContext.hadoopConfiguration
@@ -671,7 +378,7 @@ class BtrScan(
     dir: String,
     fullSchema: StructType,
     required: StructType,
-    zones: Array[ZonePred],
+    zones: Array[ExactPred],
     limit: Int = -1,
     exact: Array[ExactPred] = Array.empty,
     topN: Option[TopNSpec] = None)
@@ -698,10 +405,10 @@ class BtrScan(
     * fact data that cannot match any build key are never read. Every
     * column is zone-eligible, so all of them are advertised.
     */
-  @volatile private var runtimeZones: Array[ZonePred] = Array.empty
+  @volatile private var runtimeZones: Array[ExactPred] = Array.empty
   @volatile private var plannedCache: Array[InputPartition] = _
 
-  private def activeZones: Array[ZonePred] = zones ++ runtimeZones
+  private def activeZones: Array[ExactPred] = zones ++ runtimeZones
 
   override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] =
     // only the columns this scan OUTPUTS: Spark resolves these against the
@@ -823,7 +530,7 @@ class BtrMicroBatchStream(
     dir: String,
     fullSchema: StructType,
     required: StructType,
-    zones: Array[ZonePred],
+    zones: Array[ExactPred],
     exact: Array[ExactPred])
   extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
   import org.apache.spark.sql.connector.read.streaming.Offset
@@ -862,9 +569,9 @@ class BtrMicroBatchStream(
 
 /** Translates Spark's runtime V2 predicates (IN / = over one column with
   * literal values, the shape dynamic pruning produces from a broadcast
-  * build side) into zone predicates. Oversized numeric sets degrade to
-  * their sound [min,max] hull; anything untranslatable is simply not used
-  * for skipping (Spark still applies the real join).
+  * build side) into IN predicates used for skipping, exact at any set size;
+  * anything untranslatable is simply not used (Spark still applies the
+  * real join).
   */
 object RuntimePredTranslator {
   import org.apache.spark.sql.connector.expressions.{Expression => VExpr, NamedReference}
@@ -872,9 +579,7 @@ object RuntimePredTranslator {
   // LiteralValue is private[sql] in Spark 4; Literal is the public face
   private type LitV = org.apache.spark.sql.connector.expressions.Literal[_]
 
-  private final val MaxExactSet = ZonePred.MaxExactSet
-
-  def toZone(schema: StructType, p: Predicate): Option[ZonePred] = {
+  def toZone(schema: StructType, p: Predicate): Option[ExactPred] = {
     def colIdx(e: VExpr): Option[Int] = e match {
       case nr: NamedReference if nr.fieldNames.length == 1 =>
         val i = schema.fieldNames.indexOf(nr.fieldNames()(0))
@@ -892,17 +597,10 @@ object RuntimePredTranslator {
           schema.fields(c).dataType match {
             case IntegerType =>
               val vs = vals.collect { case n: Number => n.longValue }
-              if (vs.length != vals.length) None
-              else if (vs.length <= MaxExactSet) Some(LongInZonePred(c, vs))
-              else Some(LongZonePred(c, vs.min, vs.max))
+              if (vs.length != vals.length) None else Some(IntInPred(c, vs))
             case DoubleType =>
               if (!vals.forall(_.isInstanceOf[Number])) None
-              else {
-                // NaN members never match zoned (NaN-free) chunks
-                val vs = vals.collect { case n: Number if !n.doubleValue.isNaN => n.doubleValue }
-                if (vs.length <= MaxExactSet) Some(DoubleInZonePred(c, vs))
-                else Some(DoubleZonePred(c, vs.min, vs.max))
-              }
+              else Some(DoubleInPred(c, vals.map(_.asInstanceOf[Number].doubleValue)))
             case StringType =>
               // runtime keys arrive as UTF8String RAW BYTES, which need not
               // be valid UTF-8; a lossy toString (invalid sequence -> U+FFFD)
@@ -912,15 +610,14 @@ object RuntimePredTranslator {
               // no pruning from this predicate at all (dropping just the bad
               // value would be a subset, which over-skips).
               val vs = vals.map {
-                case s: org.apache.spark.unsafe.types.UTF8String =>
+                case s: UTF8String =>
                   val str = s.toString
-                  if (org.apache.spark.unsafe.types.UTF8String.fromString(str).equals(s)) str
+                  if (UTF8String.fromString(str).equals(s)) str
                   else null
                 case s: String => s
                 case _ => null
               }
-              if (vs.contains(null) || vs.length > MaxExactSet) None
-              else Some(StringInZonePred(c, vs))
+              if (vs.contains(null)) None else Some(StringInPred(c, vs))
             case _ => None
           }
         }
@@ -941,7 +638,7 @@ object RuntimePredTranslator {
   * before any task launches, exactly like the row scan.
   */
 class BtrAggScan(dir: String, fullSchema: StructType, specs: Seq[AggSpec],
-    zones: Array[ZonePred] = Array.empty, exact: Array[ExactPred] = Array.empty,
+    zones: Array[ExactPred] = Array.empty, exact: Array[ExactPred] = Array.empty,
     groupIdx: Array[Int] = Array.empty)
   extends Scan with Batch {
   // partial-pushdown contract: group columns first (in GROUP BY order),
@@ -1006,7 +703,7 @@ class BtrAggScan(dir: String, fullSchema: StructType, specs: Seq[AggSpec],
 case class BtrAggReaderFactory(
     confB: org.apache.spark.broadcast.Broadcast[ConfShim.SerConf],
     specs: Seq[AggSpec],
-    zones: Array[ZonePred] = Array.empty,
+    zones: Array[ExactPred] = Array.empty,
     exact: Array[ExactPred] = Array.empty,
     groupIdx: Array[Int] = Array.empty)
   extends PartitionReaderFactory {
@@ -1020,7 +717,7 @@ case class BtrInputPartition(file: String) extends InputPartition
 case class BtrReaderFactory(
     confB: org.apache.spark.broadcast.Broadcast[ConfShim.SerConf],
     requiredIdx: Array[Int],
-    zones: Array[ZonePred],
+    zones: Array[ExactPred],
     limit: Int = -1,
     exact: Array[ExactPred] = Array.empty,
     topN: Option[TopNSpec] = None)
@@ -1030,30 +727,22 @@ case class BtrReaderFactory(
     * Spark builds this factory during planning but serializes it to tasks
     * only after runtime filters fire, so mutations here reach every reader.
     */
-  @volatile var extraZones: Array[ZonePred] = Array.empty
+  @volatile var extraZones: Array[ExactPred] = Array.empty
 
-  private def allZones: Array[ZonePred] = zones ++ extraZones
-
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    topN match {
-      case Some(t) =>
-        new BtrTopNReader(
-          partition.asInstanceOf[BtrInputPartition].file, ConfShim.conf(confB),
-          requiredIdx, allZones, exact, t)
-      case None =>
-        new BtrPartitionReader(
-          partition.asInstanceOf[BtrInputPartition].file, ConfShim.conf(confB),
-          requiredIdx, allZones, limit, exact)
-    }
+  private def allZones: Array[ExactPred] = zones ++ extraZones
 
   /** Decoded chunks are columnar arrays already — hand them to Spark as
     * ColumnarBatches (vectorized operators, zero per-value boxing). With
     * exact-claimed filters the columnar reader enforces them itself:
     * all-match chunks stay zero-copy, mixed chunks compact the matching
-    * rows into fresh vectors.
+    * rows into fresh vectors. Only a pushed TopN reads rows: it keeps a
+    * bounded row heap.
     */
-  // a pushed TopN keeps a bounded row heap — row-based by nature
   override def supportColumnarReads(partition: InputPartition): Boolean = topN.isEmpty
+
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    new BtrTopNReader(partition.asInstanceOf[BtrInputPartition].file, ConfShim.conf(confB),
+      requiredIdx, allZones, exact, topN.get)
 
   override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] =
     new BtrColumnarReader(
@@ -1063,15 +752,15 @@ case class BtrReaderFactory(
 
 /** Streams one block file chunk-by-chunk (bounded memory — the reference's
   * ChunkedDecompressionStream semantics, pull-based). Pruned columns'
-  * blobs are skipped via their frame lengths without decoding; chunks whose
-  * zone maps miss every pushed range are skipped whole. Shared by the row
-  * and columnar readers.
+  * blobs are skipped via their frame lengths without decoding; chunks a
+  * pushed predicate rejects are skipped whole. Shared by the columnar and
+  * TopN readers.
   */
 final class ChunkCursor(
     file: String,
     conf: org.apache.hadoop.conf.Configuration,
-    requiredIdx: Array[Int],
-    zones: Array[ZonePred],
+    readIdx: Array[Int],
+    zones: Array[ExactPred],
     exact: Array[ExactPred] = Array.empty) {
 
   private val fr = new FrameReader(file, conf)
@@ -1090,115 +779,46 @@ final class ChunkCursor(
     */
   var dynSkip: ZoneCtx => Boolean = null
 
-  /** Decoded required columns of the current chunk (Array[Int] /
-    * Array[Double] / DecodedStrings per slot) and its row count.
-    * `chunkNullBits(slot)` is the column's validity bitmap (bit i set =
-    * row i NULL; null when the column has no nulls in this chunk —
-    * placeholder values in `decoded` are masked by it).
+  // columns to decode, ascending (FrameReader contract) = the caller's
+  // columns ∪ exact-filter columns (a claimed filter's column may be
+  // pruned from the output projection; compounds may span several)
+  private val readCols: Array[Int] = (readIdx ++ exact.flatMap(_.cols)).distinct.sorted
+
+  /** The current chunk's decoded values (Array[Int] / Array[Double] /
+    * DecodedStrings) and validity bitmaps (bit i set = row i NULL; null
+    * when the column has no nulls — placeholder values are masked by it),
+    * both indexed by FILE column; unread columns stay null.
     */
-  var decoded: Array[AnyRef] = _
-  var chunkNullBits: Array[Array[Byte]] = _
+  val data = new Array[AnyRef](if (readCols.isEmpty) 0 else readCols.max + 1)
+  val nulls = new Array[Array[Byte]](data.length)
   var chunkRows = 0
   /** True when the zones PROVE every row of this chunk satisfies the
     * exact-claimed predicates — rowMatches need not be consulted.
     */
   var chunkAllMatch = true
 
-  // columns to READ = required output ∪ exact-filter columns (a claimed
-  // filter's column may be pruned from the output projection; compounds
-  // may span several columns)
-  private val readCols: Array[Int] =
-    (requiredIdx ++ exact.flatMap(_.cols)).distinct.sorted
-  // per-required-output slot -> position in readCols
-  private val outSlots: Array[Int] = requiredIdx.map(c => readCols.indexOf(c))
-  // per-exact-pred -> position in readCols for the leaf fast path; -1
-  // marks a compound (evaluated via matchesRow)
-  private val predSlots: Array[Int] =
-    exact.map(p => if (p.isLeaf) readCols.indexOf(p.colIdx) else -1)
-  // full decode state by readCols position
-  private var decodedAll: Array[AnyRef] = _
-  private var nullBitsAll: Array[Array[Byte]] = _
-
-  // file column index -> readCols slot (-1 = not read)
-  private val readPos: Array[Int] = {
-    val n = if (readCols.isEmpty) 0 else readCols.max + 1
-    val a = Array.fill(n)(-1)
-    readCols.zipWithIndex.foreach { case (c, o) => a(c) = o }
-    a
-  }
-
-  // multi-column accessors for compound predicates (allocated once; index
-  // by FILE column id, resolved through readPos)
-  private val dataByCol: Int => AnyRef = c => decodedAll(readPos(c))
-  private val nullByCol: (Int, Int) => Boolean = { (c, i) =>
-    val nb = nullBitsAll(readPos(c))
-    nb != null && ((nb(i >> 3) >> (i & 7)) & 1) == 1
-  }
-
   /** Does row `i` of the current chunk satisfy every exact-claimed
     * predicate? (Only consulted when !chunkAllMatch.)
     */
-  def rowMatches(i: Int): Boolean = {
-    var p = 0
-    while (p < exact.length) {
-      val slot = predSlots(p)
-      val ok = if (slot >= 0) {
-        val nb = nullBitsAll(slot)
-        val isNull = nb != null && ((nb(i >> 3) >> (i & 7)) & 1) == 1
-        if (isNull) exact(p).matchesNull else exact(p).matches(decodedAll(slot), i)
-      } else exact(p).matchesRow(dataByCol, nullByCol, i)
-      if (!ok) return false
-      p += 1
-    }
-    true
-  }
+  def rowMatches(i: Int): Boolean = ExactPred.rowMatches(exact, data, nulls, i)
 
   /** Advance to the next chunk that survives zone skipping and decode its
-    * required + filter columns. False at end of file.
+    * read columns. False at end of file.
     */
   def nextChunk(): Boolean = {
     while (fr.nextHeader()) {
       chunksTotal += 1
-      chunkRows = fr.numRows
-      // single shared dispatch (ZonePred.rejects) with the file-level
-      // path; compounds compose across columns through the ctx
-      val skipChunk = zones.exists(_.rejects(fr.zoneCtx)) ||
-        (dynSkip != null && dynSkip(fr.zoneCtx))
-      if (skipChunk) {
+      if (zones.exists(_.rejects(fr.zoneCtx)) || (dynSkip != null && dynSkip(fr.zoneCtx))) {
         fr.finishChunk()
         chunksSkipped += 1
       } else {
+        chunkRows = fr.numRows
         chunkAllMatch = exact.forall(_.allMatch(fr.zoneCtx))
-        decodedAll = new Array[AnyRef](readCols.length)
-        nullBitsAll = new Array[Array[Byte]](readCols.length)
-        var c = 0
-        while (c < fr.nCols) {
-          val out = if (c < readPos.length) readPos(c) else -1
-          if (out >= 0) {
-            nullBitsAll(out) = fr.nullBits(c)
-            val blob = fr.readBlob(c)
-            decodedAll(out) = fr.colType(c) match {
-              case t if t == ColType.Integer.toInt => IntCodec.decode(blob)
-              case t if t == ColType.Double.toInt  => DoubleCodec.decode(blob)
-              case t if t == ColType.String.toInt =>
-                StringCodec.decodeSlices(new BufReader(blob)) // arena, no per-string arrays
-            }
-            // cross-check decoded length against the frame's declared
-            // (CRC-covered) rows: a blob that decodes short is corrupt
-            val n = decodedAll(out) match {
-              case a: Array[Int]     => a.length
-              case a: Array[Double]  => a.length
-              case d: DecodedStrings => d.count
-            }
-            if (n != chunkRows)
-              throw new java.io.IOException(
-                s"corrupt btr block: column $c decoded $n values but the frame declares $chunkRows rows in ${fr.where}")
-          }
-          c += 1
+        readCols.foreach { c =>
+          data(c) = fr.decodeColumn(c)
+          nulls(c) = fr.nullBits(c)
         }
         fr.finishChunk() // pruned trailing columns: seek, never read
-        decoded = outSlots.map(decodedAll(_))
-        chunkNullBits = outSlots.map(nullBitsAll(_))
         return true
       }
     }
@@ -1278,68 +898,40 @@ private[sources] case class AggChunksDecodedTaskMetric(v: Long)
   override def value(): Long = v
 }
 
-/** Row-at-a-time reader over the chunk cursor (kept for paths where Spark
-  * declines columnar; the columnar reader below is the hot path).
+/** Row view over the columnar reader: the scan itself always reads
+  * columnar (BtrReaderFactory), this serves reader-level tests and any
+  * row-based caller with the same rows, filters, limit and metrics.
   */
 class BtrPartitionReader(
     file: String,
     conf: org.apache.hadoop.conf.Configuration,
     requiredIdx: Array[Int],
-    zones: Array[ZonePred] = Array.empty,
+    zones: Array[ExactPred] = Array.empty,
     limit: Int = -1,
     exact: Array[ExactPred] = Array.empty)
   extends PartitionReader[InternalRow] {
 
-  private val cursor = new ChunkCursor(file, conf, requiredIdx, zones, exact)
-  private var emittedRows = 0L
-  private var rowIdx = 0
-  private var chunkRows = 0
-  private val row = new GenericInternalRow(requiredIdx.length)
+  private val columnar = new BtrColumnarReader(file, conf, requiredIdx, zones, limit, exact)
+  private var rows: java.util.Iterator[InternalRow] = java.util.Collections.emptyIterator()
+  private var row: InternalRow = _
 
-  def chunksSkipped: Long = cursor.chunksSkipped
+  def chunksSkipped: Long = columnar.chunksSkipped
 
   override def next(): Boolean = {
-    if (limit >= 0 && emittedRows >= limit) return false // pushed (partial) limit
-    while (true) {
-      while (rowIdx >= chunkRows) {
-        if (!cursor.nextChunk()) return false
-        chunkRows = cursor.chunkRows
-        rowIdx = 0
-      }
-      // exact-claimed filters: all-match chunks emit rows with no per-row
-      // eval; mixed chunks drop non-matching rows here (Spark plans no
-      // post-scan Filter for claimed predicates)
-      if (cursor.chunkAllMatch || cursor.rowMatches(rowIdx)) {
-        emittedRows += 1
-        val decoded = cursor.decoded
-        val nulls = cursor.chunkNullBits
-        var o = 0
-        while (o < decoded.length) {
-          val nb = nulls(o)
-          if (nb != null && ((nb(rowIdx >> 3) >> (rowIdx & 7)) & 1) == 1)
-            row.update(o, null) // placeholder in the blob, masked by the bitmap
-          else
-            row.update(o, decoded(o) match {
-              case a: Array[Int]       => a(rowIdx)
-              case a: Array[Double]    => a(rowIdx)
-              case d: DecodedStrings   => UTF8String.fromBytes(d.data, d.starts(rowIdx), d.lens(rowIdx))
-            })
-          o += 1
-        }
-        rowIdx += 1
-        return true
-      }
-      rowIdx += 1
+    while (!rows.hasNext) {
+      if (!columnar.next()) return false
+      rows = columnar.get().rowIterator()
     }
-    false // unreachable
+    row = rows.next()
+    true
   }
 
   override def get(): InternalRow = row
 
   override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(ChunksSkippedTaskMetric(cursor.chunksSkipped), ChunksTotalTaskMetric(cursor.chunksTotal))
+    columnar.currentMetricsValues()
 
-  override def close(): Unit = cursor.close()
+  override def close(): Unit = columnar.close()
 }
 
 /** Columnar reader: one ColumnarBatch per decoded chunk, wrapping the
@@ -1354,7 +946,7 @@ class BtrColumnarReader(
     file: String,
     conf: org.apache.hadoop.conf.Configuration,
     requiredIdx: Array[Int],
-    zones: Array[ZonePred] = Array.empty,
+    zones: Array[ExactPred] = Array.empty,
     limit: Int = -1,
     exact: Array[ExactPred] = Array.empty)
   extends PartitionReader[ColumnarBatch] {
@@ -1380,8 +972,7 @@ class BtrColumnarReader(
       val n =
         if (cursor.chunkAllMatch) {
           batch = new ColumnarBatch(
-            Array.tabulate(cursor.decoded.length)(i =>
-              vectorOf(cursor.decoded(i), cursor.chunkNullBits(i))), cursor.chunkRows)
+            requiredIdx.map(c => vectorOf(cursor.data(c), cursor.nulls(c))), cursor.chunkRows)
           cursor.chunkRows
         } else {
           // compact the matching row ids, then gather per column
@@ -1395,8 +986,8 @@ class BtrColumnarReader(
           }
           if (m == 0) -1 // nothing survives; try the next chunk
           else {
-            val vectors = Array.tabulate(cursor.decoded.length) { c =>
-              val nb = cursor.chunkNullBits(c)
+            val vectors = requiredIdx.map { c =>
+              val nb = cursor.nulls(c)
               val cnb: Array[Byte] =
                 if (nb == null) null
                 else {
@@ -1404,7 +995,7 @@ class BtrColumnarReader(
                   var k = 0
                   var any = false
                   while (k < m) {
-                    if (((nb(sel(k) >> 3) >> (sel(k) & 7)) & 1) == 1) {
+                    if (ExactPred.isNull(nb, sel(k))) {
                       out(k >> 3) = (out(k >> 3) | (1 << (k & 7))).toByte
                       any = true
                     }
@@ -1412,7 +1003,7 @@ class BtrColumnarReader(
                   }
                   if (any) out else null
                 }
-              val compacted: AnyRef = cursor.decoded(c) match {
+              val compacted: AnyRef = cursor.data(c) match {
                 case a: Array[Int] =>
                   val out = new Array[Int](m)
                   var k = 0

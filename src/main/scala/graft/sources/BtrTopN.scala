@@ -53,7 +53,7 @@ final class BtrTopNReader(
     file: String,
     conf: org.apache.hadoop.conf.Configuration,
     requiredIdx: Array[Int],
-    zones: Array[ZonePred],
+    zones: Array[ExactPred],
     exact: Array[ExactPred],
     spec: TopNSpec)
   extends PartitionReader[InternalRow] {
@@ -62,10 +62,7 @@ final class BtrTopNReader(
   private val keyCols = keys.map(_.colIdx)
   // cursor reads output ∪ key columns (a sort column may be pruned from
   // the output projection by the final Project above the sort)
-  private val cursorIdx: Array[Int] = (requiredIdx ++ keyCols).distinct
-  private val cursor = new ChunkCursor(file, conf, cursorIdx, zones, exact)
-  private val outPos: Array[Int] = requiredIdx.map(cursorIdx.indexOf(_))
-  private val keyPos: Array[Int] = keyCols.map(cursorIdx.indexOf(_))
+  private val cursor = new ChunkCursor(file, conf, requiredIdx ++ keyCols, zones, exact)
 
   def chunksSkipped: Long = cursor.chunksSkipped
 
@@ -144,10 +141,9 @@ final class BtrTopNReader(
     val ks = new Array[AnyRef](keys.length)
     var j = 0
     while (j < keys.length) {
-      val p = keyPos(j)
-      val nb = cursor.chunkNullBits(p)
-      if (nb != null && ((nb(i >> 3) >> (i & 7)) & 1) == 1) ks(j) = null
-      else ks(j) = cursor.decoded(p) match {
+      val c = keyCols(j)
+      if (ExactPred.isNull(cursor.nulls(c), i)) ks(j) = null
+      else ks(j) = cursor.data(c) match {
         case a: Array[Int]     => Int.box(a(i))
         case a: Array[Double]  => Double.box(normD(a(i)))
         case d: DecodedStrings => UTF8String.fromBytes(d.data, d.starts(i), d.lens(i))
@@ -157,17 +153,15 @@ final class BtrTopNReader(
     ks
   }
 
-  private def copyVal(p: Int, i: Int): AnyRef = {
-    val nb = cursor.chunkNullBits(p)
-    if (nb != null && ((nb(i >> 3) >> (i & 7)) & 1) == 1) null
-    else cursor.decoded(p) match {
+  private def copyVal(c: Int, i: Int): AnyRef =
+    if (ExactPred.isNull(cursor.nulls(c), i)) null
+    else cursor.data(c) match {
       case a: Array[Int]    => Int.box(a(i))
       case a: Array[Double] => Double.box(a(i)) // OUTPUT keeps the raw value (-0.0 intact)
       case d: DecodedStrings =>
         UTF8String.fromBytes(
           java.util.Arrays.copyOfRange(d.data, d.starts(i), d.starts(i) + d.lens(i)))
     }
-  }
 
   private def materialize(i: Int, view: Array[AnyRef]): Entry = {
     val ks = new Array[AnyRef](keys.length)
@@ -179,9 +173,9 @@ final class BtrTopNReader(
       }
       j += 1
     }
-    val out = new Array[AnyRef](outPos.length)
+    val out = new Array[AnyRef](requiredIdx.length)
     var o = 0
-    while (o < outPos.length) { out(o) = copyVal(outPos(o), i); o += 1 }
+    while (o < requiredIdx.length) { out(o) = copyVal(requiredIdx(o), i); o += 1 }
     new Entry(ks, out)
   }
 

@@ -4,20 +4,23 @@ import graft.codec.DecodedStrings
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 
-/** Exactly-evaluable pushed predicates — the source CLAIMS these filters
-  * (returns them as handled from pushFilters), so Spark plans NO post-scan
-  * Filter. That unlocks aggregate pushdown under a WHERE clause
-  * (`SELECT count(*) WHERE id BETWEEN …` — the most common operational
-  * query at 100 TB — answered from frame headers for fully-covered
-  * chunks), at the price that the readers must now enforce these
-  * predicates with Spark's exact row semantics.
+/** Pushed predicates — the one predicate type of the read core. The source
+  * CLAIMS the filters `ExactFilters.toExact` translates (returns them as
+  * handled from pushFilters), so Spark plans NO post-scan Filter. That
+  * unlocks aggregate pushdown under a WHERE clause (`SELECT count(*) WHERE
+  * id BETWEEN …` — the most common operational query at 100 TB — answered
+  * from frame headers for fully-covered chunks), at the price that the
+  * readers must enforce these predicates with Spark's exact row semantics.
   *
   * Three-way chunk classification drives the cost model:
-  *  - zone REJECTS (ZonePred)        → chunk skipped unread (existing);
-  *  - `allMatch` proves every row satisfies the predicate from the zone +
-  *    null statistics alone          → rows emitted with NO per-row eval;
+  *  - `rejects` proves NO row can satisfy the predicate from the zone +
+  *    null statistics                → chunk (or file) skipped unread;
+  *  - `allMatch` proves EVERY row satisfies it
+  *                                   → rows emitted with NO per-row eval;
   *  - otherwise (mixed)              → per-row evaluation on the decoded
-  *    columns (`matches`/`matchesNull`).
+  *    columns (`matchesRow`).
+  * A filter that is not claimable may still prune
+  * (`ExactFilters.prunable`): it is then used for `rejects` only.
   *
   * Spark semantics implemented exactly:
   *  - NULL never satisfies a comparison / IN; IS NULL / `<=> NULL` do;
@@ -26,8 +29,12 @@ import org.apache.spark.sql.types._
   *    decoded from btr blobs keep their sign bit, so the evaluator must
   *    normalize);
   *  - strings compare in unsigned UTF-8 byte order (binary collation);
-  *  - int-column bounds from fractional comparands use the same
-  *    ceil/floor rounding as the zone layer (x > 3.5 ⇔ x >= 4).
+  *  - int-column bounds from fractional comparands round with ceil/floor
+  *    (x > 3.5 ⇔ x >= 4).
+  * Range predicates reject on zones alone: zones cover non-null values
+  * only, and a NULL row never satisfies a comparison, so a range reject
+  * stays sound in the presence of nulls; null predicates decide on the
+  * null statistics.
   */
 sealed trait ExactPred extends Serializable {
   def colIdx: Int
@@ -37,21 +44,20 @@ sealed trait ExactPred extends Serializable {
   def matchesNull: Boolean
   /** Non-null row `i` of the decoded column (caller dispatches nulls). */
   def matches(decoded: AnyRef, i: Int): Boolean
-  /** Row eval with multi-column access (round-5): `data(c)` = column c's
-    * decoded values, `nullAt(c, i)` = is row i NULL at column c. Leaves
-    * default to their single column; compounds compose across columns.
-    * Readers use the direct matches/matchesNull path for single-column
-    * predicates and this for compounds.
+  /** Does row `i` satisfy this predicate? `data(c)` / `nulls(c)` are file
+    * column c's decoded values / validity bitmap (null when the column has
+    * no nulls). Leaves read their own column with no closure in the way;
+    * compounds compose across columns.
     */
-  def matchesRow(data: Int => AnyRef, nullAt: (Int, Int) => Boolean, i: Int): Boolean =
-    if (nullAt(colIdx, i)) matchesNull else matches(data(colIdx), i)
-  /** Leaves support the direct matches/matchesNull fast path; compounds
-    * (even same-column ones) must go through matchesRow.
+  def matchesRow(data: Array[AnyRef], nulls: Array[Array[Byte]], i: Int): Boolean =
+    if (ExactPred.isNull(nulls(colIdx), i)) matchesNull else matches(data(colIdx), i)
+  /** Can the unit's zone + null statistics PROVE no row matches? Sound
+    * (never rejects a unit holding a match); compounds compose across
+    * columns. Shared by chunk headers and the file-level zone index.
     */
-  def isLeaf: Boolean = true
+  def rejects(z: ZoneCtx): Boolean
   /** Can the unit's zone + null statistics PROVE every row matches?
-    * Conservative false. THE dispatch the readers use; compounds compose
-    * across columns.
+    * Conservative false.
     */
   def allMatch(z: ZoneCtx): Boolean
 }
@@ -60,7 +66,42 @@ object ExactPred {
   /** Spark's double ordering: -0.0 == 0.0, NaN greatest, NaN == NaN. */
   @inline def cmpD(a: Double, b: Double): Int =
     java.lang.Double.compare(if (a == 0.0) 0.0 else a, if (b == 0.0) 0.0 else b)
+
+  @inline def isNull(nb: Array[Byte], i: Int): Boolean =
+    nb != null && ((nb(i >> 3) >> (i & 7)) & 1) == 1
+
+  /** Does row `i` satisfy every predicate? THE row-match loop of the
+    * readers (see `matchesRow` for the column layout).
+    */
+  def rowMatches(preds: Array[ExactPred], data: Array[AnyRef], nulls: Array[Array[Byte]],
+      i: Int): Boolean = {
+    var p = 0
+    while (p < preds.length) {
+      if (!preds(p).matchesRow(data, nulls, i)) return false
+      p += 1
+    }
+    true
+  }
+
+  @inline def cmpB(a: Array[Byte], b: Array[Byte]): Int = java.util.Arrays.compareUnsigned(a, b)
+
+  /** First index >= the key from a `java.util.Arrays.binarySearch` result. */
+  @inline def insertionPoint(found: Int): Int = if (found >= 0) found else -found - 1
+
+  /** Smallest byte string > every string with prefix `p`; null if none. */
+  def successor(p: Array[Byte]): Array[Byte] = {
+    var i = p.length - 1
+    while (i >= 0 && p(i) == -1) i -= 1
+    if (i < 0) null
+    else {
+      val s = java.util.Arrays.copyOf(p, i + 1)
+      s(i) = (s(i) + 1).toByte
+      s
+    }
+  }
 }
+
+object StrOp { val GT = 0; val GTE = 1; val LT = 2; val LTE = 3; val EQ = 4 }
 
 /** value ∈ [lo, hi] over an INT column (bounds pre-rounded to ints). */
 case class IntCmpPred(colIdx: Int, lo: Long, hi: Long) extends ExactPred {
@@ -69,13 +110,16 @@ case class IntCmpPred(colIdx: Int, lo: Long, hi: Long) extends ExactPred {
     val v = decoded.asInstanceOf[Array[Int]](i).toLong
     v >= lo && v <= hi
   }
+  def rejects(z: ZoneCtx): Boolean =
+    z.kind(colIdx) == 1 && (z.lmax(colIdx) < lo || z.lmin(colIdx) > hi)
   def allMatch(z: ZoneCtx): Boolean =
     z.kind(colIdx) == 1 && z.nullCount(colIdx) == 0 && z.lmin(colIdx) >= lo && z.lmax(colIdx) <= hi
 }
 
 /** value ∈ [lo, hi] in Spark's double order over a DOUBLE column. An
   * unbounded top is encoded as hi = NaN (the order's maximum), so `x > v`
-  * correctly matches NaN rows.
+  * correctly matches NaN rows. A chunk containing NaN carries no zone
+  * (kind 0), so it is never rejected or proven here.
   */
 case class DoubleCmpPred(colIdx: Int, lo: Double, hi: Double) extends ExactPred {
   import ExactPred.cmpD
@@ -84,15 +128,22 @@ case class DoubleCmpPred(colIdx: Int, lo: Double, hi: Double) extends ExactPred 
     val v = decoded.asInstanceOf[Array[Double]](i)
     cmpD(v, lo) >= 0 && cmpD(v, hi) <= 0
   }
+  def rejects(z: ZoneCtx): Boolean =
+    z.kind(colIdx) == 2 &&
+      (cmpD(java.lang.Double.longBitsToDouble(z.lmax(colIdx)), lo) < 0 ||
+        cmpD(java.lang.Double.longBitsToDouble(z.lmin(colIdx)), hi) > 0)
   def allMatch(z: ZoneCtx): Boolean =
-    // a chunk containing NaN carries no zone (kind 0) -> never proves here
     z.kind(colIdx) == 2 && z.nullCount(colIdx) == 0 &&
       cmpD(java.lang.Double.longBitsToDouble(z.lmin(colIdx)), lo) >= 0 &&
       cmpD(java.lang.Double.longBitsToDouble(z.lmax(colIdx)), hi) <= 0
 }
 
-/** One string comparison (op ∈ StrOp) over unsigned UTF-8 byte order. */
+/** One string comparison (op ∈ StrOp) over unsigned UTF-8 byte order
+  * (Spark's binary collation), so zone and row compares agree. The
+  * comparand is held as a String so equal pushed predicates compare equal.
+  */
 case class StringCmpPred(colIdx: Int, op: Int, v: String) extends ExactPred {
+  import ExactPred.cmpB
   @transient private lazy val vb: Array[Byte] =
     v.getBytes(java.nio.charset.StandardCharsets.UTF_8)
   def matchesNull = false
@@ -108,71 +159,103 @@ case class StringCmpPred(colIdx: Int, op: Int, v: String) extends ExactPred {
       case StrOp.EQ  => c == 0
     }
   }
-  def allMatch(z: ZoneCtx): Boolean = {
-    if (z.kind(colIdx) != 3 || z.nullCount(colIdx) != 0) return false
-    def cmp(a: Array[Byte], b: Array[Byte]) = java.util.Arrays.compareUnsigned(a, b)
-    op match {
-      case StrOp.GT  => cmp(z.smin(colIdx), vb) > 0
-      case StrOp.GTE => cmp(z.smin(colIdx), vb) >= 0
-      case StrOp.LT  => cmp(z.smax(colIdx), vb) < 0
-      case StrOp.LTE => cmp(z.smax(colIdx), vb) <= 0
-      case StrOp.EQ  => cmp(z.smin(colIdx), vb) == 0 && cmp(z.smax(colIdx), vb) == 0
-    }
-  }
+  def rejects(z: ZoneCtx): Boolean = z.kind(colIdx) == 3 && (op match {
+    case StrOp.GT  => cmpB(z.smax(colIdx), vb) <= 0
+    case StrOp.GTE => cmpB(z.smax(colIdx), vb) < 0
+    case StrOp.LT  => cmpB(z.smin(colIdx), vb) >= 0
+    case StrOp.LTE => cmpB(z.smin(colIdx), vb) > 0
+    case StrOp.EQ  => cmpB(vb, z.smin(colIdx)) < 0 || cmpB(vb, z.smax(colIdx)) > 0
+  })
+  def allMatch(z: ZoneCtx): Boolean = z.kind(colIdx) == 3 && z.nullCount(colIdx) == 0 && (op match {
+    case StrOp.GT  => cmpB(z.smin(colIdx), vb) > 0
+    case StrOp.GTE => cmpB(z.smin(colIdx), vb) >= 0
+    case StrOp.LT  => cmpB(z.smax(colIdx), vb) < 0
+    case StrOp.LTE => cmpB(z.smax(colIdx), vb) <= 0
+    case StrOp.EQ  => cmpB(z.smin(colIdx), vb) == 0 && cmpB(z.smax(colIdx), vb) == 0
+  })
 }
 
-/** IN over an INT column: sorted feasible members, binary search per row. */
+/** IN over an INT column: sorted feasible members, binary search per row;
+  * a unit is rejected when no member lies in its [min, max] zone (exact at
+  * any set size; an empty set rejects every zoned unit).
+  */
 case class IntInPred(colIdx: Int, vs: Seq[Long]) extends ExactPred {
   @transient private lazy val sorted: Array[Long] = vs.distinct.sorted.toArray
   def matchesNull = false
   def matches(decoded: AnyRef, i: Int): Boolean =
     java.util.Arrays.binarySearch(sorted, decoded.asInstanceOf[Array[Int]](i).toLong) >= 0
+  def rejects(z: ZoneCtx): Boolean = z.kind(colIdx) == 1 && {
+    val p = ExactPred.insertionPoint(java.util.Arrays.binarySearch(sorted, z.lmin(colIdx)))
+    p == sorted.length || sorted(p) > z.lmax(colIdx)
+  }
   def allMatch(z: ZoneCtx): Boolean =
     z.kind(colIdx) == 1 && z.nullCount(colIdx) == 0 && z.lmin(colIdx) == z.lmax(colIdx) &&
       java.util.Arrays.binarySearch(sorted, z.lmin(colIdx)) >= 0
 }
 
-/** IN over a DOUBLE column: members held as canonical bits of the
-  * normalized value (-0.0 → 0.0, NaN → canonical NaN), so NaN ∈ set and
-  * -0.0/0.0 behave per Spark equality.
+/** IN over a DOUBLE column: members normalized (-0.0 → 0.0) and sorted in
+  * Spark's double order (java's total order, NaN greatest; a NaN member
+  * matches NaN rows and never lies inside a zone).
   */
 case class DoubleInPred(colIdx: Int, vs: Seq[Double]) extends ExactPred {
-  @transient private lazy val bits: Array[Long] = vs
-    .map(v => java.lang.Double.doubleToLongBits(if (v == 0.0) 0.0 else v))
-    .distinct.sorted.toArray
-  private def memberBits(v: Double): Long =
-    java.lang.Double.doubleToLongBits(if (v == 0.0) 0.0 else v)
+  import ExactPred.cmpD
+  @inline private def norm(v: Double): Double = if (v == 0.0) 0.0 else v
+  @transient private lazy val sorted: Array[Double] = {
+    val a = vs.map(norm).toArray
+    java.util.Arrays.sort(a)
+    a
+  }
   def matchesNull = false
   def matches(decoded: AnyRef, i: Int): Boolean =
-    java.util.Arrays.binarySearch(bits, memberBits(decoded.asInstanceOf[Array[Double]](i))) >= 0
+    java.util.Arrays.binarySearch(sorted, norm(decoded.asInstanceOf[Array[Double]](i))) >= 0
+  def rejects(z: ZoneCtx): Boolean = z.kind(colIdx) == 2 && {
+    val p = ExactPred.insertionPoint(java.util.Arrays.binarySearch(sorted,
+      norm(java.lang.Double.longBitsToDouble(z.lmin(colIdx)))))
+    p == sorted.length || cmpD(sorted(p), java.lang.Double.longBitsToDouble(z.lmax(colIdx))) > 0
+  }
   def allMatch(z: ZoneCtx): Boolean =
     z.kind(colIdx) == 2 && z.nullCount(colIdx) == 0 && {
       val mn = java.lang.Double.longBitsToDouble(z.lmin(colIdx))
-      ExactPred.cmpD(mn, java.lang.Double.longBitsToDouble(z.lmax(colIdx))) == 0 &&
-        java.util.Arrays.binarySearch(bits, memberBits(mn)) >= 0
+      cmpD(mn, java.lang.Double.longBitsToDouble(z.lmax(colIdx))) == 0 &&
+        java.util.Arrays.binarySearch(sorted, norm(mn)) >= 0
     }
 }
 
-/** IN over a STRING column: sorted UTF-8 members, binary search per row. */
+/** IN over a STRING column: UTF-8 members sorted in unsigned byte order,
+  * binary search per row and per zone.
+  */
 case class StringInPred(colIdx: Int, vs: Seq[String]) extends ExactPred {
-  @transient private lazy val sorted: Array[Array[Byte]] = vs.distinct.sorted
-    .map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toArray
-  private def contains(data: Array[Byte], from: Int, to: Int): Boolean = {
+  @transient private lazy val sorted: Array[Array[Byte]] = {
+    val a = vs.distinct.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toArray
+    java.util.Arrays.sort(a, (x: Array[Byte], y: Array[Byte]) => java.util.Arrays.compareUnsigned(x, y))
+    a
+  }
+  private def cmp(m: Int, data: Array[Byte], from: Int, to: Int): Int =
+    java.util.Arrays.compareUnsigned(sorted(m), 0, sorted(m).length, data, from, to)
+  /** Index of the first member >= data[from, to) (sorted.length if none). */
+  private def lowerBound(data: Array[Byte], from: Int, to: Int): Int = {
     var lo = 0
-    var hi = sorted.length - 1
-    while (lo <= hi) {
+    var hi = sorted.length
+    while (lo < hi) {
       val mid = (lo + hi) >>> 1
-      val c = java.util.Arrays.compareUnsigned(
-        sorted(mid), 0, sorted(mid).length, data, from, to)
-      if (c == 0) return true
-      if (c < 0) lo = mid + 1 else hi = mid - 1
+      if (cmp(mid, data, from, to) < 0) lo = mid + 1 else hi = mid
     }
-    false
+    lo
+  }
+  private def contains(data: Array[Byte], from: Int, to: Int): Boolean = {
+    val p = lowerBound(data, from, to)
+    p < sorted.length && cmp(p, data, from, to) == 0
   }
   def matchesNull = false
   def matches(decoded: AnyRef, i: Int): Boolean = {
     val d = decoded.asInstanceOf[DecodedStrings]
     contains(d.data, d.starts(i), d.starts(i) + d.lens(i))
+  }
+  def rejects(z: ZoneCtx): Boolean = z.kind(colIdx) == 3 && {
+    val mn = z.smin(colIdx)
+    val mx = z.smax(colIdx)
+    val p = lowerBound(mn, 0, mn.length)
+    p == sorted.length || cmp(p, mx, 0, mx.length) > 0
   }
   def allMatch(z: ZoneCtx): Boolean =
     z.kind(colIdx) == 3 && z.nullCount(colIdx) == 0 &&
@@ -181,23 +264,27 @@ case class StringInPred(colIdx: Int, vs: Seq[String]) extends ExactPred {
 }
 
 /** `col LIKE 'p%'` — byte-prefix match (Spark's StartsWith is a
-  * UTF8String byte-prefix test). allMatch: when the zone's min and max
-  * both lie in [p, succ(p)), every value between them does too.
+  * UTF8String byte-prefix test). Rows with prefix p lie in [p, succ(p))
+  * under unsigned byte order: a zone entirely outside that range rejects,
+  * a zone whose min and max both lie inside it proves every row.
   */
 case class StartsWithPred(colIdx: Int, prefix: String) extends ExactPred {
+  import ExactPred.cmpB
   @transient private lazy val pb: Array[Byte] =
     prefix.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-  @transient private lazy val succ: Array[Byte] = StringPrefixZonePred.successor(pb)
+  @transient private lazy val succ: Array[Byte] = ExactPred.successor(pb)
   def matchesNull = false
   def matches(decoded: AnyRef, i: Int): Boolean = {
     val d = decoded.asInstanceOf[DecodedStrings]
     d.lens(i) >= pb.length && java.util.Arrays.equals(
       d.data, d.starts(i), d.starts(i) + pb.length, pb, 0, pb.length)
   }
+  def rejects(z: ZoneCtx): Boolean =
+    z.kind(colIdx) == 3 &&
+      (cmpB(z.smax(colIdx), pb) < 0 || (succ != null && cmpB(z.smin(colIdx), succ) >= 0))
   def allMatch(z: ZoneCtx): Boolean =
     z.kind(colIdx) == 3 && z.nullCount(colIdx) == 0 &&
-      java.util.Arrays.compareUnsigned(z.smin(colIdx), pb) >= 0 &&
-      (succ == null || java.util.Arrays.compareUnsigned(z.smax(colIdx), succ) < 0)
+      cmpB(z.smin(colIdx), pb) >= 0 && (succ == null || cmpB(z.smax(colIdx), succ) < 0)
 }
 
 /** `col LIKE '%s'` — byte-suffix match (no zone shape; row eval only). */
@@ -211,6 +298,7 @@ case class EndsWithPred(colIdx: Int, suffix: String) extends ExactPred {
     d.lens(i) >= sb.length && java.util.Arrays.equals(
       d.data, off, off + sb.length, sb, 0, sb.length)
   }
+  def rejects(z: ZoneCtx): Boolean = false
   def allMatch(z: ZoneCtx): Boolean = false
 }
 
@@ -232,6 +320,7 @@ case class ContainsPred(colIdx: Int, needle: String) extends ExactPred {
     }
     false
   }
+  def rejects(z: ZoneCtx): Boolean = false
   def allMatch(z: ZoneCtx): Boolean = false
 }
 
@@ -239,61 +328,68 @@ case class ContainsPred(colIdx: Int, needle: String) extends ExactPred {
   * three-valued logic a row passes a filter iff the predicate evaluates
   * TRUE, and OR is TRUE iff at least one side is TRUE — so
   * pass-composition is plain `||` through matchesRow, each leaf consulting
-  * its own column's null state. allMatch: either side proving every row
-  * proves the OR. The single-column matches/matchesNull path is never
-  * sound for a compound and fails loudly if a dispatch site misses the
-  * compound-aware path.
+  * its own column's null state. A unit is rejected only when BOTH sides
+  * reject it (each against its own column's zone); either side proving
+  * every row proves the OR. The single-column matches/matchesNull path is
+  * never sound for a compound and fails loudly if called.
   */
 case class OrPred(l: ExactPred, r: ExactPred) extends ExactPred {
   def colIdx: Int = l.colIdx
   override def cols: Seq[Int] = (l.cols ++ r.cols).distinct
-  override def isLeaf: Boolean = false
   def matchesNull: Boolean =
     throw new UnsupportedOperationException("compound predicates evaluate via matchesRow")
   def matches(decoded: AnyRef, i: Int): Boolean =
     throw new UnsupportedOperationException("compound predicates evaluate via matchesRow")
-  override def matchesRow(data: Int => AnyRef, nullAt: (Int, Int) => Boolean, i: Int): Boolean =
-    l.matchesRow(data, nullAt, i) || r.matchesRow(data, nullAt, i)
+  override def matchesRow(data: Array[AnyRef], nulls: Array[Array[Byte]], i: Int): Boolean =
+    l.matchesRow(data, nulls, i) || r.matchesRow(data, nulls, i)
+  def rejects(z: ZoneCtx): Boolean = l.rejects(z) && r.rejects(z)
   def allMatch(z: ZoneCtx): Boolean = l.allMatch(z) || r.allMatch(z)
 }
 
 /** Conjunction (nested inside an OR — Spark splits top-level conjuncts
   * itself), possibly across columns. AND is TRUE iff both sides are TRUE:
-  * `&&` through matchesRow; allMatch needs both sides proven.
+  * `&&` through matchesRow; either side rejecting rejects the unit;
+  * allMatch needs both sides proven.
   */
 case class AndPred(l: ExactPred, r: ExactPred) extends ExactPred {
   def colIdx: Int = l.colIdx
   override def cols: Seq[Int] = (l.cols ++ r.cols).distinct
-  override def isLeaf: Boolean = false
   def matchesNull: Boolean =
     throw new UnsupportedOperationException("compound predicates evaluate via matchesRow")
   def matches(decoded: AnyRef, i: Int): Boolean =
     throw new UnsupportedOperationException("compound predicates evaluate via matchesRow")
-  override def matchesRow(data: Int => AnyRef, nullAt: (Int, Int) => Boolean, i: Int): Boolean =
-    l.matchesRow(data, nullAt, i) && r.matchesRow(data, nullAt, i)
+  override def matchesRow(data: Array[AnyRef], nulls: Array[Array[Byte]], i: Int): Boolean =
+    l.matchesRow(data, nulls, i) && r.matchesRow(data, nulls, i)
+  def rejects(z: ZoneCtx): Boolean = l.rejects(z) || r.rejects(z)
   def allMatch(z: ZoneCtx): Boolean = l.allMatch(z) && r.allMatch(z)
 }
 
-/** IS NULL (also `col <=> NULL`). */
+/** IS NULL (also `col <=> NULL`): rejects a unit KNOWN to hold no null. */
 case class IsNullPred(colIdx: Int) extends ExactPred {
   def matchesNull = true
   def matches(decoded: AnyRef, i: Int): Boolean = false
+  def rejects(z: ZoneCtx): Boolean = z.nullCount(colIdx) == 0L
   def allMatch(z: ZoneCtx): Boolean = {
     val n = z.nullCount(colIdx)
     n > 0 && n == z.rows(colIdx)
   }
 }
 
-/** IS NOT NULL. */
+/** IS NOT NULL: rejects a unit KNOWN to be all-null. */
 case class NotNullPred(colIdx: Int) extends ExactPred {
   def matchesNull = false
   def matches(decoded: AnyRef, i: Int): Boolean = true
+  def rejects(z: ZoneCtx): Boolean = {
+    val n = z.nullCount(colIdx)
+    n > 0 && n == z.rows(colIdx)
+  }
   def allMatch(z: ZoneCtx): Boolean = z.nullCount(colIdx) == 0
 }
 
-/** Classifier: Filter → ExactPred for the shapes the readers can enforce
-  * exactly. Anything else stays a Spark post-scan filter. Every zone-able
-  * shape is also exact-claimable, so claiming never loses zone skipping.
+/** Classifier: Filter → ExactPred. `toExact` covers the shapes the readers
+  * can enforce exactly (claimed; anything else stays a Spark post-scan
+  * filter); `prunable` also relaxes unclaimable compounds to a sound
+  * pruning predicate.
   */
 object ExactFilters {
 
@@ -301,7 +397,8 @@ object ExactFilters {
     case _: java.lang.Byte | _: java.lang.Short | _: java.lang.Integer | _: java.lang.Long => true
     case _ => false
   }
-  // int-bound rounding, identical to the zone layer (BtrScanBuilder)
+  // int bounds from fractional comparands need ceil/floor, not longValue
+  // truncation: x > 3.5 over ints means x >= 4, x > -3.5 means x >= -3
   private def lowAbove(v: Number): Long =
     if (isIntegral(v)) v.longValue + 1
     else math.ceil(v.doubleValue).toLong +
@@ -410,7 +507,7 @@ object ExactFilters {
       // claimed — claiming a filter Spark considers handled while
       // enforcing only part of it would drop the rest — so one
       // unclaimable side returns None and Spark keeps its own Filter
-      // (zone pruning still applies via the zone layer).
+      // (zone pruning still applies through `prunable`).
       case Or(f1, f2) =>
         for {
           p1 <- toExact(schema, f1)
@@ -425,6 +522,27 @@ object ExactFilters {
       case _ => None
     }
   }
+
+  /** A predicate that may only REJECT units for `f` (never used for row
+    * matching): `toExact(f)` when claimable, else a sound relaxation — an
+    * AND keeps whichever sides prune (a rejected conjunct rejects the
+    * conjunction), an OR needs both sides, NOT goes through NotRewrite.
+    */
+  def prunable(schema: StructType, f: Filter): Option[ExactPred] =
+    toExact(schema, f).orElse(f match {
+      case Or(f1, f2) =>
+        for {
+          p1 <- prunable(schema, f1)
+          p2 <- prunable(schema, f2)
+        } yield OrPred(p1, p2)
+      case And(f1, f2) =>
+        (prunable(schema, f1), prunable(schema, f2)) match {
+          case (Some(p1), Some(p2)) => Some(AndPred(p1, p2))
+          case (p1, p2) => p1.orElse(p2)
+        }
+      case Not(g) => NotRewrite(g).flatMap(prunable(schema, _))
+      case _ => None
+    })
 }
 
 /** Exact negation rewrites: `Not(f)` → an equivalent positive Filter,

@@ -1,13 +1,15 @@
 package graft.sources
 
+import graft.codec._
 import graft.engine.BlockFiles
 import org.apache.hadoop.fs.Path
 
 /** Low-level streaming parser for one btr block file: validates the file
   * header, then yields per-chunk frame headers (row count, per-column types,
   * blob lengths, parsed zone maps, null counts and validity bitmaps) with
-  * the blobs consumed on demand. Shared by the row/columnar data readers
-  * and the aggregate reader.
+  * the blobs consumed on demand, and decodes a column's blob by its type
+  * (`decodeColumn`, the ONE per-chunk decode). Shared by the chunk cursor
+  * of the scan readers and the aggregate reader.
   *
   * Every read is wrapped with file + offset + chunk context: at 100 TB a
   * truncated or bit-flipped blob must name the bad block, not surface as a
@@ -208,6 +210,30 @@ final class FrameReader(file: String, conf: org.apache.hadoop.conf.Configuration
     if (bc.getValue.toInt != blobCrc(c))
       fail(f"column $c blob checksum mismatch (stored 0x${blobCrc(c)}%08x, computed 0x${bc.getValue.toInt}%08x) — corrupt data")
     b
+  }
+
+  /** Read and decode column `c`'s blob by its column type: Array[Int],
+    * Array[Double] or DecodedStrings (one arena, no per-string arrays).
+    * NULL rows hold placeholders, masked by `nullBits(c)`. An unknown type
+    * or a decoded count other than the frame's (CRC-covered) `numRows` is
+    * a named corruption, so no reader folds or emits a short or long
+    * column.
+    */
+  def decodeColumn(c: Int): AnyRef = {
+    val blob = readBlob(c)
+    val t = colType(c)
+    val values: AnyRef =
+      if (t == ColType.Integer.toInt) IntCodec.decode(blob)
+      else if (t == ColType.Double.toInt) DoubleCodec.decode(blob)
+      else if (t == ColType.String.toInt) StringCodec.decodeSlices(new BufReader(blob))
+      else fail(s"unknown column type $t for column $c")
+    val n = values match {
+      case a: Array[Int]     => a.length
+      case a: Array[Double]  => a.length
+      case d: DecodedStrings => d.count
+    }
+    if (n != numRows) fail(s"column $c decoded $n values but the frame declares $numRows rows")
+    values
   }
 
   /** Skip all remaining unread blobs of the current chunk. */

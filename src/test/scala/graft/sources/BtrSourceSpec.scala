@@ -97,7 +97,7 @@ class BtrSourceSpec extends AnyFunSuite {
     var read = 0L
     files.foreach { f =>
       val r = new BtrPartitionReader(f, conf, Array(0),
-        Array(LongZonePred(0, 1000, 1099)))
+        Array(IntCmpPred(0, 1000, 1099)))
       while (r.next()) read += 1
       skipped += r.chunksSkipped
       r.close()
@@ -284,12 +284,12 @@ class BtrSourceSpec extends AnyFunSuite {
     var skippedD = 0L
     var skippedS = 0L
     files.foreach { f =>
-      val rd = new BtrPartitionReader(f, conf, Array(0), Array(DoubleZonePred(2, 1500.0, 1649.5)))
+      val rd = new BtrPartitionReader(f, conf, Array(0), Array(DoubleCmpPred(2, 1500.0, 1649.5)))
       while (rd.next()) ()
       skippedD += rd.chunksSkipped
       rd.close()
       val rs = new BtrPartitionReader(f, conf, Array(0),
-        Array(StringZonePred(1, StrOp.EQ, "k04321")))
+        Array(StringCmpPred(1, StrOp.EQ, "k04321")))
       while (rs.next()) ()
       skippedS += rs.chunksSkipped
       rs.close()
@@ -322,7 +322,7 @@ class BtrSourceSpec extends AnyFunSuite {
       .map(_.getPath.toString).filter(_.contains("part-")).sorted
     var skipped = 0L
     files.foreach { f =>
-      val r = new BtrPartitionReader(f, conf, Array(0), Array(LongZonePred(0, 1000, 1099)))
+      val r = new BtrPartitionReader(f, conf, Array(0), Array(IntCmpPred(0, 1000, 1099)))
       while (r.next()) ()
       skipped += r.chunksSkipped
       r.close()
@@ -371,6 +371,13 @@ class BtrSourceSpec extends AnyFunSuite {
     // string IN set through the same path
     val qs = spark.read.format("btr").load(dir).where(col("s").isin("k00105", "k07405"))
     assert(qs.collect().map(_.getInt(0)).sorted.toSeq == Seq(105, 7405))
+    // members are searched in UTF-8 byte order, which differs from String
+    // (UTF-16) order: U+FFFD (EF BF BD) sorts below U+1F600 (F0 9F 98 80)
+    // in bytes but above it in UTF-16
+    val dirU = tmp("inset_utf8")
+    BlockFiles.write(Seq("a", "\uFFFD", "\uD83D\uDE00").toDF("s"), dirU)
+    val qu = spark.read.format("btr").load(dirU).where(col("s").isin("\uD83D\uDE00", "\uFFFD"))
+    assert(qu.collect().map(_.getString(0)).sorted.toSeq == Seq("\uD83D\uDE00", "\uFFFD").sorted)
 
     // reader-level evidence: only the 3 chunks containing a member decode
     import org.apache.hadoop.fs.Path
@@ -382,12 +389,12 @@ class BtrSourceSpec extends AnyFunSuite {
     var skippedS = 0L
     files.foreach { f =>
       val r = new BtrPartitionReader(f, conf, Array(0),
-        Array(LongInZonePred(0, Seq(105L, 3205L, 7405L))))
+        Array(IntInPred(0, Seq(105L, 3205L, 7405L))))
       while (r.next()) ()
       skipped += r.chunksSkipped
       r.close()
       val rs = new BtrPartitionReader(f, conf, Array(0),
-        Array(StringInZonePred(1, Seq("k00105", "k07405"))))
+        Array(StringInPred(1, Seq("k00105", "k07405"))))
       while (rs.next()) ()
       skippedS += rs.chunksSkipped
       rs.close()
@@ -398,11 +405,28 @@ class BtrSourceSpec extends AnyFunSuite {
     // an infeasible set (non-integral equality over ints) skips everything
     var all = 0L
     files.foreach { f =>
-      val r = new BtrPartitionReader(f, conf, Array(0), Array(LongInZonePred(0, Seq.empty)))
+      val r = new BtrPartitionReader(f, conf, Array(0), Array(IntInPred(0, Seq.empty)))
       while (r.next()) all += 1
       r.close()
     }
     assert(all == 0, s"empty feasible set must decode nothing: $all")
+
+    // beyond 1024 members the check stays exact (no [min,max] hull): one
+    // file of ids 0, 8, …, 65528 in 32 chunks of 256 (chunk k spans
+    // [2048k, 2048k + 2040]); 2000 members lie only in chunk 0's and chunk
+    // 31's ranges, so the 30 chunks between them hold no member
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val dirW = tmp("inset_wide")
+    BlockFiles.write((0 until 8192).map(i => i * 8).toDF("id").coalesce(1), dirW,
+      BtrConfig(blockSize = 256))
+    val members = (0 until 1000) ++ (64000 until 65000)
+    val qw = spark.read.format("btr").load(dirW).where(col("id").isin(members: _*))
+    assert(qw.collect().map(_.getInt(0)).sorted.toSeq == members.filter(_ % 8 == 0))
+    val scanW = qw.queryExecution.executedPlan.collectFirst { case b: BatchScanExec => b }.get
+    assert(scanW.metrics("chunksTotal").value == 32)
+    assert(scanW.metrics("chunksSkipped").value == 30,
+      s"a 2000-member IN set must skip exactly the 30 member-free chunks: " +
+        s"${scanW.metrics("chunksSkipped").value}")
   }
 
   test("min/max aggregate pushdown answers from zone headers, falls back per chunk") {
@@ -454,7 +478,7 @@ class BtrSourceSpec extends AnyFunSuite {
     val conf = spark.sparkContext.hadoopConfiguration
     val rd = new BtrAggReader(s"$dir4/blocks/part-00000", conf,
       Seq(CountSpec, MinMaxSpec(0, isMin = true), SumSpec(0, isDouble = false)),
-      zones = Array(LongZonePred(0, 1100, 1200)), exact = Array(IntCmpPred(0, 1100, 1200)))
+      zones = Array(IntCmpPred(0, 1100, 1200)), exact = Array(IntCmpPred(0, 1100, 1200)))
     try {
       assert(rd.next(), "an ungrouped aggregate emits one row per file")
       assert(rd.get().getLong(0) == 0 && rd.get().isNullAt(1) && rd.get().isNullAt(2))
@@ -906,17 +930,18 @@ class BtrSourceSpec extends AnyFunSuite {
     val litI2 = Expressions.literal(9)
     val pIn = new Predicate("IN", Array(Expressions.column("i"), litI, litI2))
     val z = RuntimePredTranslator.toZone(schema, pIn)
-    assert(z.contains(LongInZonePred(0, Seq(7L, 9L))), s"got $z")
-    assert(z.get.asInstanceOf[LongInZonePred].skip(10, 20), "7,9 miss [10,20]")
-    assert(!z.get.asInstanceOf[LongInZonePred].skip(5, 8), "7 hits [5,8]")
+    assert(z.contains(IntInPred(0, Seq(7L, 9L))), s"got $z")
+    def intZone(mn: Long, mx: Long) = IndexedSeq(graft.format.ColZone(kind = 1, lmin = mn, lmax = mx))
+    assert(ZonePredEval.rejects(z.toArray, intZone(10, 20)), "7,9 miss [10,20]")
+    assert(!ZonePredEval.rejects(z.toArray, intZone(5, 8)), "7 hits [5,8]")
 
     val pEq = new Predicate("=", Array(Expressions.column("s"), Expressions.literal("abc")))
     val zs = RuntimePredTranslator.toZone(schema, pEq)
-    assert(zs.contains(StringInZonePred(2, Seq("abc"))), s"got $zs")
+    assert(zs.contains(StringInPred(2, Seq("abc"))), s"got $zs")
 
     val pD = new Predicate("IN", Array(Expressions.column("d"), Expressions.literal(1.5)))
     val zd = RuntimePredTranslator.toZone(schema, pD)
-    assert(zd.contains(DoubleInZonePred(1, Seq(1.5))), s"got $zd")
+    assert(zd.contains(DoubleInPred(1, Seq(1.5))), s"got $zd")
 
     // untranslatable shapes are ignored, not errors
     assert(RuntimePredTranslator.toZone(schema,
@@ -935,13 +960,14 @@ class BtrSourceSpec extends AnyFunSuite {
       "invalid-UTF-8 member must drop the whole predicate")
     assert(RuntimePredTranslator.toZone(schema,
       new Predicate("=", Array(Expressions.column("s"), Expressions.literal(goodUtf8))))
-      .contains(StringInZonePred(2, Seq("ok"))))
+      .contains(StringInPred(2, Seq("ok"))))
 
-    // oversized-set hull predicate is sound
-    val hull = StringHullZonePred(0, "b", "d")
-    assert(hull.skip("e".getBytes("UTF-8"), "f".getBytes("UTF-8")), "zone above hull")
-    assert(hull.skip("0".getBytes("UTF-8"), "a".getBytes("UTF-8")), "zone below hull")
-    assert(!hull.skip("c".getBytes("UTF-8"), "z".getBytes("UTF-8")), "overlap keeps")
+    // a string key set beyond 1024 members still yields an exact predicate
+    val keys = (0 until 1025).map(i => f"k$i%04d")
+    val pBig = new Predicate("IN",
+      (Expressions.column("s") +: keys.map(k => Expressions.literal(k))).toArray)
+    val translated = RuntimePredTranslator.toZone(schema, pBig).contains(StringInPred(2, keys))
+    assert(translated, "a 1025-member string IN must translate")
   }
 
   test("min/max pushdown matches Spark's own result bit-for-bit on signed zeros") {

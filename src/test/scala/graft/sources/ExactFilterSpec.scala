@@ -216,7 +216,7 @@ class ExactFilterSpec extends AnyFunSuite {
     val file = fs.listStatus(new Path(s"$dir/blocks"))
       .map(_.getPath.toString).filter(_.contains("part-")).head
     val r = new BtrPartitionReader(file, conf, Array(0),
-      Array(OrZonePred(LongZonePred(0, 0, 255), LongZonePred(0, 3840, Long.MaxValue))))
+      Array(OrPred(IntCmpPred(0, 0, 255), IntCmpPred(0, 3840, Long.MaxValue))))
     while (r.next()) ()
     val m = r.currentMetricsValues().map(x => x.name() -> x.value()).toMap
     assert(m("chunksTotal") == 16 && m("chunksSkipped") == 14,
@@ -232,7 +232,7 @@ class ExactFilterSpec extends AnyFunSuite {
       s"a cross-column OR must be claimed:\n${q2.queryExecution.optimizedPlan}")
     assert(q2.count() == 256)
     val r2 = new BtrPartitionReader(file, conf, Array(0),
-      Array(OrZonePred(LongZonePred(0, 0, 255), StringZonePred(1, StrOp.EQ, "a"))))
+      Array(OrPred(IntCmpPred(0, 0, 255), StringCmpPred(1, StrOp.EQ, "a"))))
     while (r2.next()) ()
     val m2 = r2.currentMetricsValues().map(x => x.name() -> x.value()).toMap
     assert(m2("chunksTotal") == 16 && m2("chunksSkipped") == 15,
@@ -281,7 +281,7 @@ class ExactFilterSpec extends AnyFunSuite {
       .map(_.getPath.toString).filter(_.contains("part-")).head
     val r = new BtrAggReader(file, conf,
       specs = Seq(CountSpec, MinMaxSpec(1, isMin = true)),
-      zones = Array(LongZonePred(0, 1000, 2999)),
+      zones = Array(IntCmpPred(0, 1000, 2999)),
       exact = Array(IntCmpPred(0, 1000, 2999)))
     assert(r.next())
     assert(r.get().getLong(0) == 2000, s"filtered count: ${r.get().getLong(0)}")
@@ -341,7 +341,7 @@ class ExactFilterSpec extends AnyFunSuite {
     val file = fs.listStatus(new Path(s"$dir/blocks"))
       .map(_.getPath.toString).filter(_.contains("part-")).head
     val r = new BtrPartitionReader(file, conf, Array(0),
-      Array(StringPrefixZonePred(1, "k001")), exact = Array(StartsWithPred(1, "k001")))
+      Array(StartsWithPred(1, "k001")), exact = Array(StartsWithPred(1, "k001")))
     var read = 0L
     while (r.next()) read += 1
     assert(read == 100, s"rows with prefix k001: $read")
@@ -353,10 +353,10 @@ class ExactFilterSpec extends AnyFunSuite {
     assert(t.where(col("k").startsWith("k0010")).queryExecution.optimizedPlan
       .collect { case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f }.isEmpty)
     // successor edge: all-0xFF prefix has no upper bound, never over-skips
-    assert(StringPrefixZonePred.successor(Array(-1, -1)) == null)
-    assert(StringPrefixZonePred.successor("ab".getBytes("UTF-8")).toSeq
+    assert(ExactPred.successor(Array(-1, -1)) == null)
+    assert(ExactPred.successor("ab".getBytes("UTF-8")).toSeq
       == "ac".getBytes("UTF-8").toSeq)
-    assert(StringPrefixZonePred.successor(Array('a'.toByte, -1)).toSeq == Seq('b'.toByte))
+    assert(ExactPred.successor(Array('a'.toByte, -1)).toSeq == Seq('b'.toByte))
   }
 
   test("saltCols spreads a 90%-one-key write across writers and never lands in the table") {
@@ -396,7 +396,7 @@ class ExactFilterSpec extends AnyFunSuite {
     val fs = new Path(s"$dir/blocks").getFileSystem(conf)
     val file = fs.listStatus(new Path(s"$dir/blocks"))
       .map(_.getPath.toString).filter(_.contains("part-")).head
-    val r = new BtrPartitionReader(file, conf, Array(0), Array(LongZonePred(0, 0, 255)))
+    val r = new BtrPartitionReader(file, conf, Array(0), Array(IntCmpPred(0, 0, 255)))
     while (r.next()) ()
     val m = r.currentMetricsValues().map(x => x.name() -> x.value()).toMap
     assert(m("chunksTotal") == 16 && m("chunksSkipped") == 15, s"ratio metrics: $m")
@@ -466,5 +466,29 @@ class ExactFilterSpec extends AnyFunSuite {
     assert(e.getMessage.contains("part-00000") &&
       (e.getMessage.contains("checksum mismatch") || e.getMessage.contains("corrupt")),
       s"flipped numRows must fail the header CRC on the agg path: ${e.getMessage}")
+  }
+
+  test("aggregate reader refuses a frame whose blobs decode more rows than it declares") {
+    // one 256-row chunk framed from real encoded parts, with numRows set 8
+    // lower: the header CRC is valid (frameChunk computes it), so only the
+    // decoded-length check stands between the reader and a partial that
+    // silently drops the last 8 rows
+    import graft.engine.ChunkEncoder.encodeInt
+    val ids = Array.tabulate(256)(identity)
+    val parts = Seq(encodeInt("id", ids, 256, BtrConfig.default),
+      encodeInt("v", ids.map(_ * 2), 256, BtrConfig.default)).map(p => p.copy(numRows = 248))
+    val dir = tmp("shortframe")
+    val conf = spark.sparkContext.hadoopConfiguration
+    BlockFiles.writeFrames(conf, s"$dir/blocks", 0, 0L, Iterator(BlockFiles.frameChunk(parts)))
+    // the filter makes the chunk mixed and matches exactly its last 8 rows
+    val e = intercept[java.io.IOException] {
+      val r = new BtrAggReader(s"$dir/blocks/part-00000", conf,
+        specs = Seq(CountSpec, SumSpec(1, isDouble = false)),
+        exact = Array(IntCmpPred(0, 248, 255)))
+      try while (r.next()) r.get() finally r.close()
+    }
+    assert(e.getMessage.contains("part-00000") &&
+      e.getMessage.contains("decoded 256 values but the frame declares 248 rows"),
+      s"a long blob must be a named corruption: ${e.getMessage}")
   }
 }

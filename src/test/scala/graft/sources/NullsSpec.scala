@@ -90,7 +90,7 @@ class NullsSpec extends AnyFunSuite {
     assert(files.length == 1)
     // IS NULL: the 15 null-free chunks are skipped unread
     locally {
-      val r = new BtrPartitionReader(files(0), conf, Array(0), Array(IsNullZonePred(1)))
+      val r = new BtrPartitionReader(files(0), conf, Array(0), Array(IsNullPred(1)))
       var read = 0L
       while (r.next()) read += 1
       assert(r.chunksSkipped == 15, s"15 of 16 chunks have zero nulls, skipped=${r.chunksSkipped}")
@@ -99,7 +99,7 @@ class NullsSpec extends AnyFunSuite {
     }
     // IS NOT NULL: exactly the all-null chunk is skipped
     locally {
-      val r = new BtrPartitionReader(files(0), conf, Array(0), Array(NotNullZonePred(1)))
+      val r = new BtrPartitionReader(files(0), conf, Array(0), Array(NotNullPred(1)))
       var read = 0L
       while (r.next()) read += 1
       assert(r.chunksSkipped == 1, s"the one all-null chunk skips, skipped=${r.chunksSkipped}")
