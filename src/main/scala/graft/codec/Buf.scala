@@ -66,16 +66,6 @@ final class BufWriter(initialCapacity: Int = 1 << 12) {
     pos += len
   }
 
-  /** Reserve a 4-byte slot to patch later (e.g. body length). */
-  def reserveI32(): Int = { ensure(4); val at = pos; pos += 4; at }
-
-  def patchI32(at: Int, v: Int): Unit = {
-    arr(at) = v.toByte
-    arr(at + 1) = (v >>> 8).toByte
-    arr(at + 2) = (v >>> 16).toByte
-    arr(at + 3) = (v >>> 24).toByte
-  }
-
   def result(): Array[Byte] = java.util.Arrays.copyOf(arr, pos)
 
   /** The internal buffer (valid up to `size`) — lets arena consumers avoid

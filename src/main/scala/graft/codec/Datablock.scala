@@ -100,7 +100,7 @@ object Datablock {
         DoubleCodec.schemeName(DoubleCodec.encode(out, v, 0, v.length, cfg.maxCascadeDepth, cfg))
       case StringColumn(v) =>
         out.u8(ColType.String)
-        StringCodec.schemeName(StringCodec.encode(out, v, 0, v.length, cfg.maxCascadeDepth, cfg))
+        StringCodec.schemeName(StringCodec.encodeSlices(out, StrSlices.of(v), cfg.maxCascadeDepth, cfg))
     }
     val bytes = out.result()
     (bytes, BlockStats(bytes.length, chunk.inputBytes, schemes.toIndexedSeq))

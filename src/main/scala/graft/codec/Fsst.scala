@@ -270,6 +270,4 @@ final class FsstTable(val symbols: Array[Array[Byte]]) {
       i += 1
     }
   }
-
-  def serializedSize: Int = 1 + symbols.map(_.length + 1).sum
 }

@@ -40,23 +40,8 @@ object Sampling {
     (0, target, out)
   }
 
-  def sampleStrings(v: Array[Array[Byte]], off: Int, len: Int, cfg: BtrConfig): (Int, Int, Array[Array[Byte]]) = {
-    val target = cfg.sampleRuns * cfg.sampleRunLen
-    if (len <= target) return (off, len, v)
-    val out = new Array[Array[Byte]](target)
-    var o = 0
-    var r = 0
-    while (r < cfg.sampleRuns) {
-      val start = off + runStart(r, len, cfg)
-      System.arraycopy(v, start, out, o, cfg.sampleRunLen)
-      o += cfg.sampleRunLen
-      r += 1
-    }
-    (0, target, out)
-  }
-
   /** Start offset of sample run r within a chunk of `len` values. */
-  private def runStart(r: Int, len: Int, cfg: BtrConfig): Int = {
+  private[codec] def runStart(r: Int, len: Int, cfg: BtrConfig): Int = {
     val stride = (len - cfg.sampleRunLen).toLong
     ((stride * r) / math.max(1, cfg.sampleRuns - 1)).toInt
   }

@@ -24,6 +24,15 @@ final class StrSlices(val data: Array[Byte], val offsets: Array[Int], val count:
     java.util.Arrays.copyOfRange(data, start(i), start(i) + len(i))
 }
 
+object StrSlices {
+  /** One arena holding a copy of each value, in order. */
+  def of(v: Array[Array[Byte]]): StrSlices = {
+    val b = new StrSlicesBuilder(v.iterator.map(_.length).sum, v.length)
+    v.foreach(b.add)
+    b.result()
+  }
+}
+
 /** Decoded string column as shared-arena views: value i is
   * data[starts(i), starts(i)+lens(i)). Unlike StrSlices, values may ALIAS
   * (OneValue repeats one region, Dict values point into the dict arena),
@@ -48,7 +57,6 @@ final class StrSlicesBuilder(initialBytes: Int = 1 << 16, initialCount: Int = 10
   def count: Int = n
   /** Raw backing array (for zero-copy writes); valid up to reserve()d size. */
   def buffer: Array[Byte] = data
-  def writePos: Int = pos
 
   /** Ensure capacity for len more bytes and return the write offset; caller
     * writes into `buffer` then calls commit(len).
@@ -70,10 +78,12 @@ final class StrSlicesBuilder(initialBytes: Int = 1 << 16, initialCount: Int = 10
     offsets(n) = pos
   }
 
-  def add(bytes: Array[Byte]): Unit = {
-    val at = reserve(bytes.length)
-    System.arraycopy(bytes, 0, data, at, bytes.length)
-    commit(bytes.length)
+  def add(bytes: Array[Byte]): Unit = add(bytes, 0, bytes.length)
+
+  def add(src: Array[Byte], from: Int, len: Int): Unit = {
+    val at = reserve(len)
+    System.arraycopy(src, from, data, at, len)
+    commit(len)
   }
 
   def result(): StrSlices = new StrSlices(data, offsets, n)

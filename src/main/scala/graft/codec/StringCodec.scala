@@ -2,8 +2,8 @@ package graft.codec
 
 /** String scheme family per the public BtrBlocks paper; the reference binds
   * these behind its FFI (/root/reference/src/ffi.rs:69-74,
-  * compress_column_string). Operates on UTF-8 byte arrays so round-trips are
-  * bit-identical.
+  * compress_column_string). Encodes an arena of UTF-8 slices (StrSlices),
+  * so round-trips are bit-identical.
   *
   * Block layout: [tag:u8][count:i32][payload]; int sub-streams (lengths,
   * dict codes) cascade through IntCodec; dict entries cascade through this
@@ -22,80 +22,24 @@ object StringCodec {
     case TagFsst         => "FSST"
   }
 
-  def encode(out: BufWriter, v: Array[Array[Byte]], off: Int, len: Int, depth: Int, cfg: BtrConfig): Int = {
-    if (len == 0 || depth <= 0) {
-      encodeWith(TagUncompressed, out, v, off, len, depth, cfg)
-      return TagUncompressed
-    }
-    if (isConstant(v, off, len)) {
-      encodeWith(TagOneValue, out, v, off, len, depth, cfg)
-      return TagOneValue
-    }
-    val (soff, slen, sample) = Sampling.sampleStrings(v, off, len, cfg)
-    // cheap uniqueness pre-check: Dict candidacy only when the sample
-    // repeats (estimating Dict on unique data wastes a TreeMap build plus a
-    // recursive — possibly FSST-training — encode of the entries)
-    val uniq = {
-      val set = new java.util.TreeSet[Array[Byte]](byteArrayCmp)
-      var i = 0
-      while (i < slen) { set.add(sample(soff + i)); i += 1 }
-      set.size()
-    }
-    var bestTag = TagUncompressed
-    var bestSize = {
-      val w = new BufWriter(1024)
-      encodeWith(TagUncompressed, w, sample, soff, slen, depth, cfg)
-      w.size
-    }
-    if (uniq * 2 <= slen) {
-      val w = new BufWriter(1024)
-      encodeWith(TagDict, w, sample, soff, slen, depth, cfg)
-      if (w.size < bestSize) { bestSize = w.size; bestTag = TagDict }
-    }
-    // FSST: train once on the sample, measure on the sample, and REUSE the
-    // trained table for the full chunk (it is a sample-trained static table
-    // by construction — re-training on the chunk would double the cost for
-    // no semantic difference)
-    val sampleBuf = new BufWriter(Fsst.MaxSampleBytes)
-    var i = 0
-    while (i < slen && sampleBuf.size < Fsst.MaxSampleBytes) {
-      val s = sample(soff + i)
-      sampleBuf.bytes(s, 0, math.min(s.length, Fsst.MaxSampleBytes - sampleBuf.size))
-      i += 1
-    }
-    val table = Fsst.train(sampleBuf.result())
-    locally {
-      val w = new BufWriter(1024)
-      encFsstWith(table, w, sample, soff, slen, depth, cfg)
-      if (w.size < bestSize) { bestSize = w.size; bestTag = TagFsst }
-    }
-    if (bestTag == TagFsst) {
-      out.u8(TagFsst)
-      out.i32(len)
-      encFsstBody(table, out, v, off, len, depth, cfg)
-    } else {
-      encodeWith(bestTag, out, v, off, len, depth, cfg)
-    }
-    bestTag
-  }
-
+  /** Per-value arrays enter the encoder here, copied into one arena. */
   def encode(v: Array[Array[Byte]], cfg: BtrConfig = BtrConfig.default): Array[Byte] = {
     val out = new BufWriter(256)
-    encode(out, v, 0, v.length, cfg.maxCascadeDepth, cfg)
+    encodeSlices(out, StrSlices.of(v), cfg.maxCascadeDepth, cfg)
     out.result()
   }
 
   def decode(arr: Array[Byte]): Array[Array[Byte]] = decode(new BufReader(arr))
 
-  /** Arena (StrSlices) encode — identical block format to encode(), but the
-    * chunk's strings live in one contiguous buffer: bulk copies for the
-    * Uncompressed payload, slice-based FSST compression, and an index-level
-    * TreeMap for Dict (copies only unique entries). The hot path for the
-    * engine's string columns.
+  /** Sample, select and write one chunk; returns the chosen tag. A constant
+    * chunk is OneValue. Otherwise Uncompressed, Dict (only when the sample
+    * repeats: at most half its values distinct) and FSST are each written
+    * for the sample, and the smallest wins. The FSST table trained on the
+    * sample is reused for the whole chunk.
     */
   def encodeSlices(out: BufWriter, s: StrSlices, depth: Int, cfg: BtrConfig): Int = {
     val len = s.count
-    if (len == 0 || depth <= 0) { encUncompressedSlices(out, s, depth, cfg); return TagUncompressed }
+    if (len == 0 || depth <= 0) { encUncompressed(out, s, depth, cfg); return TagUncompressed }
     var const = true
     var i = 1
     while (const && i < len) { if (!s.sliceEquals(0, i)) const = false; i += 1 }
@@ -104,73 +48,54 @@ object StringCodec {
       out.i32(s.len(0)); out.bytes(s.data, s.start(0), s.len(0))
       return TagOneValue
     }
-    // selection runs on a small copied sample (cheap; full chunk stays zero-copy)
-    val target = cfg.sampleRuns * cfg.sampleRunLen
-    val sample: Array[Array[Byte]] =
-      if (len <= target) Array.tabulate(len)(s.copy)
-      else {
-        val out = new Array[Array[Byte]](target)
-        var o = 0
-        var r = 0
-        while (r < cfg.sampleRuns) {
-          val startIdx = (((len - cfg.sampleRunLen).toLong * r) / math.max(1, cfg.sampleRuns - 1)).toInt
-          var k = 0
-          while (k < cfg.sampleRunLen) { out(o) = s.copy(startIdx + k); o += 1; k += 1 }
-          r += 1
-        }
-        out
-      }
-    val slen = sample.length
-    val uniq = {
-      val set = new java.util.TreeSet[Array[Byte]](byteArrayCmp)
-      sample.foreach(set.add)
-      set.size()
-    }
+    val smp = sample(s, cfg)
     var bestTag = TagUncompressed
-    var bestSize = {
-      val w = new BufWriter(1024)
-      encodeWith(TagUncompressed, w, sample, 0, slen, depth, cfg)
-      w.size
+    var bestSize = trialSize(encUncompressed(_, smp, depth, cfg))
+    val uniq = distinct(smp)
+    if (uniq.size * 2 <= smp.count) {
+      val size = trialSize(encDict(_, smp, uniq, depth, cfg))
+      if (size < bestSize) { bestSize = size; bestTag = TagDict }
     }
-    if (uniq * 2 <= slen) {
-      val w = new BufWriter(1024)
-      encodeWith(TagDict, w, sample, 0, slen, depth, cfg)
-      if (w.size < bestSize) { bestSize = w.size; bestTag = TagDict }
-    }
-    val sampleBuf = new BufWriter(Fsst.MaxSampleBytes)
-    i = 0
-    while (i < slen && sampleBuf.size < Fsst.MaxSampleBytes) {
-      sampleBuf.bytes(sample(i), 0, math.min(sample(i).length, Fsst.MaxSampleBytes - sampleBuf.size))
-      i += 1
-    }
-    val table = Fsst.train(sampleBuf.result())
-    locally {
-      val w = new BufWriter(1024)
-      encFsstWith(table, w, sample, 0, slen, depth, cfg)
-      if (w.size < bestSize) { bestSize = w.size; bestTag = TagFsst }
-    }
+    val trainLen = math.min(smp.totalBytes, Fsst.MaxSampleBytes.toLong).toInt
+    val table = Fsst.train(java.util.Arrays.copyOfRange(smp.data, smp.start(0), smp.start(0) + trainLen))
+    if (trialSize(encFsst(_, table, smp, depth, cfg)) < bestSize) bestTag = TagFsst
     bestTag match {
-      case TagUncompressed => encUncompressedSlices(out, s, depth, cfg)
-      case TagDict         => encDictSlices(out, s, depth, cfg)
-      case TagFsst =>
-        out.u8(TagFsst); out.i32(len)
-        table.serialize(out)
-        val blob = new BufWriter(math.max(64, (s.totalBytes / 3).toInt))
-        val clens = new Array[Int](len)
-        i = 0
-        while (i < len) {
-          clens(i) = table.compress(s.data, s.start(i), s.len(i), blob)
-          i += 1
-        }
-        IntCodec.encode(out, clens, 0, len, depth - 1, cfg)
-        val b = blob.result()
-        out.i32(b.length)
-        out.bytes(b)
+      case TagUncompressed => encUncompressed(out, s, depth, cfg)
+      case TagDict         => encDict(out, s, distinct(s), depth, cfg)
+      case TagFsst         => encFsst(out, table, s, depth, cfg)
     }
     bestTag
   }
 
-  private def encUncompressedSlices(out: BufWriter, s: StrSlices, depth: Int, cfg: BtrConfig): Unit = {
+  private def trialSize(write: BufWriter => Unit): Int = {
+    val w = new BufWriter(1024)
+    write(w)
+    w.size
+  }
+
+  /** Selection sample: the chunk itself when it has at most
+    * sampleRuns × sampleRunLen values, else Sampling's evenly spaced runs,
+    * each copied with one arraycopy.
+    */
+  private def sample(s: StrSlices, cfg: BtrConfig): StrSlices = {
+    val runLen = cfg.sampleRunLen
+    val n = cfg.sampleRuns * runLen
+    if (s.count <= n) return s
+    val starts = Array.tabulate(cfg.sampleRuns)(r => Sampling.runStart(r, s.count, cfg))
+    val data = new Array[Byte](starts.map(st => s.offsets(st + runLen) - s.offsets(st)).sum)
+    val offsets = new Array[Int](n + 1)
+    var o = 0
+    for (st <- starts) {
+      val from = s.offsets(st)
+      System.arraycopy(s.data, from, data, offsets(o), s.offsets(st + runLen) - from)
+      var k = 1
+      while (k <= runLen) { offsets(o + k) = offsets(o) + s.offsets(st + k) - from; k += 1 }
+      o += runLen
+    }
+    new StrSlices(data, offsets, n)
+  }
+
+  private def encUncompressed(out: BufWriter, s: StrSlices, depth: Int, cfg: BtrConfig): Unit = {
     val len = s.count
     out.u8(TagUncompressed)
     out.i32(len)
@@ -181,142 +106,54 @@ object StringCodec {
     if (len > 0) out.bytes(s.data, s.start(0), s.offsets(len) - s.start(0))
   }
 
-  private def encDictSlices(out: BufWriter, s: StrSlices, depth: Int, cfg: BtrConfig): Unit = {
-    val len = s.count
-    out.u8(TagDict)
-    out.i32(len)
-    // index-level TreeMap: comparator reads slice content, so only unique
-    // entries are ever materialized as arrays
-    val cmp = new java.util.Comparator[Integer] {
-      def compare(a: Integer, b: Integer): Int = s.sliceCompare(a, b)
-    }
-    val map = new java.util.TreeMap[Integer, Integer](cmp)
+  /** The distinct values of `s` in unsigned-lex order, each keyed on the
+    * first row that holds it; keying on row indexes copies no value.
+    */
+  private def distinct(s: StrSlices): java.util.TreeMap[Integer, Integer] = {
+    val map = new java.util.TreeMap[Integer, Integer]((a: Integer, b: Integer) => s.sliceCompare(a, b))
     var i = 0
-    while (i < len) { map.putIfAbsent(i, -1); i += 1 }
-    val dict = new Array[Array[Byte]](map.size())
-    val it = map.entrySet().iterator()
-    i = 0
+    while (i < s.count) { map.putIfAbsent(i, -1); i += 1 }
+    map
+  }
+
+  /** Dict block: the distinct values, copied into one arena in `uniq`'s
+    * order and cascaded through encodeSlices, then each row's code.
+    */
+  private def encDict(out: BufWriter, s: StrSlices, uniq: java.util.TreeMap[Integer, Integer], depth: Int, cfg: BtrConfig): Unit = {
+    val len = s.count
+    val entries = new StrSlicesBuilder(1024, uniq.size())
+    val it = uniq.entrySet().iterator()
+    var i = 0
     while (it.hasNext) {
       val e = it.next()
-      dict(i) = s.copy(e.getKey)
+      entries.add(s.data, s.start(e.getKey), s.len(e.getKey))
       e.setValue(i)
       i += 1
     }
     val codes = new Array[Int](len)
     i = 0
-    while (i < len) { codes(i) = map.get(i); i += 1 }
-    encode(out, dict, 0, dict.length, depth - 1, cfg)
-    IntCodec.encode(out, codes, 0, len, depth - 1, cfg)
-  }
-
-  // ---------------------------------------------------------------- select
-
-  def select(v: Array[Array[Byte]], off: Int, len: Int, depth: Int, cfg: BtrConfig): Int = {
-    if (len == 0) return TagUncompressed
-    if (isConstant(v, off, len)) return TagOneValue
-    if (depth <= 0) return TagUncompressed
-    val (soff, slen, sample) = Sampling.sampleStrings(v, off, len, cfg)
-    var bestTag = TagUncompressed
-    var bestSize = Int.MaxValue
-    val candidates = Array(TagUncompressed, TagDict, TagFsst)
-    var i = 0
-    while (i < candidates.length) {
-      val t = candidates(i)
-      val w = new BufWriter(1024)
-      encodeWith(t, w, sample, soff, slen, depth, cfg)
-      if (w.size < bestSize) { bestSize = w.size; bestTag = t }
-      i += 1
-    }
-    bestTag
-  }
-
-  private def isConstant(v: Array[Array[Byte]], off: Int, len: Int): Boolean = {
-    var i = 1
-    while (i < len) {
-      if (!java.util.Arrays.equals(v(off + i), v(off))) return false
-      i += 1
-    }
-    true
-  }
-
-  // ---------------------------------------------------------------- encode
-
-  def encodeWith(tag: Int, out: BufWriter, v: Array[Array[Byte]], off: Int, len: Int, depth: Int, cfg: BtrConfig): Unit = {
-    out.u8(tag)
+    while (i < len) { codes(i) = uniq.get(i); i += 1 }
+    out.u8(TagDict)
     out.i32(len)
-    tag match {
-      case TagUncompressed => encUncompressed(out, v, off, len, depth, cfg)
-      case TagOneValue =>
-        if (len > 0) { out.i32(v(off).length); out.bytes(v(off)) } else out.i32(0)
-      case TagDict => encDict(out, v, off, len, depth, cfg)
-      case TagFsst => encFsst(out, v, off, len, depth, cfg)
-    }
-  }
-
-  private def encUncompressed(out: BufWriter, v: Array[Array[Byte]], off: Int, len: Int, depth: Int, cfg: BtrConfig): Unit = {
-    val lengths = new Array[Int](len)
-    var i = 0
-    while (i < len) { lengths(i) = v(off + i).length; i += 1 }
-    IntCodec.encode(out, lengths, 0, len, depth - 1, cfg)
-    i = 0
-    while (i < len) { out.bytes(v(off + i)); i += 1 }
-  }
-
-  private val byteArrayCmp = new java.util.Comparator[Array[Byte]] {
-    def compare(a: Array[Byte], b: Array[Byte]): Int =
-      java.util.Arrays.compareUnsigned(a, b)
-  }
-
-  private def encDict(out: BufWriter, v: Array[Array[Byte]], off: Int, len: Int, depth: Int, cfg: BtrConfig): Unit = {
-    val map = new java.util.TreeMap[Array[Byte], Integer](byteArrayCmp)
-    var i = 0
-    while (i < len) { map.put(v(off + i), null); i += 1 }
-    val dict = new Array[Array[Byte]](map.size())
-    val it = map.keySet().iterator()
-    i = 0
-    while (it.hasNext) { val k = it.next(); dict(i) = k; map.put(k, i); i += 1 }
-    val codes = new Array[Int](len)
-    i = 0
-    while (i < len) { codes(i) = map.get(v(off + i)); i += 1 }
-    encode(out, dict, 0, dict.length, depth - 1, cfg) // dict→FSST cascade lives here
+    encodeSlices(out, entries.result(), depth - 1, cfg)
     IntCodec.encode(out, codes, 0, len, depth - 1, cfg)
   }
 
-  private def encFsst(out: BufWriter, v: Array[Array[Byte]], off: Int, len: Int, depth: Int, cfg: BtrConfig): Unit = {
-    // train on evenly spaced strings up to the trainer's sample cap
-    val sampleBuf = new BufWriter(Fsst.MaxSampleBytes)
-    val step = math.max(1, len / 64)
-    var i = 0
-    while (i < len && sampleBuf.size < Fsst.MaxSampleBytes) {
-      val s = v(off + i)
-      sampleBuf.bytes(s, 0, math.min(s.length, Fsst.MaxSampleBytes - sampleBuf.size))
-      i += step
-    }
-    val table = Fsst.train(sampleBuf.result())
-    encFsstBody(table, out, v, off, len, depth, cfg)
-  }
-
-  /** FSST payload with a caller-supplied trained table. */
-  private def encFsstBody(table: FsstTable, out: BufWriter, v: Array[Array[Byte]], off: Int, len: Int, depth: Int, cfg: BtrConfig): Unit = {
+  private def encFsst(out: BufWriter, table: FsstTable, s: StrSlices, depth: Int, cfg: BtrConfig): Unit = {
+    val len = s.count
+    out.u8(TagFsst)
+    out.i32(len)
     table.serialize(out)
-    val blob = new BufWriter(64)
+    val blob = new BufWriter(math.max(64, (s.totalBytes / 3).toInt))
     val clens = new Array[Int](len)
     var i = 0
     while (i < len) {
-      clens(i) = table.compress(v(off + i), 0, v(off + i).length, blob)
+      clens(i) = table.compress(s.data, s.start(i), s.len(i), blob)
       i += 1
     }
     IntCodec.encode(out, clens, 0, len, depth - 1, cfg)
-    val b = blob.result()
-    out.i32(b.length)
-    out.bytes(b)
-  }
-
-  /** Full FSST block (tag+count+payload) with a pre-trained table. */
-  private def encFsstWith(table: FsstTable, out: BufWriter, v: Array[Array[Byte]], off: Int, len: Int, depth: Int, cfg: BtrConfig): Unit = {
-    out.u8(TagFsst)
-    out.i32(len)
-    encFsstBody(table, out, v, off, len, depth, cfg)
+    out.i32(blob.size)
+    out.bytes(blob.buffer, 0, blob.size)
   }
 
   // ---------------------------------------------------------------- decode

@@ -102,7 +102,9 @@ object ChunkEncoder {
       sumDouble = if (hasRange) Some(sm) else None)
   }
 
-  /** Arena-based string chunk encode (the engine's hot path). */
+  /** String chunk encode through StringCodec.encodeSlices, with the
+    * chunk's zone extrema.
+    */
   def encodeStringSlices(
       colName: String,
       s: StrSlices, cfg: BtrConfig,
@@ -150,33 +152,5 @@ object ChunkEncoder {
   private def utf8Faithful(b: Array[Byte]): Option[String] = {
     val s = new String(b, UTF_8)
     if (java.util.Arrays.equals(s.getBytes(UTF_8), b)) Some(s) else None
-  }
-
-  def encodeString(
-      colName: String,
-      v: Array[Array[Byte]], len: Int, cfg: BtrConfig): CompressedPart = {
-    var raw = 0L
-    var i = 0
-    while (i < len) { raw += v(i).length; i += 1 }
-    val out = new BufWriter(math.min(raw, Int.MaxValue / 2).toInt / 2 + 256)
-    StringCodec.encode(out, v, 0, len, cfg.maxCascadeDepth, cfg)
-    val bytes = out.result()
-    // zone map only when min/max are short enough to store faithfully
-    var mn: Array[Byte] = null
-    var mx: Array[Byte] = null
-    i = 0
-    while (i < len) {
-      if (mn == null || java.util.Arrays.compareUnsigned(v(i), mn) < 0) mn = v(i)
-      if (mx == null || java.util.Arrays.compareUnsigned(v(i), mx) > 0) mx = v(i)
-      i += 1
-    }
-    val (minS, maxS) = coherentPair(
-      if (len > 0 && mn.length <= 64 && mx.length <= 64)
-        (utf8Faithful(mn), utf8Faithful(mx))
-      else (None, None))
-    CompressedPart(
-      len, colName, ColType.String,
-      StringCodec.describeBlock(bytes), raw, bytes,
-      None, None, None, None, minS, maxS)
   }
 }

@@ -460,7 +460,7 @@ object DedupOps {
     // vectors are present), replacing the cached self-join + verify map —
     // the vectors cross the wire exactly once.
     val cand = observeDropped(
-      reps.map { case (id, v) => (signBucket(v, planes, seed), id, v) }
+      reps.map { case (id, v) => (SimilarityOps.signBucket(v, planes, seed), id, v) }
         .groupByKey(_._1)
         .flatMapGroups { (_, it) =>
           val dropped = new Array[Long](1)
@@ -482,22 +482,5 @@ object DedupOps {
       .filter(col("cosine") >= threshold)
       .unionAll(dupPairs)
       .select(col("id_a"), col("id_b"), round(col("cosine"), 4).as("cosine"))
-  }
-
-  /** Sign-LSH bucket of one vector under the (seed, planes, dim)-keyed
-    * deterministic hyperplane family (see SimilarityOps.hyperplanes).
-    */
-  private def signBucket(v: Array[Float], planes: Int, seed: Long): Int = {
-    val h = SimilarityOps.hyperplanes(seed, planes, v.length)
-    var sig = 0
-    var p = 0
-    while (p < planes) {
-      var dot = 0.0
-      var i = 0
-      while (i < v.length) { dot += h(p)(i) * v(i); i += 1 }
-      if (dot >= 0) sig |= 1 << p
-      p += 1
-    }
-    sig
   }
 }

@@ -27,15 +27,24 @@ object SimilarityOps {
     * built lazily PER EXECUTOR (scala.util.Random's Gaussian sequence is
     * platform-independent, so every task sees identical planes). Replaces
     * a driver-side build + broadcast — and the `head()` job that was needed
-    * just to learn `dim` before any task could run.
+    * just to learn `dim` before any task could run. The cache keeps the
+    * `MaxPlaneFamilies` most recently used families, so a job sweeping
+    * seeds or dims cannot grow it without bound.
     */
+  private final val MaxPlaneFamilies = 8
   private val planeCache =
-    new java.util.concurrent.ConcurrentHashMap[(Long, Int, Int), Array[Array[Double]]]()
-  def hyperplanes(seed: Long, planes: Int, dim: Int): Array[Array[Double]] =
-    planeCache.computeIfAbsent((seed, planes, dim), { _ =>
-      val rnd = new scala.util.Random(seed)
-      Array.fill(planes, dim)(rnd.nextGaussian())
-    })
+    new java.util.LinkedHashMap[(Long, Int, Int), Array[Array[Double]]](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[(Long, Int, Int), Array[Array[Double]]]): Boolean =
+        size() > MaxPlaneFamilies
+    }
+  private def hyperplanes(seed: Long, planes: Int, dim: Int): Array[Array[Double]] =
+    planeCache.synchronized {
+      planeCache.computeIfAbsent((seed, planes, dim), { _ =>
+        val rnd = new scala.util.Random(seed)
+        Array.fill(planes, dim)(rnd.nextGaussian())
+      })
+    }
 
   def cosine(a: Array[Float], b: Array[Float]): Double = {
     var dot = 0.0; var na = 0.0; var nb = 0.0
@@ -55,7 +64,8 @@ object SimilarityOps {
     * partition) partials. Queries are collected + broadcast — they must be
     * small, the premise of broadcast ANN. `bucketOf` maps a corpus vector
     * to its bucket; a query scores it only when the bucket is in the
-    * query's `probes` set (null probes = exact/brute: score everything).
+    * query's `probes` set (null probes = exact/brute: score everything);
+    * it also gets the corpus id, for error messages.
     * The shuffle carries only candidate ids+cosines, never the corpus —
     * the only shape that survives a 100 TB corpus (guide §2.3: shuffle
     * keys and metadata, not payloads).
@@ -66,7 +76,7 @@ object SimilarityOps {
       vecCol: String,
       k: Int,
       qs: Array[(Long, Array[Float])],
-      bucketOf: Array[Float] => Int,
+      bucketOf: (Long, Array[Float]) => Int,
       probes: Array[Array[Int]]): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
@@ -87,7 +97,7 @@ object SimilarityOps {
               if (c != 0) c else java.lang.Long.compare(y._2, x._2)
             }))
         it.foreach { case (cid, cvec) =>
-          val b = if (probes == null) 0 else bucketOf(cvec)
+          val b = if (probes == null || queries.isEmpty) 0 else bucketOf(cid, cvec)
           var q = 0
           while (q < queries.length) {
             if (probes == null || java.util.Arrays.binarySearch(probes(q), b) >= 0) {
@@ -141,7 +151,7 @@ object SimilarityOps {
       vecCol: String,
       k: Int): DataFrame =
     heapTopK(corpus, idCol, vecCol, k,
-      collectQueries(queries, idCol, vecCol), _ => 0, null)
+      collectQueries(queries, idCol, vecCol), (_, _) => 0, null)
 
   /** IVF (inverted-file) ANN: k-means centroids trained on a deterministic
     * driver-side sample partition the corpus into nCentroids buckets; each
@@ -205,7 +215,7 @@ object SimilarityOps {
       byDist.take(nProbe).sorted.toArray
     }
     heapTopK(corpus, idCol, vecCol, k, qs,
-      v => nearest(centB.value, v), probes)
+      (_, v) => nearest(centB.value, v), probes)
   }
 
   private def nearest(centroids: Array[Array[Double]], v: Array[Float]): Int = {
@@ -234,7 +244,10 @@ object SimilarityOps {
   /** LSH-bucketed ANN: random-hyperplane signatures bucket the corpus; each
     * query probes its own bucket and all hamming-1 neighbor buckets
     * (multiprobe), then exact top-k within candidates. Recall < 1, cost ≈
-    * (planes+1)/2^planes of the corpus per query.
+    * (planes+1)/2^planes of the corpus per query. Every query and corpus
+    * vector must have the first query's dimension; hyperplanes of another
+    * dimension would bucket it meaninglessly, so a mismatch fails with an
+    * IllegalArgumentException naming the vector.
     */
   def lshTopK(
       corpus: DataFrame,
@@ -251,15 +264,24 @@ object SimilarityOps {
     // shuffled the full corpus vectors through a bucket join, then paid a
     // dropDuplicates plus a rank-window exchange on the candidates
     val qs = collectQueries(queries, idCol, vecCol)
-    val probes: Array[Array[Int]] = qs.map { case (_, qv) =>
-      val s = sigOf(qv, planes, seed)
+    val dim = qs.headOption.fold(0)(_._2.length)
+    val probes: Array[Array[Int]] = qs.map { case (id, qv) =>
+      val s = lshBucket("query", id, qv, dim, planes, seed)
       (Seq(s) ++ (0 until planes).map(b => s ^ (1 << b))).distinct.sorted.toArray
     }
-    heapTopK(corpus, idCol, vecCol, k, qs, v => sigOf(v, planes, seed), probes)
+    heapTopK(corpus, idCol, vecCol, k, qs, lshBucket("corpus", _, _, dim, planes, seed), probes)
   }
 
-  /** Sign signature under the (seed, planes, dim)-keyed hyperplane family. */
-  private def sigOf(v: Array[Float], planes: Int, seed: Long): Int = {
+  private def lshBucket(kind: String, id: Long, v: Array[Float], dim: Int, planes: Int, seed: Long): Int = {
+    if (v.length != dim) throw new IllegalArgumentException(
+      s"lshTopK: $kind vector $id has dimension ${v.length}, but the queries have dimension $dim")
+    signBucket(v, planes, seed)
+  }
+
+  /** Sign-LSH bucket of one vector under the (seed, planes, v.length)-keyed
+    * hyperplane family.
+    */
+  private[ops] def signBucket(v: Array[Float], planes: Int, seed: Long): Int = {
     val h = hyperplanes(seed, planes, v.length)
     var sig = 0
     var p = 0

@@ -299,6 +299,73 @@ class CodecSpec extends AnyFunSuite {
     assert(viaSlices.startsWith("Dict"))
   }
 
+  // ---------------------------------------------------------- pinned bytes
+
+  private def crc32c(b: Array[Byte]): Long = {
+    val c = new java.util.zip.CRC32C
+    c.update(b)
+    c.getValue
+  }
+
+  /** F2 string fixtures whose encoded bytes are pinned: (name, depth,
+    * values). Null rows of a nullable column reach the codec as "".
+    */
+  private def pinFixtures: Seq[(String, Int, Array[String])] = {
+    val rnd = new scala.util.Random(53)
+    val langs = Array("scala", "rust", "python", "go", "java", "c", "cpp", "js")
+    val paths = Array.tabulate(64)(i => s"src/main/scala/com/example/project/module$i/Service$i.scala")
+    val kw = Array("def ", "val ", "return ", "import ", "class ", "object ")
+    val ids = Array("index", "value", "result", "buffer", "stream", "count")
+    def code(): String = Seq.fill(5)(
+      "  " * rnd.nextInt(4) + kw(rnd.nextInt(kw.length)) + ids(rnd.nextInt(ids.length)) +
+        " = " + ids(rnd.nextInt(ids.length)) + s"(${rnd.nextInt(100)})\n").mkString
+    val cascade = Array.fill(50000)(paths(rnd.nextInt(paths.length)))
+    val d = cfg.maxCascadeDepth
+    Seq(
+      ("constant", d, Array.fill(1000)("hello world")),
+      ("low-card dict", d, Array.fill(20000)(langs(rnd.nextInt(langs.length)))),
+      ("code-text fsst", d, Array.fill(3000)(code())),
+      ("dict->fsst cascade", d, cascade),
+      ("hex40", d, Array.fill(2000)(Seq.fill(40)("0123456789abcdef" (rnd.nextInt(16))).mkString)),
+      ("empties mixed", d, Array.tabulate(1000)(i => if (i % 3 == 0) "" else s"v$i")),
+      ("65536 rows", d, Array.tabulate(65536)(i => s"k${i % 97}")),
+      ("65537 rows", d, Array.tabulate(65537)(i => s"k${i % 97}")),
+      ("null placeholders", d, Array.tabulate(5000)(i => if (i % 7 == 0) "" else langs(rnd.nextInt(5)))),
+      ("depth 0", 0, cascade),
+      ("depth 1", 1, cascade))
+  }
+
+  /** CRC32C of each fixture's encoded block. */
+  private val pinnedCrcs = Map(
+    "constant" -> 0x9d11a5bdL,
+    "low-card dict" -> 0x09aba33bL,
+    "code-text fsst" -> 0xfefdffeaL,
+    "dict->fsst cascade" -> 0x3122a783L,
+    "hex40" -> 0x03660847L,
+    "empties mixed" -> 0xa0246768L,
+    "65536 rows" -> 0xe46d8231L,
+    "65537 rows" -> 0x1d76635dL,
+    "null placeholders" -> 0x9e67ad23L,
+    "depth 0" -> 0xcfd1362cL,
+    "depth 1" -> 0xf311034fL)
+
+  test("string encode bytes are pinned (slices path and array entry point)") {
+    val got = pinFixtures.map { case (name, depth, v) =>
+      val c = cfg.copy(maxCascadeDepth = depth)
+      val bytes = v.map(_.getBytes(UTF_8))
+      val b = new StrSlicesBuilder()
+      bytes.foreach(b.add)
+      val out = new BufWriter()
+      StringCodec.encodeSlices(out, b.result(), depth, c)
+      val viaSlices = crc32c(out.result())
+      assert(crc32c(StringCodec.encode(bytes, c)) == viaSlices, s"$name: array entry point bytes differ")
+      name -> viaSlices
+    }
+    val changed = got.filter { case (name, crc) => !pinnedCrcs.get(name).contains(crc) }
+    assert(changed.isEmpty,
+      "encoded bytes changed: " + changed.map { case (n, c) => f"$n -> 0x$c%08xL" }.mkString(", "))
+  }
+
   // ------------------------------------------------------------- cascading
 
   test("dict->fsst cascade on low-card long strings") {

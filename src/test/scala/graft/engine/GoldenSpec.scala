@@ -162,6 +162,19 @@ class GoldenSpec extends AnyFunSuite {
     assert(totalChunks >= 20, s"fixture sanity: $totalChunks chunks")
   }
 
+  test("block file bytes of a seeded source-code table are pinned") {
+    val dir = tmp("pinned")
+    val df = graft.data.SourceCodeGen.table(spark, 4000, seed = 11L).toDF()
+      .withColumn("row_id", col("row_id").cast("int")).coalesce(1)
+    BlockFiles.write(df, dir)
+    val files = new java.io.File(dir.stripPrefix("file:"), "blocks").listFiles()
+      .filter(_.getName.startsWith("part-"))
+    assert(files.length == 1, files.map(_.getName).mkString(","))
+    val crc = new java.util.zip.CRC32C
+    crc.update(java.nio.file.Files.readAllBytes(files(0).toPath))
+    assert(crc.getValue == 0x4dcf0fa2L, f"block file CRC32C 0x${crc.getValue}%08xL")
+  }
+
   test("Datablock in-memory API: compress/decompress/compare/stats") {
     val rel = new Relation()
       .addColumnInt("id", Array.tabulate(640)(i => i % 10))

@@ -291,6 +291,24 @@ class OpsSpec extends AnyFunSuite {
     assert(got(1L) == 1L && got(2L) == 2L, s"self must be rank1: $got")
   }
 
+  test("lshTopK: a vector of another dimension fails with a named error") {
+    val rnd = new scala.util.Random(19)
+    val corpus = (1L to 40L).map(i => (i, Array.fill(8)(rnd.nextGaussian().toFloat)))
+    val corpusDf = corpus.toDF("vec_id", "embedding").repartition(2)
+    val queryDf = corpus.take(2).toDF("vec_id", "embedding")
+    val shortQuery = (corpus.take(2) :+ ((99L, Array.fill(6)(1f)))).toDF("vec_id", "embedding")
+    val q = intercept[IllegalArgumentException](
+      SimilarityOps.lshTopK(corpusDf, shortQuery, "vec_id", "embedding", k = 3).collect())
+    assert(q.getMessage.contains("query vector 99 has dimension 6") &&
+      q.getMessage.contains("dimension 8"), q.getMessage)
+    val shortCorpus = (corpus :+ ((77L, Array.fill(6)(1f)))).toDF("vec_id", "embedding")
+    val c = intercept[Exception](
+      SimilarityOps.lshTopK(shortCorpus, queryDf, "vec_id", "embedding", k = 3).collect())
+    val causes = Iterator.iterate[Throwable](c)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(e => e.isInstanceOf[IllegalArgumentException] &&
+      e.getMessage.contains("corpus vector 77 has dimension 6")), c.toString)
+  }
+
   test("ivfTopK: self-match is rank 1, recall overlaps brute force") {
     val rnd = new scala.util.Random(17)
     val corpus = (1L to 400L).map(i => (i, Array.fill(8)(rnd.nextGaussian().toFloat)))

@@ -799,14 +799,19 @@ class BtrSourceSpec extends AnyFunSuite {
   test("ZoneAccumulator fold over frame bytes equals the parts' own zones") {
     // the accumulator re-parses the serialized frame layout; if frameChunk's
     // byte layout ever drifts (as it did v3 -> v4), this pins the parity
+    import graft.codec.StrSlicesBuilder
     import graft.engine.ChunkEncoder
     import java.nio.charset.StandardCharsets.UTF_8
     val cfg = BtrConfig.default
+    def strings(v: String*) = {
+      val b = new StrSlicesBuilder()
+      v.foreach(s => b.add(s.getBytes(UTF_8)))
+      b.result()
+    }
     def chunk(base: Int) = Seq(
       ChunkEncoder.encodeInt("i", Array(base, base + 5, base + 9), 3, cfg),
       ChunkEncoder.encodeDouble("d", Array(base * 1.5, base * 2.5, base * 0.5), 3, cfg),
-      ChunkEncoder.encodeString("s",
-        Array(s"a$base".getBytes(UTF_8), s"z$base".getBytes(UTF_8), "m".getBytes(UTF_8)), 3, cfg))
+      ChunkEncoder.encodeStringSlices("s", strings(s"a$base", s"z$base", "m"), cfg))
     val acc = new graft.format.ZoneAccumulator
     acc.fold(BlockFiles.frameChunk(chunk(100)).bytes)
     acc.fold(BlockFiles.frameChunk(chunk(40)).bytes)
@@ -819,11 +824,10 @@ class BtrSourceSpec extends AnyFunSuite {
     assert(new String(zs(2).smin, UTF_8) == "a100" && new String(zs(2).smax, UTF_8) == "z40",
       s"string fold: [${new String(zs(2).smin, UTF_8)}, ${new String(zs(2).smax, UTF_8)}]")
     // a zone-less chunk (long strings) kills only that column
-    val longs = Array(("x" * 100).getBytes(UTF_8), ("y" * 100).getBytes(UTF_8))
     val acc2 = new graft.format.ZoneAccumulator
     acc2.fold(BlockFiles.frameChunk(Seq(
       ChunkEncoder.encodeInt("i", Array(1, 2), 2, cfg),
-      ChunkEncoder.encodeString("t", longs, 2, cfg))).bytes)
+      ChunkEncoder.encodeStringSlices("t", strings("x" * 100, "y" * 100), cfg))).bytes)
     val zs2 = acc2.result().get
     assert(zs2(0).kind == 1 && zs2(1).kind == 0)
   }
