@@ -10,8 +10,6 @@ package graft.codec
   * @param maxCascadeDepth max scheme-cascade depth (sub-streams of a scheme
   *        are re-compressed with depth-1; 0 = always Uncompressed)
   * @param blockSize tuples per chunk (the compression unit)
-  * @param sampleRuns number of sample runs the greedy selector draws
-  * @param sampleRunLen values per sample run
   * @param maxChunkBytes byte budget per chunk on top of the row count: a
   *        chunk also closes once its buffered string bytes reach this, so
   *        task memory stays bounded for arbitrarily wide rows (a 100 TB
@@ -22,8 +20,6 @@ package graft.codec
 final case class BtrConfig(
     maxCascadeDepth: Int = 3,
     blockSize: Int = 65536,
-    sampleRuns: Int = 8,
-    sampleRunLen: Int = 128,
     maxChunkBytes: Long = 128L << 20)
 
 object BtrConfig {

@@ -50,7 +50,6 @@ final class Relation {
     cols += name -> StringColumn(values.map(_.getBytes("UTF-8"))); this
   }
 
-  def columnNames: Seq[String] = cols.map(_._1).toSeq
   def tupleCount: Long = if (cols.isEmpty) 0L else cols.head._2.length.toLong
 
   /** Slice rows [from, until) across all columns. */

@@ -49,7 +49,7 @@ object DoubleCodec {
     if (len == 0) return TagUncompressed
     if (isConstant(v, off, len)) return TagOneValue
     if (depth <= 0) return TagUncompressed
-    val (soff, slen, sample) = Sampling.sampleDoubles(v, off, len, cfg)
+    val (soff, slen, sample) = Sampling.sampleDoubles(v, off, len)
     var bestTag = TagUncompressed
     var bestSize = Int.MaxValue
     val candidates = Array(TagUncompressed, TagRle, TagDict, TagFreq, TagDecimal)

@@ -52,7 +52,7 @@ object IntCodec {
     if (len == 0) return TagUncompressed
     if (isConstant(v, off, len)) return TagOneValue
     if (depth <= 0) return TagUncompressed
-    val (soff, slen, sample) = Sampling.sampleInts(v, off, len, cfg)
+    val (soff, slen, sample) = Sampling.sampleInts(v, off, len)
     var bestTag = TagUncompressed
     var bestSize = Int.MaxValue
     val candidates = Array(TagUncompressed, TagFbp, TagRle, TagDict, TagFreq)

@@ -48,12 +48,12 @@ object StringCodec {
       out.i32(s.len(0)); out.bytes(s.data, s.start(0), s.len(0))
       return TagOneValue
     }
-    val smp = sample(s, cfg)
+    val smp = sample(s)
     var bestTag = TagUncompressed
     var bestSize = trialSize(encUncompressed(_, smp, depth, cfg))
-    val uniq = distinct(smp)
-    if (uniq.size * 2 <= smp.count) {
-      val size = trialSize(encDict(_, smp, uniq, depth, cfg))
+    val dict = dictionary(smp)
+    if (dict._1.length * 2 <= smp.count) {
+      val size = trialSize(encDict(_, smp, dict, depth, cfg))
       if (size < bestSize) { bestSize = size; bestTag = TagDict }
     }
     val trainLen = math.min(smp.totalBytes, Fsst.MaxSampleBytes.toLong).toInt
@@ -61,7 +61,7 @@ object StringCodec {
     if (trialSize(encFsst(_, table, smp, depth, cfg)) < bestSize) bestTag = TagFsst
     bestTag match {
       case TagUncompressed => encUncompressed(out, s, depth, cfg)
-      case TagDict         => encDict(out, s, distinct(s), depth, cfg)
+      case TagDict         => encDict(out, s, dictionary(s), depth, cfg)
       case TagFsst         => encFsst(out, table, s, depth, cfg)
     }
     bestTag
@@ -74,14 +74,14 @@ object StringCodec {
   }
 
   /** Selection sample: the chunk itself when it has at most
-    * sampleRuns × sampleRunLen values, else Sampling's evenly spaced runs,
-    * each copied with one arraycopy.
+    * Sampling.Runs × Sampling.RunLen values, else Sampling's evenly spaced
+    * runs, each copied with one arraycopy.
     */
-  private def sample(s: StrSlices, cfg: BtrConfig): StrSlices = {
-    val runLen = cfg.sampleRunLen
-    val n = cfg.sampleRuns * runLen
+  private def sample(s: StrSlices): StrSlices = {
+    val runLen = Sampling.RunLen
+    val n = Sampling.Runs * runLen
     if (s.count <= n) return s
-    val starts = Array.tabulate(cfg.sampleRuns)(r => Sampling.runStart(r, s.count, cfg))
+    val starts = Array.tabulate(Sampling.Runs)(r => Sampling.runStart(r, s.count))
     val data = new Array[Byte](starts.map(st => s.offsets(st + runLen) - s.offsets(st)).sum)
     val offsets = new Array[Int](n + 1)
     var o = 0
@@ -106,37 +106,59 @@ object StringCodec {
     if (len > 0) out.bytes(s.data, s.start(0), s.offsets(len) - s.start(0))
   }
 
-  /** The distinct values of `s` in unsigned-lex order, each keyed on the
-    * first row that holds it; keying on row indexes copies no value.
+  /** The dictionary of `s`: the first row holding each distinct value, in
+    * unsigned-lex value order, and each row's code (its value's position in
+    * that order). Rows are grouped by a hash of their bytes in an
+    * open-addressing table of row indexes, so no value is copied and only
+    * the distinct values are sorted.
     */
-  private def distinct(s: StrSlices): java.util.TreeMap[Integer, Integer] = {
-    val map = new java.util.TreeMap[Integer, Integer]((a: Integer, b: Integer) => s.sliceCompare(a, b))
+  private def dictionary(s: StrSlices): (Array[Int], Array[Int]) = {
+    val n = s.count
+    val mask = (Integer.highestOneBit(math.max(1, n)) << 2) - 1 // load <= 1/2
+    val slots = new Array[Int](mask + 1) // 1 + first row of a value; 0 = empty
+    val firstRow = new Array[Int](n) // by id, in first-seen order
+    val codes = new Array[Int](n) // id, then rank
+    var d = 0
     var i = 0
-    while (i < s.count) { map.putIfAbsent(i, -1); i += 1 }
-    map
-  }
-
-  /** Dict block: the distinct values, copied into one arena in `uniq`'s
-    * order and cascaded through encodeSlices, then each row's code.
-    */
-  private def encDict(out: BufWriter, s: StrSlices, uniq: java.util.TreeMap[Integer, Integer], depth: Int, cfg: BtrConfig): Unit = {
-    val len = s.count
-    val entries = new StrSlicesBuilder(1024, uniq.size())
-    val it = uniq.entrySet().iterator()
-    var i = 0
-    while (it.hasNext) {
-      val e = it.next()
-      entries.add(s.data, s.start(e.getKey), s.len(e.getKey))
-      e.setValue(i)
+    while (i < n) {
+      var slot = sliceHash(s, i) & mask
+      while (slots(slot) != 0 && !s.sliceEquals(slots(slot) - 1, i)) slot = (slot + 1) & mask
+      if (slots(slot) != 0) codes(i) = codes(slots(slot) - 1)
+      else { slots(slot) = i + 1; firstRow(d) = i; codes(i) = d; d += 1 }
       i += 1
     }
-    val codes = new Array[Int](len)
+    val order = Array.range(0, d).sortWith((a, b) => s.sliceCompare(firstRow(a), firstRow(b)) < 0)
+    val rank = new Array[Int](d)
+    var k = 0
+    while (k < d) { rank(order(k)) = k; k += 1 }
     i = 0
-    while (i < len) { codes(i) = uniq.get(i); i += 1 }
+    while (i < n) { codes(i) = rank(codes(i)); i += 1 }
+    (order.map(firstRow), codes)
+  }
+
+  /** Multiplicative hash of slice i's bytes with a murmur3 finalizer. */
+  private def sliceHash(s: StrSlices, i: Int): Int = {
+    var h = 0
+    var p = s.start(i)
+    val end = p + s.len(i)
+    while (p < end) { h = 31 * h + s.data(p); p += 1 }
+    h ^= h >>> 16; h *= 0x85ebca6b
+    h ^= h >>> 13; h *= 0xc2b2ae35
+    h ^ (h >>> 16)
+  }
+
+  /** Dict block: `dict`'s distinct values (see `dictionary`), copied into
+    * one arena in order and cascaded through encodeSlices, then each row's
+    * code.
+    */
+  private def encDict(out: BufWriter, s: StrSlices, dict: (Array[Int], Array[Int]), depth: Int, cfg: BtrConfig): Unit = {
+    val (uniq, codes) = dict
+    val entries = new StrSlicesBuilder(1024, uniq.length)
+    uniq.foreach(r => entries.add(s.data, s.start(r), s.len(r)))
     out.u8(TagDict)
-    out.i32(len)
+    out.i32(s.count)
     encodeSlices(out, entries.result(), depth - 1, cfg)
-    IntCodec.encode(out, codes, 0, len, depth - 1, cfg)
+    IntCodec.encode(out, codes, 0, s.count, depth - 1, cfg)
   }
 
   private def encFsst(out: BufWriter, table: FsstTable, s: StrSlices, depth: Int, cfg: BtrConfig): Unit = {

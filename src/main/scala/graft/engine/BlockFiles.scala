@@ -2,6 +2,7 @@ package graft.engine
 
 import graft.codec.BtrConfig
 import graft.format.{BtrManifest, ColumnMeta, ColumnStat, CompressedPart, FileZone, ZoneAccumulator, ZoneIndex}
+import graft.sources.BtrWrite
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.connector.write.WriterCommitMessage
@@ -173,12 +174,22 @@ object BlockFiles {
     }
   }
 
-  /** Encode `df` and write raw block files + manifest to `dir`.
+  /** Encode `df` and write raw block files + manifest to `dir`, replacing
+    * any table there; returns the published manifest.
     *
-    * `rangeCols` adds an explicit range exchange for locality. Two shapes:
-    *  - `compressedExchange = false`: shuffle the RAW rows
-    *    (repartitionByRange with a row-varying salt), then encode. Rows of
+    * Every shape stages its block files and publishes through BtrWrite's
+    * commit (see BtrWriteSupport): the old table stays readable for the
+    * whole write, and a failed write leaves it intact.
+    *
+    * `rangeCols` adds a range exchange for locality. Two shapes:
+    *  - `compressedExchange = false`: the DSv2 writer
+    *    (`df.write.format("btr")`). With `rangeCols`, Spark plans a range
+    *    exchange of the RAW rows over `numPartitions` writers (default
+    *    spark.sql.shuffle.partitions) and a local sort, salted by
+    *    `__salt = pmod(hash(all columns), 16)` so a hot key's rows spread
+    *    over several writers; the salt is dropped before encoding. Rows of
     *    one key range land in one chunk → tightest zone maps, best ratio.
+    *    Without `rangeCols` each input partition writes one block file.
     *  - `compressedExchange = true`: sort rows WITHIN each input partition,
     *    encode chunks map-side, then range-exchange the COMPRESSED frames
     *    on each chunk's first-row key. At ratio ~4× the shuffle moves ~4×
@@ -194,53 +205,30 @@ object BlockFiles {
       compressedExchange: Boolean = false,
       numPartitions: Int = 0): BtrManifest = {
     val spark = df.sparkSession
-    val schema = df.schema
-    require(schema.length <= 255,
-      s"btr block frame stores the column count in one byte — ${schema.length} columns > 255")
-    val colTypes = BtrEncoder.validateSchema(schema)
-    val confB = ConfShim.broadcast(spark.sparkContext)
-    val blocksDir = s"$dir/blocks"
-    // clean target (including any stale zone index from a previous table)
-    val p = new Path(blocksDir)
-    val fs0 = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs0.exists(p)) fs0.delete(p, true)
-    val staleIdx = new Path(dir, ZoneIndex.FileName)
-    if (fs0.exists(staleIdx)) fs0.delete(staleIdx, false)
-    fs0.mkdirs(p)
-
     val n = if (numPartitions > 0) numPartitions
             else spark.sessionState.conf.numShufflePartitions
-    val stats: Array[BlockWriteStat] =
-      if (rangeCols.nonEmpty && compressedExchange)
-        writeCompressedExchange(df, blocksDir, cfg, rangeCols, n, confB)
-      else {
-        val prepared =
-          if (rangeCols.isEmpty) df
-          else {
-            // row-varying salt (hash of ALL columns): a hot (repo, path)
-            // key's rows spread across partitions instead of serializing
-            // one task
-            val salted = df.withColumn("__salt", pmod(hash(df.columns.map(col): _*), lit(16)))
-            salted.repartitionByRange(n, (rangeCols.map(col) :+ col("__salt")): _*).drop("__salt")
-          }
-        prepared.queryExecution.toRdd.mapPartitions { rows =>
-          if (rows.isEmpty) Iterator.empty
-          else {
-            val tc = TaskContext.get()
-            Iterator.single(writeOneBlockFile(ConfShim.conf(confB), blocksDir,
-              tc.partitionId(), tc.taskAttemptId(), rows, schema, colTypes, cfg))
-          }
-        }.collect()
-      }
-
-    publish(spark, dir, schema, colTypes, cfg, stats.toSeq)
+    if (rangeCols.nonEmpty && compressedExchange)
+      writeCompressedExchange(df, dir, cfg, rangeCols, n)
+    else {
+      val writer =
+        if (rangeCols.isEmpty) df.write
+        else df.withColumn("__salt", pmod(hash(df.columns.map(col): _*), lit(16))).write
+          .option("rangeCols", rangeCols.mkString(","))
+          .option("saltCols", "__salt")
+          .option("numPartitions", n.toLong)
+      writer.format("btr").mode("overwrite")
+        .option("blockSize", cfg.blockSize.toLong)
+        .option("maxCascadeDepth", cfg.maxCascadeDepth.toLong)
+        .option("maxChunkBytes", cfg.maxChunkBytes)
+        .save(dir)
+    }
+    BtrTable.readManifest(spark, dir)
   }
 
   /** Publish a written table: the file-level zone index first, the manifest
     * (the publish marker readers gate on) last, with totals and per-column
-    * stats summed over the block files' write results. Shared by every
-    * write path: this RDD writer, the DSv2 batch commit and each streaming
-    * epoch commit.
+    * stats summed over the block files' write results. Shared by the DSv2
+    * batch commit and each streaming epoch commit.
     */
   private[graft] def publish(
       spark: SparkSession,
@@ -293,11 +281,10 @@ object BlockFiles {
     */
   private def writeCompressedExchange(
       df: DataFrame,
-      blocksDir: String,
+      dir: String,
       cfg: BtrConfig,
       rangeCols: Seq[String],
-      n: Int,
-      confB: org.apache.spark.broadcast.Broadcast[ConfShim.SerConf]): Array[BlockWriteStat] = {
+      n: Int): Unit = {
     // local sort: clusters each input split's rows by key before chunking,
     // so map-side chunks are key-coherent (ratio and zone quality close to
     // the row exchange) without shuffling a single raw byte
@@ -384,14 +371,26 @@ object BlockFiles {
         }
       }
     }
-    keyed.partitionBy(partitioner).mapPartitions { it =>
-      if (it.isEmpty) Iterator.empty
-      else {
-        val tc = TaskContext.get()
-        Iterator.single(writeFrames(
-          ConfShim.conf(confB), blocksDir, tc.partitionId(), tc.taskAttemptId(), it.map(_._2)))
-      }
-    }.collect()
+    // frames go to the DSv2 writer's staging directory and publish through
+    // its commit; any failure drops them and leaves the old table intact
+    val write = new BtrWrite(dir, schema, cfg, rangeCols, truncate = true)
+    val blocksDir = write.stage()
+    val confB = ConfShim.broadcast(df.sparkSession.sparkContext)
+    try {
+      val stats: Array[WriterCommitMessage] = keyed.partitionBy(partitioner).mapPartitions { it =>
+        if (it.isEmpty) Iterator.empty
+        else {
+          val tc = TaskContext.get()
+          Iterator.single[WriterCommitMessage](writeFrames(
+            ConfShim.conf(confB), blocksDir, tc.partitionId(), tc.taskAttemptId(), it.map(_._2)))
+        }
+      }.collect()
+      write.commit(stats)
+    } catch {
+      case e: Throwable =>
+        write.abort(Array.empty)
+        throw e
+    }
   }
 
   /** Range partitioner over the order-preserving binary keys
@@ -412,23 +411,6 @@ object BlockFiles {
       }
       lo
     }
-  }
-
-  /** Encode one partition's rows and write them as one block file (the raw
-    * write path, also the unit-test entry for the task-commit semantics).
-    */
-  def writeOneBlockFile(
-      conf: org.apache.hadoop.conf.Configuration,
-      blocksDir: String,
-      pid: Int,
-      attemptId: Long,
-      rows: Iterator[org.apache.spark.sql.catalyst.InternalRow],
-      schema: org.apache.spark.sql.types.StructType,
-      colTypes: Array[Int],
-      cfg: BtrConfig): BlockWriteStat = {
-    val frames = new BtrEncoder.PartitionEncodeIterator(rows, schema, colTypes, cfg)
-      .grouped(schema.length).map(frameChunk)
-    writeFrames(conf, blocksDir, pid, attemptId, frames)
   }
 
   /** One task attempt's block-file write (factored out so the retry

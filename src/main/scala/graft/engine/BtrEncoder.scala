@@ -40,7 +40,13 @@ object BtrEncoder {
     case ColType.String  => StringType
   }
 
-  def validateSchema(schema: StructType): Array[Int] =
+  /** Column types of a persisted schema; fails on an unsupported type or
+    * on more than 255 columns (a frame stores the column count in one
+    * byte).
+    */
+  def validateSchema(schema: StructType): Array[Int] = {
+    require(schema.length <= 255,
+      s"btr block frame stores the column count in one byte — ${schema.length} columns > 255")
     schema.fields.map { f =>
       supportedType(f.dataType).getOrElse(
         throw new IllegalArgumentException(
@@ -48,6 +54,7 @@ object BtrEncoder {
             "INT, DOUBLE or STRING (matching the reference's Integer/Double/String; " +
             "cast upstream)"))
     }
+  }
 
   /** Push-based chunk accumulator: buffers up to blockSize rows in typed
     * column buffers (strings in a contiguous arena — no per-value arrays)

@@ -89,10 +89,12 @@ object BtrTable {
 
   // ------------------------------------------------------------------ write
 
-  /** One-shot encode+write through the block-file core. `rangeCols` adds
-    * BlockFiles.write's raw-row range exchange (locality: same repo/path
-    * ranges share chunks) with a row-varying salt so a single hot key
-    * cannot serialize one task — the skew policy from SURVEY §7.
+  /** One-shot encode+write through the block-file core: BlockFiles.write's
+    * raw-row shape, i.e. the DSv2 writer, which stages the block files and
+    * publishes them only when the whole write succeeded. `rangeCols` adds
+    * a Spark-planned range exchange and local sort (locality: same
+    * repo/path ranges share chunks) with a row-varying salt so a single
+    * hot key cannot serialize one task — the skew policy from SURVEY §7.
     */
   def write(
       df: DataFrame,

@@ -20,12 +20,6 @@ object TextOps {
     when(length(trim(text)) === 0, lit(0))
       .otherwise(size(split(trim(text), "\\s+")))
 
-  /** BPE-ish token estimate: letter runs, digit runs, and single
-    * non-alphanumeric marks — the usual pre-tokenizer segmentation.
-    */
-  def bpeishTokenCount(text: Column): Column =
-    regexp_count(text, lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"))
-
   /** Quality metrics (length / punctuation / letter / stopword ratios),
     * rounded so cross-engine double formatting is stable.
     */

@@ -16,12 +16,15 @@ import org.apache.hadoop.fs.Path
   *
   * The reference has no writable SQL surface at all (its DataFusion
   * provider is read-only, /root/reference/src/datafusion.rs:42-74; writes
-  * go through Btr::from_csv). Here the engine is a full connector: each
-  * DataWriter streams its partition through the push-based ChunkBuilder
-  * into ONE block file with the same attempt-unique temp name +
-  * rename-if-absent task commit as the RDD path, and the driver writes
-  * the manifest only in BatchWrite.commit — a failed job leaves no
-  * manifest, so readers never observe a partial table.
+  * go through Btr::from_csv). Here the engine is a full connector and the
+  * one raw-row write driver (BlockFiles.write's raw shape is this writer):
+  * each DataWriter streams its partition through the push-based
+  * ChunkBuilder into ONE block file with an attempt-unique temp name +
+  * rename-if-absent task commit, and the driver writes the manifest only
+  * in BatchWrite.commit — a failed job leaves no manifest, so readers
+  * never observe a partial table. The compressed exchange
+  * (BlockFiles.writeCompressedExchange) writes its frames into `stage()`
+  * and publishes through the same `commit`/`abort`.
   *
   * Range clustering is requested declaratively: with
   * `.option("rangeCols", "repo,path")` the Write implements
@@ -34,7 +37,6 @@ class BtrWriteBuilder(dir: String, info: LogicalWriteInfo)
   override def truncate(): WriteBuilder = { doTruncate = true; this }
 
   override def build(): Write = {
-    val colTypes = BtrEncoder.validateSchema(info.schema()) // fail at planning
     val rangeCols = Option(info.options.get("rangecols"))
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
     rangeCols.foreach(c => require(info.schema().fieldNames.contains(c),
@@ -71,14 +73,13 @@ class BtrWriteBuilder(dir: String, info: LogicalWriteInfo)
       "numPartitions requires rangeCols (it sizes the range exchange)")
     require(numParts == 0 || advisory == 0L,
       "numPartitions and targetPartitionBytes are mutually exclusive")
-    new BtrWrite(dir, info.schema(), colTypes, cfg, rangeCols, doTruncate, advisory, numParts, saltCols)
+    new BtrWrite(dir, info.schema(), cfg, rangeCols, doTruncate, advisory, numParts, saltCols)
   }
 }
 
 class BtrWrite(
     dir: String,
     schema: StructType,
-    colTypes: Array[Int],
     cfg: BtrConfig,
     rangeCols: Seq[String],
     truncate: Boolean,
@@ -91,7 +92,7 @@ class BtrWrite(
   private val keptIdx: Array[Int] =
     schema.fields.indices.filterNot(i => saltCols.contains(schema.fields(i).name)).toArray
   private val outSchema: StructType = StructType(keptIdx.map(schema.fields(_)))
-  private val outColTypes: Array[Int] = keptIdx.map(colTypes(_))
+  private val outColTypes: Array[Int] = BtrEncoder.validateSchema(outSchema) // fail at planning
 
   /** `targetPartitionBytes` option: lets AQE size the write partitions to
     * a byte target (~one block file each) instead of inheriting
@@ -117,10 +118,10 @@ class BtrWrite(
     * SKEW: without saltCols, Distributions.ordered ranges on the RAW
     * columns — a hot (repo, path) key serializes into one writer task, and
     * AQE's skew handling does not split a single range partition for
-    * writes. For skewed ingests either pass `saltCols` (a caller-added
-    * salt column joins the distribution and is dropped before encoding) or
-    * use the RDD path (BlockFiles.write salts its repartitionByRange
-    * automatically, BlockFiles.scala).
+    * writes. For skewed ingests pass `saltCols`: a caller-added salt
+    * column joins the distribution and is dropped before encoding.
+    * BlockFiles.write does this for every range write (a salt of
+    * pmod(hash(all columns), 16)).
     */
   override def requiredDistribution(): Distribution =
     if (rangeCols.isEmpty) Distributions.unspecified() else Distributions.ordered(orders)
@@ -153,9 +154,13 @@ class BtrWrite(
     */
   private def stagingDir = s"$dir/.staging-blocks"
 
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val spark = SparkSession.active
-    val conf = spark.sparkContext.hadoopConfiguration
+  /** Prepares the directory this job's block files go to and returns it:
+    * a fresh `.staging-blocks` for an overwrite, else `blocks/` of a table
+    * that must not exist yet. Every batch write stages here, then
+    * publishes with `commit` or cleans up with `abort`.
+    */
+  private[graft] def stage(): String = {
+    val conf = SparkSession.active.sparkContext.hadoopConfiguration
     val blocks = new Path(s"$dir/blocks")
     val fs = blocks.getFileSystem(conf)
     val target =
@@ -176,9 +181,12 @@ class BtrWrite(
         blocks
       }
     fs.mkdirs(target)
-    BtrWriterFactory(ConfShim.broadcast(spark.sparkContext), target.toString,
-      outSchema, outColTypes, cfg, keptIdx)
+    target.toString
   }
+
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
+    BtrWriterFactory(ConfShim.broadcast(SparkSession.active.sparkContext), stage(),
+      outSchema, outColTypes, cfg, keptIdx)
 
   /** Manifest (with stats from the commit messages) appears only here —
     * the atomic "job succeeded" marker for readers. For overwrite this is
@@ -306,8 +314,9 @@ case class BtrWriterFactory(
 
 /** One task's writer: rows push through the ChunkBuilder; each full chunk
   * is framed and appended to this partition's block file through the same
-  * BlockFileWriter as the RDD path (attempt-unique temp name, zone and
-  * stats fold, rename-if-absent commit). Memory is bounded by one chunk.
+  * BlockFileWriter as the compressed exchange's writeFrames (attempt-unique
+  * temp name, zone and stats fold, rename-if-absent commit). Memory is
+  * bounded by one chunk.
   * An empty partition creates no file.
   */
 class BtrDataWriter(

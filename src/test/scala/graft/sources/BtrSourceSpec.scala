@@ -161,8 +161,11 @@ class BtrSourceSpec extends AnyFunSuite {
     }
     // retried attempt commits; a later speculative duplicate re-runs the
     // same partition and must not corrupt the committed file
-    BlockFiles.writeOneBlockFile(conf, blocksDir, 0, 2L, rows, schema, colTypes, BtrConfig(blockSize = 128))
-    BlockFiles.writeOneBlockFile(conf, blocksDir, 0, 3L, rows, schema, colTypes, BtrConfig(blockSize = 128))
+    for (attempt <- Seq(2L, 3L)) {
+      val w = new BtrDataWriter(conf, blocksDir, 0, attempt, schema, colTypes, BtrConfig(blockSize = 128))
+      try { rows.foreach(w.write); w.commit() }
+      finally w.close()
+    }
 
     val listed = fs.listStatus(new Path(blocksDir)).map(_.getPath.getName).sorted
     assert(listed.count(_.startsWith("part-")) == 1, s"exactly one committed file: ${listed.mkString(",")}")
@@ -729,6 +732,45 @@ class BtrSourceSpec extends AnyFunSuite {
     assert(!fs.exists(new Path(s"$dir/.staging-blocks")))
   }
 
+  test("failed BlockFiles.write over an existing table leaves it intact") {
+    import spark.implicits._
+    import org.apache.hadoop.fs.Path
+    val fs = new Path(tmp("bf_failed")).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val good = (0 until 1000).map(i => (i, s"v$i")).toDF("id", "s")
+    // the raw shape reads its input once; the compressed exchange twice
+    // (bounds sample, then encode): failing on the last pass over row 999,
+    // the last row of the last input partition, fails the write job
+    // itself, once the other partitions' block files are written
+    for ((compressed, passes) <- Seq(false -> 1, true -> 2)) {
+      val dir = tmp(s"bf_failed_$compressed")
+      val rangeCols = if (compressed) Seq("id") else Nil
+      BlockFiles.write(good, dir, BtrConfig(blockSize = 128), rangeCols, compressed)
+      FailingPass.seen.set(0)
+      val bad = good.as[(Int, String)].map { case (i, _) =>
+        if (i == 999 && FailingPass.seen.incrementAndGet() == passes) sys.error("boom mid-write")
+        (i, "x")
+      }.toDF("id", "s")
+      intercept[Exception] {
+        BlockFiles.write(bad, dir, BtrConfig(blockSize = 128), rangeCols, compressed)
+      }
+      assert(FailingPass.seen.get() == passes, s"compressed=$compressed")
+      val back = spark.read.format("btr").load(dir)
+      assert(back.count() == 1000, s"compressed=$compressed")
+      assert(back.where("id = 999").head().getString(1) == "v999")
+      assert(!fs.exists(new Path(s"$dir/.staging-blocks")), "staging dir must be cleaned on abort")
+    }
+  }
+
+  test("a write of more than 255 columns fails at planning with a named error") {
+    val dir = tmp("wide256")
+    val wide = spark.range(1).select((0 until 256).map(i => lit(i).as(s"c$i")): _*)
+    val e = intercept[IllegalArgumentException] {
+      wide.write.format("btr").mode("overwrite").save(dir)
+    }
+    assert(e.getMessage.contains("256 columns > 255"), e.getMessage)
+    assert(!new java.io.File(dir.stripPrefix("file:"), graft.engine.BtrTable.ManifestFile).exists())
+  }
+
   test("file-level zone index prunes whole block files at planning time") {
     import spark.implicits._
     import org.apache.hadoop.fs.Path
@@ -738,7 +780,7 @@ class BtrSourceSpec extends AnyFunSuite {
     val df = (0 until 8192).map(i => (i, f"k$i%05d", i * 1.5)).toDF("id", "s", "d")
     BlockFiles.write(df, dir, BtrConfig(blockSize = 256), rangeCols = Seq("id"))
     val conf = spark.sparkContext.hadoopConfiguration
-    assert(graft.format.ZoneIndex.read(conf, dir).exists(_.nonEmpty), "index written by the RDD path")
+    assert(graft.format.ZoneIndex.read(conf, dir).exists(_.nonEmpty), "index written by BlockFiles.write")
 
     val q = spark.read.format("btr").load(dir).where(col("id").between(1000, 1099))
     val plan = q.queryExecution.executedPlan.toString
@@ -1035,4 +1077,11 @@ class BtrSourceSpec extends AnyFunSuite {
     assert(back.count() == 3000)
     assert(back.select(sum("v")).head().getLong(0) == (0 until 3000).map(_.toLong).sum)
   }
+}
+
+/** Counts visits of one row across the passes a write makes over its input
+  * (local mode: tasks run in this JVM).
+  */
+object FailingPass {
+  val seen = new java.util.concurrent.atomic.AtomicInteger
 }
