@@ -1,7 +1,7 @@
 package graft.engine
 
 import graft.codec.BtrConfig
-import graft.format.{BtrManifest, ColumnMeta, ColumnStat, CompressedPart, FileZone, ZoneAccumulator, ZoneIndex}
+import graft.format.{BtrManifest, ColZone, ColumnMeta, ColumnStat, CompressedPart, FileZone, ZoneAccumulator, ZoneIndex}
 import graft.sources.BtrWrite
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -10,7 +10,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.graftshim.ConfShim
 import org.apache.hadoop.fs.Path
-import java.nio.charset.StandardCharsets.UTF_8
 
 /** Raw binary block files — the Spark analog of the reference's on-disk
   * blob layout (`column{i}_part{j}` + `metadata`,
@@ -26,13 +25,19 @@ import java.nio.charset.StandardCharsets.UTF_8
   *    zone payload, i32 nullCount, validity bitmap (⌈numRows/8⌉ bytes,
   *    present iff nullCount > 0; bit i set = row i NULL)]
   *   [col blobs…]
-  * zoneKind: 0 = none; 3 = string [u8 len][bytes][u8 len][bytes] (UTF-8,
-  * each ≤ 64 bytes — longer extrema are dropped, not truncated); 4 = long
-  * [i64 min][i64 max][i64 sum]; 5 = double [f64bits min][f64bits max]
-  * [f64bits sum]. A numeric zone always carries the chunk's exact NON-NULL
-  * sum, so SUM(col) folds from headers exactly like MIN/MAX/COUNT.
-  * With nulls present, zones cover the NON-NULL values only (null rows
-  * store placeholders in the blob and can never satisfy a comparison).
+  * zoneKind: 0 = none; 3 = string [u8 len][bytes][u8 len][bytes] (raw
+  * bytes in unsigned order, valid UTF-8 or not; each ≤ 64 bytes — longer
+  * extrema are dropped, not truncated); 4 = long [i64 min][i64 max]
+  * [i64 sum]; 5 = double [f64bits min][f64bits max][f64bits sum]. A
+  * numeric zone always carries the chunk's exact NON-NULL sum, so SUM(col)
+  * folds from headers exactly like MIN/MAX/COUNT. With nulls present,
+  * zones cover the NON-NULL values only (null rows store placeholders in
+  * the blob and can never satisfy a comparison).
+  *
+  * In memory a column's zone, null count and row count are one `ColZone`
+  * (kinds 1 long / 2 double / 3 string / 0 none, the zone index's kinds;
+  * the frame's 4/5 add the sum): `ChunkEncoder` builds it, `zonePayload`
+  * writes it and `FrameHeader` — the one header parser — reads it back.
   * The per-column zone maps let a reader skip whole chunks against pushed
   * range filters without touching their blobs — data skipping the
   * reference's scan lacks entirely (/root/reference/src/datafusion.rs:64-73).
@@ -79,9 +84,9 @@ object BlockFiles {
     val zones = new Array[Array[Byte]](chunkParts.length)
     var i = 0
     chunkParts.foreach { p =>
-      zones(i) = zonePayload(p) // includes its leading zoneKind byte
+      zones(i) = zonePayload(p.zone) // includes its leading zoneKind byte
       size += 1 + 4 + 4 + zones(i).length + 4 + p.bytes.length
-      if (p.nullCount > 0) size += (p.numRows + 7) >> 3
+      if (p.zone.nullCount > 0) size += (p.numRows + 7) >> 3
       i += 1
     }
     val out = new Array[Byte](size)
@@ -108,12 +113,13 @@ object BlockFiles {
       val z = zones(i)
       System.arraycopy(z, 0, out, o, z.length)
       o += z.length
-      i32(p.nullCount)
-      if (p.nullCount > 0) {
+      val nulls = p.zone.nullCount.toInt
+      i32(nulls)
+      if (nulls > 0) {
         val bm = p.nullBits
         val want = (numRows + 7) >> 3
         require(bm != null && bm.length == want,
-          s"column ${p.colName}: nullCount=${p.nullCount} but bitmap is " +
+          s"column ${p.colName}: nullCount=$nulls but bitmap is " +
             s"${if (bm == null) "absent" else s"${bm.length} bytes"} (want $want)")
         System.arraycopy(bm, 0, out, o, bm.length)
         o += bm.length
@@ -139,39 +145,22 @@ object BlockFiles {
       ColumnStat(p.rawBytes, p.bytes.length, 1L, p.numRows, Seq(p.scheme))).toArray)
   }
 
-  /** [u8 zoneKind][payload] for one part (see frame doc above). */
-  private def zonePayload(p: CompressedPart): Array[Byte] = {
-    def longs(kind: Int, vs: Long*): Array[Byte] = {
-      val b = new Array[Byte](1 + 8 * vs.length)
-      b(0) = kind.toByte
+  /** [u8 zoneKind][payload] of one column's zone (see frame doc above). */
+  private def zonePayload(z: ColZone): Array[Byte] = z.kind match {
+    case 1 | 2 =>
+      val b = new Array[Byte](25)
+      b(0) = (z.kind + 3).toByte // frame kinds 4/5 carry the sum
       var o = 1
-      vs.foreach { v0 =>
+      Seq(z.lmin, z.lmax, z.sum).foreach { v0 =>
         var v = v0
         var k = 0
         while (k < 8) { b(o) = v.toByte; v >>>= 8; o += 1; k += 1 }
       }
       b
-    }
-    def bits(d: Double): Long = java.lang.Double.doubleToLongBits(d)
-    // the encoder sets a numeric part's sum exactly when it sets its zone
-    (p.minLong, p.maxLong, p.sumLong, p.minDouble, p.maxDouble, p.sumDouble, p.minStr, p.maxStr) match {
-      case (Some(mn), Some(mx), Some(sm), _, _, _, _, _) => longs(4, mn, mx, sm)
-      case (_, _, _, Some(mn), Some(mx), Some(sm), _, _) => longs(5, bits(mn), bits(mx), bits(sm))
-      case (_, _, _, _, _, _, Some(mn), Some(mx)) =>
-        val bn = mn.getBytes(UTF_8)
-        val bx = mx.getBytes(UTF_8)
-        if (bn.length > 64 || bx.length > 64) Array[Byte](0)
-        else {
-          val b = new Array[Byte](3 + bn.length + bx.length)
-          b(0) = 3
-          b(1) = bn.length.toByte
-          System.arraycopy(bn, 0, b, 2, bn.length)
-          b(2 + bn.length) = bx.length.toByte
-          System.arraycopy(bx, 0, b, 3 + bn.length, bx.length)
-          b
-        }
-      case _ => Array[Byte](0)
-    }
+    case 3 =>
+      require(z.smin.length <= 64 && z.smax.length <= 64, "string zone > 64 bytes")
+      Array[Byte](3, z.smin.length.toByte) ++ z.smin ++ Array(z.smax.length.toByte) ++ z.smax
+    case _ => Array[Byte](0)
   }
 
   /** Encode `df` and write raw block files + manifest to `dir`, replacing
@@ -515,4 +504,106 @@ object BlockFiles {
         if (fs.exists(finalPath)) true
         else fs.rename(tmpPath, finalPath) || fs.exists(finalPath)
     }
+}
+
+/** THE frame-header parser (layout: the `BlockFiles` doc): per column the
+  * type, blob length and CRC, the zone, the null count and the validity
+  * bitmap, as one `ColZone` per column. It verifies the header CRC before
+  * returning, so no caller ever sees an unverified zone. The frame reader
+  * feeds it from its guarded file stream; the zone fold feeds it a
+  * serialized frame (`of`).
+  */
+object FrameHeader {
+
+  /** The header's bytes, read in order. Each read names its field, so a
+    * short read surfaces as a named corruption; `fail` raises one.
+    */
+  trait In {
+    def u8(what: String): Int
+    def i32(what: String): Int
+    def bytes(n: Int, what: String): Array[Byte]
+    def fail(msg: String): Nothing
+  }
+
+  /** One parsed, CRC-verified frame header. `nullBits(c)` is null when
+    * column c has no nulls; each zone's `rows` is `numRows`.
+    */
+  final class Header(
+      val numRows: Int,
+      val colType: Array[Int],
+      val blobLen: Array[Int],
+      val blobCrc: Array[Int],
+      val zones: Array[ColZone],
+      val nullBits: Array[Array[Byte]]) {
+    def nCols: Int = zones.length
+  }
+
+  def read(in: In): Header = {
+    // every header byte except the stored checksum feeds the CRC
+    val crc = new java.util.zip.CRC32C
+    def u8(what: String): Int = { val v = in.u8(what); crc.update(v); v }
+    def i32(what: String): Int = {
+      val v = in.i32(what)
+      crc.update(v); crc.update(v >>> 8); crc.update(v >>> 16); crc.update(v >>> 24)
+      v
+    }
+    def i64(what: String): Long = (i32(what).toLong & 0xffffffffL) | (i32(what).toLong << 32)
+    def bytes(n: Int, what: String): Array[Byte] = { val b = in.bytes(n, what); crc.update(b); b }
+
+    val numRows = i32("chunk row count")
+    if (numRows <= 0) in.fail(s"invalid chunk row count $numRows")
+    val nCols = u8("column count")
+    if (nCols == 0) in.fail("zero columns in chunk")
+    val stored = in.i32("header checksum")
+    val h = new Header(numRows, new Array[Int](nCols), new Array[Int](nCols), new Array[Int](nCols),
+      new Array[ColZone](nCols), new Array[Array[Byte]](nCols))
+    var c = 0
+    while (c < nCols) {
+      h.colType(c) = u8(s"column $c type")
+      h.blobLen(c) = i32(s"column $c blob length")
+      if (h.blobLen(c) < 0) in.fail(s"negative blob length ${h.blobLen(c)} for column $c")
+      h.blobCrc(c) = i32(s"column $c blob checksum")
+      val zone = u8(s"column $c zone kind") match {
+        case 0 => ColZone.Unknown
+        case k @ (4 | 5) =>
+          ColZone(k - 3, i64(s"column $c zone min"), i64(s"column $c zone max"),
+            sum = i64(s"column $c zone sum"))
+        case 3 =>
+          val mn = bytes(u8(s"column $c zone min length"), s"column $c zone min")
+          ColZone(3, smin = mn, smax = bytes(u8(s"column $c zone max length"), s"column $c zone max"))
+        case k => in.fail(s"bad zoneKind $k for column $c")
+      }
+      val nulls = i32(s"column $c null count")
+      if (nulls < 0 || nulls > numRows)
+        in.fail(s"invalid null count $nulls for column $c ($numRows rows)")
+      h.zones(c) = zone.copy(nullCount = nulls, rows = numRows)
+      if (nulls > 0) h.nullBits(c) = bytes((numRows + 7) >> 3, s"column $c validity bitmap")
+      c += 1
+    }
+    if (crc.getValue.toInt != stored)
+      in.fail(f"frame header checksum mismatch (stored 0x$stored%08x, computed 0x${crc.getValue.toInt}%08x) — corrupt zone maps or column meta")
+    h
+  }
+
+  /** A serialized frame as the parser's input; any overrun or corruption
+    * is an IOException.
+    */
+  def of(frame: Array[Byte]): In = new In {
+    private var p = 0
+    private def take(n: Int, what: String): Int = {
+      if (n > frame.length - p) fail(s"truncated while reading $what")
+      p += n
+      p - n
+    }
+    def u8(what: String): Int = frame(take(1, what)) & 0xff
+    def i32(what: String): Int = {
+      val o = take(4, what)
+      (frame(o) & 0xff) | ((frame(o + 1) & 0xff) << 8) | ((frame(o + 2) & 0xff) << 16) | ((frame(o + 3) & 0xff) << 24)
+    }
+    def bytes(n: Int, what: String): Array[Byte] = {
+      val o = take(n, what)
+      java.util.Arrays.copyOfRange(frame, o, o + n)
+    }
+    def fail(msg: String): Nothing = throw new java.io.IOException(msg)
+  }
 }

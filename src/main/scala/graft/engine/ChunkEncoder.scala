@@ -1,8 +1,7 @@
 package graft.engine
 
 import graft.codec._
-import graft.format.CompressedPart
-import java.nio.charset.StandardCharsets.UTF_8
+import graft.format.{ColZone, CompressedPart}
 
 /** Per-chunk column encoders: one typed column chunk → one CompressedPart.
   * Pure per-task logic (no Spark classes) so it runs identically inside
@@ -52,14 +51,13 @@ object ChunkEncoder {
       }
       i += 1
     }
-    val hasRange = nullCount < len && len > 0
+    val zone =
+      if (nullCount < len && len > 0) ColZone(1, mn, mx, nullCount = nullCount, rows = len, sum = sm)
+      else ColZone(0, nullCount = nullCount, rows = len)
     CompressedPart(
       len, colName, ColType.Integer,
       IntCodec.describe(new BufReader(bytes)), 4L * len, bytes,
-      if (hasRange) Some(mn) else None, if (hasRange) Some(mx) else None,
-      None, None, None, None,
-      nullCount, bitmapBytes(nullWords, nullCount, len),
-      sumLong = if (hasRange) Some(sm) else None)
+      zone, bitmapBytes(nullWords, nullCount, len))
   }
 
   def encodeDouble(
@@ -91,15 +89,15 @@ object ChunkEncoder {
       }
       i += 1
     }
-    val hasRange = len > 0 && !sawNaN && nullCount < len && mn <= mx
+    def bits(d: Double): Long = java.lang.Double.doubleToLongBits(d)
+    val zone =
+      if (len > 0 && !sawNaN && nullCount < len && mn <= mx)
+        ColZone(2, bits(mn), bits(mx), nullCount = nullCount, rows = len, sum = bits(sm))
+      else ColZone(0, nullCount = nullCount, rows = len)
     CompressedPart(
       len, colName, ColType.Double,
       DoubleCodec.describe(new BufReader(bytes)), 8L * len, bytes,
-      None, None,
-      if (hasRange) Some(mn) else None, if (hasRange) Some(mx) else None,
-      None, None,
-      nullCount, bitmapBytes(nullWords, nullCount, len),
-      sumDouble = if (hasRange) Some(sm) else None)
+      zone, bitmapBytes(nullWords, nullCount, len))
   }
 
   /** String chunk encode through StringCodec.encodeSlices, with the
@@ -124,33 +122,15 @@ object ChunkEncoder {
       }
       i += 1
     }
-    val (minS, maxS) = coherentPair(
+    // extrema stay bytes (unsigned order, valid UTF-8 or not); longer
+    // than 64 bytes they are dropped, not truncated
+    val zone =
       if (mn >= 0 && s.len(mn) <= 64 && s.len(mx) <= 64)
-        (utf8Faithful(s.copy(mn)), utf8Faithful(s.copy(mx)))
-      else (None, None))
+        ColZone(3, smin = s.copy(mn), smax = s.copy(mx), nullCount = nullCount, rows = len)
+      else ColZone(0, nullCount = nullCount, rows = len)
     CompressedPart(
       len, colName, ColType.String,
       StringCodec.describeBlock(bytes), raw, bytes,
-      None, None, None, None, minS, maxS,
-      nullCount, bitmapBytes(nullWords, nullCount, len))
-  }
-
-  /** A zone is a PAIR: if either extremum is unfaithful, drop both. Readers
-    * already treat a half-null zone conservatively, but persisting (None,
-    * Some(max)) was an incoherent zone (round-3 advice).
-    */
-  private def coherentPair(p: (Option[String], Option[String])): (Option[String], Option[String]) =
-    if (p._1.isEmpty || p._2.isEmpty) (None, None) else p
-
-  /** Zone extrema travel as java Strings (parquet/manifest-friendly), but
-    * UTF8String values need not be valid UTF-8 — a lossy transcode
-    * (invalid sequences → U+FFFD) would store a zone that no longer bounds
-    * the column and silently skip matching chunks. Keep the zone only when
-    * the bytes round-trip exactly; drop it (conservative: never skip)
-    * otherwise.
-    */
-  private def utf8Faithful(b: Array[Byte]): Option[String] = {
-    val s = new String(b, UTF_8)
-    if (java.util.Arrays.equals(s.getBytes(UTF_8), b)) Some(s) else None
+      zone, bitmapBytes(nullWords, nullCount, len))
   }
 }

@@ -29,28 +29,14 @@ final case class CompressedPart(
     scheme: String, // human-readable scheme tree (lineage/metrics)
     rawBytes: Long,
     bytes: Array[Byte],
-    // zone maps (nullable; only for the matching type, strings <= 64 chars;
-    // with nulls present, extrema cover the NON-NULL values only)
-    minLong: Option[Long],
-    maxLong: Option[Long],
-    minDouble: Option[Double],
-    maxDouble: Option[Double],
-    minStr: Option[String],
-    maxStr: Option[String],
+    // the chunk's zone (ColZone): extrema over the NON-NULL values, the
+    // null count and row count, and a numeric chunk's exact non-null sum
+    zone: ColZone,
     // null extension (round-5): the reference's effective model is non-null
     // (SURVEY §1.2) — this engine extends it with a per-chunk validity
     // bitmap. bit i set = row i is NULL (placeholder value stored in the
-    // blob: 0 / 0.0 / ""); nullBits is null when nullCount == 0.
-    nullCount: Int = 0,
-    nullBits: Array[Byte] = null,
-    // sum extension (round-5, v6 frames): exact per-chunk sum over the
-    // NON-NULL values, present iff the chunk has a zone (same hasRange
-    // condition — NaN/all-null chunks carry neither and decode instead).
-    // Lets SUM(col) fold from headers like MIN/MAX/COUNT already do.
-    // Int sums are exact in i64 (<= 2^16 rows x 2^31); double sums
-    // accumulate in chunk row order, the same order a decode would visit.
-    sumLong: Option[Long] = None,
-    sumDouble: Option[Double] = None)
+    // blob: 0 / 0.0 / ""); null when the chunk has no nulls.
+    nullBits: Array[Byte] = null)
 
 final case class ColumnMeta(name: String, colType: Int, nullable: Boolean = false)
 

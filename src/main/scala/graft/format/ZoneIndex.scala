@@ -2,6 +2,40 @@ package graft.format
 
 import org.apache.hadoop.fs.Path
 
+/** THE zone value: one column's statistics over one unit — a chunk (parsed
+  * from its frame header by `FrameHeader`, built by `ChunkEncoder`) or a
+  * file (folded by `ZoneAccumulator`, stored in the zone index). Extrema
+  * cover the NON-NULL values only; string extrema are raw bytes compared
+  * unsigned (Spark's binary collation), so they need not be valid UTF-8.
+  */
+final case class ColZone(
+    kind: Int, // 0 none, 1 long, 2 double (raw f64 bits in lmin/lmax), 3 string bytes
+    lmin: Long = 0L,
+    lmax: Long = 0L,
+    smin: Array[Byte] = Array.emptyByteArray,
+    smax: Array[Byte] = Array.emptyByteArray,
+    nullCount: Long = -1L, // NULLs in this column of the unit; -1 unknown
+    rows: Long = -1L, // rows in the unit; -1 unknown
+    // exact NON-NULL sum of a numeric chunk zone (doubles as raw f64 bits);
+    // the index does not store it
+    sum: Long = 0L)
+
+/** A unit's zones are one `ColZone` per column (`IndexedSeq[ColZone]`): the
+  * pushed predicates (`ExactPred.rejects`/`allMatch`) and the header-only
+  * readers evaluate against this one shape at both pruning levels.
+  */
+object ColZone {
+  /** No zone, unknown nulls: never rejects a unit, never proves a match. */
+  val Unknown: ColZone = ColZone(0)
+
+  /** Column `c` of a unit's zones — THE column-width guard: a column beyond
+    * the unit's width has no zone and unknown nulls.
+    */
+  def of(zs: IndexedSeq[ColZone], c: Int): ColZone = if (c < zs.length) zs(c) else Unknown
+}
+
+final case class FileZone(file: String, cols: IndexedSeq[ColZone])
+
 /** File-level zone index — the planning-time pruning sidecar
   * (`_btr_zones.bin`) for the raw block-file layout.
   *
@@ -21,24 +55,13 @@ import org.apache.hadoop.fs.Path
   *       kind 0: none (some chunk lacked a zone — conservative)
   *       kind 1: [i64 min][i64 max]          (long)
   *       kind 2: [i64 minBits][i64 maxBits]  (double)
-  *       kind 3: [u8 len][bytes] x2          (UTF-8 string, each <= 64)
+  *       kind 3: [u8 len][bytes] x2          (string bytes, each <= 64)
   *   [i32 CRC32C of every preceding byte]
   * Per-file row counts and per-column null totals let IsNull / IsNotNull
   * predicates drop whole files (nullCount == 0 / == rows). The CRC makes a
   * flipped byte a missing index rather than a zone that silently drops a
   * file holding matching rows.
   */
-final case class ColZone(
-    kind: Int,
-    lmin: Long = 0L,
-    lmax: Long = 0L,
-    smin: Array[Byte] = Array.emptyByteArray,
-    smax: Array[Byte] = Array.emptyByteArray,
-    nullCount: Long = -1L, // total NULLs in this column across the file; -1 unknown
-    rows: Long = -1L) // total rows in the file; -1 unknown
-
-final case class FileZone(file: String, cols: IndexedSeq[ColZone])
-
 object ZoneIndex {
   final val FileName = "_btr_zones.bin"
   final val Magic = 0x5a525442 // "BTRZ" little-endian
@@ -101,7 +124,7 @@ object ZoneIndex {
     require(i32() == crc.getValue.toInt, "zone index checksum mismatch")
     p = 5
     val n = i32()
-    val skipped = ColZone(0) // shared placeholder for unrequested columns
+    val skipped = ColZone.Unknown // shared placeholder for unrequested columns
     (0 until n).map { _ =>
       val name = new Array[Byte](u16())
       System.arraycopy(b, p, name, 0, name.length); p += name.length
@@ -187,135 +210,62 @@ object ZoneIndex {
   }
 }
 
-/** Folds per-frame (chunk) zone maps into one file-level zone per column by
-  * parsing frame headers from their serialized bytes — the single fold
-  * implementation shared by every writer (RDD block writer, compressed
-  * exchange reducer, DSv2 DataWriter). A column whose ANY chunk lacks a
-  * zone folds to kind 0 (unprunable); null counts and row totals fold by
-  * summation.
+/** Folds per-frame (chunk) zones into one file-level zone per column: each
+  * frame's header is parsed by `FrameHeader` (which verifies its CRC) and
+  * its `ColZone`s merge into the running fold — the single fold shared by
+  * every writer (the DSv2 DataWriter and the compressed exchange's
+  * `writeFrames`). A column whose ANY chunk lacks a zone folds to kind 0
+  * (unprunable); null counts and row totals fold by summation; chunk sums
+  * are not folded (the index stays sum-free).
   *
-  * The frame's headerCrc is VERIFIED before anything folds (round-4
-  * advice #2): wrong file-level zones cause unsound planning-time pruning
-  * (matching rows silently dropped), so layout drift or an in-memory
-  * corruption degrades to `dead` — "no index entry", never wrong pruning.
+  * A frame that fails to parse or whose header CRC mismatches (layout drift
+  * or an in-memory corruption) makes the fold `dead` — "no index entry",
+  * never wrong file zones, which would prune files holding matching rows.
   */
 final class ZoneAccumulator {
-  private var nCols = -1
-  private var kind: Array[Int] = _
-  private var lmin: Array[Long] = _
-  private var lmax: Array[Long] = _
-  private var smin: Array[Array[Byte]] = _
-  private var smax: Array[Array[Byte]] = _
-  private var nullSum: Array[Long] = _
-  private var totalRows = 0L
+  private var acc: Array[ColZone] = _
   private var dead = false
 
-  def fold(frame: Array[Byte]): Unit = {
-    if (dead) return
-    var p = 0
-    def u8(): Int = { val v = frame(p) & 0xff; p += 1; v }
-    def i32(): Int = u8() | (u8() << 8) | (u8() << 16) | (u8() << 24)
-    def i64(): Long = (i32().toLong & 0xffffffffL) | (i32().toLong << 32)
-    val numRows = i32()
-    val n = u8()
-    val storedCrc = i32()
-    val metaStart = p
-    if (numRows <= 0 || n == 0) { dead = true; return }
-    // parse pass 1: locate the meta section's end so the CRC can be checked
-    // BEFORE any zone value is trusted
-    try {
+  def fold(frame: Array[Byte]): Unit = if (!dead) {
+    val h =
+      try graft.engine.FrameHeader.read(graft.engine.FrameHeader.of(frame))
+      catch { case _: java.io.IOException => null }
+    if (h == null || (acc != null && h.nCols != acc.length)) dead = true
+    else if (acc == null) acc = h.zones.map(_.copy(sum = 0L))
+    else {
       var c = 0
-      while (c < n) {
-        p += 1 + 4 + 4 // colType, blobLen, blobCrc
-        u8() match {
-          case 0 => ()
-          case 4 | 5 => p += 24 // min + max + sum
-          case 3 =>
-            // NOT `p += u8()`: the left operand of += is read before u8()
-            // advances p, which would drop the length byte itself
-            val lmn = u8(); p += lmn
-            val lmx = u8(); p += lmx
-          case _ => dead = true; return
-        }
-        val nulls = i32()
-        if (nulls < 0 || nulls > numRows) { dead = true; return }
-        if (nulls > 0) p += (numRows + 7) >> 3
-        c += 1
-      }
-    } catch { case _: IndexOutOfBoundsException => dead = true; return }
-    val crc = new java.util.zip.CRC32C
-    crc.update(frame, 0, 5)
-    crc.update(frame, metaStart, p - metaStart)
-    if (crc.getValue.toInt != storedCrc) { dead = true; return }
-    // parse pass 2: fold (meta verified)
-    p = metaStart
-    if (nCols < 0) {
-      nCols = n
-      kind = Array.fill(n)(-1)
-      lmin = new Array[Long](n); lmax = new Array[Long](n)
-      smin = new Array[Array[Byte]](n); smax = new Array[Array[Byte]](n)
-      nullSum = new Array[Long](n)
-    } else if (n != nCols) { dead = true; return }
-    totalRows += numRows
-    var c = 0
-    while (c < n) {
-      u8() // colType
-      i32() // blobLen
-      i32() // blobCrc
-      u8() match {
-        case 0 => kind(c) = 0
-        case k0 @ (4 | 5) =>
-          // numeric frame zones fold as the index's plain long (1) / double
-          // (2) min/max (the file-level index stays sum-free; the agg
-          // reader takes sums from the frame headers it streams anyway)
-          val k = k0 - 3
-          val mn = i64(); val mx = i64()
-          i64() // discard the chunk sum
-          if (kind(c) == -1) { kind(c) = k; lmin(c) = mn; lmax(c) = mx }
-          else if (kind(c) == k) {
-            if (k == 1) {
-              if (mn < lmin(c)) lmin(c) = mn
-              if (mx > lmax(c)) lmax(c) = mx
-            } else {
-              // double bits: total-order compare (zones never contain NaN;
-              // keeps -0.0 < 0.0 exact, matching the chunk zones)
-              if (java.lang.Double.compare(java.lang.Double.longBitsToDouble(mn),
-                java.lang.Double.longBitsToDouble(lmin(c))) < 0) lmin(c) = mn
-              if (java.lang.Double.compare(java.lang.Double.longBitsToDouble(mx),
-                java.lang.Double.longBitsToDouble(lmax(c))) > 0) lmax(c) = mx
-            }
-          } else kind(c) = 0
-        case 3 =>
-          val mn = new Array[Byte](u8())
-          System.arraycopy(frame, p, mn, 0, mn.length); p += mn.length
-          val mx = new Array[Byte](u8())
-          System.arraycopy(frame, p, mx, 0, mx.length); p += mx.length
-          if (kind(c) == -1) { kind(c) = 3; smin(c) = mn; smax(c) = mx }
-          else if (kind(c) == 3) {
-            if (java.util.Arrays.compareUnsigned(mn, smin(c)) < 0) smin(c) = mn
-            if (java.util.Arrays.compareUnsigned(mx, smax(c)) > 0) smax(c) = mx
-          } else kind(c) = 0
-        case _ => dead = true; return
-      }
-      val nulls = i32()
-      nullSum(c) += nulls
-      if (nulls > 0) p += (numRows + 7) >> 3 // skip the validity bitmap
-      c += 1
+      while (c < acc.length) { acc(c) = merge(acc(c), h.zones(c)); c += 1 }
+    }
+  }
+
+  /** `a` ∪ `b` as a sum-free zone. Doubles compare in total order (zones
+    * never contain NaN; keeps -0.0 < 0.0 exact, matching the chunk zones),
+    * strings as unsigned bytes.
+    */
+  private def merge(a: ColZone, b: ColZone): ColZone = {
+    val nulls = a.nullCount + b.nullCount
+    val rows = a.rows + b.rows
+    if (a.kind != b.kind) ColZone(0, nullCount = nulls, rows = rows)
+    else a.kind match {
+      case 1 => ColZone(1, math.min(a.lmin, b.lmin), math.max(a.lmax, b.lmax), nullCount = nulls, rows = rows)
+      case 2 =>
+        def d(bits: Long) = java.lang.Double.longBitsToDouble(bits)
+        ColZone(2,
+          if (java.lang.Double.compare(d(b.lmin), d(a.lmin)) < 0) b.lmin else a.lmin,
+          if (java.lang.Double.compare(d(b.lmax), d(a.lmax)) > 0) b.lmax else a.lmax,
+          nullCount = nulls, rows = rows)
+      case 3 => ColZone(3,
+        smin = if (java.util.Arrays.compareUnsigned(b.smin, a.smin) < 0) b.smin else a.smin,
+        smax = if (java.util.Arrays.compareUnsigned(b.smax, a.smax) > 0) b.smax else a.smax,
+        nullCount = nulls, rows = rows)
+      case _ => ColZone(0, nullCount = nulls, rows = rows)
     }
   }
 
   /** Folded zones (None only when no frame folded cleanly). Even an
-    * all-kind-0 fold is useful now: the null/row totals alone let IsNull /
+    * all-kind-0 fold is useful: the null/row totals alone let IsNull /
     * IsNotNull predicates drop the file.
     */
   def result(): Option[IndexedSeq[ColZone]] =
-    if (dead || nCols < 0) None
-    else Some((0 until nCols).map { c =>
-      val base = kind(c) match {
-        case 1 | 2 => ColZone(kind(c), lmin(c), lmax(c))
-        case 3     => ColZone(3, smin = smin(c), smax = smax(c))
-        case _     => ColZone(0)
-      }
-      base.copy(nullCount = nullSum(c), rows = totalRows)
-    })
+    if (dead || acc == null) None else Some(acc.toIndexedSeq)
 }

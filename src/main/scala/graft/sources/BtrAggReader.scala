@@ -171,27 +171,24 @@ class BtrAggReader(
     val vs = new Array[AnyRef](groupIdx.length)
     var g = 0
     while (g < groupIdx.length) {
-      val c = groupIdx(g)
-      if (c >= fr.nCols) return None
-      if (fr.nullCount(c) == fr.numRows) vs(g) = null
-      else if (fr.nullCount(c) == 0) {
-        fr.zKind(c) match {
+      val z = fr.zone(groupIdx(g))
+      if (z.nullCount == fr.numRows) vs(g) = null
+      else if (z.nullCount == 0) {
+        z.kind match {
           case 1 =>
-            if (fr.zLongMin(c) != fr.zLongMax(c)) return None
-            vs(g) = Int.box(fr.zLongMin(c).toInt)
+            if (z.lmin != z.lmax) return None
+            vs(g) = Int.box(z.lmin.toInt)
           case 2 =>
-            val mn = java.lang.Double.longBitsToDouble(fr.zLongMin(c))
-            val mx = java.lang.Double.longBitsToDouble(fr.zLongMax(c))
+            val mn = java.lang.Double.longBitsToDouble(z.lmin)
+            val mx = java.lang.Double.longBitsToDouble(z.lmax)
             if (!(mn == mx)) return None // NaN never has a zone; -0.0==0.0 is one group
             vs(g) = Double.box(normD(mn))
           case 3 =>
-            val mn = fr.zStrMin(c)
-            val mx = fr.zStrMax(c)
-            if (mn == null || mx == null || !java.util.Arrays.equals(mn, mx)) return None
-            vs(g) = UTF8String.fromBytes(mn)
+            if (!java.util.Arrays.equals(z.smin, z.smax)) return None
+            vs(g) = UTF8String.fromBytes(z.smin)
           case _ => return None
         }
-      } else return None // mixed null/value: two groups in one chunk
+      } else return None // mixed null/value (or unknown): two groups in one chunk
       g += 1
     }
     Some(vs)
@@ -205,20 +202,22 @@ class BtrAggReader(
     var s = 0
     while (s < aggs.length) {
       aggs(s) match {
-        case MinMaxSpec(c, isMin) if c < fr.nCols =>
-          fr.zKind(c) match {
-            case 1 => AggFolds.foldLong(st.acc, s, if (isMin) fr.zLongMin(c) else fr.zLongMax(c), isMin)
+        case MinMaxSpec(c, isMin) =>
+          val z = fr.zone(c)
+          z.kind match {
+            case 1 => AggFolds.foldLong(st.acc, s, if (isMin) z.lmin else z.lmax, isMin)
             case 2 => AggFolds.foldDouble(st.acc, s,
-              java.lang.Double.longBitsToDouble(if (isMin) fr.zLongMin(c) else fr.zLongMax(c)), isMin)
-            case 3 => AggFolds.foldBytes(st.acc, s, if (isMin) fr.zStrMin(c) else fr.zStrMax(c), isMin)
+              java.lang.Double.longBitsToDouble(if (isMin) z.lmin else z.lmax), isMin)
+            case 3 => AggFolds.foldBytes(st.acc, s, if (isMin) z.smin else z.smax, isMin)
             case _ => () // no zone: decoded below
           }
         case CountColSpec(c) if c < fr.nCols =>
-          st.cnt(s) += fr.numRows - fr.nullCount(c)
-        case SumSpec(c, isDouble) if c < fr.nCols && fr.zKind(c) != 0 =>
+          st.cnt(s) += fr.numRows - fr.zone(c).nullCount
+        case SumSpec(c, isDouble) if fr.zone(c).kind != 0 =>
           // a numeric zone always carries the chunk's exact non-null sum
-          if (isDouble) st.sumD(s) += java.lang.Double.longBitsToDouble(fr.zSumBits(c))
-          else st.sumL(s) += fr.zSumBits(c)
+          val sum = fr.zone(c).sum
+          if (isDouble) st.sumD(s) += java.lang.Double.longBitsToDouble(sum)
+          else st.sumL(s) += sum
           st.sumSeen(s) = true
         case _ => ()
       }
@@ -230,7 +229,7 @@ class BtrAggReader(
       .filter(s => aggs(s) match {
         case _: MinMaxSpec | _: SumSpec =>
           val c = specCol(aggs(s))
-          c < fr.nCols && fr.zKind(c) == 0 && fr.nullCount(c) < fr.numRows
+          c < fr.nCols && fr.zone(c).kind == 0 && fr.zone(c).nullCount < fr.numRows
         case _ => false
       })
       .sortBy(s => specCol(aggs(s)))
@@ -329,10 +328,10 @@ class BtrAggReader(
   private def processChunk(): Boolean = {
     if (!fr.nextHeader()) return false
     chunksTotal += 1
-    if (zones.exists(_.rejects(fr.zoneCtx))) {
+    if (zones.exists(_.rejects(fr.zones))) {
       fr.finishChunk()
       chunksSkipped += 1
-    } else if (exact.forall(_.allMatch(fr.zoneCtx))) {
+    } else if (exact.forall(_.allMatch(fr.zones))) {
       if (single != null) foldHeaders(single)
       else constGroupKey() match {
         case Some(vs) => foldHeaders(state(vs))
@@ -355,8 +354,9 @@ class BtrAggReader(
   override def get(): InternalRow = cur
 
   override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(ChunksSkippedTaskMetric(chunksSkipped), ChunksTotalTaskMetric(chunksTotal),
-      AggChunksHeaderOnlyTaskMetric(chunksHeaderOnly), AggChunksDecodedTaskMetric(chunksDecoded))
+    Array(BtrTaskMetric("chunksSkipped", chunksSkipped), BtrTaskMetric("chunksTotal", chunksTotal),
+      BtrTaskMetric("aggChunksHeaderOnly", chunksHeaderOnly),
+      BtrTaskMetric("aggChunksDecoded", chunksDecoded))
 
   override def close(): Unit = if (fr != null) fr.close()
 }

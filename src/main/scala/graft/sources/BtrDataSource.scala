@@ -2,6 +2,7 @@ package graft.sources
 
 import graft.codec.DecodedStrings
 import graft.engine.{BlockFiles, BtrEncoder, BtrTable}
+import graft.format.ColZone
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -84,32 +85,6 @@ class BtrBatchTable(dir: String, schema: StructType)
   override def newWriteBuilder(info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
     : org.apache.spark.sql.connector.write.WriteBuilder =
     new BtrWriteBuilder(dir, info)
-}
-
-/** Read-only view of one pruning unit's per-column zone statistics — a
-  * chunk's frame header or a file's ColZone row. kind: 1 long, 2 double
-  * (raw bits in the long fields), 3 string, 0 none. `nullCount`/`rows`
-  * carry the unit's null statistics (-1 = unknown).
-  *
-  * `ExactPred.rejects`/`allMatch` evaluate against this view at both
-  * pruning levels.
-  *
-  * THE column-width guard: a column beyond the unit's width reads as
-  * zone-less with unknown nulls, so it never rejects a unit and never
-  * proves a match (sound). Predicates read the other accessors only after
-  * `kind` or `nullCount` has accepted the column.
-  */
-trait ZoneCtx {
-  def nCols: Int
-  protected def zoneKind(c: Int): Int
-  protected def nulls(c: Int): Long
-  final def kind(c: Int): Int = if (c < nCols) zoneKind(c) else 0
-  final def nullCount(c: Int): Long = if (c < nCols) nulls(c) else -1L
-  def lmin(c: Int): Long
-  def lmax(c: Int): Long
-  def smin(c: Int): Array[Byte]
-  def smax(c: Int): Array[Byte]
-  def rows(c: Int): Long
 }
 
 class BtrScanBuilder(dir: String, fullSchema: StructType)
@@ -305,25 +280,6 @@ case class CountColSpec(colIdx: Int) extends AggSpec
   */
 case class SumSpec(colIdx: Int, isDouble: Boolean) extends AggSpec
 
-/** Evaluates pushed predicates against a FILE-level ColZone row via the
-  * same `ExactPred.rejects` dispatch the chunk-level readers use.
-  */
-object ZonePredEval {
-  def rejects(preds: Array[ExactPred], cols: IndexedSeq[graft.format.ColZone]): Boolean = {
-    val ctx: ZoneCtx = new ZoneCtx {
-      def nCols: Int = cols.length
-      protected def zoneKind(c: Int): Int = cols(c).kind
-      protected def nulls(c: Int): Long = cols(c).nullCount
-      def lmin(c: Int): Long = cols(c).lmin
-      def lmax(c: Int): Long = cols(c).lmax
-      def smin(c: Int): Array[Byte] = cols(c).smin
-      def smax(c: Int): Array[Byte] = cols(c).smax
-      def rows(c: Int): Long = cols(c).rows
-    }
-    preds.exists(_.rejects(ctx))
-  }
-}
-
 object BtrScan {
   /** Block files of the table at `dir`: its own `blocks/`, or — for a
     * `batch=<id>/` layout, which has none — those of the contiguous
@@ -369,7 +325,7 @@ object BtrScan {
       files.filter { ip =>
         val p = path(ip)
         index(p.getParent.getParent.toString).forall(
-          _.get(p.getName).forall(cs => !ZonePredEval.rejects(zones, cs)))
+          _.get(p.getName).forall(cs => !zones.exists(_.rejects(cs))))
       }
     }
 }
@@ -486,8 +442,8 @@ class BtrScan(
     */
   override def reportDriverMetrics(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
     if (streaming) Array.empty // per-batch planning happens in the stream
-    else Array(FilesSkippedTaskMetric(allFiles.length - plannedFiles.length),
-      FilesTotalTaskMetric(allFiles.length))
+    else Array(BtrTaskMetric("filesSkipped", allFiles.length - plannedFiles.length),
+      BtrTaskMetric("filesTotal", allFiles.length))
 
   @volatile private var streaming = false
 
@@ -691,8 +647,8 @@ class BtrAggScan(dir: String, fullSchema: StructType, specs: Seq[AggSpec],
     * ratio (files dropped before launch, chunks skipped/folded inside).
     */
   override def reportDriverMetrics(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(FilesSkippedTaskMetric(allFiles.length - plannedFiles.length),
-      FilesTotalTaskMetric(allFiles.length))
+    Array(BtrTaskMetric("filesSkipped", allFiles.length - plannedFiles.length),
+      BtrTaskMetric("filesTotal", allFiles.length))
 
   override def createReaderFactory(): PartitionReaderFactory = {
     val confB = ConfShim.broadcast(SparkSession.active.sparkContext)
@@ -777,7 +733,7 @@ final class ChunkCursor(
     * tightens as better rows arrive; dynamic skips count in
     * `chunksSkipped` like static ones.
     */
-  var dynSkip: ZoneCtx => Boolean = null
+  var dynSkip: IndexedSeq[ColZone] => Boolean = null
 
   // columns to decode, ascending (FrameReader contract) = the caller's
   // columns ∪ exact-filter columns (a claimed filter's column may be
@@ -808,12 +764,12 @@ final class ChunkCursor(
   def nextChunk(): Boolean = {
     while (fr.nextHeader()) {
       chunksTotal += 1
-      if (zones.exists(_.rejects(fr.zoneCtx)) || (dynSkip != null && dynSkip(fr.zoneCtx))) {
+      if (zones.exists(_.rejects(fr.zones)) || (dynSkip != null && dynSkip(fr.zones))) {
         fr.finishChunk()
         chunksSkipped += 1
       } else {
         chunkRows = fr.numRows
-        chunkAllMatch = exact.forall(_.allMatch(fr.zoneCtx))
+        chunkAllMatch = exact.forall(_.allMatch(fr.zones))
         readCols.foreach { c =>
           data(c) = fr.decodeColumn(c)
           nulls(c) = fr.nullBits(c)
@@ -862,41 +818,9 @@ class AggChunksDecodedMetric extends org.apache.spark.sql.connector.metric.Custo
   override def description(): String = "agg-pushdown chunks that decoded blobs (mixed filter match or zone-less column)"
 }
 
-private[sources] case class ChunksSkippedTaskMetric(v: Long)
-  extends org.apache.spark.sql.connector.metric.CustomTaskMetric {
-  override def name(): String = "chunksSkipped"
-  override def value(): Long = v
-}
-
-private[sources] case class ChunksTotalTaskMetric(v: Long)
-  extends org.apache.spark.sql.connector.metric.CustomTaskMetric {
-  override def name(): String = "chunksTotal"
-  override def value(): Long = v
-}
-
-private[sources] case class FilesSkippedTaskMetric(v: Long)
-  extends org.apache.spark.sql.connector.metric.CustomTaskMetric {
-  override def name(): String = "filesSkipped"
-  override def value(): Long = v
-}
-
-private[sources] case class FilesTotalTaskMetric(v: Long)
-  extends org.apache.spark.sql.connector.metric.CustomTaskMetric {
-  override def name(): String = "filesTotal"
-  override def value(): Long = v
-}
-
-private[sources] case class AggChunksHeaderOnlyTaskMetric(v: Long)
-  extends org.apache.spark.sql.connector.metric.CustomTaskMetric {
-  override def name(): String = "aggChunksHeaderOnly"
-  override def value(): Long = v
-}
-
-private[sources] case class AggChunksDecodedTaskMetric(v: Long)
-  extends org.apache.spark.sql.connector.metric.CustomTaskMetric {
-  override def name(): String = "aggChunksDecoded"
-  override def value(): Long = v
-}
+/** One task's value of one of the metrics above, by name. */
+private[sources] case class BtrTaskMetric(name: String, value: Long)
+  extends org.apache.spark.sql.connector.metric.CustomTaskMetric
 
 /** Row view over the columnar reader: the scan itself always reads
   * columnar (BtrReaderFactory), this serves reader-level tests and any
@@ -1043,7 +967,8 @@ class BtrColumnarReader(
   override def get(): ColumnarBatch = batch
 
   override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(ChunksSkippedTaskMetric(cursor.chunksSkipped), ChunksTotalTaskMetric(cursor.chunksTotal))
+    Array(BtrTaskMetric("chunksSkipped", cursor.chunksSkipped),
+      BtrTaskMetric("chunksTotal", cursor.chunksTotal))
 
   override def close(): Unit = cursor.close()
 }

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.codec.DecodedStrings
+import graft.format.ColZone
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read.PartitionReader
@@ -113,22 +114,20 @@ final class BtrTopNReader(
   // possibilities per chunk: its null rows (present when nullCount > 0,
   // or unknown < 0) and its best non-null value (zone min for ASC, max
   // for DESC — chunk extrema are exact).
-  cursor.dynSkip = ctx => {
+  cursor.dynSkip = zs => {
     heap.size == spec.n && {
-      val c = primary.colIdx
-      ctx.kind(c) == primary.kind && {
+      val z = ColZone.of(zs, primary.colIdx)
+      z.kind == primary.kind && {
         val worst = heap.peek().ks(0)
-        val nullCanTieOrBeat = ctx.nullCount(c) != 0L && cmpKey(primary, null, worst) <= 0
+        val nullCanTieOrBeat = z.nullCount != 0L && cmpKey(primary, null, worst) <= 0
         !nullCanTieOrBeat && {
           val best: AnyRef = primary.kind match {
-            case 1 => Int.box((if (primary.desc) ctx.lmax(c) else ctx.lmin(c)).toInt)
+            case 1 => Int.box((if (primary.desc) z.lmax else z.lmin).toInt)
             case 2 => Double.box(normD(java.lang.Double.longBitsToDouble(
-              if (primary.desc) ctx.lmax(c) else ctx.lmin(c))))
-            case _ =>
-              val bs = if (primary.desc) ctx.smax(c) else ctx.smin(c)
-              if (bs == null) null else UTF8String.fromBytes(bs)
+              if (primary.desc) z.lmax else z.lmin)))
+            case _ => UTF8String.fromBytes(if (primary.desc) z.smax else z.smin)
           }
-          best != null && cmpKey(primary, best, worst) > 0
+          cmpKey(primary, best, worst) > 0
         }
       }
     }
@@ -213,7 +212,8 @@ final class BtrTopNReader(
   override def get(): InternalRow = row
 
   override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(ChunksSkippedTaskMetric(cursor.chunksSkipped), ChunksTotalTaskMetric(cursor.chunksTotal))
+    Array(BtrTaskMetric("chunksSkipped", cursor.chunksSkipped),
+      BtrTaskMetric("chunksTotal", cursor.chunksTotal))
 
   override def close(): Unit = cursor.close()
 }

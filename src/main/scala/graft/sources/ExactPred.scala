@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.codec.DecodedStrings
+import graft.format.ColZone
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 
@@ -12,7 +13,9 @@ import org.apache.spark.sql.types._
   * from frame headers for fully-covered chunks), at the price that the
   * readers must enforce these predicates with Spark's exact row semantics.
   *
-  * Three-way chunk classification drives the cost model:
+  * Three-way chunk classification drives the cost model, against the
+  * unit's `ColZone`s (a chunk's frame header or a file's zone-index entry —
+  * one shape for both pruning levels):
   *  - `rejects` proves NO row can satisfy the predicate from the zone +
   *    null statistics                → chunk (or file) skipped unread;
   *  - `allMatch` proves EVERY row satisfies it
@@ -28,7 +31,8 @@ import org.apache.spark.sql.types._
   *    -0.0 == 0.0 (Spark normalizes -0.0 at UnsafeRow boundaries; values
   *    decoded from btr blobs keep their sign bit, so the evaluator must
   *    normalize);
-  *  - strings compare in unsigned UTF-8 byte order (binary collation);
+  *  - strings compare in unsigned byte order (binary collation), rows and
+  *    zones alike — a zone's extrema are the raw bytes, valid UTF-8 or not;
   *  - int-column bounds from fractional comparands round with ceil/floor
   *    (x > 3.5 ⇔ x >= 4).
   * Range predicates reject on zones alone: zones cover non-null values
@@ -51,15 +55,25 @@ sealed trait ExactPred extends Serializable {
     */
   def matchesRow(data: Array[AnyRef], nulls: Array[Array[Byte]], i: Int): Boolean =
     if (ExactPred.isNull(nulls(colIdx), i)) matchesNull else matches(data(colIdx), i)
-  /** Can the unit's zone + null statistics PROVE no row matches? Sound
+  /** Can the unit's zones (one `ColZone` per column: a chunk's frame
+    * header or a file's zone-index entry) PROVE no row matches? Sound
     * (never rejects a unit holding a match); compounds compose across
-    * columns. Shared by chunk headers and the file-level zone index.
+    * columns.
     */
-  def rejects(z: ZoneCtx): Boolean
-  /** Can the unit's zone + null statistics PROVE every row matches?
-    * Conservative false.
-    */
-  def allMatch(z: ZoneCtx): Boolean
+  def rejects(zs: IndexedSeq[ColZone]): Boolean
+  /** Can the unit's zones PROVE every row matches? Conservative false. */
+  def allMatch(zs: IndexedSeq[ColZone]): Boolean
+}
+
+/** A predicate over one column: decides a unit on that column's zone alone,
+  * read through `ColZone.of` (a column beyond the unit's width has no zone
+  * and unknown nulls, so it never rejects and never proves a match).
+  */
+sealed trait LeafPred extends ExactPred {
+  final def rejects(zs: IndexedSeq[ColZone]): Boolean = rejects(ColZone.of(zs, colIdx))
+  final def allMatch(zs: IndexedSeq[ColZone]): Boolean = allMatch(ColZone.of(zs, colIdx))
+  def rejects(z: ColZone): Boolean
+  def allMatch(z: ColZone): Boolean
 }
 
 object ExactPred {
@@ -104,16 +118,16 @@ object ExactPred {
 object StrOp { val GT = 0; val GTE = 1; val LT = 2; val LTE = 3; val EQ = 4 }
 
 /** value ∈ [lo, hi] over an INT column (bounds pre-rounded to ints). */
-case class IntCmpPred(colIdx: Int, lo: Long, hi: Long) extends ExactPred {
+case class IntCmpPred(colIdx: Int, lo: Long, hi: Long) extends LeafPred {
   def matchesNull = false
   def matches(decoded: AnyRef, i: Int): Boolean = {
     val v = decoded.asInstanceOf[Array[Int]](i).toLong
     v >= lo && v <= hi
   }
-  def rejects(z: ZoneCtx): Boolean =
-    z.kind(colIdx) == 1 && (z.lmax(colIdx) < lo || z.lmin(colIdx) > hi)
-  def allMatch(z: ZoneCtx): Boolean =
-    z.kind(colIdx) == 1 && z.nullCount(colIdx) == 0 && z.lmin(colIdx) >= lo && z.lmax(colIdx) <= hi
+  def rejects(z: ColZone): Boolean =
+    z.kind == 1 && (z.lmax < lo || z.lmin > hi)
+  def allMatch(z: ColZone): Boolean =
+    z.kind == 1 && z.nullCount == 0 && z.lmin >= lo && z.lmax <= hi
 }
 
 /** value ∈ [lo, hi] in Spark's double order over a DOUBLE column. An
@@ -121,28 +135,28 @@ case class IntCmpPred(colIdx: Int, lo: Long, hi: Long) extends ExactPred {
   * correctly matches NaN rows. A chunk containing NaN carries no zone
   * (kind 0), so it is never rejected or proven here.
   */
-case class DoubleCmpPred(colIdx: Int, lo: Double, hi: Double) extends ExactPred {
+case class DoubleCmpPred(colIdx: Int, lo: Double, hi: Double) extends LeafPred {
   import ExactPred.cmpD
   def matchesNull = false
   def matches(decoded: AnyRef, i: Int): Boolean = {
     val v = decoded.asInstanceOf[Array[Double]](i)
     cmpD(v, lo) >= 0 && cmpD(v, hi) <= 0
   }
-  def rejects(z: ZoneCtx): Boolean =
-    z.kind(colIdx) == 2 &&
-      (cmpD(java.lang.Double.longBitsToDouble(z.lmax(colIdx)), lo) < 0 ||
-        cmpD(java.lang.Double.longBitsToDouble(z.lmin(colIdx)), hi) > 0)
-  def allMatch(z: ZoneCtx): Boolean =
-    z.kind(colIdx) == 2 && z.nullCount(colIdx) == 0 &&
-      cmpD(java.lang.Double.longBitsToDouble(z.lmin(colIdx)), lo) >= 0 &&
-      cmpD(java.lang.Double.longBitsToDouble(z.lmax(colIdx)), hi) <= 0
+  def rejects(z: ColZone): Boolean =
+    z.kind == 2 &&
+      (cmpD(java.lang.Double.longBitsToDouble(z.lmax), lo) < 0 ||
+        cmpD(java.lang.Double.longBitsToDouble(z.lmin), hi) > 0)
+  def allMatch(z: ColZone): Boolean =
+    z.kind == 2 && z.nullCount == 0 &&
+      cmpD(java.lang.Double.longBitsToDouble(z.lmin), lo) >= 0 &&
+      cmpD(java.lang.Double.longBitsToDouble(z.lmax), hi) <= 0
 }
 
 /** One string comparison (op ∈ StrOp) over unsigned UTF-8 byte order
   * (Spark's binary collation), so zone and row compares agree. The
   * comparand is held as a String so equal pushed predicates compare equal.
   */
-case class StringCmpPred(colIdx: Int, op: Int, v: String) extends ExactPred {
+case class StringCmpPred(colIdx: Int, op: Int, v: String) extends LeafPred {
   import ExactPred.cmpB
   @transient private lazy val vb: Array[Byte] =
     v.getBytes(java.nio.charset.StandardCharsets.UTF_8)
@@ -159,19 +173,19 @@ case class StringCmpPred(colIdx: Int, op: Int, v: String) extends ExactPred {
       case StrOp.EQ  => c == 0
     }
   }
-  def rejects(z: ZoneCtx): Boolean = z.kind(colIdx) == 3 && (op match {
-    case StrOp.GT  => cmpB(z.smax(colIdx), vb) <= 0
-    case StrOp.GTE => cmpB(z.smax(colIdx), vb) < 0
-    case StrOp.LT  => cmpB(z.smin(colIdx), vb) >= 0
-    case StrOp.LTE => cmpB(z.smin(colIdx), vb) > 0
-    case StrOp.EQ  => cmpB(vb, z.smin(colIdx)) < 0 || cmpB(vb, z.smax(colIdx)) > 0
+  def rejects(z: ColZone): Boolean = z.kind == 3 && (op match {
+    case StrOp.GT  => cmpB(z.smax, vb) <= 0
+    case StrOp.GTE => cmpB(z.smax, vb) < 0
+    case StrOp.LT  => cmpB(z.smin, vb) >= 0
+    case StrOp.LTE => cmpB(z.smin, vb) > 0
+    case StrOp.EQ  => cmpB(vb, z.smin) < 0 || cmpB(vb, z.smax) > 0
   })
-  def allMatch(z: ZoneCtx): Boolean = z.kind(colIdx) == 3 && z.nullCount(colIdx) == 0 && (op match {
-    case StrOp.GT  => cmpB(z.smin(colIdx), vb) > 0
-    case StrOp.GTE => cmpB(z.smin(colIdx), vb) >= 0
-    case StrOp.LT  => cmpB(z.smax(colIdx), vb) < 0
-    case StrOp.LTE => cmpB(z.smax(colIdx), vb) <= 0
-    case StrOp.EQ  => cmpB(z.smin(colIdx), vb) == 0 && cmpB(z.smax(colIdx), vb) == 0
+  def allMatch(z: ColZone): Boolean = z.kind == 3 && z.nullCount == 0 && (op match {
+    case StrOp.GT  => cmpB(z.smin, vb) > 0
+    case StrOp.GTE => cmpB(z.smin, vb) >= 0
+    case StrOp.LT  => cmpB(z.smax, vb) < 0
+    case StrOp.LTE => cmpB(z.smax, vb) <= 0
+    case StrOp.EQ  => cmpB(z.smin, vb) == 0 && cmpB(z.smax, vb) == 0
   })
 }
 
@@ -179,25 +193,25 @@ case class StringCmpPred(colIdx: Int, op: Int, v: String) extends ExactPred {
   * a unit is rejected when no member lies in its [min, max] zone (exact at
   * any set size; an empty set rejects every zoned unit).
   */
-case class IntInPred(colIdx: Int, vs: Seq[Long]) extends ExactPred {
+case class IntInPred(colIdx: Int, vs: Seq[Long]) extends LeafPred {
   @transient private lazy val sorted: Array[Long] = vs.distinct.sorted.toArray
   def matchesNull = false
   def matches(decoded: AnyRef, i: Int): Boolean =
     java.util.Arrays.binarySearch(sorted, decoded.asInstanceOf[Array[Int]](i).toLong) >= 0
-  def rejects(z: ZoneCtx): Boolean = z.kind(colIdx) == 1 && {
-    val p = ExactPred.insertionPoint(java.util.Arrays.binarySearch(sorted, z.lmin(colIdx)))
-    p == sorted.length || sorted(p) > z.lmax(colIdx)
+  def rejects(z: ColZone): Boolean = z.kind == 1 && {
+    val p = ExactPred.insertionPoint(java.util.Arrays.binarySearch(sorted, z.lmin))
+    p == sorted.length || sorted(p) > z.lmax
   }
-  def allMatch(z: ZoneCtx): Boolean =
-    z.kind(colIdx) == 1 && z.nullCount(colIdx) == 0 && z.lmin(colIdx) == z.lmax(colIdx) &&
-      java.util.Arrays.binarySearch(sorted, z.lmin(colIdx)) >= 0
+  def allMatch(z: ColZone): Boolean =
+    z.kind == 1 && z.nullCount == 0 && z.lmin == z.lmax &&
+      java.util.Arrays.binarySearch(sorted, z.lmin) >= 0
 }
 
 /** IN over a DOUBLE column: members normalized (-0.0 → 0.0) and sorted in
   * Spark's double order (java's total order, NaN greatest; a NaN member
   * matches NaN rows and never lies inside a zone).
   */
-case class DoubleInPred(colIdx: Int, vs: Seq[Double]) extends ExactPred {
+case class DoubleInPred(colIdx: Int, vs: Seq[Double]) extends LeafPred {
   import ExactPred.cmpD
   @inline private def norm(v: Double): Double = if (v == 0.0) 0.0 else v
   @transient private lazy val sorted: Array[Double] = {
@@ -208,15 +222,15 @@ case class DoubleInPred(colIdx: Int, vs: Seq[Double]) extends ExactPred {
   def matchesNull = false
   def matches(decoded: AnyRef, i: Int): Boolean =
     java.util.Arrays.binarySearch(sorted, norm(decoded.asInstanceOf[Array[Double]](i))) >= 0
-  def rejects(z: ZoneCtx): Boolean = z.kind(colIdx) == 2 && {
+  def rejects(z: ColZone): Boolean = z.kind == 2 && {
     val p = ExactPred.insertionPoint(java.util.Arrays.binarySearch(sorted,
-      norm(java.lang.Double.longBitsToDouble(z.lmin(colIdx)))))
-    p == sorted.length || cmpD(sorted(p), java.lang.Double.longBitsToDouble(z.lmax(colIdx))) > 0
+      norm(java.lang.Double.longBitsToDouble(z.lmin))))
+    p == sorted.length || cmpD(sorted(p), java.lang.Double.longBitsToDouble(z.lmax)) > 0
   }
-  def allMatch(z: ZoneCtx): Boolean =
-    z.kind(colIdx) == 2 && z.nullCount(colIdx) == 0 && {
-      val mn = java.lang.Double.longBitsToDouble(z.lmin(colIdx))
-      cmpD(mn, java.lang.Double.longBitsToDouble(z.lmax(colIdx))) == 0 &&
+  def allMatch(z: ColZone): Boolean =
+    z.kind == 2 && z.nullCount == 0 && {
+      val mn = java.lang.Double.longBitsToDouble(z.lmin)
+      cmpD(mn, java.lang.Double.longBitsToDouble(z.lmax)) == 0 &&
         java.util.Arrays.binarySearch(sorted, norm(mn)) >= 0
     }
 }
@@ -224,7 +238,7 @@ case class DoubleInPred(colIdx: Int, vs: Seq[Double]) extends ExactPred {
 /** IN over a STRING column: UTF-8 members sorted in unsigned byte order,
   * binary search per row and per zone.
   */
-case class StringInPred(colIdx: Int, vs: Seq[String]) extends ExactPred {
+case class StringInPred(colIdx: Int, vs: Seq[String]) extends LeafPred {
   @transient private lazy val sorted: Array[Array[Byte]] = {
     val a = vs.distinct.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toArray
     java.util.Arrays.sort(a, (x: Array[Byte], y: Array[Byte]) => java.util.Arrays.compareUnsigned(x, y))
@@ -251,16 +265,16 @@ case class StringInPred(colIdx: Int, vs: Seq[String]) extends ExactPred {
     val d = decoded.asInstanceOf[DecodedStrings]
     contains(d.data, d.starts(i), d.starts(i) + d.lens(i))
   }
-  def rejects(z: ZoneCtx): Boolean = z.kind(colIdx) == 3 && {
-    val mn = z.smin(colIdx)
-    val mx = z.smax(colIdx)
+  def rejects(z: ColZone): Boolean = z.kind == 3 && {
+    val mn = z.smin
+    val mx = z.smax
     val p = lowerBound(mn, 0, mn.length)
     p == sorted.length || cmp(p, mx, 0, mx.length) > 0
   }
-  def allMatch(z: ZoneCtx): Boolean =
-    z.kind(colIdx) == 3 && z.nullCount(colIdx) == 0 &&
-      java.util.Arrays.compareUnsigned(z.smin(colIdx), z.smax(colIdx)) == 0 &&
-      contains(z.smin(colIdx), 0, z.smin(colIdx).length)
+  def allMatch(z: ColZone): Boolean =
+    z.kind == 3 && z.nullCount == 0 &&
+      java.util.Arrays.compareUnsigned(z.smin, z.smax) == 0 &&
+      contains(z.smin, 0, z.smin.length)
 }
 
 /** `col LIKE 'p%'` — byte-prefix match (Spark's StartsWith is a
@@ -268,7 +282,7 @@ case class StringInPred(colIdx: Int, vs: Seq[String]) extends ExactPred {
   * under unsigned byte order: a zone entirely outside that range rejects,
   * a zone whose min and max both lie inside it proves every row.
   */
-case class StartsWithPred(colIdx: Int, prefix: String) extends ExactPred {
+case class StartsWithPred(colIdx: Int, prefix: String) extends LeafPred {
   import ExactPred.cmpB
   @transient private lazy val pb: Array[Byte] =
     prefix.getBytes(java.nio.charset.StandardCharsets.UTF_8)
@@ -279,16 +293,16 @@ case class StartsWithPred(colIdx: Int, prefix: String) extends ExactPred {
     d.lens(i) >= pb.length && java.util.Arrays.equals(
       d.data, d.starts(i), d.starts(i) + pb.length, pb, 0, pb.length)
   }
-  def rejects(z: ZoneCtx): Boolean =
-    z.kind(colIdx) == 3 &&
-      (cmpB(z.smax(colIdx), pb) < 0 || (succ != null && cmpB(z.smin(colIdx), succ) >= 0))
-  def allMatch(z: ZoneCtx): Boolean =
-    z.kind(colIdx) == 3 && z.nullCount(colIdx) == 0 &&
-      cmpB(z.smin(colIdx), pb) >= 0 && (succ == null || cmpB(z.smax(colIdx), succ) < 0)
+  def rejects(z: ColZone): Boolean =
+    z.kind == 3 &&
+      (cmpB(z.smax, pb) < 0 || (succ != null && cmpB(z.smin, succ) >= 0))
+  def allMatch(z: ColZone): Boolean =
+    z.kind == 3 && z.nullCount == 0 &&
+      cmpB(z.smin, pb) >= 0 && (succ == null || cmpB(z.smax, succ) < 0)
 }
 
 /** `col LIKE '%s'` — byte-suffix match (no zone shape; row eval only). */
-case class EndsWithPred(colIdx: Int, suffix: String) extends ExactPred {
+case class EndsWithPred(colIdx: Int, suffix: String) extends LeafPred {
   @transient private lazy val sb: Array[Byte] =
     suffix.getBytes(java.nio.charset.StandardCharsets.UTF_8)
   def matchesNull = false
@@ -298,14 +312,14 @@ case class EndsWithPred(colIdx: Int, suffix: String) extends ExactPred {
     d.lens(i) >= sb.length && java.util.Arrays.equals(
       d.data, off, off + sb.length, sb, 0, sb.length)
   }
-  def rejects(z: ZoneCtx): Boolean = false
-  def allMatch(z: ZoneCtx): Boolean = false
+  def rejects(z: ColZone): Boolean = false
+  def allMatch(z: ColZone): Boolean = false
 }
 
 /** `col LIKE '%s%'` — byte substring match, same semantics as
   * UTF8String.contains (byte search; no zone shape).
   */
-case class ContainsPred(colIdx: Int, needle: String) extends ExactPred {
+case class ContainsPred(colIdx: Int, needle: String) extends LeafPred {
   @transient private lazy val nb: Array[Byte] =
     needle.getBytes(java.nio.charset.StandardCharsets.UTF_8)
   def matchesNull = false
@@ -320,8 +334,8 @@ case class ContainsPred(colIdx: Int, needle: String) extends ExactPred {
     }
     false
   }
-  def rejects(z: ZoneCtx): Boolean = false
-  def allMatch(z: ZoneCtx): Boolean = false
+  def rejects(z: ColZone): Boolean = false
+  def allMatch(z: ColZone): Boolean = false
 }
 
 /** Disjunction (`f1 OR f2`, round-5), possibly ACROSS columns. Under SQL
@@ -342,8 +356,8 @@ case class OrPred(l: ExactPred, r: ExactPred) extends ExactPred {
     throw new UnsupportedOperationException("compound predicates evaluate via matchesRow")
   override def matchesRow(data: Array[AnyRef], nulls: Array[Array[Byte]], i: Int): Boolean =
     l.matchesRow(data, nulls, i) || r.matchesRow(data, nulls, i)
-  def rejects(z: ZoneCtx): Boolean = l.rejects(z) && r.rejects(z)
-  def allMatch(z: ZoneCtx): Boolean = l.allMatch(z) || r.allMatch(z)
+  def rejects(zs: IndexedSeq[ColZone]): Boolean = l.rejects(zs) && r.rejects(zs)
+  def allMatch(zs: IndexedSeq[ColZone]): Boolean = l.allMatch(zs) || r.allMatch(zs)
 }
 
 /** Conjunction (nested inside an OR — Spark splits top-level conjuncts
@@ -360,30 +374,24 @@ case class AndPred(l: ExactPred, r: ExactPred) extends ExactPred {
     throw new UnsupportedOperationException("compound predicates evaluate via matchesRow")
   override def matchesRow(data: Array[AnyRef], nulls: Array[Array[Byte]], i: Int): Boolean =
     l.matchesRow(data, nulls, i) && r.matchesRow(data, nulls, i)
-  def rejects(z: ZoneCtx): Boolean = l.rejects(z) || r.rejects(z)
-  def allMatch(z: ZoneCtx): Boolean = l.allMatch(z) && r.allMatch(z)
+  def rejects(zs: IndexedSeq[ColZone]): Boolean = l.rejects(zs) || r.rejects(zs)
+  def allMatch(zs: IndexedSeq[ColZone]): Boolean = l.allMatch(zs) && r.allMatch(zs)
 }
 
 /** IS NULL (also `col <=> NULL`): rejects a unit KNOWN to hold no null. */
-case class IsNullPred(colIdx: Int) extends ExactPred {
+case class IsNullPred(colIdx: Int) extends LeafPred {
   def matchesNull = true
   def matches(decoded: AnyRef, i: Int): Boolean = false
-  def rejects(z: ZoneCtx): Boolean = z.nullCount(colIdx) == 0L
-  def allMatch(z: ZoneCtx): Boolean = {
-    val n = z.nullCount(colIdx)
-    n > 0 && n == z.rows(colIdx)
-  }
+  def rejects(z: ColZone): Boolean = z.nullCount == 0L
+  def allMatch(z: ColZone): Boolean = z.nullCount > 0 && z.nullCount == z.rows
 }
 
 /** IS NOT NULL: rejects a unit KNOWN to be all-null. */
-case class NotNullPred(colIdx: Int) extends ExactPred {
+case class NotNullPred(colIdx: Int) extends LeafPred {
   def matchesNull = false
   def matches(decoded: AnyRef, i: Int): Boolean = true
-  def rejects(z: ZoneCtx): Boolean = {
-    val n = z.nullCount(colIdx)
-    n > 0 && n == z.rows(colIdx)
-  }
-  def allMatch(z: ZoneCtx): Boolean = z.nullCount(colIdx) == 0
+  def rejects(z: ColZone): Boolean = z.nullCount > 0 && z.nullCount == z.rows
+  def allMatch(z: ColZone): Boolean = z.nullCount == 0
 }
 
 /** Classifier: Filter → ExactPred. `toExact` covers the shapes the readers

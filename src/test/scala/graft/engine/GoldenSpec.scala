@@ -173,6 +173,11 @@ class GoldenSpec extends AnyFunSuite {
     val crc = new java.util.zip.CRC32C
     crc.update(java.nio.file.Files.readAllBytes(files(0).toPath))
     assert(crc.getValue == 0x4dcf0fa2L, f"block file CRC32C 0x${crc.getValue}%08xL")
+    // the file-level zone index folded from those frames
+    val zcrc = new java.util.zip.CRC32C
+    zcrc.update(java.nio.file.Files.readAllBytes(
+      new java.io.File(dir.stripPrefix("file:"), graft.format.ZoneIndex.FileName).toPath))
+    assert(zcrc.getValue == 0x48674bc7L, f"zone index CRC32C 0x${zcrc.getValue}%08xL")
   }
 
   test("Datablock in-memory API: compress/decompress/compare/stats") {

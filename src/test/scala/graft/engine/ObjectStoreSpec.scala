@@ -28,6 +28,9 @@ class ObjectStoreSpec extends AnyFunSuite {
       .config("spark.hadoop.fs.mockfs.impl", classOf[MockFs].getName)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+    // getOrCreate may return a session whose SparkContext another suite
+    // made: the builder's spark.hadoop.* then never reaches its Hadoop conf
+    s.sparkContext.hadoopConfiguration.set("fs.mockfs.impl", classOf[MockFs].getName)
     s
   }
 

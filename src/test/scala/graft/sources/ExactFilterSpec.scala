@@ -491,4 +491,46 @@ class ExactFilterSpec extends AnyFunSuite {
       e.getMessage.contains("decoded 256 values but the frame declares 248 rows"),
       s"a long blob must be a named corruption: ${e.getMessage}")
   }
+
+  test("string extrema that are not valid UTF-8 keep a byte zone; pushdown over them matches Spark") {
+    import org.apache.hadoop.fs.Path
+    val dir = tmp("bad_utf8")
+    // a lone 0xC3 (a cut two-byte sequence) and a 0xFF are not UTF-8; in
+    // unsigned byte order both sort above every "v<digit>" value. Sorted
+    // into 256-row chunks: [v0, C3], [C3, FF], [FF, FF]
+    val src = spark.range(600).selectExpr("CAST(id AS INT) AS id",
+      "CASE id % 3 WHEN 0 THEN CAST(unhex('C3') AS STRING) " +
+        "WHEN 1 THEN CAST(unhex('FF') AS STRING) ELSE concat('v', CAST(id % 10 AS STRING)) END AS s")
+      .orderBy("s").coalesce(1)
+    BlockFiles.write(src, dir, BtrConfig(blockSize = 256))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val blocks = new Path(s"$dir/blocks")
+    val file = blocks.getFileSystem(conf).listStatus(blocks).map(_.getPath)
+      .filter(_.getName.startsWith("part-")).head
+    val r = new FrameReader(file.toString, conf)
+    val maxes = Seq.newBuilder[String]
+    try while (r.nextHeader()) {
+      assert(r.zone(1).kind == 3, s"chunk zone of s: ${r.zone(1)}")
+      maxes += r.zone(1).smax.map(b => f"${b & 0xff}%02X").mkString
+      r.finishChunk()
+    } finally r.close()
+    assert(maxes.result() == Seq("C3", "FF", "FF"))
+
+    val btr = spark.read.format("btr").load(dir)
+    def rows(d: DataFrame): Seq[(Int, String)] =
+      d.selectExpr("id", "hex(s)").collect().map(x => (x.getInt(0), x.getString(1))).sortBy(_._1).toSeq
+    for (cond <- Seq(col("s") === "v2", col("s") < "v5", col("s") > "v9", col("s") <= "v0")) {
+      val want = rows(src.where(cond))
+      assert(want.nonEmpty, s"fixture must match rows for $cond")
+      assert(rows(btr.where(cond)) == want, s"$cond")
+    }
+    def minMax(d: DataFrame): (String, String) = {
+      val x = d.agg(min("s").as("mn"), max("s").as("mx")).selectExpr("hex(mn)", "hex(mx)").head()
+      (x.getString(0), x.getString(1))
+    }
+    val agg = btr.agg(min("s"), max("s"))
+    assert(agg.queryExecution.executedPlan.toString.contains("BtrAggScan"),
+      s"MIN/MAX must push to the source:\n${agg.queryExecution.executedPlan}")
+    assert(minMax(btr) == minMax(src) && minMax(btr) == (("7630", "FF")))
+  }
 }
