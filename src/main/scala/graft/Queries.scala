@@ -331,7 +331,7 @@ object Queries {
   }
 
   /** Filter pushdown INTO the DSv2 source: the range predicate reaches
-    * BtrScan (SupportsPushDownFilters), whose reader skips whole chunks by
+    * BtrScan (SupportsPushDownV2Filters), whose reader skips whole chunks by
     * the frame's per-column zone maps without reading their blobs — the
     * reference scan pushes down nothing (/root/reference/src/datafusion.rs:64-73).
     * Oracle = plain WHERE.

@@ -424,7 +424,9 @@ object BlockFiles {
     * empty partition writes no file), each frame is folded into the zone
     * and per-column stats, and `commit` renames the file into place if
     * absent. `close` drops an uncommitted temp file. Shared by writeFrames
-    * and the push-shaped DSv2 DataWriter.
+    * and the push-shaped DSv2 DataWriter. `blocksDir` must exist: the file
+    * is created without parent dirs, so a task that outlives its job's
+    * abort fails instead of re-creating the dir the abort deleted.
     */
   private[graft] final class BlockFileWriter(
       conf: org.apache.hadoop.conf.Configuration,
@@ -432,6 +434,14 @@ object BlockFiles {
       pid: Int,
       attemptId: Long) {
     private val fs = new Path(blocksDir).getFileSystem(conf)
+    // a local checksum layer checks the parent and then creates the file
+    // and its .crc with parent dirs, so a dir deleted in between comes
+    // back: block files (their frames carry their own CRCs) are created
+    // on the raw file system beneath it
+    private val rawFs = fs match {
+      case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
+      case other => other
+    }
     private val finalPath = new Path(blocksDir, f"part-$pid%05d")
     private val tmpPath = new Path(blocksDir, f".tmp-part-$pid%05d-attempt-$attemptId")
     private var out: org.apache.hadoop.fs.FSDataOutputStream = _
@@ -441,7 +451,13 @@ object BlockFiles {
 
     def append(f: Frame): Unit = {
       if (out == null) {
-        out = fs.create(tmpPath, true)
+        import org.apache.hadoop.fs.CreateFlag
+        import org.apache.hadoop.fs.permission.FsPermission
+        out = rawFs.createNonRecursive(tmpPath,
+          FsPermission.getFileDefault.applyUMask(FsPermission.getUMask(conf)),
+          java.util.EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE),
+          conf.getInt("io.file.buffer.size", 4096), rawFs.getDefaultReplication(tmpPath),
+          rawFs.getDefaultBlockSize(tmpPath), null)
         out.write(Array[Byte](
           (Magic & 0xff).toByte, ((Magic >>> 8) & 0xff).toByte,
           ((Magic >>> 16) & 0xff).toByte, ((Magic >>> 24) & 0xff).toByte,

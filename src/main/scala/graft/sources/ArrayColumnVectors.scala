@@ -6,9 +6,10 @@ import org.apache.spark.sql.vectorized.{ColumnarArray, ColumnarMap, ColumnVector
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Zero-copy ColumnVector views over a decoded chunk's typed arrays — the
-  * codec output IS the vector; no per-value boxing, no buffer copy. btr
-  * columns are non-null by model (BtrEncoder rejects nulls on ingest), so
-  * the null accessors are constant.
+  * codec output IS the vector; no per-value boxing, no buffer copy. These
+  * serve a chunk whose column holds no NULL (its frame carries no validity
+  * bitmap), so the null accessors are constant; a chunk with NULLs gets
+  * the bitmap-backed variants below.
   */
 private[sources] abstract class NonNullVector(dt: DataType) extends ColumnVector(dt) {
   final override def hasNull: Boolean = false

@@ -7,12 +7,12 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources._
+import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
-import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.graftshim.ConfShim
 import org.apache.hadoop.fs.Path
 import java.util.{Map => JMap}
@@ -90,13 +90,14 @@ class BtrBatchTable(dir: String, schema: StructType)
 class BtrScanBuilder(dir: String, fullSchema: StructType)
   extends ScanBuilder
     with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters
+    with SupportsPushDownV2Filters
     with SupportsPushDownLimit
     with SupportsPushDownTopN
     with SupportsPushDownAggregates {
   private var required: StructType = fullSchema
-  private var pushed: Array[Filter] = Array.empty
+  private var pushed: Array[Predicate] = Array.empty
   private var pushedZones: Array[ExactPred] = Array.empty
+  private var exact: Array[ExactPred] = Array.empty
   private var limit: Int = -1
   private var topN: Option[TopNSpec] = None
 
@@ -106,33 +107,30 @@ class BtrScanBuilder(dir: String, fullSchema: StructType)
     required = StructType(fullSchema.fields.filter(f => wanted.contains(f.name)))
   }
 
-  /** Push filters two ways (round-5), both as ExactPred:
-    *  - `exact`: exactly-evaluable shapes (ExactFilters.toExact:
-    *    comparisons, IN, null checks, LIKE shapes and their compounds with
-    *    literal comparands) are CLAIMED — not returned as unhandled — so
-    *    Spark plans no post-scan Filter and will offer aggregate pushdown
-    *    under a WHERE clause. The readers enforce them with Spark row
-    *    semantics (three-way per chunk: reject / all-match / per-row eval).
-    *  - `zones`: every prunable filter (ExactFilters.prunable: the claimed
-    *    ones plus sound relaxations of partially claimable compounds)
-    *    rejects files and chunks.
-    * Anything not exactly evaluable is returned unhandled and Spark keeps
-    * its own Filter on top.
+  /** Push Spark's V2 predicates (string literals as `UTF8String` bytes)
+    * two ways through the one `PredTranslator`, both as ExactPred:
+    *  - `exact` (claimed mode: comparisons, IN, null checks, LIKE shapes
+    *    and their compounds with literal comparands) are CLAIMED — not
+    *    returned — so Spark plans no post-scan Filter and will offer
+    *    aggregate and TopN pushdown under a WHERE clause. The readers
+    *    enforce them with Spark row semantics (three-way per chunk:
+    *    reject / all-match / per-row eval).
+    *  - `zones` (prune-only mode: the claimed ones plus sound relaxations
+    *    of partially claimable compounds) reject files and chunks.
+    * Anything not exactly evaluable is returned and Spark keeps its own
+    * Filter on top.
     */
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val classified = filters.map { f =>
-      val e = ExactFilters.toExact(fullSchema, f)
-      (f, e, e.orElse(ExactFilters.prunable(fullSchema, f)))
+  override def pushPredicates(predicates: Array[Predicate]): Array[Predicate] = {
+    val classified = predicates.map { p =>
+      (p, PredTranslator(fullSchema, p, claim = true), PredTranslator(fullSchema, p, claim = false))
     }
     exact = classified.flatMap(_._2)
     pushedZones = classified.flatMap(_._3)
-    pushed = classified.collect { case (f, _, Some(_)) => f }
-    classified.collect { case (f, None, _) => f }
+    pushed = classified.collect { case (p, _, Some(_)) => p }
+    classified.collect { case (p, None, _) => p }
   }
 
-  private var exact: Array[ExactPred] = Array.empty
-
-  override def pushedFilters(): Array[Filter] = pushed
+  override def pushedPredicates(): Array[Predicate] = pushed
 
   /** Partial limit pushdown: each partition reader stops after `l` rows
     * (returning false keeps Spark's own global Limit on top).
@@ -181,9 +179,9 @@ class BtrScanBuilder(dir: String, fullSchema: StructType)
     * and zone maps are EXACT chunk extrema (ChunkEncoder), so an unfiltered
     * count/min/max never has to decode a column blob — the reader answers
     * from headers and falls back to decoding ONLY the chunks that lack a
-    * zone (NaN chunks, >64-byte or non-UTF-8-faithful string extrema,
-    * all-null columns). Partial pushdown — the scan emits one partial row
-    * per block file (per group and file under GROUP BY) and Spark combines.
+    * zone (NaN chunks, >64-byte string extrema, all-null columns).
+    * Partial pushdown — the scan emits one partial row per block file (per
+    * group and file under GROUP BY) and Spark combines.
     *
     * FILTERED aggregates (round-5): Spark offers aggregates only when
     * every filter was claimed at the source; with the exact-claim layer
@@ -356,10 +354,13 @@ class BtrScan(
   /** Runtime (join-driven) filtering — the dynamic-partition-pruning analog
     * for the block format: when this table is equi-joined to a broadcast
     * side, Spark hands the build side's key values here as an IN predicate
-    * BEFORE re-planning input partitions. The values become extra zone
-    * predicates, so whole files (zone index) and chunks (frame zones) of
-    * fact data that cannot match any build key are never read. Every
-    * column is zone-eligible, so all of them are advertised.
+    * BEFORE re-planning input partitions. The same `PredTranslator` as
+    * static pushdown, in its prune-only mode, turns them into extra zone
+    * predicates (string keys stay bytes), so whole files (zone index) and
+    * chunks (frame zones) of fact data that cannot match any build key are
+    * never read; an untranslatable predicate is simply not used (Spark
+    * still applies the real join). Every column is zone-eligible, so all
+    * of them are advertised.
     */
   @volatile private var runtimeZones: Array[ExactPred] = Array.empty
   @volatile private var plannedCache: Array[InputPartition] = _
@@ -372,8 +373,8 @@ class BtrScan(
     // AnalysisException, not a skipped optimization
     required.fieldNames.map(org.apache.spark.sql.connector.expressions.Expressions.column)
 
-  override def filter(predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate]): Unit = {
-    val zs = predicates.flatMap(RuntimePredTranslator.toZone(fullSchema, _))
+  override def filter(predicates: Array[Predicate]): Unit = {
+    val zs = predicates.flatMap(PredTranslator(fullSchema, _, claim = false))
     if (zs.nonEmpty) {
       runtimeZones = runtimeZones ++ zs
       plannedCache = null
@@ -521,65 +522,6 @@ class BtrMicroBatchStream(
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
-}
-
-/** Translates Spark's runtime V2 predicates (IN / = over one column with
-  * literal values, the shape dynamic pruning produces from a broadcast
-  * build side) into IN predicates used for skipping, exact at any set size;
-  * anything untranslatable is simply not used (Spark still applies the
-  * real join).
-  */
-object RuntimePredTranslator {
-  import org.apache.spark.sql.connector.expressions.{Expression => VExpr, NamedReference}
-  import org.apache.spark.sql.connector.expressions.filter.Predicate
-  // LiteralValue is private[sql] in Spark 4; Literal is the public face
-  private type LitV = org.apache.spark.sql.connector.expressions.Literal[_]
-
-  def toZone(schema: StructType, p: Predicate): Option[ExactPred] = {
-    def colIdx(e: VExpr): Option[Int] = e match {
-      case nr: NamedReference if nr.fieldNames.length == 1 =>
-        val i = schema.fieldNames.indexOf(nr.fieldNames()(0))
-        if (i >= 0) Some(i) else None
-      case _ => None
-    }
-    p.name() match {
-      case "IN" | "=" =>
-        val ch = p.children()
-        if (ch.length < 1) return None
-        colIdx(ch(0)).flatMap { c =>
-          val raw = ch.drop(1)
-          if (!raw.forall(_.isInstanceOf[LitV])) return None
-          val vals = raw.map(_.asInstanceOf[LitV].value).toSeq
-          schema.fields(c).dataType match {
-            case IntegerType =>
-              val vs = vals.collect { case n: Number => n.longValue }
-              if (vs.length != vals.length) None else Some(IntInPred(c, vs))
-            case DoubleType =>
-              if (!vals.forall(_.isInstanceOf[Number])) None
-              else Some(DoubleInPred(c, vals.map(_.asInstanceOf[Number].doubleValue)))
-            case StringType =>
-              // runtime keys arrive as UTF8String RAW BYTES, which need not
-              // be valid UTF-8; a lossy toString (invalid sequence -> U+FFFD)
-              // would build a pred whose bytes differ from the row's and
-              // wrongly SKIP matching chunks. Keep the pred only when every
-              // value survives the bytes->String->bytes round trip — else
-              // no pruning from this predicate at all (dropping just the bad
-              // value would be a subset, which over-skips).
-              val vs = vals.map {
-                case s: UTF8String =>
-                  val str = s.toString
-                  if (UTF8String.fromString(str).equals(s)) str
-                  else null
-                case s: String => s
-                case _ => null
-              }
-              if (vs.contains(null)) None else Some(StringInPred(c, vs))
-            case _ => None
-          }
-        }
-      case _ => None
-    }
-  }
 }
 
 /** Aggregate scan (COUNT(*)/COUNT(col)/MIN/MAX/SUM, optionally under

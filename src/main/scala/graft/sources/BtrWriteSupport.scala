@@ -294,9 +294,14 @@ case class BtrStreamingWriterFactory(
     cfg: BtrConfig,
     keptIdx: Array[Int])
   extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] =
-    new BtrDataWriter(ConfShim.conf(confB), s"$dir/batch=$epochId/blocks",
-      partitionId, taskId, schema, colTypes, cfg, keptIdx)
+  override def createWriter(partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] = {
+    // epoch commit runs after the tasks, and a block file is created
+    // without parent dirs: each task makes the epoch's blocks dir first
+    val conf = ConfShim.conf(confB)
+    val blocks = new Path(s"$dir/batch=$epochId/blocks")
+    blocks.getFileSystem(conf).mkdirs(blocks)
+    new BtrDataWriter(conf, blocks.toString, partitionId, taskId, schema, colTypes, cfg, keptIdx)
+  }
 }
 
 case class BtrWriterFactory(

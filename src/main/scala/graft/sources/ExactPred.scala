@@ -2,16 +2,17 @@ package graft.sources
 
 import graft.codec.DecodedStrings
 import graft.format.ColZone
-import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Pushed predicates — the one predicate type of the read core. The source
-  * CLAIMS the filters `ExactFilters.toExact` translates (returns them as
-  * handled from pushFilters), so Spark plans NO post-scan Filter. That
-  * unlocks aggregate pushdown under a WHERE clause (`SELECT count(*) WHERE
-  * id BETWEEN …` — the most common operational query at 100 TB — answered
-  * from frame headers for fully-covered chunks), at the price that the
-  * readers must enforce these predicates with Spark's exact row semantics.
+  * CLAIMS the V2 predicates `PredTranslator` translates in its claimed mode
+  * (they are not returned from pushPredicates), so Spark plans NO post-scan
+  * Filter. That unlocks aggregate pushdown under a WHERE clause (`SELECT
+  * count(*) WHERE id BETWEEN …` — the most common operational query at
+  * 100 TB — answered from frame headers for fully-covered chunks), at the
+  * price that the readers must enforce these predicates with Spark's exact
+  * row semantics.
   *
   * Three-way chunk classification drives the cost model, against the
   * unit's `ColZone`s (a chunk's frame header or a file's zone-index entry —
@@ -22,8 +23,9 @@ import org.apache.spark.sql.types._
   *                                   → rows emitted with NO per-row eval;
   *  - otherwise (mixed)              → per-row evaluation on the decoded
   *    columns (`matchesRow`).
-  * A filter that is not claimable may still prune
-  * (`ExactFilters.prunable`): it is then used for `rejects` only.
+  * A predicate that is not claimable may still prune (`PredTranslator`'s
+  * prune-only mode, which runtime filters use too): it is then used for
+  * `rejects` only.
   *
   * Spark semantics implemented exactly:
   *  - NULL never satisfies a comparison / IN; IS NULL / `<=> NULL` do;
@@ -31,8 +33,9 @@ import org.apache.spark.sql.types._
   *    -0.0 == 0.0 (Spark normalizes -0.0 at UnsafeRow boundaries; values
   *    decoded from btr blobs keep their sign bit, so the evaluator must
   *    normalize);
-  *  - strings compare in unsigned byte order (binary collation), rows and
-  *    zones alike — a zone's extrema are the raw bytes, valid UTF-8 or not;
+  *  - strings compare in unsigned byte order (binary collation), rows,
+  *    zones and comparands alike — a zone's extrema and a literal are raw
+  *    bytes, valid UTF-8 or not;
   *  - int-column bounds from fractional comparands round with ceil/floor
   *    (x > 3.5 ⇔ x >= 4).
   * Range predicates reject on zones alone: zones cover non-null values
@@ -152,14 +155,14 @@ case class DoubleCmpPred(colIdx: Int, lo: Double, hi: Double) extends LeafPred {
       cmpD(java.lang.Double.longBitsToDouble(z.lmax), hi) <= 0
 }
 
-/** One string comparison (op ∈ StrOp) over unsigned UTF-8 byte order
-  * (Spark's binary collation), so zone and row compares agree. The
-  * comparand is held as a String so equal pushed predicates compare equal.
+/** One string comparison (op ∈ StrOp) in unsigned byte order (Spark's
+  * binary collation), so zone and row compares agree. The comparand is
+  * the literal's own bytes, valid UTF-8 or not; `UTF8String` equality is
+  * byte equality, so equal pushed predicates compare equal.
   */
-case class StringCmpPred(colIdx: Int, op: Int, v: String) extends LeafPred {
+case class StringCmpPred(colIdx: Int, op: Int, v: UTF8String) extends LeafPred {
   import ExactPred.cmpB
-  @transient private lazy val vb: Array[Byte] =
-    v.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+  @transient private lazy val vb: Array[Byte] = v.getBytes
   def matchesNull = false
   def matches(decoded: AnyRef, i: Int): Boolean = {
     val d = decoded.asInstanceOf[DecodedStrings]
@@ -235,12 +238,12 @@ case class DoubleInPred(colIdx: Int, vs: Seq[Double]) extends LeafPred {
     }
 }
 
-/** IN over a STRING column: UTF-8 members sorted in unsigned byte order,
-  * binary search per row and per zone.
+/** IN over a STRING column: the members' bytes sorted in unsigned byte
+  * order, binary search per row and per zone.
   */
-case class StringInPred(colIdx: Int, vs: Seq[String]) extends LeafPred {
+case class StringInPred(colIdx: Int, vs: Seq[UTF8String]) extends LeafPred {
   @transient private lazy val sorted: Array[Array[Byte]] = {
-    val a = vs.distinct.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toArray
+    val a = vs.distinct.map(_.getBytes).toArray
     java.util.Arrays.sort(a, (x: Array[Byte], y: Array[Byte]) => java.util.Arrays.compareUnsigned(x, y))
     a
   }
@@ -282,10 +285,9 @@ case class StringInPred(colIdx: Int, vs: Seq[String]) extends LeafPred {
   * under unsigned byte order: a zone entirely outside that range rejects,
   * a zone whose min and max both lie inside it proves every row.
   */
-case class StartsWithPred(colIdx: Int, prefix: String) extends LeafPred {
+case class StartsWithPred(colIdx: Int, prefix: UTF8String) extends LeafPred {
   import ExactPred.cmpB
-  @transient private lazy val pb: Array[Byte] =
-    prefix.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+  @transient private lazy val pb: Array[Byte] = prefix.getBytes
   @transient private lazy val succ: Array[Byte] = ExactPred.successor(pb)
   def matchesNull = false
   def matches(decoded: AnyRef, i: Int): Boolean = {
@@ -302,9 +304,8 @@ case class StartsWithPred(colIdx: Int, prefix: String) extends LeafPred {
 }
 
 /** `col LIKE '%s'` — byte-suffix match (no zone shape; row eval only). */
-case class EndsWithPred(colIdx: Int, suffix: String) extends LeafPred {
-  @transient private lazy val sb: Array[Byte] =
-    suffix.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+case class EndsWithPred(colIdx: Int, suffix: UTF8String) extends LeafPred {
+  @transient private lazy val sb: Array[Byte] = suffix.getBytes
   def matchesNull = false
   def matches(decoded: AnyRef, i: Int): Boolean = {
     val d = decoded.asInstanceOf[DecodedStrings]
@@ -319,9 +320,8 @@ case class EndsWithPred(colIdx: Int, suffix: String) extends LeafPred {
 /** `col LIKE '%s%'` — byte substring match, same semantics as
   * UTF8String.contains (byte search; no zone shape).
   */
-case class ContainsPred(colIdx: Int, needle: String) extends LeafPred {
-  @transient private lazy val nb: Array[Byte] =
-    needle.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+case class ContainsPred(colIdx: Int, needle: UTF8String) extends LeafPred {
+  @transient private lazy val nb: Array[Byte] = needle.getBytes
   def matchesNull = false
   def matches(decoded: AnyRef, i: Int): Boolean = {
     val d = decoded.asInstanceOf[DecodedStrings]
@@ -394,12 +394,106 @@ case class NotNullPred(colIdx: Int) extends LeafPred {
   def allMatch(z: ColZone): Boolean = z.nullCount == 0
 }
 
-/** Classifier: Filter → ExactPred. `toExact` covers the shapes the readers
-  * can enforce exactly (claimed; anything else stays a Spark post-scan
-  * filter); `prunable` also relaxes unclaimable compounds to a sound
-  * pruning predicate.
+/** THE predicate translator: Spark's V2 `Predicate` → `ExactPred`, for
+  * static pushdown (`BtrScanBuilder.pushPredicates`) and runtime filtering
+  * (`BtrScan.filter`) alike.
+  *
+  * With `claim = true` it returns only shapes the readers enforce exactly
+  * (the source claims them, so Spark plans no post-scan Filter); anything
+  * else is None. A partially translatable compound is never claimed:
+  * claiming a filter Spark considers handled while enforcing only part of
+  * it would drop the rest. With `claim = false` the result may only REJECT
+  * units, so an unclaimable AND relaxes to whichever sides prune (a
+  * rejected conjunct rejects the conjunction); an OR still needs both.
+  *
+  * Leaves: `column op literal` for `=`, `<=>`, `<>`, `<`, `<=`, `>`, `>=`
+  * in either order (Spark does not flip a literal on the left; `op` is
+  * swapped here), IN over literals, IS_NULL / IS_NOT_NULL, and
+  * STARTS_WITH / ENDS_WITH / CONTAINS with a literal. A string literal is
+  * taken as the `UTF8String` it arrives as: its bytes, valid UTF-8 or not,
+  * are what rows and zones compare against. NOT goes through `negate`.
   */
-object ExactFilters {
+object PredTranslator {
+  import org.apache.spark.sql.connector.expressions.{Expression => VExpr, Literal => VLit, NamedReference}
+  import org.apache.spark.sql.connector.expressions.filter.{And => VAnd, Not => VNot, Or => VOr, Predicate}
+
+  def apply(schema: StructType, p: Predicate, claim: Boolean): Option[ExactPred] = p match {
+    case a: VAnd =>
+      (apply(schema, a.left, claim), apply(schema, a.right, claim)) match {
+        case (Some(l), Some(r)) => Some(AndPred(l, r))
+        case (l, r) => if (claim) None else l.orElse(r)
+      }
+    case o: VOr =>
+      for (l <- apply(schema, o.left, claim); r <- apply(schema, o.right, claim))
+        yield OrPred(l, r)
+    case n: VNot => negate(n.child).flatMap(apply(schema, _, claim))
+    case _ => leaf(schema, p.name, p.children.toSeq)
+  }
+
+  /** `NOT p` as an equivalent positive predicate, ONLY where the rewrite
+    * reproduces Spark's three-valued semantics exactly. A comparison on a
+    * NULL input yields NULL, and NOT NULL is still NULL, so the
+    * complementary comparison (which also fails NULL rows) is exact. Shapes
+    * whose negation is subtler are deliberately absent and stay Spark
+    * post-scan filters:
+    *  - `NOT (a <=> v)` with v non-null PASSES null rows (<=> is two-valued);
+    *  - `NOT IN (...)` with a null member passes no rows at all;
+    *  - NOT over LIKE shapes / nested AND-OR would need three-valued
+    *    evaluation through the compound.
+    */
+  private def negate(p: Predicate): Option[Predicate] = p match {
+    case n: VNot => Some(n.child)
+    case _ if p.name == "<=>" && p.children.exists(isNullLit) =>
+      Some(new Predicate("IS_NOT_NULL", p.children.filterNot(isNullLit)))
+    case _ => Negated.get(p.name).map(new Predicate(_, p.children))
+  }
+
+  private val Negated = Map(">" -> "<=", ">=" -> "<", "<" -> ">=", "<=" -> ">",
+    "=" -> "<>", "<>" -> "=", "IS_NULL" -> "IS_NOT_NULL", "IS_NOT_NULL" -> "IS_NULL")
+
+  /** The operator seen from the column's side: `v op col` ⇔ `col Swapped(op) v`. */
+  private val Swapped = Map("=" -> "=", "<=>" -> "<=>", "<>" -> "<>",
+    "<" -> ">", "<=" -> ">=", ">" -> "<", ">=" -> "<=")
+
+  private def isNullLit(e: VExpr): Boolean = e match {
+    case l: VLit[_] => l.value == null
+    case _ => false
+  }
+
+  private def leaf(schema: StructType, name: String, ch: Seq[VExpr]): Option[ExactPred] = {
+    def column(e: VExpr): Option[Int] = e match {
+      case r: NamedReference if r.fieldNames.length == 1 =>
+        Some(schema.fieldNames.indexOf(r.fieldNames()(0))).filter(_ >= 0)
+      case _ => None
+    }
+    def dt(c: Int): DataType = schema.fields(c).dataType
+    (name, ch) match {
+      case ("IS_NULL", Seq(c)) => column(c).map(IsNullPred)
+      case ("IS_NOT_NULL", Seq(c)) => column(c).map(NotNullPred)
+      case ("IN", c +: vs) if vs.forall(_.isInstanceOf[VLit[_]]) =>
+        column(c).flatMap(i => in(dt(i), i, vs.map(_.asInstanceOf[VLit[_]].value)))
+      case (op, Seq(a, l: VLit[_])) if Swapped.contains(op) =>
+        column(a).flatMap(i => cmp(dt(i), i, op, l.value))
+      case (op, Seq(l: VLit[_], b)) if Swapped.contains(op) =>
+        column(b).flatMap(i => cmp(dt(i), i, Swapped(op), l.value))
+      case ("STARTS_WITH" | "ENDS_WITH" | "CONTAINS", Seq(c, l: VLit[_])) =>
+        for (i <- column(c) if dt(i) == StringType; s <- utf8(l.value)) yield name match {
+          case "STARTS_WITH" => StartsWithPred(i, s)
+          case "ENDS_WITH" => EndsWithPred(i, s)
+          case _ => ContainsPred(i, s)
+        }
+      case _ => None
+    }
+  }
+
+  /** A string comparand's bytes: catalyst literals carry `UTF8String`; a
+    * literal built from a java String (`Expressions.literal`) is encoded.
+    */
+  private def utf8(v: Any): Option[UTF8String] = v match {
+    case s: UTF8String => Some(s)
+    case s: String => Some(UTF8String.fromString(s))
+    case _ => None
+  }
 
   private def isIntegral(v: Number): Boolean = v match {
     case _: java.lang.Byte | _: java.lang.Short | _: java.lang.Integer | _: java.lang.Long => true
@@ -420,164 +514,64 @@ object ExactFilters {
   private def highAtMost(v: Number): Long =
     if (isIntegral(v)) v.longValue else math.floor(v.doubleValue).toLong
 
-  def toExact(schema: StructType, f: Filter): Option[ExactPred] = {
-    def colOf(name: String, dt: DataType): Option[Int] = {
-      val i = schema.fieldNames.indexOf(name)
-      if (i >= 0 && schema.fields(i).dataType == dt) Some(i) else None
-    }
-    def anyCol(name: String): Option[Int] = {
-      val i = schema.fieldNames.indexOf(name)
-      if (i >= 0) Some(i) else None
-    }
-    // a long literal beyond the exact-double range would lose precision in
-    // the double comparison path; int columns avoid it by comparing as
-    // long, doubles only ever see the literal's own double value
-    f match {
-      // ---- INT columns
-      case GreaterThan(a, v: Number) if colOf(a, IntegerType).isDefined =>
-        colOf(a, IntegerType).map(IntCmpPred(_, lowAbove(v), Long.MaxValue))
-      case GreaterThanOrEqual(a, v: Number) if colOf(a, IntegerType).isDefined =>
-        colOf(a, IntegerType).map(IntCmpPred(_, lowAtLeast(v), Long.MaxValue))
-      case LessThan(a, v: Number) if colOf(a, IntegerType).isDefined =>
-        colOf(a, IntegerType).map(IntCmpPred(_, Long.MinValue, highBelow(v)))
-      case LessThanOrEqual(a, v: Number) if colOf(a, IntegerType).isDefined =>
-        colOf(a, IntegerType).map(IntCmpPred(_, Long.MinValue, highAtMost(v)))
-      case EqualTo(a, v: Number) if colOf(a, IntegerType).isDefined =>
-        colOf(a, IntegerType).map(IntCmpPred(_, lowAtLeast(v), highAtMost(v)))
-      case EqualNullSafe(a, v: Number) if colOf(a, IntegerType).isDefined =>
-        colOf(a, IntegerType).map(IntCmpPred(_, lowAtLeast(v), highAtMost(v)))
-      case In(a, values) if values != null && colOf(a, IntegerType).isDefined &&
-          values.forall(v => v == null || v.isInstanceOf[Number]) =>
-        // feasible = integral members; null / fractional members can never
-        // equal an int row (and a null member's three-valued "unknown" is
-        // false under a filter)
-        val vs = values.toSeq.collect {
-          case v: Number if lowAtLeast(v) == highAtMost(v) => lowAtLeast(v)
-        }
-        colOf(a, IntegerType).map(IntInPred(_, vs))
-      // ---- DOUBLE columns (NaN literal allowed: NaN == NaN in Spark)
-      case GreaterThan(a, v: Number) if colOf(a, DoubleType).isDefined && !v.doubleValue.isNaN =>
+  private val StrOps = Map(">" -> StrOp.GT, ">=" -> StrOp.GTE, "<" -> StrOp.LT,
+    "<=" -> StrOp.LTE, "=" -> StrOp.EQ, "<=>" -> StrOp.EQ)
+
+  /** `col op v` over column c of type dt. A long literal beyond the
+    * exact-double range would lose precision in the double path; int
+    * columns avoid it by comparing as long, doubles only ever see the
+    * literal's own double value.
+    */
+  private def cmp(dt: DataType, c: Int, op: String, v: Any): Option[ExactPred] = (dt, v) match {
+    case (_, null) => if (op == "<=>") Some(IsNullPred(c)) else None
+    // x <> v over non-null x is exactly (x < v OR x > v) in Spark's total
+    // orders (doubles: NaN greatest, NaN == NaN; strings: unsigned byte
+    // order), and NULL rows fail both forms
+    case _ if op == "<>" =>
+      for (l <- cmp(dt, c, "<", v); g <- cmp(dt, c, ">", v)) yield OrPred(l, g)
+    case (IntegerType, n: Number) => Some(op match {
+      case ">" => IntCmpPred(c, lowAbove(n), Long.MaxValue)
+      case ">=" => IntCmpPred(c, lowAtLeast(n), Long.MaxValue)
+      case "<" => IntCmpPred(c, Long.MinValue, highBelow(n))
+      case "<=" => IntCmpPred(c, Long.MinValue, highAtMost(n))
+      case _ => IntCmpPred(c, lowAtLeast(n), highAtMost(n)) // = and <=>
+    })
+    // NaN literal: only equality (NaN == NaN in Spark)
+    case (DoubleType, n: Number) if !n.doubleValue.isNaN || op == "=" || op == "<=>" =>
+      val x = n.doubleValue
+      Some(op match {
         // nextUp(+Inf) = +Inf would wrongly include +Inf itself; in Spark's
         // order only NaN is > +Inf
-        val lo = if (v.doubleValue == Double.PositiveInfinity) Double.NaN
-                 else Math.nextUp(v.doubleValue)
-        colOf(a, DoubleType).map(DoubleCmpPred(_, lo, Double.NaN))
-      case GreaterThanOrEqual(a, v: Number) if colOf(a, DoubleType).isDefined && !v.doubleValue.isNaN =>
-        colOf(a, DoubleType).map(DoubleCmpPred(_, v.doubleValue, Double.NaN))
-      case LessThan(a, v: Number) if colOf(a, DoubleType).isDefined && !v.doubleValue.isNaN =>
-        // nextDown(-Inf) = -Inf would wrongly include -Inf itself; nothing
-        // is < -Inf, so use an empty range (lo NaN = order max, hi -Inf)
-        val hi = if (v.doubleValue == Double.NegativeInfinity) Double.NegativeInfinity else Math.nextDown(v.doubleValue)
-        val lo = if (v.doubleValue == Double.NegativeInfinity) Double.NaN else Double.NegativeInfinity
-        colOf(a, DoubleType).map(DoubleCmpPred(_, lo, hi))
-      case LessThanOrEqual(a, v: Number) if colOf(a, DoubleType).isDefined && !v.doubleValue.isNaN =>
-        colOf(a, DoubleType).map(DoubleCmpPred(_, Double.NegativeInfinity, v.doubleValue))
-      case EqualTo(a, v: Number) if colOf(a, DoubleType).isDefined =>
-        colOf(a, DoubleType).map(DoubleCmpPred(_, v.doubleValue, v.doubleValue))
-      case EqualNullSafe(a, v: Number) if colOf(a, DoubleType).isDefined =>
-        colOf(a, DoubleType).map(DoubleCmpPred(_, v.doubleValue, v.doubleValue))
-      case In(a, values) if values != null && colOf(a, DoubleType).isDefined &&
-          values.forall(v => v == null || v.isInstanceOf[Number]) =>
-        val vs = values.toSeq.collect { case v: Number => v.doubleValue }
-        colOf(a, DoubleType).map(DoubleInPred(_, vs))
-      // ---- STRING columns
-      case GreaterThan(a, v: String) =>
-        colOf(a, StringType).map(StringCmpPred(_, StrOp.GT, v))
-      case GreaterThanOrEqual(a, v: String) =>
-        colOf(a, StringType).map(StringCmpPred(_, StrOp.GTE, v))
-      case LessThan(a, v: String) =>
-        colOf(a, StringType).map(StringCmpPred(_, StrOp.LT, v))
-      case LessThanOrEqual(a, v: String) =>
-        colOf(a, StringType).map(StringCmpPred(_, StrOp.LTE, v))
-      case EqualTo(a, v: String) =>
-        colOf(a, StringType).map(StringCmpPred(_, StrOp.EQ, v))
-      case EqualNullSafe(a, v: String) =>
-        colOf(a, StringType).map(StringCmpPred(_, StrOp.EQ, v))
-      case In(a, values) if values != null && colOf(a, StringType).isDefined &&
-          values.forall(v => v == null || v.isInstanceOf[String]) =>
-        val vs = values.toSeq.collect { case v: String => v }
-        colOf(a, StringType).map(StringInPred(_, vs))
-      // ---- LIKE shapes (byte semantics identical to UTF8String's
-      // startsWith/endsWith/contains, which back Spark's operators)
-      case StringStartsWith(a, p) if p != null =>
-        colOf(a, StringType).map(StartsWithPred(_, p))
-      case StringEndsWith(a, s) if s != null =>
-        colOf(a, StringType).map(EndsWithPred(_, s))
-      case StringContains(a, s) if s != null =>
-        colOf(a, StringType).map(ContainsPred(_, s))
-      // ---- null checks
-      case EqualNullSafe(a, null) => anyCol(a).map(IsNullPred)
-      case IsNull(a) => anyCol(a).map(IsNullPred)
-      case IsNotNull(a) => anyCol(a).map(NotNullPred)
-      // ---- compounds (round-5): claimable when both sides are exactly
-      // evaluable — including across columns (matchesRow gives compounds
-      // multi-column access). A partially-claimable compound must NOT be
-      // claimed — claiming a filter Spark considers handled while
-      // enforcing only part of it would drop the rest — so one
-      // unclaimable side returns None and Spark keeps its own Filter
-      // (zone pruning still applies through `prunable`).
-      case Or(f1, f2) =>
-        for {
-          p1 <- toExact(schema, f1)
-          p2 <- toExact(schema, f2)
-        } yield OrPred(p1, p2)
-      case And(f1, f2) =>
-        for {
-          p1 <- toExact(schema, f1)
-          p2 <- toExact(schema, f2)
-        } yield AndPred(p1, p2)
-      case Not(g) => NotRewrite(g).flatMap(toExact(schema, _))
-      case _ => None
-    }
+        case ">" => DoubleCmpPred(c, if (x == Double.PositiveInfinity) Double.NaN else Math.nextUp(x), Double.NaN)
+        case ">=" => DoubleCmpPred(c, x, Double.NaN)
+        // nothing is < -Inf: an empty range (lo NaN = the order's max)
+        case "<" =>
+          if (x == Double.NegativeInfinity) DoubleCmpPred(c, Double.NaN, Double.NegativeInfinity)
+          else DoubleCmpPred(c, Double.NegativeInfinity, Math.nextDown(x))
+        case "<=" => DoubleCmpPred(c, Double.NegativeInfinity, x)
+        case _ => DoubleCmpPred(c, x, x)
+      })
+    case (StringType, _) => utf8(v).map(StringCmpPred(c, StrOps(op), _))
+    case _ => None
   }
 
-  /** A predicate that may only REJECT units for `f` (never used for row
-    * matching): `toExact(f)` when claimable, else a sound relaxation — an
-    * AND keeps whichever sides prune (a rejected conjunct rejects the
-    * conjunction), an OR needs both sides, NOT goes through NotRewrite.
+  /** `col IN (vs)`. A null member never makes a row TRUE (its "unknown" is
+    * false under a filter), so only non-null members count; over ints, a
+    * fractional member can never equal a row either.
     */
-  def prunable(schema: StructType, f: Filter): Option[ExactPred] =
-    toExact(schema, f).orElse(f match {
-      case Or(f1, f2) =>
-        for {
-          p1 <- prunable(schema, f1)
-          p2 <- prunable(schema, f2)
-        } yield OrPred(p1, p2)
-      case And(f1, f2) =>
-        (prunable(schema, f1), prunable(schema, f2)) match {
-          case (Some(p1), Some(p2)) => Some(AndPred(p1, p2))
-          case (p1, p2) => p1.orElse(p2)
-        }
-      case Not(g) => NotRewrite(g).flatMap(prunable(schema, _))
+  private def in(dt: DataType, c: Int, vs: Seq[Any]): Option[ExactPred] = {
+    val members = vs.filter(_ != null)
+    dt match {
+      case IntegerType | DoubleType if !members.forall(_.isInstanceOf[Number]) => None
+      case IntegerType =>
+        Some(IntInPred(c, members.collect {
+          case v: Number if lowAtLeast(v) == highAtMost(v) => lowAtLeast(v)
+        }))
+      case DoubleType => Some(DoubleInPred(c, members.map(_.asInstanceOf[Number].doubleValue)))
+      case StringType =>
+        val ss = members.flatMap(utf8)
+        if (ss.length == members.length) Some(StringInPred(c, ss)) else None
       case _ => None
-    })
-}
-
-/** Exact negation rewrites: `Not(f)` → an equivalent positive Filter,
-  * ONLY where the rewrite reproduces Spark's three-valued semantics
-  * exactly. A comparison on a NULL input yields NULL, and NOT NULL is
-  * still NULL — so the swapped comparison (which also rejects NULL rows)
-  * is exact. Shapes whose negation is subtler are deliberately absent and
-  * stay Spark post-scan filters:
-  *  - `NOT (a <=> v)` with v non-null PASSES null rows (<=> is two-valued);
-  *  - `NOT IN (...)` with a null member passes no rows at all;
-  *  - NOT over LIKE shapes / nested AND-OR would need three-valued
-  *    evaluation through the compound.
-  */
-object NotRewrite {
-  def apply(f: Filter): Option[Filter] = f match {
-    case GreaterThan(a, v) => Some(LessThanOrEqual(a, v))
-    case GreaterThanOrEqual(a, v) => Some(LessThan(a, v))
-    case LessThan(a, v) => Some(GreaterThanOrEqual(a, v))
-    case LessThanOrEqual(a, v) => Some(GreaterThan(a, v))
-    // x != v over non-null x is exactly (x < v OR x > v) in Spark's total
-    // orders (doubles: NaN greatest, NaN == NaN; strings: UTF-8 byte
-    // order) — and NULL rows fail both forms
-    case EqualTo(a, v) if v != null => Some(Or(LessThan(a, v), GreaterThan(a, v)))
-    case EqualNullSafe(a, null) => Some(IsNotNull(a))
-    case IsNull(a) => Some(IsNotNull(a))
-    case IsNotNull(a) => Some(IsNull(a))
-    case Not(g) => Some(g)
-    case _ => None
+    }
   }
 }

@@ -4,6 +4,7 @@ import graft.codec.BtrConfig
 import graft.engine.BlockFiles
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Paths
 
@@ -292,7 +293,7 @@ class BtrSourceSpec extends AnyFunSuite {
       skippedD += rd.chunksSkipped
       rd.close()
       val rs = new BtrPartitionReader(f, conf, Array(0),
-        Array(StringCmpPred(1, StrOp.EQ, "k04321")))
+        Array(StringCmpPred(1, StrOp.EQ, UTF8String.fromString("k04321"))))
       while (rs.next()) ()
       skippedS += rs.chunksSkipped
       rs.close()
@@ -397,7 +398,7 @@ class BtrSourceSpec extends AnyFunSuite {
       skipped += r.chunksSkipped
       r.close()
       val rs = new BtrPartitionReader(f, conf, Array(0),
-        Array(StringInPred(1, Seq("k00105", "k07405"))))
+        Array(StringInPred(1, Seq("k00105", "k07405").map(UTF8String.fromString))))
       while (rs.next()) ()
       skippedS += rs.chunksSkipped
       rs.close()
@@ -761,6 +762,22 @@ class BtrSourceSpec extends AnyFunSuite {
     }
   }
 
+  test("a block file is never created outside an existing dir (no debris after an abort)") {
+    import org.apache.hadoop.fs.Path
+    // a task that outlives its job's abort appends into the dir the abort
+    // deleted: the append must fail, not re-create the dir
+    val dir = new Path(tmp("nodir"), ".staging-blocks")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = dir.getFileSystem(conf)
+    val ids = Array.tabulate(16)(identity)
+    val frame = BlockFiles.frameChunk(Seq(
+      graft.engine.ChunkEncoder.encodeInt("id", ids, 16, BtrConfig.default)))
+    val w = new BlockFiles.BlockFileWriter(conf, dir.toString, 0, 0L)
+    try intercept[java.io.IOException](w.append(frame))
+    finally w.close()
+    assert(!fs.exists(dir), s"$dir must stay absent")
+  }
+
   test("a write of more than 255 columns fails at planning with a named error") {
     val dir = tmp("wide256")
     val wide = spark.range(1).select((0 until 256).map(i => lit(i).as(s"c$i")): _*)
@@ -975,44 +992,51 @@ class BtrSourceSpec extends AnyFunSuite {
     val litI = Expressions.literal(7)
     val litI2 = Expressions.literal(9)
     val pIn = new Predicate("IN", Array(Expressions.column("i"), litI, litI2))
-    val z = RuntimePredTranslator.toZone(schema, pIn)
+    def runtime(p: Predicate) = PredTranslator(schema, p, claim = false)
+    val z = runtime(pIn)
     assert(z.contains(IntInPred(0, Seq(7L, 9L))), s"got $z")
     def intZone(mn: Long, mx: Long) = IndexedSeq(graft.format.ColZone(kind = 1, lmin = mn, lmax = mx))
     assert(z.exists(_.rejects(intZone(10, 20))), "7,9 miss [10,20]")
     assert(!z.exists(_.rejects(intZone(5, 8))), "7 hits [5,8]")
+    // a kind-3 zone of column s (columns i and d have none)
+    def strZone(mn: Array[Byte], mx: Array[Byte]) = IndexedSeq(graft.format.ColZone.Unknown,
+      graft.format.ColZone.Unknown, graft.format.ColZone(kind = 3, smin = mn, smax = mx))
+    def strZone1(mn: String, mx: String) = strZone(mn.getBytes("UTF-8"), mx.getBytes("UTF-8"))
 
     val pEq = new Predicate("=", Array(Expressions.column("s"), Expressions.literal("abc")))
-    val zs = RuntimePredTranslator.toZone(schema, pEq)
-    assert(zs.contains(StringInPred(2, Seq("abc"))), s"got $zs")
+    val zs = runtime(pEq)
+    assert(zs.exists(_.rejects(strZone1("abd", "b"))), s"abc misses [abd, b]: $zs")
+    assert(!zs.exists(_.rejects(strZone1("abc", "abc"))), s"abc hits [abc, abc]: $zs")
 
     val pD = new Predicate("IN", Array(Expressions.column("d"), Expressions.literal(1.5)))
-    val zd = RuntimePredTranslator.toZone(schema, pD)
+    val zd = runtime(pD)
     assert(zd.contains(DoubleInPred(1, Seq(1.5))), s"got $zd")
 
-    // untranslatable shapes are ignored, not errors
-    assert(RuntimePredTranslator.toZone(schema,
-      new Predicate(">", Array(Expressions.column("i"), litI))).isEmpty)
-    assert(RuntimePredTranslator.toZone(schema,
-      new Predicate("IN", Array(Expressions.column("nope"), litI))).isEmpty)
+    // a range comparison translates too; an unknown column is ignored, not an error
+    val zg = runtime(new Predicate(">", Array(Expressions.column("i"), litI)))
+    assert(zg.exists(_.rejects(intZone(0, 7))), s"i > 7 misses [0,7]: $zg")
+    assert(!zg.exists(_.rejects(intZone(5, 20))), s"i > 7 hits [5,20]: $zg")
+    assert(runtime(new Predicate("IN", Array(Expressions.column("nope"), litI))).isEmpty)
 
-    // a runtime string key with INVALID UTF-8 bytes cannot round-trip
-    // through String — the whole predicate must be dropped (pruning with a
-    // lossily-transcoded comparand would wrongly skip the matching chunk)
-    val badUtf8 = org.apache.spark.unsafe.types.UTF8String.fromBytes(Array(0xC3.toByte))
-    val goodUtf8 = org.apache.spark.unsafe.types.UTF8String.fromString("ok")
-    assert(RuntimePredTranslator.toZone(schema,
-      new Predicate("IN", Array(Expressions.column("s"),
-        Expressions.literal(badUtf8), Expressions.literal(goodUtf8)))).isEmpty,
-      "invalid-UTF-8 member must drop the whole predicate")
-    assert(RuntimePredTranslator.toZone(schema,
-      new Predicate("=", Array(Expressions.column("s"), Expressions.literal(goodUtf8))))
-      .contains(StringInPred(2, Seq("ok"))))
+    // a runtime string key with INVALID UTF-8 bytes is kept byte-exact: it
+    // prunes only zones that hold neither member
+    val badUtf8 = UTF8String.fromBytes(Array(0xC3.toByte))
+    val goodUtf8 = UTF8String.fromString("ok")
+    val zb = runtime(new Predicate("IN", Array(Expressions.column("s"),
+      Expressions.literal(badUtf8), Expressions.literal(goodUtf8))))
+    assert(!zb.exists(_.rejects(strZone(Array(0xC3.toByte), Array(0xC3.toByte)))),
+      s"C3 hits [C3, C3]: $zb")
+    assert(!zb.exists(_.rejects(strZone1("ok", "ok"))), s"ok hits [ok, ok]: $zb")
+    assert(zb.exists(_.rejects(strZone1("p", "q"))), s"C3, ok miss [p, q]: $zb")
+    val zo = runtime(new Predicate("=", Array(Expressions.column("s"), Expressions.literal(goodUtf8))))
+    assert(zo.exists(_.rejects(strZone1("p", "q"))), s"ok misses [p, q]: $zo")
+    assert(!zo.exists(_.rejects(strZone1("ok", "ok"))), s"ok hits [ok, ok]: $zo")
 
     // a string key set beyond 1024 members still yields an exact predicate
     val keys = (0 until 1025).map(i => f"k$i%04d")
     val pBig = new Predicate("IN",
       (Expressions.column("s") +: keys.map(k => Expressions.literal(k))).toArray)
-    val translated = RuntimePredTranslator.toZone(schema, pBig).contains(StringInPred(2, keys))
+    val translated = runtime(pBig).contains(StringInPred(2, keys.map(UTF8String.fromString)))
     assert(translated, "a 1025-member string IN must translate")
   }
 

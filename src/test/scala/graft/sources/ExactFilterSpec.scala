@@ -5,6 +5,7 @@ import graft.engine.BlockFiles
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Paths
 
@@ -232,7 +233,7 @@ class ExactFilterSpec extends AnyFunSuite {
       s"a cross-column OR must be claimed:\n${q2.queryExecution.optimizedPlan}")
     assert(q2.count() == 256)
     val r2 = new BtrPartitionReader(file, conf, Array(0),
-      Array(OrPred(IntCmpPred(0, 0, 255), StringCmpPred(1, StrOp.EQ, "a"))))
+      Array(OrPred(IntCmpPred(0, 0, 255), StringCmpPred(1, StrOp.EQ, UTF8String.fromString("a")))))
     while (r2.next()) ()
     val m2 = r2.currentMetricsValues().map(x => x.name() -> x.value()).toMap
     assert(m2("chunksTotal") == 16 && m2("chunksSkipped") == 15,
@@ -247,6 +248,19 @@ class ExactFilterSpec extends AnyFunSuite {
       s"claimed filters must not leave a Filter node:\n${claimed.queryExecution.optimizedPlan}")
     assert(claimed.queryExecution.executedPlan.toString.contains("exactFilters="),
       "scan must report its exact filters")
+    // a literal on the left arrives unflipped, `x != v` arrives as `<>`:
+    // both are claimed and agree with Spark
+    for ((name, cond) <- Seq(
+        "lit-lt-int" -> (lit(-3) < col("i")),
+        "lit-gte-str" -> (lit("v5") >= col("s")),
+        "lit-eq-dbl" -> (lit(2.5) === col("d")),
+        "neq-str" -> (col("s") =!= "v3"))) {
+      check(name)(cond)
+      val q = btr.where(cond)
+      assert(q.queryExecution.optimizedPlan.collect { case f: LFilter => f }.isEmpty &&
+        q.queryExecution.executedPlan.toString.contains("exactFilters="),
+        s"[$name] must be claimed:\n${q.queryExecution.executedPlan}")
+    }
     val unclaimed = btr.where(col("i") % 2 === 0)
     assert(unclaimed.queryExecution.optimizedPlan.collect { case f: LFilter => f }.nonEmpty,
       "an expression predicate must stay a Spark filter")
@@ -341,7 +355,8 @@ class ExactFilterSpec extends AnyFunSuite {
     val file = fs.listStatus(new Path(s"$dir/blocks"))
       .map(_.getPath.toString).filter(_.contains("part-")).head
     val r = new BtrPartitionReader(file, conf, Array(0),
-      Array(StartsWithPred(1, "k001")), exact = Array(StartsWithPred(1, "k001")))
+      Array(StartsWithPred(1, UTF8String.fromString("k001"))),
+      exact = Array(StartsWithPred(1, UTF8String.fromString("k001"))))
     var read = 0L
     while (r.next()) read += 1
     assert(read == 100, s"rows with prefix k001: $read")
@@ -479,6 +494,8 @@ class ExactFilterSpec extends AnyFunSuite {
       encodeInt("v", ids.map(_ * 2), 256, BtrConfig.default)).map(p => p.copy(numRows = 248))
     val dir = tmp("shortframe")
     val conf = spark.sparkContext.hadoopConfiguration
+    val blocks = new org.apache.hadoop.fs.Path(s"$dir/blocks")
+    blocks.getFileSystem(conf).mkdirs(blocks)
     BlockFiles.writeFrames(conf, s"$dir/blocks", 0, 0L, Iterator(BlockFiles.frameChunk(parts)))
     // the filter makes the chunk mixed and matches exactly its last 8 rows
     val e = intercept[java.io.IOException] {
@@ -519,7 +536,10 @@ class ExactFilterSpec extends AnyFunSuite {
     val btr = spark.read.format("btr").load(dir)
     def rows(d: DataFrame): Seq[(Int, String)] =
       d.selectExpr("id", "hex(s)").collect().map(x => (x.getInt(0), x.getString(1))).sortBy(_._1).toSeq
-    for (cond <- Seq(col("s") === "v2", col("s") < "v5", col("s") > "v9", col("s") <= "v0")) {
+    // a literal that is itself not valid UTF-8 compares by its bytes too
+    val c3 = lit(Array(0xC3.toByte)).cast("string")
+    for (cond <- Seq(col("s") === "v2", col("s") < "v5", col("s") > "v9", col("s") <= "v0",
+        col("s") === c3, col("s") < c3, col("s").isin(c3, "v2"), col("s").startsWith(c3))) {
       val want = rows(src.where(cond))
       assert(want.nonEmpty, s"fixture must match rows for $cond")
       assert(rows(btr.where(cond)) == want, s"$cond")
