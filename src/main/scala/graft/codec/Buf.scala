@@ -48,24 +48,6 @@ final class BufWriter(initialCapacity: Int = 1 << 12) {
     pos += len
   }
 
-  /** Write the low 8 bytes of `v` but advance only `len` — the branch-free
-    * FSST decode trick: the over-written tail is corrected by the next
-    * write. One unrolled store replaces a per-symbol arraycopy.
-    */
-  def word(v: Long, len: Int): Unit = {
-    ensure(8)
-    val p = pos
-    arr(p) = v.toByte
-    arr(p + 1) = (v >>> 8).toByte
-    arr(p + 2) = (v >>> 16).toByte
-    arr(p + 3) = (v >>> 24).toByte
-    arr(p + 4) = (v >>> 32).toByte
-    arr(p + 5) = (v >>> 40).toByte
-    arr(p + 6) = (v >>> 48).toByte
-    arr(p + 7) = (v >>> 56).toByte
-    pos += len
-  }
-
   def result(): Array[Byte] = java.util.Arrays.copyOf(arr, pos)
 
   /** The internal buffer (valid up to `size`) — lets arena consumers avoid

@@ -1,6 +1,7 @@
 package graft.codec
 
-import scala.collection.mutable
+import java.lang.invoke.{MethodHandles, VarHandle}
+import java.nio.{ByteBuffer, ByteOrder}
 
 /** FSST (Fast Static Symbol Table) string compression, re-derived from the
   * public paper (Boncz/Neumann/Leis, VLDB'20) — the reference links the
@@ -13,6 +14,16 @@ import scala.collection.mutable
   * with the current table, count code and adjacent-code-pair frequencies,
   * promote the highest-gain (freq × length) symbols into the next
   * generation's table.
+  *
+  * Encoding is greedy longest match in the paper's shape (`FsstTable.Matcher`):
+  * a 64K-entry table on the next two bytes gives the best 1–2-byte code or
+  * the escape, and where a symbol of 3+ bytes starts with those two bytes,
+  * one hash probe on the 3-byte prefix reaches that prefix's symbols,
+  * longest first, each checked with one masked compare of the 8-byte
+  * window. A value's codes go into a plain array that has 2 × its length
+  * free (every byte may need an escape). Decoding runs one loop over a
+  * chunk's whole blob into an arena sized once: each symbol is one 8-byte
+  * store, so no code writes more than 8 bytes.
   */
 object Fsst {
   final val EscapeCode = 255
@@ -20,6 +31,12 @@ object Fsst {
   final val MaxSymbolLen = 8
   final val TrainGenerations = 5
   final val MaxSampleBytes = 1 << 16
+
+  /** Little-endian 8-byte stores into a byte array. Only `set` is used:
+    * Scala 2.13 compiles `VarHandle.get` to a boxing `([BI)Object` call.
+    */
+  private val LongLE: VarHandle =
+    MethodHandles.byteArrayViewVarHandle(classOf[Array[Long]], ByteOrder.LITTLE_ENDIAN)
 
   /** Pack up to 8 bytes little-endian into a long. */
   @inline def pack(data: Array[Byte], pos: Int, len: Int): Long = {
@@ -29,107 +46,168 @@ object Fsst {
     k
   }
 
-  /** Unrolled full-word pack (requires pos + 8 <= data.length) — the
-    * compress loop calls this once per input position, so the straight-line
-    * form (JIT-mergeable loads) beats the length-bounded loop measurably.
+  /** The little-endian 8-byte window at `pos` of `data` (`bb` wraps it):
+    * one `getLong`, or `pack` of what is left within 8 bytes of the end.
     */
-  @inline def pack8(data: Array[Byte], pos: Int): Long =
-    (data(pos) & 0xffL) |
-      ((data(pos + 1) & 0xffL) << 8) |
-      ((data(pos + 2) & 0xffL) << 16) |
-      ((data(pos + 3) & 0xffL) << 24) |
-      ((data(pos + 4) & 0xffL) << 32) |
-      ((data(pos + 5) & 0xffL) << 40) |
-      ((data(pos + 6) & 0xffL) << 48) |
-      ((data(pos + 7) & 0xffL) << 56)
+  @inline private[codec] def window(data: Array[Byte], bb: ByteBuffer, pos: Int): Long =
+    if (pos + 8 <= data.length) bb.getLong(pos) else pack(data, pos, data.length - pos)
 
-  @inline def packAt(data: Array[Byte], pos: Int, len: Int): Long =
-    if (pos + 8 <= data.length) {
-      val full = pack8(data, pos)
-      if (len == 8) full else full & ((1L << (8 * len)) - 1)
-    } else pack(data, pos, len)
+  private[codec] def le(data: Array[Byte]): ByteBuffer =
+    ByteBuffer.wrap(data).order(ByteOrder.LITTLE_ENDIAN)
 
   def train(sample: Array[Byte]): FsstTable = {
     val s =
       if (sample.length <= MaxSampleBytes) sample
       else java.util.Arrays.copyOf(sample, MaxSampleBytes)
+    val trainer = new Trainer(s)
     var table = new FsstTable(Array.empty)
     var gen = 0
     while (gen < TrainGenerations) {
-      table = nextGeneration(table, s)
+      table = trainer.nextGeneration(table)
       gen += 1
     }
     table
   }
 
-  /** One training round: compress sample with `table` counting frequencies,
-    * then pick the top-gain symbol set for the next generation.
-    *
-    * Counting code space: 0..254 = table symbols, 256+b = literal byte b.
+  /** Scratch of one `train` call, reused by every generation: counting
+    * codes 0..254 are table symbols and 256+b the literal byte b.
     */
-  private def nextGeneration(table: FsstTable, sample: Array[Byte]): FsstTable = {
-    val nCodes = 256 + 256
-    val count1 = new Array[Long](nCodes)
-    val pairs = new mutable.LongMap[Long]() // (prev << 16 | cur) -> count
+  private final class Trainer(sample: Array[Byte]) {
+    private val NCodes = 512
+    private val count1 = new Array[Int](NCodes)
+    /** pairs(prev * 512 + cur); only the `touched` entries are non-zero. */
+    private val pairs = new Array[Int](NCodes * NCodes)
+    private val touched = new Array[Int](math.max(1, sample.length))
+    // candidate symbols, open addressing on (word, len); len 0 = empty slot
+    private val capBits = 32 - Integer.numberOfLeadingZeros(2 * (NCodes + sample.length))
+    private val capMask = (1 << capBits) - 1
+    private val candWord = new Array[Long](capMask + 1)
+    private val candLen = new Array[Int](capMask + 1)
+    private val candGain = new Array[Long](capMask + 1)
+    private val used = new Array[Int](NCodes + sample.length)
+    private var nUsed = 0
+    /** the best MaxSymbols candidates seen, as a heap with the worst at 0 */
+    private val heap = new Array[Int](MaxSymbols)
 
-    var prev = -1
-    var pos = 0
-    while (pos < sample.length) {
-      val (code, len) = table.findLongest(sample, pos, sample.length)
-      val cur = if (code >= 0) code else 256 + (sample(pos) & 0xff)
-      val adv = if (code >= 0) len else 1
-      count1(cur) += 1
-      if (prev >= 0) {
-        val k = (prev.toLong << 16) | cur.toLong
-        pairs(k) = pairs.getOrElse(k, 0L) + 1L
+    /** One training round: compress the sample with `table` counting code
+      * and adjacent-pair frequencies, then keep the top-gain symbols.
+      */
+    def nextGeneration(table: FsstTable): FsstTable = {
+      val n = sample.length
+      val bb = le(sample)
+      val m = table.matcher
+      java.util.Arrays.fill(count1, 0)
+      var nTouched = 0
+      var prev = -1
+      var pos = 0
+      while (pos < n) {
+        val cl = m.longest(sample, bb, pos, n)
+        val code = cl & 0xffff
+        val cur = if (code != EscapeCode) code else 256 + (sample(pos) & 0xff)
+        count1(cur) += 1
+        if (prev >= 0) {
+          val k = prev * NCodes + cur
+          if (pairs(k) == 0) { touched(nTouched) = k; nTouched += 1 }
+          pairs(k) += 1
+        }
+        prev = cur
+        pos += cl >>> 16
       }
-      prev = cur
-      pos += adv
+
+      var i = 0
+      while (i < nUsed) { candLen(used(i)) = 0; i += 1 }
+      nUsed = 0
+      var c = 0
+      while (c < NCodes) {
+        if (count1(c) > 0) add(word(table, c), len(table, c), count1(c).toLong * len(table, c))
+        c += 1
+      }
+      i = 0
+      while (i < nTouched) {
+        val k = touched(i)
+        val a = k >>> 9
+        val b = k & (NCodes - 1)
+        val la = len(table, a)
+        val l = la + len(table, b)
+        if (l <= MaxSymbolLen) add(word(table, a) | (word(table, b) << (8 * la)), l, pairs(k).toLong * l)
+        pairs(k) = 0
+        i += 1
+      }
+      selectTop()
     }
 
-    def symBytes(c: Int): Array[Byte] =
-      if (c < 256) table.symbols(c) else Array((c - 256).toByte)
+    private def word(t: FsstTable, c: Int): Long = if (c < 256) t.symWord(c) else (c - 256).toLong
+    private def len(t: FsstTable, c: Int): Int = if (c < 256) t.symLen(c) else 1
 
-    // candidate -> gain, keyed by (packedBytes, len) for dedup
-    val gains = new mutable.HashMap[(Long, Int), (Array[Byte], Long)]()
-    def add(bytes: Array[Byte], gain: Long): Unit = {
-      if (bytes.length == 0 || bytes.length > MaxSymbolLen) return
-      val key = (pack(bytes, 0, bytes.length), bytes.length)
-      gains.get(key) match {
-        case Some((b, g)) => gains(key) = (b, g + gain)
-        case None         => gains(key) = (bytes, gain)
-      }
-    }
-    var c = 0
-    while (c < nCodes) {
-      if (count1(c) > 0) {
-        val b = symBytes(c)
-        add(b, count1(c) * b.length)
-      }
-      c += 1
-    }
-    pairs.foreach { case (k, n) =>
-      val a = symBytes((k >>> 16).toInt)
-      val b = symBytes((k & 0xffff).toInt)
-      if (a.length + b.length <= MaxSymbolLen) {
-        val concat = new Array[Byte](a.length + b.length)
-        System.arraycopy(a, 0, concat, 0, a.length)
-        System.arraycopy(b, 0, concat, a.length, b.length)
-        add(concat, n * concat.length)
-      }
+    private def add(w: Long, l: Int, gain: Long): Unit = {
+      val x = (w ^ (l.toLong * 0x9e3779b97f4a7c15L)) * -7046029254386353131L
+      var h = (x >>> (64 - capBits)).toInt
+      while (candLen(h) != 0 && (candLen(h) != l || candWord(h) != w)) h = (h + 1) & capMask
+      if (candLen(h) == 0) {
+        candWord(h) = w; candLen(h) = l; candGain(h) = gain
+        used(nUsed) = h; nUsed += 1
+      } else candGain(h) += gain
     }
 
-    // deterministic top-255: gain desc, then length desc, then bytes lex
-    val sorted = gains.values.toArray.sortWith { case ((ab, ag), (bb, bg)) =>
-      if (ag != bg) ag > bg
-      else if (ab.length != bb.length) ab.length > bb.length
-      else {
-        var i = 0
-        while (i < ab.length && ab(i) == bb(i)) i += 1
-        i < ab.length && (ab(i) & 0xff) < (bb(i) & 0xff)
+    /** Candidate slot a ranks before b: gain desc, then length desc, then
+      * unsigned bytes ascending (same-length words compare as big-endian).
+      */
+    private def before(a: Int, b: Int): Boolean =
+      if (candGain(a) != candGain(b)) candGain(a) > candGain(b)
+      else if (candLen(a) != candLen(b)) candLen(a) > candLen(b)
+      else java.lang.Long.compareUnsigned(
+        java.lang.Long.reverseBytes(candWord(a)), java.lang.Long.reverseBytes(candWord(b))) < 0
+
+    private def siftDown(size: Int): Unit = {
+      var p = 0
+      var done = false
+      while (!done) {
+        val l = 2 * p + 1
+        if (l >= size) done = true
+        else {
+          val w = if (l + 1 < size && before(heap(l), heap(l + 1))) l + 1 else l
+          if (before(heap(p), heap(w))) {
+            val t = heap(p); heap(p) = heap(w); heap(w) = t
+            p = w
+          } else done = true
+        }
       }
     }
-    new FsstTable(sorted.take(MaxSymbols).map(_._1))
+
+    /** The best MaxSymbols candidates, best first, as the next table. */
+    private def selectTop(): FsstTable = {
+      var size = 0
+      var i = 0
+      while (i < nUsed) {
+        val s = used(i)
+        if (size < MaxSymbols) {
+          var p = size
+          heap(p) = s
+          size += 1
+          while (p > 0 && before(heap((p - 1) / 2), heap(p))) {
+            val q = (p - 1) / 2
+            val t = heap(p); heap(p) = heap(q); heap(q) = t
+            p = q
+          }
+        } else if (before(s, heap(0))) {
+          heap(0) = s
+          siftDown(size)
+        }
+        i += 1
+      }
+      val syms = new Array[Array[Byte]](size)
+      while (size > 0) {
+        val s = heap(0)
+        size -= 1
+        heap(0) = heap(size)
+        siftDown(size)
+        val b = new Array[Byte](candLen(s))
+        var k = 0
+        while (k < b.length) { b(k) = (candWord(s) >>> (8 * k)).toByte; k += 1 }
+        syms(size) = b
+      }
+      new FsstTable(syms)
+    }
   }
 
   def deserialize(in: BufReader): FsstTable = {
@@ -143,122 +221,106 @@ object Fsst {
     }
     new FsstTable(syms)
   }
+
+  /** The decoded length of blob src[from, from + blobLen). */
+  private[codec] def decodedLength(table: FsstTable, src: Array[Byte], from: Int, blobLen: Int): Long = {
+    var n = 0L
+    var ip = from
+    val end = from + blobLen
+    while (ip < end) {
+      val c = src(ip) & 0xff
+      if (c == EscapeCode) { n += 1; ip += 2 }
+      else { n += table.symLen(c); ip += 1 }
+    }
+    n
+  }
+
+  /** Decodes the blob src[from, from + blobLen), value i's codes being the
+    * next clens(i) bytes, in one pass into one arena. Each symbol is one
+    * 8-byte store whose tail the next code overwrites, so a code writes at
+    * most 8 bytes and the arena is sized once at 8 × blobLen + 8 (exactly,
+    * by a counting pass, when that bound does not fit an array).
+    */
+  def decompress(table: FsstTable, src: Array[Byte], from: Int, blobLen: Int, clens: Array[Int], count: Int): DecodedStrings = {
+    val bound = 8L * blobLen + 8
+    val size = if (bound <= MaxArena) bound else decodedLength(table, src, from, blobLen) + 8
+    require(size <= MaxArena, s"FSST chunk decodes to $size bytes, more than one array holds")
+    val arena = new Array[Byte](size.toInt)
+    val starts = new Array[Int](count)
+    val lens = new Array[Int](count)
+    val symWord = table.symWord
+    val symLen = table.symLen
+    var ip = from
+    var op = 0
+    var i = 0
+    while (i < count) {
+      starts(i) = op
+      val stop = ip + clens(i)
+      while (ip < stop) {
+        val c = src(ip) & 0xff
+        if (c == EscapeCode) { arena(op) = src(ip + 1); op += 1; ip += 2 }
+        else { LongLE.set(arena, op, symWord(c)); op += symLen(c); ip += 1 }
+      }
+      lens(i) = op - starts(i)
+      i += 1
+    }
+    new DecodedStrings(arena, starts, lens, count)
+  }
+
+  private final val MaxArena = Int.MaxValue - 16L
 }
 
-/** A trained symbol table with O(1)-ish longest-match lookup. */
+/** A trained symbol table with the encoder's longest-match tables. */
 final class FsstTable(val symbols: Array[Array[Byte]]) {
   require(symbols.length <= Fsst.MaxSymbols)
 
-  // open-addressing map (packedBytes, len) -> code; capacity 2048 >> 255 entries
-  private val Cap = 2048
-  private val hkeys = new Array[Long](Cap)
-  private val hlens = new Array[Byte](Cap) // 0 = empty slot
-  private val hcodes = new Array[Short](Cap)
-  /** max symbol length starting with each first byte (probe limiter) */
-  private val firstByteMax = new Array[Byte](256)
-  /** bit l-1 set iff some symbol of length l starts with that byte — the
-    * probe loop visits only lengths that exist (code text mostly has 2-4
-    * byte symbols; blind 8..1 probing wastes ~half the encode time)
-    */
-  private val lenMask = new Array[Int](256)
+  /** Per code (255, the escape, unused): the symbol as a little-endian word and its length. */
+  private[codec] val symWord = new Array[Long](256)
+  private[codec] val symLen = new Array[Int](256)
 
   {
     var c = 0
     while (c < symbols.length) {
       val s = symbols(c)
-      val key = Fsst.pack(s, 0, s.length)
-      var h = hash(key, s.length)
-      while (hlens(h) != 0) h = (h + 1) & (Cap - 1)
-      hkeys(h) = key; hlens(h) = s.length.toByte; hcodes(h) = c.toShort
-      val fb = s(0) & 0xff
-      if (s.length > firstByteMax(fb)) firstByteMax(fb) = s.length.toByte
-      lenMask(fb) |= 1 << (s.length - 1)
+      require(s.length >= 1 && s.length <= Fsst.MaxSymbolLen, s"FSST symbol $c has ${s.length} bytes")
+      symWord(c) = Fsst.pack(s, 0, s.length)
+      symLen(c) = s.length
       c += 1
     }
   }
 
-  @inline private def hash(key: Long, len: Int): Int = {
-    val x = (key ^ (len.toLong * 0x9e3779b97f4a7c15L)) * -7046029254386353131L
-    ((x >>> 48) ^ (x >>> 24)).toInt & (Cap - 1)
-  }
+  /** Encoder tables, built on first use (a table read for decoding never needs them). */
+  private[codec] lazy val matcher = new FsstTable.Matcher(symWord, symLen, symbols.length)
 
-  @inline private def lookup(key: Long, len: Int): Int = {
-    var h = hash(key, len)
-    while (hlens(h) != 0) {
-      if (hlens(h) == len && hkeys(h) == key) return hcodes(h)
-      h = (h + 1) & (Cap - 1)
-    }
-    -1
-  }
-
-  /** Longest symbol matching data[pos..end); returns (code, len) or (-1, 0). */
-  def findLongest(data: Array[Byte], pos: Int, end: Int): (Int, Int) = {
-    val maxHere = math.min(firstByteMax(data(pos) & 0xff).toInt, end - pos)
-    if (maxHere == 0) return (-1, 0)
-    val full = Fsst.packAt(data, pos, maxHere)
-    var l = maxHere
-    while (l >= 1) {
-      val key = if (l == 8) full else full & ((1L << (8 * l)) - 1)
-      val c = lookup(key, l)
-      if (c >= 0) return (c, l)
-      l -= 1
-    }
-    (-1, 0)
-  }
-
-  /** Compress data[off, off+len) into out; returns compressed byte count. */
-  def compress(data: Array[Byte], off: Int, len: Int, out: BufWriter): Int = {
-    val before = out.size
-    val end = off + len
-    var pos = off
-    while (pos < end) {
-      val fb = data(pos) & 0xff
-      val maxHere = math.min(firstByteMax(fb).toInt, end - pos)
-      var code = -1
-      var adv = 1
-      if (maxHere > 0) {
-        val full = Fsst.packAt(data, pos, maxHere)
-        // probe longest-first, but only lengths that exist for this byte
-        var mask = lenMask(fb) & ((1 << maxHere) - 1)
-        while (code < 0 && mask != 0) {
-          val l = 32 - java.lang.Integer.numberOfLeadingZeros(mask) // highest set bit + 1
-          val key = if (l == 8) full else full & ((1L << (8 * l)) - 1)
-          val c = lookup(key, l)
-          if (c >= 0) { code = c; adv = l }
-          mask &= ~(1 << (l - 1))
-        }
-      }
-      if (code >= 0) out.u8(code)
-      else { out.u8(Fsst.EscapeCode); out.u8(fb) }
-      pos += adv
-    }
-    out.size - before
-  }
-
-  /** Decompress `clen` compressed bytes from `in` into a fresh array. */
-  def decompress(in: BufReader, clen: Int): Array[Byte] = {
-    val out = new BufWriter(clen * 3)
-    decompressInto(in, clen, out)
-    out.result()
-  }
-
-  /** Decompress into a shared arena writer; returns the decompressed
-    * length. Avoids the per-string BufWriter + result() copy of
-    * `decompress` on the hot decode path.
+  /** Compresses each value of `s` into one blob, value i's codes being the
+    * next clens(i) bytes; returns the blob, valid up to the clens' sum.
     */
-  // symbols pre-packed as (word, len) for the branch-free decode store
-  private val symWord: Array[Long] = symbols.map(s => Fsst.pack(s, 0, s.length))
-  private val symLen: Array[Int] = symbols.map(_.length)
-
-  def decompressInto(in: BufReader, clen: Int, out: BufWriter): Int = {
-    val start = out.size
-    val end = in.pos + clen
-    while (in.pos < end) {
-      val c = in.u8()
-      if (c == Fsst.EscapeCode) out.u8(in.u8())
-      else out.word(symWord(c), symLen(c)) // full-word store, advance by len
+  def compress(s: StrSlices, clens: Array[Int]): Array[Byte] = {
+    val m = matcher
+    val data = s.data
+    val bb = Fsst.le(data)
+    var out = new Array[Byte](math.max(64L, s.totalBytes / 3).toInt)
+    var op = 0
+    var i = 0
+    while (i < s.count) {
+      var pos = s.start(i)
+      val end = pos + s.len(i)
+      val need = op + 2L * (end - pos)
+      if (need > out.length)
+        out = java.util.Arrays.copyOf(out, math.min(Int.MaxValue - 16L, math.max(need, 2L * out.length)).toInt)
+      val from = op
+      while (pos < end) {
+        val cl = m.longest(data, bb, pos, end)
+        val code = cl & 0xffff
+        out(op) = code.toByte
+        if (code == Fsst.EscapeCode) { out(op + 1) = data(pos); op += 2 }
+        else op += 1
+        pos += cl >>> 16
+      }
+      clens(i) = op - from
+      i += 1
     }
-    out.size - start
+    out
   }
 
   def serialize(out: BufWriter): Unit = {
@@ -268,6 +330,85 @@ final class FsstTable(val symbols: Array[Array[Byte]]) {
       out.u8(symbols(i).length)
       out.bytes(symbols(i))
       i += 1
+    }
+  }
+}
+
+object FsstTable {
+  private final val HasLong = 1 << 24
+  private final val P3Bits = 10
+  private final val P3Mask = (1 << P3Bits) - 1
+  private final val Escape1 = Fsst.EscapeCode | 1 << 16
+
+  /** Longest-match tables of a symbol table. */
+  private[codec] final class Matcher(symWord: Array[Long], symLen: Array[Int], n: Int) {
+    /** single(b): the 1-byte symbol b, or the escape (a value's last byte). */
+    private val single = Array.fill(256)(Escape1)
+    /** short(b0 | b1 << 8): the longest 1–2-byte symbol prefixing b0 b1, or
+      * the escape, plus HasLong when a symbol of 3+ bytes starts with b0 b1.
+      */
+    private val short = new Array[Int](1 << 16)
+    // 3-byte prefix -> its symbols of 3+ bytes, open addressing (key -1 =
+    // empty); p3Range = first | end << 16 into longWord/longCode
+    private val p3Key = Array.fill(P3Mask + 1)(-1)
+    private val p3Range = new Array[Int](P3Mask + 1)
+    private val longWord = new Array[Long](n)
+    private val longCode = new Array[Int](n)
+
+    {
+      var c = n - 1 // descending, so the lowest of equal symbols wins
+      while (c >= 0) { if (symLen(c) == 1) single(symWord(c).toInt) = c | 1 << 16; c -= 1 }
+      var x = 0
+      while (x < (1 << 16)) { short(x) = single(x & 0xff); x += 1 }
+      c = n - 1
+      while (c >= 0) { if (symLen(c) == 2) short(symWord(c).toInt) = c | 2 << 16; c -= 1 }
+      // symbols of 3+ bytes grouped by 3-byte prefix, longest (then lowest code) first
+      val long = (0 until n).filter(symLen(_) >= 3)
+        .sortBy(c => (symWord(c) & 0xffffff, -symLen(c), c)).toArray
+      var i = 0
+      while (i < long.length) {
+        val c = long(i)
+        val p = (symWord(c) & 0xffffff).toInt
+        short(p & 0xffff) |= HasLong
+        var h = slot(p)
+        while (p3Key(h) != p && p3Key(h) != -1) h = (h + 1) & P3Mask
+        if (p3Key(h) == -1) { p3Key(h) = p; p3Range(h) = i }
+        p3Range(h) = (p3Range(h) & 0xffff) | (i + 1) << 16
+        longWord(i) = symWord(c)
+        longCode(i) = c | symLen(c) << 16
+        i += 1
+      }
+    }
+
+    @inline private def slot(p: Int): Int = (p * 0x9e3779b1) >>> (32 - P3Bits)
+
+    /** Longest symbol that prefixes data[pos, end), as `code | len << 16`,
+      * or `EscapeCode | 1 << 16` when none does; equal symbols match their
+      * lowest code. `bb` wraps `data` little-endian.
+      */
+    def longest(data: Array[Byte], bb: ByteBuffer, pos: Int, end: Int): Int = {
+      val r = end - pos
+      val w = Fsst.window(data, bb, pos)
+      if (r < 2) return single(w.toInt & 0xff)
+      val e = short(w.toInt & 0xffff)
+      if ((e & HasLong) != 0 && r >= 3) {
+        val p = w.toInt & 0xffffff
+        var h = slot(p)
+        var k = p3Key(h)
+        while (k != p && k != -1) { h = (h + 1) & P3Mask; k = p3Key(h) }
+        if (k == p) {
+          val rng = p3Range(h)
+          var i = rng & 0xffff
+          val stop = rng >>> 16
+          while (i < stop) {
+            val cl = longCode(i)
+            val l = cl >>> 16
+            if (l <= r && (w & (-1L >>> ((8 - l) << 3))) == longWord(i)) return cl
+            i += 1
+          }
+        }
+      }
+      e & ~HasLong
     }
   }
 }

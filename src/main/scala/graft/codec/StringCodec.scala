@@ -161,21 +161,19 @@ object StringCodec {
     IntCodec.encode(out, codes, 0, s.count, depth - 1, cfg)
   }
 
-  private def encFsst(out: BufWriter, table: FsstTable, s: StrSlices, depth: Int, cfg: BtrConfig): Unit = {
+  private[codec] def encFsst(out: BufWriter, table: FsstTable, s: StrSlices, depth: Int, cfg: BtrConfig): Unit = {
     val len = s.count
     out.u8(TagFsst)
     out.i32(len)
     table.serialize(out)
-    val blob = new BufWriter(math.max(64, (s.totalBytes / 3).toInt))
     val clens = new Array[Int](len)
+    val blob = table.compress(s, clens)
+    var blobLen = 0
     var i = 0
-    while (i < len) {
-      clens(i) = table.compress(s.data, s.start(i), s.len(i), blob)
-      i += 1
-    }
+    while (i < len) { blobLen += clens(i); i += 1 }
     IntCodec.encode(out, clens, 0, len, depth - 1, cfg)
-    out.i32(blob.size)
-    out.bytes(blob.buffer, 0, blob.size)
+    out.i32(blobLen)
+    out.bytes(blob, 0, blobLen)
   }
 
   // ---------------------------------------------------------------- decode
@@ -233,16 +231,9 @@ object StringCodec {
         val table = Fsst.deserialize(in)
         val clens = IntCodec.decode(in)
         val blobLen = in.i32()
-        val arena = new BufWriter(math.max(64, blobLen * 2))
-        val starts = new Array[Int](len)
-        val lens = new Array[Int](len)
-        var i = 0
-        while (i < len) {
-          starts(i) = arena.size
-          lens(i) = table.decompressInto(in, clens(i), arena)
-          i += 1
-        }
-        new DecodedStrings(arena.buffer, starts, lens, len)
+        val d = Fsst.decompress(table, in.arr, in.pos, blobLen, clens, len)
+        in.pos += blobLen
+        d
     }
   }
 

@@ -17,10 +17,12 @@ import java.nio.charset.StandardCharsets.UTF_8
   *    whole rendering at once.
   *
   * Rendering is the `print-csv` text: one header line, comma-joined
-  * values, '\n' terminators (btr columns are non-null by model, so no
-  * null cases arise; values are NOT quoted — the byte-view contract is
-  * positional, and parse-ability is only promised for values free of
-  * ','/'\n', like the reference's plain renderer). Row order is the
+  * values, '\n' terminators (a NULL renders as an empty cell, the inverse
+  * of CSV ingest, whose reader takes an empty cell as NULL before
+  * `BtrCsv.fromCsv` fills the defaults; values are NOT quoted — the
+  * byte-view contract is positional, and parse-ability is only promised
+  * for values free of ','/'\n', like the reference's plain renderer).
+  * Row order is the
   * deterministic decode order,
   * pulled ONE Spark partition at a time via toLocalIterator — driver
   * memory stays bounded by (one partition's rows) + cache, never the

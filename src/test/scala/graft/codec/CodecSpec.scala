@@ -227,32 +227,159 @@ class CodecSpec extends AnyFunSuite {
 
   // ---------------------------------------------------------------- fsst unit
 
+  /** Round-trips `values` through `table` and StringCodec's FSST block; returns the blob length. */
+  def fsstRoundTrip(table: FsstTable, values: Array[Array[Byte]]): Int = {
+    val s = StrSlices.of(values)
+    val out = new BufWriter()
+    StringCodec.encFsst(out, table, s, cfg.maxCascadeDepth, cfg)
+    val dec = StringCodec.decode(out.result())
+    assert(dec.length == values.length)
+    values.indices.foreach(i => assert(java.util.Arrays.equals(dec(i), values(i)), s"fsst mismatch at $i"))
+    val clens = new Array[Int](values.length)
+    table.compress(s, clens)
+    clens.sum
+  }
+
   test("fsst: table round-trip on repetitive text") {
     val text = ("http://www.example.org/path/to/resource?id=" * 500).getBytes(UTF_8)
     val table = Fsst.train(text)
     assert(table.symbols.nonEmpty)
-    val out = new BufWriter()
-    val clen = table.compress(text, 0, text.length, out)
+    val clen = fsstRoundTrip(table, Array(text))
     assert(clen < text.length / 2, s"fsst should halve urls, got $clen vs ${text.length}")
-    val dec = table.decompress(new BufReader(out.result()), clen)
-    assert(java.util.Arrays.equals(dec, text))
   }
 
   test("fsst: empty table escapes everything") {
     val table = new FsstTable(Array.empty)
     val data = Array[Byte](1, 2, 3, -1, 0)
-    val out = new BufWriter()
-    val clen = table.compress(data, 0, data.length, out)
-    assert(clen == data.length * 2)
-    assert(java.util.Arrays.equals(table.decompress(new BufReader(out.result()), clen), data))
+    assert(fsstRoundTrip(table, Array(data)) == data.length * 2)
   }
 
   test("fsst: 0xFF bytes (escape collision) round-trip") {
     val data = Array.fill[Byte](1000)(-1) // 0xFF
-    val table = Fsst.train(data)
-    val out = new BufWriter()
-    val clen = table.compress(data, 0, data.length, out)
-    assert(java.util.Arrays.equals(table.decompress(new BufReader(out.result()), clen), data))
+    fsstRoundTrip(Fsst.train(data), Array(data))
+  }
+
+  /** Plain greedy longest match: at each position try every symbol and keep
+    * the longest that fits inside the value (the lowest code among equals).
+    */
+  def oracleCompress(symbols: Array[Array[Byte]], v: Array[Byte]): Array[Byte] = {
+    val out = Array.newBuilder[Byte]
+    var pos = 0
+    while (pos < v.length) {
+      var best = -1
+      var c = 0
+      while (c < symbols.length) {
+        val s = symbols(c)
+        if (pos + s.length <= v.length && (best < 0 || s.length > symbols(best).length) &&
+            java.util.Arrays.equals(s, 0, s.length, v, pos, pos + s.length)) best = c
+        c += 1
+      }
+      if (best >= 0) { out += best.toByte; pos += symbols(best).length }
+      else { out += Fsst.EscapeCode.toByte; out += v(pos); pos += 1 }
+    }
+    out.result()
+  }
+
+  test("fsst: encoder equals a plain greedy longest match on seeded tables") {
+    val rnd = new scala.util.Random(67)
+    val alphabet = "abcd".getBytes(UTF_8) :+ (-1).toByte
+    def word(n: Int): Array[Byte] = Array.fill(n)(alphabet(rnd.nextInt(alphabet.length)))
+    val shared = "abc".getBytes(UTF_8)
+    val tables = Seq(
+      "shared 3-byte prefix" -> (Array.fill(40)(shared ++ word(rnd.nextInt(6))) ++
+        Array.fill(30)(word(1 + rnd.nextInt(2))) ++ Array.fill(20)(word(3 + rnd.nextInt(6)))),
+      "8-byte symbols" -> (Array.fill(60)(word(8)) ++ Array.fill(10)(word(1 + rnd.nextInt(7)))),
+      "0xFF bytes" -> Array.fill(255)(Array.fill(1 + rnd.nextInt(8))((-1).toByte)),
+      "full random" -> Array.fill(255)(word(1 + rnd.nextInt(8))),
+      "empty" -> Array.empty[Array[Byte]])
+    for ((name, symbols) <- tables) {
+      val table = new FsstTable(symbols)
+      for (round <- 0 until 40) {
+        val values = Array.fill(1 + rnd.nextInt(12)) {
+          rnd.nextInt(6) match {
+            case 0 => Array.empty[Byte]
+            case 1 => word(1)
+            case 2 => word(2)
+            case _ => word(3 + rnd.nextInt(38))
+          }
+        }
+        // exact-size arena, so the last values end within 8 bytes of its end
+        val s = StrSlices.of(values)
+        val exact = new StrSlices(java.util.Arrays.copyOf(s.data, s.offsets(s.count)), s.offsets, s.count)
+        val clens = new Array[Int](values.length)
+        val blob = table.compress(exact, clens)
+        var at = 0
+        values.indices.foreach { i =>
+          val got = java.util.Arrays.copyOfRange(blob, at, at + clens(i))
+          val want = oracleCompress(symbols, values(i))
+          assert(got.sameElements(want), s"$name round $round value $i: codes differ from the oracle")
+          at += clens(i)
+        }
+        fsstRoundTrip(table, values)
+      }
+    }
+  }
+
+  test("fsst: one-shot decode arena holds the tight cases exactly") {
+    val syms = Array("abcdefgh", "ijklmnop", "x").map(_.getBytes(UTF_8))
+    val table = new FsstTable(syms)
+    def decodeBlob(values: Array[Array[Byte]]): (DecodedStrings, Int) = {
+      val s = StrSlices.of(values)
+      val clens = new Array[Int](values.length)
+      val blob = table.compress(s, clens)
+      val d = Fsst.decompress(table, blob, 0, clens.sum, clens, values.length)
+      assert(d.count == values.length)
+      values.indices.foreach(i => assert(java.util.Arrays.equals(d.copy(i), values(i)), s"value $i"))
+      assert(d.data.length == 8 * clens.sum + 8)
+      assert(Fsst.decodedLength(table, blob, 0, clens.sum) == values.map(_.length.toLong).sum)
+      (d, clens.sum)
+    }
+    // only 8-byte symbols: 8 bytes out per blob byte, the bound is tight, and
+    // the last value's final 8-byte store ends at the bound
+    val eights = Array("abcdefghijklmnop", "ijklmnopabcdefghabcdefgh", "abcdefgh").map(_.getBytes(UTF_8))
+    val (d8, blob8) = decodeBlob(eights)
+    assert(d8.starts.last + d8.lens.last == 8 * blob8)
+    // only escapes
+    val rnd = new scala.util.Random(71)
+    val esc = Array.fill(20)(Array.fill(rnd.nextInt(30))(("ABC" (rnd.nextInt(3))).toByte))
+    assert(decodeBlob(esc)._2 == 2 * esc.map(_.length).sum)
+    // a chunk of empty strings: every clens is 0
+    val (de, blobE) = decodeBlob(Array.fill(100)(Array.empty[Byte]))
+    assert(blobE == 0 && de.lens.forall(_ == 0))
+    // 8-byte symbols, escapes and a 1-byte symbol mixed, ending on an 8-byte symbol
+    decodeBlob(Array("xZabcdefgh", "", "Zijklmnop").map(_.getBytes(UTF_8)))
+  }
+
+  /** Training samples whose tables are pinned: code-like text, 40-char hex
+    * strings and a repeated URL.
+    */
+  private def trainSamples: Seq[(String, Array[Byte])] = {
+    val rnd = new scala.util.Random(59)
+    val kw = Array("def ", "val ", "return ", "import ", "class ", "object ", "if (", "while (")
+    val ids = Array("index", "value", "result", "buffer", "stream", "count", "offset", "length")
+    val code = Seq.fill(2000)(
+      "  " * rnd.nextInt(4) + kw(rnd.nextInt(kw.length)) + ids(rnd.nextInt(ids.length)) +
+        " = " + ids(rnd.nextInt(ids.length)) + s".get(${rnd.nextInt(1000)})\n").mkString
+    val hex = Seq.fill(2000)(Seq.fill(40)("0123456789abcdef" (rnd.nextInt(16))).mkString).mkString
+    val url = "http://www.example.org/path/to/resource?id=" * 500
+    Seq("code text" -> code, "hex40" -> hex, "repeated url" -> url).map { case (n, s) => n -> s.getBytes(UTF_8) }
+  }
+
+  /** CRC32C of `FsstTable.serialize` after `Fsst.train` on each sample. */
+  private val pinnedTables = Map(
+    "code text" -> 0x06dac717L,
+    "hex40" -> 0x1920ebc0L,
+    "repeated url" -> 0xc238b36fL)
+
+  test("fsst: trained tables are pinned") {
+    val got = trainSamples.map { case (name, s) =>
+      val w = new BufWriter()
+      Fsst.train(s).serialize(w)
+      name -> crc32c(w.result())
+    }
+    val changed = got.filter { case (name, crc) => !pinnedTables.get(name).contains(crc) }
+    assert(changed.isEmpty,
+      "trained tables changed: " + changed.map { case (n, c) => f"$n -> 0x$c%08xL" }.mkString(", "))
   }
 
   // ----------------------------------------------------------- arena slices
