@@ -252,9 +252,11 @@ object BlockFiles {
     * Each chunk travels as ONE frame record keyed by an order-preserving
     * binary encoding of its first row's `rangeCols` values plus a per-chunk
     * round-robin salt byte (a hot key's chunks spread over 16 writers
-    * instead of serializing one). The writer task just concatenates the
-    * frames it receives — no re-encode, so the reduce side is pure
-    * sequential IO.
+    * instead of serializing one). The shuffle sorts each writer's frames
+    * by that key (Spark's sorter, which spills), so a writer's file holds
+    * its chunks in key order whatever order the input splits arrive in;
+    * the writer task then just concatenates them — no re-encode, so the
+    * reduce side is pure sequential IO.
     *
     * SINGLE-PASS (round-6, guide §2.4): range bounds come from a cheap
     * up-front stride-sample of ONLY the key columns (a few thousand rows
@@ -313,7 +315,9 @@ object BlockFiles {
     val kTypes = BtrEncoder.validateSchema(keyDf.schema)
     val kIdx = Array.tabulate(rangeCols.length)(identity)
     val blockRows = cfg.blockSize
-    val samples: Array[Array[Byte]] = keyDf.queryExecution.toRdd.mapPartitions { it =>
+    val keyRdd = keyDf.queryExecution.toRdd
+    val numSplits = keyRdd.getNumPartitions
+    val samples: Array[Array[Byte]] = keyRdd.mapPartitions { it =>
       val keys = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
       var stride = 1L
       var i = 0L
@@ -331,9 +335,9 @@ object BlockFiles {
       }
       if (keys.isEmpty) Iterator.empty
       else {
-        val sorted = keys.toArray.sortWith(java.util.Arrays.compareUnsigned(_, _) < 0)
+        val sorted = keys.toArray.sorted(UnsignedBytes)
         val nChunks = math.max(1L, (i + blockRows - 1) / blockRows)
-        val emit = math.min(nChunks, 64L).toInt
+        val emit = boundsEmission(nChunks, numSplits)
         Iterator.tabulate(emit) { e =>
           val ci = e.toLong * nChunks / emit
           val pos = math.min(sorted.length - 1,
@@ -342,7 +346,7 @@ object BlockFiles {
         }
       }
     }.collect()
-    val extended = samples.sortWith(java.util.Arrays.compareUnsigned(_, _) < 0)
+    val extended = samples.sorted(UnsignedBytes)
     val bounds: Array[Array[Byte]] =
       if (extended.isEmpty) Array.empty
       else Array.tabulate(n - 1) { j => extended(((j + 1).toLong * extended.length / n).toInt) }
@@ -366,20 +370,38 @@ object BlockFiles {
     val blocksDir = write.stage()
     val confB = ConfShim.broadcast(df.sparkSession.sparkContext)
     try {
-      val stats: Array[WriterCommitMessage] = keyed.partitionBy(partitioner).mapPartitions { it =>
-        if (it.isEmpty) Iterator.empty
-        else {
-          val tc = TaskContext.get()
-          Iterator.single[WriterCommitMessage](writeFrames(
-            ConfShim.conf(confB), blocksDir, tc.partitionId(), tc.taskAttemptId(), it.map(_._2)))
-        }
-      }.collect()
+      implicit val keyOrder: Ordering[Array[Byte]] = UnsignedBytes
+      val stats: Array[WriterCommitMessage] =
+        keyed.repartitionAndSortWithinPartitions(partitioner).mapPartitions { it =>
+          if (it.isEmpty) Iterator.empty
+          else {
+            val tc = TaskContext.get()
+            Iterator.single[WriterCommitMessage](writeFrames(
+              ConfShim.conf(confB), blocksDir, tc.partitionId(), tc.taskAttemptId(), it.map(_._2)))
+          }
+        }.collect()
       write.commit(stats)
     } catch {
       case e: Throwable =>
         write.abort(Array.empty)
         throw e
     }
+  }
+
+  /** Key budget of the compressed exchange's bounds sample. */
+  final val KeyBudget = 1 << 14
+
+  /** Keys one input split of `nChunks` estimated chunks emits to the bounds
+    * sample: one per chunk start, at most 64, and at most the split's
+    * share of `KeyBudget` (but at least one), so the sample holds at most
+    * max(KeyBudget, numSplits) keys however many splits the input has.
+    */
+  def boundsEmission(nChunks: Long, numSplits: Int): Int =
+    math.min(nChunks, math.min(64L, math.max(1L, KeyBudget.toLong / math.max(1, numSplits)))).toInt
+
+  /** Unsigned-lexicographic order of the binary range keys. */
+  object UnsignedBytes extends Ordering[Array[Byte]] {
+    def compare(a: Array[Byte], b: Array[Byte]): Int = java.util.Arrays.compareUnsigned(a, b)
   }
 
   /** Range partitioner over the order-preserving binary keys

@@ -42,16 +42,17 @@ private[sources] object AggFolds {
   * at construction, so a file yields exactly one partial row even when
   * every chunk is zone-rejected (count 0, MIN/MAX/SUM NULL).
   *
-  * Per chunk, three-way: zone-rejected → skipped unread; the zones PROVE
-  * every row matches the claimed filters and the group columns are
-  * CONSTANT (zone min == max, or all-NULL; always so without group
-  * columns) → folded from headers alone, decoding only the zone-less agg
-  * columns (NaN, long-string and all-null cases); otherwise the filter +
-  * group + agg columns decode and rows fold one by one. Every decode is
-  * `FrameReader.decodeColumn` (length-checked against the frame) and rows
-  * match through `ExactPred.rowMatches`, as in the scan readers.
-  * COUNT(col) never decodes its column — the validity bitmap is
-  * header-resident.
+  * Per chunk, three-way over the one `ChunkCursor`: zone-rejected →
+  * skipped unread by the cursor; the zones PROVE every row matches the
+  * claimed filters and the group columns are CONSTANT (zone min == max, or
+  * all-NULL; always so without group columns) → folded from headers
+  * alone, loading only the zone-less agg columns (NaN, long-string and
+  * all-null cases); otherwise the filter + group + agg columns load and
+  * rows fold one by one. Every decode is the cursor's `load` (length-checked
+  * against the frame), rows match through `ExactPred.rowMatches` as in the
+  * scan readers, and a chunk lacking an aggregated, grouped or filtered
+  * column is the cursor's named error. COUNT(col) never decodes its column
+  * — the validity bitmap is header-resident.
   *
   * The scale shape is `SELECT day, count(*) … GROUP BY day` on a
   * day-clustered 100 TB table: only chunks spanning a group boundary (or
@@ -74,6 +75,7 @@ object BtrAggReader {
 class BtrAggReader(
     file: String,
     conf: org.apache.hadoop.conf.Configuration,
+    colTypes: Array[Int],
     specs: Seq[AggSpec],
     zones: Array[ExactPred] = Array.empty,
     exact: Array[ExactPred] = Array.empty,
@@ -81,11 +83,8 @@ class BtrAggReader(
   extends PartitionReader[InternalRow] {
 
   private val aggs = specs.toArray
-  // opened by the first next(), not here: Spark counts a task's input bytes
-  // only from reads made after the reader is constructed
-  private var fr: FrameReader = _
-  private var chunksSkipped = 0L
-  private var chunksTotal = 0L
+  private val cursor =
+    new ChunkCursor(file, conf, colTypes, aggs.map(specCol).filter(_ >= 0) ++ groupIdx, zones, exact)
   private var chunksHeaderOnly = 0L
   private var chunksDecoded = 0L
 
@@ -171,8 +170,8 @@ class BtrAggReader(
     val vs = new Array[AnyRef](groupIdx.length)
     var g = 0
     while (g < groupIdx.length) {
-      val z = fr.zone(groupIdx(g))
-      if (z.nullCount == fr.numRows) vs(g) = null
+      val z = cursor.zone(groupIdx(g))
+      if (z.nullCount == cursor.chunkRows) vs(g) = null
       else if (z.nullCount == 0) {
         z.kind match {
           case 1 =>
@@ -198,24 +197,25 @@ class BtrAggReader(
     * GState; only zone-less agg columns decode.
     */
   private def foldHeaders(st: GState): Unit = {
-    st.count += fr.numRows
+    val rows = cursor.chunkRows
+    st.count += rows
     var s = 0
     while (s < aggs.length) {
       aggs(s) match {
         case MinMaxSpec(c, isMin) =>
-          val z = fr.zone(c)
+          val z = cursor.zone(c)
           z.kind match {
             case 1 => AggFolds.foldLong(st.acc, s, if (isMin) z.lmin else z.lmax, isMin)
             case 2 => AggFolds.foldDouble(st.acc, s,
               java.lang.Double.longBitsToDouble(if (isMin) z.lmin else z.lmax), isMin)
             case 3 => AggFolds.foldBytes(st.acc, s, if (isMin) z.smin else z.smax, isMin)
-            case _ => () // no zone: decoded below
+            case _ => () // no zone: loaded below
           }
-        case CountColSpec(c) if c < fr.nCols =>
-          st.cnt(s) += fr.numRows - fr.zone(c).nullCount
-        case SumSpec(c, isDouble) if fr.zone(c).kind != 0 =>
+        case CountColSpec(c) =>
+          st.cnt(s) += rows - cursor.zone(c).nullCount
+        case SumSpec(c, isDouble) if cursor.zone(c).kind != 0 =>
           // a numeric zone always carries the chunk's exact non-null sum
-          val sum = fr.zone(c).sum
+          val sum = cursor.zone(c).sum
           if (isDouble) st.sumD(s) += java.lang.Double.longBitsToDouble(sum)
           else st.sumL(s) += sum
           st.sumSeen(s) = true
@@ -223,30 +223,28 @@ class BtrAggReader(
       }
       s += 1
     }
-    // decode pass for zone-less MIN/MAX/SUM columns, ascending column
-    // order (FrameReader contract); all-NULL columns contribute nothing
-    val needCols = aggs.indices
-      .filter(s => aggs(s) match {
-        case _: MinMaxSpec | _: SumSpec =>
-          val c = specCol(aggs(s))
-          c < fr.nCols && fr.zone(c).kind == 0 && fr.zone(c).nullCount < fr.numRows
-        case _ => false
-      })
-      .sortBy(s => specCol(aggs(s)))
-    var lastCol = -1
-    var values: AnyRef = null
-    needCols.foreach { s =>
-      val c = specCol(aggs(s))
-      if (c != lastCol) { values = fr.decodeColumn(c); lastCol = c }
-      val nb = fr.nullBits(c)
-      var i = 0
-      while (i < fr.numRows) {
-        if (!ExactPred.isNull(nb, i)) foldValue(st, s, values, i)
-        i += 1
+    // zone-less MIN/MAX/SUM columns load and fold value by value; all-NULL
+    // columns contribute nothing
+    val need = aggs.indices.filter(s => aggs(s) match {
+      case _: MinMaxSpec | _: SumSpec =>
+        val z = cursor.zone(specCol(aggs(s)))
+        z.kind == 0 && z.nullCount < rows
+      case _ => false
+    })
+    if (need.isEmpty) chunksHeaderOnly += 1
+    else {
+      chunksDecoded += 1
+      cursor.load(need.map(s => specCol(aggs(s))).distinct.sorted.toArray)
+      need.foreach { s =>
+        val c = specCol(aggs(s))
+        val nb = cursor.nulls(c)
+        var i = 0
+        while (i < rows) {
+          if (!ExactPred.isNull(nb, i)) foldValue(st, s, cursor.data(c), i)
+          i += 1
+        }
       }
     }
-    if (needCols.isEmpty) chunksHeaderOnly += 1 else chunksDecoded += 1
-    fr.finishChunk()
   }
 
   /** Fold row `i` of decoded column `values` into MIN/MAX or SUM slot `s`. */
@@ -261,8 +259,7 @@ class BtrAggReader(
       values match {
         case a: Array[Int]    => st.sumL(s) += a(i); st.sumSeen(s) = true
         case a: Array[Double] => st.sumD(s) += a(i); st.sumSeen(s) = true
-        case _ => throw new java.io.IOException(
-          s"corrupt btr block file ${fr.where}: string column under SUM pushdown")
+        case _ => throw new IllegalStateException("string column under SUM pushdown")
       }
     case _ => ()
   }
@@ -274,7 +271,7 @@ class BtrAggReader(
     case CountSpec        => -1
   }
 
-  /** Row-level path: decode filter (when not all-match) + group + agg
+  /** Row-level path: load filter (when not all-match) + group + agg
     * columns, route each passing row to its group's state (the one state
     * of an ungrouped aggregate, with no per-row key).
     */
@@ -285,14 +282,12 @@ class BtrAggReader(
       case SumSpec(c, _)    => c
     }
     val filterCols = if (evalFilter) exact.flatMap(_.cols) else Array.empty[Int]
-    val cols = (filterCols ++ groupIdx ++ aggCols).distinct.sorted.filter(_ < fr.nCols)
-    val byCol = new Array[AnyRef](fr.nCols)
-    cols.foreach(c => byCol(c) = fr.decodeColumn(c))
-    fr.finishChunk()
-    val nulls = fr.nullBits
+    cursor.load((filterCols ++ groupIdx ++ aggCols).distinct.sorted)
+    val data = cursor.data
+    val nulls = cursor.nulls
     var i = 0
-    while (i < fr.numRows) {
-      if (!evalFilter || ExactPred.rowMatches(exact, byCol, nulls, i)) {
+    while (i < cursor.chunkRows) {
+      if (!evalFilter || cursor.rowMatches(i)) {
         val st = if (single != null) single else {
           val vs = new Array[AnyRef](groupIdx.length)
           var g = 0
@@ -300,7 +295,7 @@ class BtrAggReader(
             val c = groupIdx(g)
             vs(g) =
               if (ExactPred.isNull(nulls(c), i)) null
-              else byCol(c) match {
+              else data(c) match {
                 case a: Array[Int]     => Int.box(a(i))
                 case a: Array[Double]  => Double.box(normD(a(i)))
                 case d: DecodedStrings => UTF8String.fromBytes(d.copy(i))
@@ -313,9 +308,9 @@ class BtrAggReader(
         var s = 0
         while (s < aggs.length) {
           val c = specCol(aggs(s))
-          if (c >= 0 && c < fr.nCols && !ExactPred.isNull(nulls(c), i)) aggs(s) match {
+          if (c >= 0 && !ExactPred.isNull(nulls(c), i)) aggs(s) match {
             case _: CountColSpec => st.cnt(s) += 1
-            case _               => foldValue(st, s, byCol(c), i)
+            case _               => foldValue(st, s, data(c), i)
           }
           s += 1
         }
@@ -324,14 +319,10 @@ class BtrAggReader(
     }
   }
 
-  /** Process one chunk into the combine map; false at end of file. */
+  /** Fold one surviving chunk into the combine map; false at end of file. */
   private def processChunk(): Boolean = {
-    if (!fr.nextHeader()) return false
-    chunksTotal += 1
-    if (zones.exists(_.rejects(fr.zones))) {
-      fr.finishChunk()
-      chunksSkipped += 1
-    } else if (exact.forall(_.allMatch(fr.zones))) {
+    if (!cursor.nextChunk()) return false
+    if (cursor.chunkAllMatch) {
       if (single != null) foldHeaders(single)
       else constGroupKey() match {
         case Some(vs) => foldHeaders(state(vs))
@@ -342,7 +333,6 @@ class BtrAggReader(
   }
 
   override def next(): Boolean = {
-    if (fr == null) fr = new FrameReader(file, conf)
     while (pending.isEmpty && !eof) {
       if (!processChunk()) { flush(); eof = true }
       else if (groups.size >= BtrAggReader.FlushGroups) flush()
@@ -354,9 +344,8 @@ class BtrAggReader(
   override def get(): InternalRow = cur
 
   override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(BtrTaskMetric("chunksSkipped", chunksSkipped), BtrTaskMetric("chunksTotal", chunksTotal),
-      BtrTaskMetric("aggChunksHeaderOnly", chunksHeaderOnly),
+    cursor.metrics ++ Array(BtrTaskMetric("aggChunksHeaderOnly", chunksHeaderOnly),
       BtrTaskMetric("aggChunksDecoded", chunksDecoded))
 
-  override def close(): Unit = if (fr != null) fr.close()
+  override def close(): Unit = cursor.close()
 }

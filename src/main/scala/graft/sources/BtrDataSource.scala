@@ -452,7 +452,8 @@ class BtrScan(
     val spark = SparkSession.active
     val confB = ConfShim.broadcast(spark.sparkContext)
     val colIdx = required.fieldNames.map(n => fullSchema.fieldIndex(n))
-    val f = BtrReaderFactory(confB, colIdx, zones, limit, exact, topN)
+    val f = BtrReaderFactory(confB, BtrEncoder.validateSchema(fullSchema), colIdx, zones, limit,
+      exact, topN)
     f.extraZones = runtimeZones
     factoryRef = f
     f
@@ -517,7 +518,7 @@ class BtrMicroBatchStream(
   override def createReaderFactory(): PartitionReaderFactory = {
     val confB = ConfShim.broadcast(SparkSession.active.sparkContext)
     val colIdx = required.fieldNames.map(n => fullSchema.fieldIndex(n))
-    BtrReaderFactory(confB, colIdx, zones, -1, exact)
+    BtrReaderFactory(confB, BtrEncoder.validateSchema(fullSchema), colIdx, zones, -1, exact)
   }
 
   override def commit(end: Offset): Unit = ()
@@ -594,12 +595,13 @@ class BtrAggScan(dir: String, fullSchema: StructType, specs: Seq[AggSpec],
 
   override def createReaderFactory(): PartitionReaderFactory = {
     val confB = ConfShim.broadcast(SparkSession.active.sparkContext)
-    BtrAggReaderFactory(confB, specs, zones, exact, groupIdx)
+    BtrAggReaderFactory(confB, BtrEncoder.validateSchema(fullSchema), specs, zones, exact, groupIdx)
   }
 }
 
 case class BtrAggReaderFactory(
     confB: org.apache.spark.broadcast.Broadcast[ConfShim.SerConf],
+    colTypes: Array[Int],
     specs: Seq[AggSpec],
     zones: Array[ExactPred] = Array.empty,
     exact: Array[ExactPred] = Array.empty,
@@ -607,13 +609,14 @@ case class BtrAggReaderFactory(
   extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new BtrAggReader(partition.asInstanceOf[BtrInputPartition].file, ConfShim.conf(confB),
-      specs, zones, exact, groupIdx)
+      colTypes, specs, zones, exact, groupIdx)
 }
 
 case class BtrInputPartition(file: String) extends InputPartition
 
 case class BtrReaderFactory(
     confB: org.apache.spark.broadcast.Broadcast[ConfShim.SerConf],
+    colTypes: Array[Int],
     requiredIdx: Array[Int],
     zones: Array[ExactPred],
     limit: Int = -1,
@@ -640,90 +643,119 @@ case class BtrReaderFactory(
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new BtrTopNReader(partition.asInstanceOf[BtrInputPartition].file, ConfShim.conf(confB),
-      requiredIdx, allZones, exact, topN.get)
+      colTypes, requiredIdx, allZones, exact, topN.get)
 
   override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] =
     new BtrColumnarReader(
       partition.asInstanceOf[BtrInputPartition].file, ConfShim.conf(confB),
-      requiredIdx, allZones, limit, exact)
+      colTypes, requiredIdx, allZones, limit, exact)
 }
 
-/** Streams one block file chunk-by-chunk (bounded memory — the reference's
-  * ChunkedDecompressionStream semantics, pull-based). Pruned columns'
-  * blobs are skipped via their frame lengths without decoding; chunks a
-  * pushed predicate rejects are skipped whole. Shared by the columnar and
-  * TopN readers.
+/** THE chunk loop of every btr reader (columnar, TopN, aggregate): streams
+  * one block file chunk by chunk (bounded memory — the reference's
+  * ChunkedDecompressionStream semantics, pull-based) and applies the
+  * paper's per-chunk scan rule in one place. `nextChunk()` parses the next
+  * header, skips (unread) every chunk a static zone predicate rejects and
+  * sets `chunkAllMatch` for the survivor; the reader then either drops it
+  * (`skip()`, counted like a zone skip), folds it from the header alone
+  * (`zone`, `nulls`, `chunkRows`) or decodes the columns it needs
+  * (`load`). Pruned and unloaded columns' blobs are seeked over, never
+  * read.
+  *
+  * One column rule: `colTypes` are the table's column types, and every
+  * column a reader `uses` (plus every zone and claimed-filter column) must
+  * be present in each chunk under that type; otherwise the chunk is a
+  * named IOException naming the file, the chunk, the column and both
+  * values — never a short fold or a bare `require`.
+  *
+  * The file opens on the first `nextChunk()`, not here: Spark counts a
+  * task's input bytes only from reads made after the reader is
+  * constructed.
   */
 final class ChunkCursor(
     file: String,
     conf: org.apache.hadoop.conf.Configuration,
-    readIdx: Array[Int],
+    colTypes: Array[Int],
+    uses: Array[Int],
     zones: Array[ExactPred],
-    exact: Array[ExactPred] = Array.empty) {
+    exact: Array[ExactPred]) {
 
-  private val fr = new FrameReader(file, conf)
+  private var fr: FrameReader = _
+  private val checked: Array[Int] =
+    (uses ++ zones.flatMap(_.cols) ++ exact.flatMap(_.cols)).distinct.sorted
 
-  /** Chunks skipped via zone maps (observable: DSv2 CustomMetric + tests)
-    * and total chunks seen (skipped + read) — together the pruning ratio.
+  /** Chunks skipped (zone-rejected or dropped by `skip()`) and seen —
+    * together the pruning ratio.
     */
   var chunksSkipped: Long = 0L
   var chunksTotal: Long = 0L
 
-  /** Optional DYNAMIC skip predicate consulted per chunk alongside the
-    * static zones — the pushed-TopN reader points this at its running
-    * threshold ("can this chunk's zone beat the worst kept row?"), which
-    * tightens as better rows arrive; dynamic skips count in
-    * `chunksSkipped` like static ones.
+  /** The current chunk's loaded columns (Array[Int] / Array[Double] /
+    * DecodedStrings), indexed by FILE column; columns not loaded are null.
     */
-  var dynSkip: IndexedSeq[ColZone] => Boolean = null
-
-  // columns to decode, ascending (FrameReader contract) = the caller's
-  // columns ∪ exact-filter columns (a claimed filter's column may be
-  // pruned from the output projection; compounds may span several)
-  private val readCols: Array[Int] = (readIdx ++ exact.flatMap(_.cols)).distinct.sorted
-
-  /** The current chunk's decoded values (Array[Int] / Array[Double] /
-    * DecodedStrings) and validity bitmaps (bit i set = row i NULL; null
-    * when the column has no nulls — placeholder values are masked by it),
-    * both indexed by FILE column; unread columns stay null.
-    */
-  val data = new Array[AnyRef](if (readCols.isEmpty) 0 else readCols.max + 1)
-  val nulls = new Array[Array[Byte]](data.length)
+  val data = new Array[AnyRef](colTypes.length)
   var chunkRows = 0
   /** True when the zones PROVE every row of this chunk satisfies the
     * exact-claimed predicates — rowMatches need not be consulted.
     */
   var chunkAllMatch = true
 
+  /** The current chunk's validity bitmaps by file column (bit i set = row
+    * i NULL; null when the column has no nulls — placeholder values are
+    * masked by it). Header-resident: valid before any `load`.
+    */
+  def nulls: Array[Array[Byte]] = fr.nullBits
+  /** Column `c`'s zone in the current chunk's header. */
+  def zone(c: Int): ColZone = fr.zone(c)
+
   /** Does row `i` of the current chunk satisfy every exact-claimed
-    * predicate? (Only consulted when !chunkAllMatch.)
+    * predicate? (Only consulted when !chunkAllMatch, after loading the
+    * predicates' columns.)
     */
   def rowMatches(i: Int): Boolean = ExactPred.rowMatches(exact, data, nulls, i)
 
-  /** Advance to the next chunk that survives zone skipping and decode its
-    * read columns. False at end of file.
+  private def checkColumns(): Unit = checked.foreach { c =>
+    if (c >= fr.nCols)
+      throw new java.io.IOException(s"btr block file ${fr.where}: column $c is missing " +
+        s"(the table declares ${colTypes.length} columns, the chunk holds ${fr.nCols})")
+    if (fr.colType(c) != colTypes(c))
+      throw new java.io.IOException(s"btr block file ${fr.where}: column $c holds " +
+        s"${graft.codec.ColType.name(fr.colType(c))}, the table declares " +
+        graft.codec.ColType.name(colTypes(c)))
+  }
+
+  /** Advance to the next chunk that survives the static zone skip; its
+    * header is parsed and no blob is read yet. False at end of file.
     */
   def nextChunk(): Boolean = {
+    if (fr == null) fr = new FrameReader(file, conf)
+    else fr.finishChunk() // the previous chunk's unread blobs: seek, never read
+    java.util.Arrays.fill(data, null)
     while (fr.nextHeader()) {
       chunksTotal += 1
-      if (zones.exists(_.rejects(fr.zones)) || (dynSkip != null && dynSkip(fr.zones))) {
+      checkColumns()
+      if (zones.exists(_.rejects(fr.zones))) {
         fr.finishChunk()
         chunksSkipped += 1
       } else {
         chunkRows = fr.numRows
         chunkAllMatch = exact.forall(_.allMatch(fr.zones))
-        readCols.foreach { c =>
-          data(c) = fr.decodeColumn(c)
-          nulls(c) = fr.nullBits(c)
-        }
-        fr.finishChunk() // pruned trailing columns: seek, never read
         return true
       }
     }
     false
   }
 
-  def close(): Unit = fr.close()
+  /** Drop the current chunk unread; it counts as skipped. */
+  def skip(): Unit = chunksSkipped += 1
+
+  /** Decode columns `cols` (ascending) of the current chunk into `data`. */
+  def load(cols: Array[Int]): Unit = cols.foreach(c => data(c) = fr.decodeColumn(c))
+
+  def metrics: Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    Array(BtrTaskMetric("chunksSkipped", chunksSkipped), BtrTaskMetric("chunksTotal", chunksTotal))
+
+  def close(): Unit = if (fr != null) fr.close()
 }
 
 /** DSv2 custom metric: chunks skipped via zone maps — "how much did pruning
@@ -764,42 +796,6 @@ class AggChunksDecodedMetric extends org.apache.spark.sql.connector.metric.Custo
 private[sources] case class BtrTaskMetric(name: String, value: Long)
   extends org.apache.spark.sql.connector.metric.CustomTaskMetric
 
-/** Row view over the columnar reader: the scan itself always reads
-  * columnar (BtrReaderFactory), this serves reader-level tests and any
-  * row-based caller with the same rows, filters, limit and metrics.
-  */
-class BtrPartitionReader(
-    file: String,
-    conf: org.apache.hadoop.conf.Configuration,
-    requiredIdx: Array[Int],
-    zones: Array[ExactPred] = Array.empty,
-    limit: Int = -1,
-    exact: Array[ExactPred] = Array.empty)
-  extends PartitionReader[InternalRow] {
-
-  private val columnar = new BtrColumnarReader(file, conf, requiredIdx, zones, limit, exact)
-  private var rows: java.util.Iterator[InternalRow] = java.util.Collections.emptyIterator()
-  private var row: InternalRow = _
-
-  def chunksSkipped: Long = columnar.chunksSkipped
-
-  override def next(): Boolean = {
-    while (!rows.hasNext) {
-      if (!columnar.next()) return false
-      rows = columnar.get().rowIterator()
-    }
-    row = rows.next()
-    true
-  }
-
-  override def get(): InternalRow = row
-
-  override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    columnar.currentMetricsValues()
-
-  override def close(): Unit = columnar.close()
-}
-
 /** Columnar reader: one ColumnarBatch per decoded chunk, wrapping the
   * decoded arrays directly (no per-value copies or boxing). With
   * exact-claimed filters (round-5): a chunk the zones PROVE fully matching
@@ -811,30 +807,30 @@ class BtrPartitionReader(
 class BtrColumnarReader(
     file: String,
     conf: org.apache.hadoop.conf.Configuration,
+    colTypes: Array[Int],
     requiredIdx: Array[Int],
     zones: Array[ExactPred] = Array.empty,
     limit: Int = -1,
     exact: Array[ExactPred] = Array.empty)
   extends PartitionReader[ColumnarBatch] {
 
-  private val cursor = new ChunkCursor(file, conf, requiredIdx, zones, exact)
+  private val cursor = new ChunkCursor(file, conf, colTypes, requiredIdx, zones, exact)
+  // the output columns ∪ claimed-filter columns (a claimed filter's column
+  // may be pruned from the output projection), ascending
+  private val readCols = (requiredIdx ++ exact.flatMap(_.cols)).distinct.sorted
   private var emittedRows = 0L
   private var batch: ColumnarBatch = _
 
-  def chunksSkipped: Long = cursor.chunksSkipped
-
   private def vectorOf(values: AnyRef, nb: Array[Byte]): ColumnVector = values match {
-    case a: Array[Int] =>
-      if (nb == null) new IntArrayVector(a) else new NullableIntArrayVector(a, nb)
-    case a: Array[Double] =>
-      if (nb == null) new DoubleArrayVector(a) else new NullableDoubleArrayVector(a, nb)
-    case d: DecodedStrings =>
-      if (nb == null) new StringArenaVector(d) else new NullableStringArenaVector(d, nb)
+    case a: Array[Int]     => new IntArrayVector(a, nb)
+    case a: Array[Double]  => new DoubleArrayVector(a, nb)
+    case d: DecodedStrings => new StringArenaVector(d, nb)
   }
 
   override def next(): Boolean = {
     if (limit >= 0 && emittedRows >= limit) return false
     while (cursor.nextChunk()) {
+      cursor.load(readCols)
       val n =
         if (cursor.chunkAllMatch) {
           batch = new ColumnarBatch(
@@ -909,8 +905,7 @@ class BtrColumnarReader(
   override def get(): ColumnarBatch = batch
 
   override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(BtrTaskMetric("chunksSkipped", cursor.chunksSkipped),
-      BtrTaskMetric("chunksTotal", cursor.chunksTotal))
+    cursor.metrics
 
   override def close(): Unit = cursor.close()
 }

@@ -1,7 +1,6 @@
 package graft.sources
 
 import graft.codec.DecodedStrings
-import graft.format.ColZone
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read.PartitionReader
@@ -30,8 +29,8 @@ object BtrTopN {
 /** Partition reader for a pushed TopN over one block file.
   *
   * Mechanics: a bounded worst-at-head priority queue of the best `n` rows
-  * seen so far, fed by the ordinary chunk cursor. The scale lever is the
-  * cursor's DYNAMIC zone threshold: once the queue is full, a chunk whose
+  * seen so far, fed by the ordinary chunk cursor. The scale lever is a
+  * DYNAMIC zone threshold: once the queue is full, a chunk whose
   * primary-key zone bound (max for DESC, min for ASC — chunk extrema are
   * exact) cannot strictly beat the worst kept key is skipped WHOLE, blobs
   * unread. On a table range-clustered by the sort column — the layout the
@@ -53,6 +52,7 @@ object BtrTopN {
 final class BtrTopNReader(
     file: String,
     conf: org.apache.hadoop.conf.Configuration,
+    colTypes: Array[Int],
     requiredIdx: Array[Int],
     zones: Array[ExactPred],
     exact: Array[ExactPred],
@@ -61,11 +61,10 @@ final class BtrTopNReader(
 
   private val keys = spec.keys.toArray
   private val keyCols = keys.map(_.colIdx)
-  // cursor reads output ∪ key columns (a sort column may be pruned from
-  // the output projection by the final Project above the sort)
-  private val cursor = new ChunkCursor(file, conf, requiredIdx ++ keyCols, zones, exact)
-
-  def chunksSkipped: Long = cursor.chunksSkipped
+  // output ∪ key columns (a sort column may be pruned from the output
+  // projection by the final Project above the sort) ∪ claimed-filter columns
+  private val cursor = new ChunkCursor(file, conf, colTypes, requiredIdx ++ keyCols, zones, exact)
+  private val readCols = (requiredIdx ++ keyCols ++ exact.flatMap(_.cols)).distinct.sorted
 
   private final class Entry(val ks: Array[AnyRef], val out: Array[AnyRef])
 
@@ -114,9 +113,9 @@ final class BtrTopNReader(
   // possibilities per chunk: its null rows (present when nullCount > 0,
   // or unknown < 0) and its best non-null value (zone min for ASC, max
   // for DESC — chunk extrema are exact).
-  cursor.dynSkip = zs => {
+  private def cannotBeat: Boolean =
     heap.size == spec.n && {
-      val z = ColZone.of(zs, primary.colIdx)
+      val z = cursor.zone(primary.colIdx)
       z.kind == primary.kind && {
         val worst = heap.peek().ks(0)
         val nullCanTieOrBeat = z.nullCount != 0L && cmpKey(primary, null, worst) <= 0
@@ -131,7 +130,6 @@ final class BtrTopNReader(
         }
       }
     }
-  }
 
   /** Key view of row `i`, zero-copy (strings alias the chunk arena) — for
     * comparing. Copied by `materialize` only if the row is kept.
@@ -180,18 +178,22 @@ final class BtrTopNReader(
 
   private def consume(): java.util.Iterator[Entry] = {
     while (cursor.nextChunk()) {
-      val rows = cursor.chunkRows
-      var i = 0
-      while (i < rows) {
-        if (cursor.chunkAllMatch || cursor.rowMatches(i)) {
-          val view = keyView(i)
-          if (heap.size < spec.n) heap.add(materialize(i, view))
-          else if (cmpKeys(view, heap.peek().ks) < 0) {
-            heap.poll()
-            heap.add(materialize(i, view))
+      if (cannotBeat) cursor.skip()
+      else {
+        cursor.load(readCols)
+        val rows = cursor.chunkRows
+        var i = 0
+        while (i < rows) {
+          if (cursor.chunkAllMatch || cursor.rowMatches(i)) {
+            val view = keyView(i)
+            if (heap.size < spec.n) heap.add(materialize(i, view))
+            else if (cmpKeys(view, heap.peek().ks) < 0) {
+              heap.poll()
+              heap.add(materialize(i, view))
+            }
           }
+          i += 1
         }
-        i += 1
       }
     }
     heap.iterator()
@@ -212,8 +214,7 @@ final class BtrTopNReader(
   override def get(): InternalRow = row
 
   override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(BtrTaskMetric("chunksSkipped", cursor.chunksSkipped),
-      BtrTaskMetric("chunksTotal", cursor.chunksTotal))
+    cursor.metrics
 
   override def close(): Unit = cursor.close()
 }

@@ -9,8 +9,9 @@ import org.apache.hadoop.fs.Path
   * header, then yields per-chunk frame headers (row count, per-column
   * types, blob lengths, one `ColZone` per column and the validity bitmaps)
   * with the blobs consumed on demand, and decodes a column's blob by its
-  * type (`decodeColumn`, the ONE per-chunk decode). Shared by the chunk
-  * cursor of the scan readers and the aggregate reader.
+  * type (`decodeColumn`, the ONE per-chunk decode). Every DSv2 reader
+  * reads through `ChunkCursor`, the one chunk loop above it; tests and the
+  * per-layer benchmark call it directly.
   *
   * Every read is wrapped with file + offset + chunk context: at 100 TB a
   * truncated or bit-flipped blob must name the bad block, not surface as a

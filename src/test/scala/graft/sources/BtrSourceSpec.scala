@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.codec.BtrConfig
+import graft.codec.{BtrConfig, ColType}
 import graft.engine.BlockFiles
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -97,11 +97,9 @@ class BtrSourceSpec extends AnyFunSuite {
     var skipped = 0L
     var read = 0L
     files.foreach { f =>
-      val r = new BtrPartitionReader(f, conf, Array(0),
-        Array(IntCmpPred(0, 1000, 1099)))
-      while (r.next()) read += 1
+      val r = ReadFile(f, conf, Array(0), Array(IntCmpPred(0, 1000, 1099)))
+      read += r.rows.length
       skipped += r.chunksSkipped
-      r.close()
     }
     assert(skipped > 20, s"most of the 32 chunks must be skipped, got $skipped")
     assert(read < 8192 && read >= 100, s"surviving rows bounded: $read")
@@ -221,6 +219,63 @@ class BtrSourceSpec extends AnyFunSuite {
     assert(back.except(df).count() == 0 && df.except(back).count() == 0)
   }
 
+  test("compressed exchange: a writer's chunks follow the key order, not the split order") {
+    val dir = tmp("cxr_order")
+    // split 0 holds the high keys 1024..2047, split 1 the low keys 0..1023;
+    // each split encodes four 256-row chunks and one writer takes all eight
+    val df = spark.range(0, 2048, 1, 2).selectExpr("CAST(2047 - id AS INT) AS k", "concat('v', id) AS s")
+    BlockFiles.write(df, dir, BtrConfig(blockSize = 256), rangeCols = Seq("k"),
+      compressedExchange = true, numPartitions = 1)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val r = new FrameReader(s"$dir/blocks/part-00000", conf)
+    val mins = Seq.newBuilder[Long]
+    try while (r.nextHeader()) { mins += r.zone(0).lmin; r.finishChunk() } finally r.close()
+    assert(mins.result() == (0 until 2048 by 256).map(_.toLong),
+      s"chunk zones must ascend: ${mins.result()}")
+  }
+
+  test("column rule: a chunk lacking a declared column, or holding it as another type, is a named error") {
+    import spark.implicits._
+    import org.apache.hadoop.fs.Path
+    val two = tmp("colrule2")
+    val three = tmp("colrule3")
+    BlockFiles.write((0 until 300).map(i => (i, i * 2)).toDF("a", "b").coalesce(1), two,
+      BtrConfig(blockSize = 128))
+    // c is nullable, so COUNT(c) stays a column count (not COUNT(*))
+    BlockFiles.write((0 until 300).map(i => (i, s"b$i", Option(i))).toDF("a", "b", "c").coalesce(1), three,
+      BtrConfig(blockSize = 128))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new Path(two).getFileSystem(conf)
+    val bytes = { val in = fs.open(new Path(s"$two/blocks/part-00000")); try in.readAllBytes() finally in.close() }
+    val os = fs.create(new Path(s"$three/blocks/part-00099"), true)
+    try os.write(bytes) finally os.close()
+    def messages(e: Throwable): String =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(String.valueOf(_)).mkString("\n")
+    val t = spark.read.format("btr").load(three)
+    // COUNT(c) folds from headers: the copied chunks hold no column 2
+    val ec = messages(intercept[Exception](t.agg(count("c")).head()))
+    assert(ec.contains("part-00099") && ec.contains("chunk #0") &&
+      ec.contains("column 2 is missing") && ec.contains("declares 3 columns, the chunk holds 2"), ec)
+    // the plain scan decodes every column: column 1 is int in the copied file
+    val es = messages(intercept[Exception](t.collect()))
+    assert(es.contains("part-00099") && es.contains("chunk #0") &&
+      es.contains("column 1 holds int, the table declares string"), es)
+  }
+
+  test("bounds sample: per-split emission stays inside the key budget at 10,000 splits") {
+    // a pure function of (chunks in the split, splits in the input): no task runs
+    val splits = 10000
+    val perSplit = (0 until splits).map(i => BlockFiles.boundsEmission(1L + i % 500, splits))
+    assert(perSplit.forall(_ >= 1), "every non-empty split emits a key")
+    assert(perSplit.map(_.toLong).sum <= math.max(BlockFiles.KeyBudget, splits),
+      s"sampled keys ${perSplit.map(_.toLong).sum} over budget ${BlockFiles.KeyBudget}")
+    // few splits stay under the budget: one key per chunk start, at most 64
+    assert(BlockFiles.boundsEmission(1, 2) == 1)
+    assert(BlockFiles.boundsEmission(10, 2) == 10)
+    assert(BlockFiles.boundsEmission(1000, 2) == 64)
+    assert(BlockFiles.boundsEmission(1000, 1 << 20) == 1)
+  }
+
   test("binary range partitioner: bounds binary search respects unsigned lexicographic order") {
     val b = Array(Array[Byte](10), Array[Byte](20), Array[Byte](-1, 0)) // -1 = 0xff unsigned
     val p = new BlockFiles.BinaryRangePartitioner(4, b)
@@ -288,15 +343,9 @@ class BtrSourceSpec extends AnyFunSuite {
     var skippedD = 0L
     var skippedS = 0L
     files.foreach { f =>
-      val rd = new BtrPartitionReader(f, conf, Array(0), Array(DoubleCmpPred(2, 1500.0, 1649.5)))
-      while (rd.next()) ()
-      skippedD += rd.chunksSkipped
-      rd.close()
-      val rs = new BtrPartitionReader(f, conf, Array(0),
-        Array(StringCmpPred(1, StrOp.EQ, UTF8String.fromString("k04321"))))
-      while (rs.next()) ()
-      skippedS += rs.chunksSkipped
-      rs.close()
+      skippedD += ReadFile(f, conf, Array(0), Array(DoubleCmpPred(2, 1500.0, 1649.5))).chunksSkipped
+      skippedS += ReadFile(f, conf, Array(0),
+        Array(StringCmpPred(1, StrOp.EQ, UTF8String.fromString("k04321")))).chunksSkipped
     }
     assert(skippedD > 20, s"double zones must skip most of the 32 chunks: $skippedD")
     assert(skippedS > 20, s"string zones must skip most of the 32 chunks: $skippedS")
@@ -326,10 +375,7 @@ class BtrSourceSpec extends AnyFunSuite {
       .map(_.getPath.toString).filter(_.contains("part-")).sorted
     var skipped = 0L
     files.foreach { f =>
-      val r = new BtrPartitionReader(f, conf, Array(0), Array(IntCmpPred(0, 1000, 1099)))
-      while (r.next()) ()
-      skipped += r.chunksSkipped
-      r.close()
+      skipped += ReadFile(f, conf, Array(0), Array(IntCmpPred(0, 1000, 1099))).chunksSkipped
     }
     assert(skipped > 20, s"range-clustered write must give skippable zones: $skipped")
 
@@ -392,16 +438,9 @@ class BtrSourceSpec extends AnyFunSuite {
     var skipped = 0L
     var skippedS = 0L
     files.foreach { f =>
-      val r = new BtrPartitionReader(f, conf, Array(0),
-        Array(IntInPred(0, Seq(105L, 3205L, 7405L))))
-      while (r.next()) ()
-      skipped += r.chunksSkipped
-      r.close()
-      val rs = new BtrPartitionReader(f, conf, Array(0),
-        Array(StringInPred(1, Seq("k00105", "k07405").map(UTF8String.fromString))))
-      while (rs.next()) ()
-      skippedS += rs.chunksSkipped
-      rs.close()
+      skipped += ReadFile(f, conf, Array(0), Array(IntInPred(0, Seq(105L, 3205L, 7405L)))).chunksSkipped
+      skippedS += ReadFile(f, conf, Array(0),
+        Array(StringInPred(1, Seq("k00105", "k07405").map(UTF8String.fromString)))).chunksSkipped
     }
     assert(skipped >= 29, s"29+ of 32 chunks must be skipped for a 3-member set: $skipped")
     assert(skippedS >= 29, s"string IN must skip too: $skippedS")
@@ -409,9 +448,7 @@ class BtrSourceSpec extends AnyFunSuite {
     // an infeasible set (non-integral equality over ints) skips everything
     var all = 0L
     files.foreach { f =>
-      val r = new BtrPartitionReader(f, conf, Array(0), Array(IntInPred(0, Seq.empty)))
-      while (r.next()) all += 1
-      r.close()
+      all += ReadFile(f, conf, Array(0), Array(IntInPred(0, Seq.empty))).rows.length
     }
     assert(all == 0, s"empty feasible set must decode nothing: $all")
 
@@ -480,7 +517,7 @@ class BtrSourceSpec extends AnyFunSuite {
     val r4 = q4.head()
     assert(r4.getLong(0) == 0 && r4.isNullAt(1) && r4.isNullAt(2), s"got $r4")
     val conf = spark.sparkContext.hadoopConfiguration
-    val rd = new BtrAggReader(s"$dir4/blocks/part-00000", conf,
+    val rd = new BtrAggReader(s"$dir4/blocks/part-00000", conf, Array(ColType.Integer.toInt),
       Seq(CountSpec, MinMaxSpec(0, isMin = true), SumSpec(0, isDouble = false)),
       zones = Array(IntCmpPred(0, 1100, 1200)), exact = Array(IntCmpPred(0, 1100, 1200)))
     try {
@@ -577,10 +614,7 @@ class BtrSourceSpec extends AnyFunSuite {
     val os = fs.create(tf, true)
     os.write(bytes, 0, bytes.length - 7)
     os.close()
-    val e = intercept[java.io.IOException] {
-      val r = new BtrPartitionReader(tf.toString, conf, Array(0), Array.empty)
-      try while (r.next()) () finally r.close()
-    }
+    val e = intercept[java.io.IOException](ReadFile(tf.toString, conf, Array(0)))
     assert(e.getMessage.contains("part-00000") && e.getMessage.contains("chunk #"),
       s"error must name file and chunk: ${e.getMessage}")
 
@@ -590,9 +624,7 @@ class BtrSourceSpec extends AnyFunSuite {
     val flipped = bytes.clone(); flipped(0) = (flipped(0) ^ 0x40).toByte
     os2.write(flipped)
     os2.close()
-    val e2 = intercept[java.io.IOException] {
-      new BtrPartitionReader(mf.toString, conf, Array(0), Array.empty)
-    }
+    val e2 = intercept[java.io.IOException](ReadFile(mf.toString, conf, Array(0)))
     assert(e2.getMessage.contains("part-00001") && e2.getMessage.contains("not a btr block file"),
       s"magic check must name the file: ${e2.getMessage}")
 
@@ -604,10 +636,7 @@ class BtrSourceSpec extends AnyFunSuite {
     flipped2(bytes.length * 3 / 5) = (flipped2(bytes.length * 3 / 5) ^ 0x10).toByte
     os3.write(flipped2)
     os3.close()
-    val e3 = intercept[java.io.IOException] {
-      val r = new BtrPartitionReader(ff.toString, conf, Array(0, 1), Array.empty)
-      try while (r.next()) () finally r.close()
-    }
+    val e3 = intercept[java.io.IOException](ReadFile(ff.toString, conf, Array(0, 1)))
     assert(e3.getMessage.contains("part-00002") &&
       (e3.getMessage.contains("checksum mismatch") || e3.getMessage.contains("corrupt")),
       s"bit flip must surface as a named corruption: ${e3.getMessage}")
@@ -619,9 +648,7 @@ class BtrSourceSpec extends AnyFunSuite {
     val v5 = bytes.clone(); v5(4) = 5
     os4.write(v5)
     os4.close()
-    val e4 = intercept[java.io.IOException] {
-      new BtrPartitionReader(vf.toString, conf, Array(0), Array.empty)
-    }
+    val e4 = intercept[java.io.IOException](ReadFile(vf.toString, conf, Array(0)))
     assert(e4.getMessage.contains("part-00003") &&
       e4.getMessage.contains("unsupported btr block version 5"),
       s"an old version must be named: ${e4.getMessage}")
@@ -643,10 +670,7 @@ class BtrSourceSpec extends AnyFunSuite {
     val os5 = fs.create(kf, true)
     os5.write(bytes.take(5) ++ f1)
     os5.close()
-    val e5 = intercept[java.io.IOException] {
-      val r = new BtrPartitionReader(kf.toString, conf, Array(0), Array.empty)
-      try while (r.next()) () finally r.close()
-    }
+    val e5 = intercept[java.io.IOException](ReadFile(kf.toString, conf, Array(0)))
     assert(e5.getMessage.contains("part-00004") && e5.getMessage.contains("bad zoneKind 1"),
       s"a sum-less numeric zone must be named: ${e5.getMessage}")
   }
@@ -663,15 +687,9 @@ class BtrSourceSpec extends AnyFunSuite {
       .map(_.getPath).filter(_.getName.startsWith("part-")).minBy(_.getName)
     val bytes = { val in = fs.open(orig); try in.readAllBytes() finally in.close() }
 
-    def readAllRows(file: String): Seq[(Int, String, Double)] = {
-      val r = new BtrPartitionReader(file, conf, Array(0, 1, 2), Array.empty)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(Int, String, Double)]
-      try while (r.next()) {
-        val row = r.get()
-        buf += ((row.getInt(0), row.getUTF8String(1).toString, row.getDouble(2)))
-      } finally r.close()
-      buf.toSeq
-    }
+    def readAllRows(file: String): Seq[(Int, String, Double)] =
+      ReadFile(file, conf, Array(0, 1, 2)).rows.map(row =>
+        (row.getInt(0), row.getUTF8String(1).toString, row.getDouble(2)))
     val clean = readAllRows(orig.toString)
     assert(clean.nonEmpty)
 

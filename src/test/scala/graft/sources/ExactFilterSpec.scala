@@ -216,13 +216,10 @@ class ExactFilterSpec extends AnyFunSuite {
     val fs = new Path(s"$dir/blocks").getFileSystem(conf)
     val file = fs.listStatus(new Path(s"$dir/blocks"))
       .map(_.getPath.toString).filter(_.contains("part-")).head
-    val r = new BtrPartitionReader(file, conf, Array(0),
-      Array(OrPred(IntCmpPred(0, 0, 255), IntCmpPred(0, 3840, Long.MaxValue))))
-    while (r.next()) ()
-    val m = r.currentMetricsValues().map(x => x.name() -> x.value()).toMap
+    val m = ReadFile(file, conf, Array(0),
+      Array(OrPred(IntCmpPred(0, 0, 255), IntCmpPred(0, 3840, Long.MaxValue)))).metrics
     assert(m("chunksTotal") == 16 && m("chunksSkipped") == 14,
       s"disjoint OR ranges must skip the 14 interior chunks: $m")
-    r.close()
 
     // CROSS-COLUMN OR: a chunk skips only when BOTH branches reject it
     // against their own columns' zones. `s = 'a'` rejects every chunk
@@ -232,13 +229,10 @@ class ExactFilterSpec extends AnyFunSuite {
     assert(q2.queryExecution.optimizedPlan.collect { case f: LFilter => f }.isEmpty,
       s"a cross-column OR must be claimed:\n${q2.queryExecution.optimizedPlan}")
     assert(q2.count() == 256)
-    val r2 = new BtrPartitionReader(file, conf, Array(0),
-      Array(OrPred(IntCmpPred(0, 0, 255), StringCmpPred(1, StrOp.EQ, UTF8String.fromString("a")))))
-    while (r2.next()) ()
-    val m2 = r2.currentMetricsValues().map(x => x.name() -> x.value()).toMap
+    val m2 = ReadFile(file, conf, Array(0),
+      Array(OrPred(IntCmpPred(0, 0, 255), StringCmpPred(1, StrOp.EQ, UTF8String.fromString("a"))))).metrics
     assert(m2("chunksTotal") == 16 && m2("chunksSkipped") == 15,
       s"cross-column OR with an always-rejecting string branch skips 15: $m2")
-    r2.close()
   }
 
   test("claimable predicates leave no post-scan Filter; expressions do") {
@@ -293,7 +287,7 @@ class ExactFilterSpec extends AnyFunSuite {
     val fs = new Path(s"$dir/blocks").getFileSystem(conf)
     val file = fs.listStatus(new Path(s"$dir/blocks"))
       .map(_.getPath.toString).filter(_.contains("part-")).head
-    val r = new BtrAggReader(file, conf,
+    val r = new BtrAggReader(file, conf, ReadFile.colTypes(file),
       specs = Seq(CountSpec, MinMaxSpec(1, isMin = true)),
       zones = Array(IntCmpPred(0, 1000, 2999)),
       exact = Array(IntCmpPred(0, 1000, 2999)))
@@ -354,14 +348,12 @@ class ExactFilterSpec extends AnyFunSuite {
     val fs = new Path(s"$dir/blocks").getFileSystem(conf)
     val file = fs.listStatus(new Path(s"$dir/blocks"))
       .map(_.getPath.toString).filter(_.contains("part-")).head
-    val r = new BtrPartitionReader(file, conf, Array(0),
+    val r = ReadFile(file, conf, Array(0),
       Array(StartsWithPred(1, UTF8String.fromString("k001"))),
       exact = Array(StartsWithPred(1, UTF8String.fromString("k001"))))
-    var read = 0L
-    while (r.next()) read += 1
+    val read = r.rows.length
     assert(read == 100, s"rows with prefix k001: $read")
     assert(r.chunksSkipped == 15, s"15 of 16 chunks skip by prefix zone: ${r.chunksSkipped}")
-    r.close()
     // end-to-end through the claimed filter
     val t = spark.read.format("btr").load(dir)
     assert(t.where(col("k").startsWith("k0010")).count() == 10)
@@ -411,11 +403,38 @@ class ExactFilterSpec extends AnyFunSuite {
     val fs = new Path(s"$dir/blocks").getFileSystem(conf)
     val file = fs.listStatus(new Path(s"$dir/blocks"))
       .map(_.getPath.toString).filter(_.contains("part-")).head
-    val r = new BtrPartitionReader(file, conf, Array(0), Array(IntCmpPred(0, 0, 255)))
-    while (r.next()) ()
-    val m = r.currentMetricsValues().map(x => x.name() -> x.value()).toMap
+    val m = ReadFile(file, conf, Array(0), Array(IntCmpPred(0, 0, 255))).metrics
     assert(m("chunksTotal") == 16 && m("chunksSkipped") == 15, s"ratio metrics: $m")
-    r.close()
+  }
+
+  test("one chunk loop: columnar, TopN and COUNT(*) readers skip the same chunks") {
+    val dir = tmp("parity")
+    val src = spark.range(4096).selectExpr("CAST(id AS INT) AS id", "concat('x', id) AS s")
+    BlockFiles.write(src.coalesce(1), dir, BtrConfig(blockSize = 256))
+    import org.apache.hadoop.fs.Path
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new Path(s"$dir/blocks").getFileSystem(conf)
+    val file = fs.listStatus(new Path(s"$dir/blocks"))
+      .map(_.getPath.toString).filter(_.contains("part-")).head
+    val types = ReadFile.colTypes(file)
+    def metrics(r: org.apache.spark.sql.connector.read.PartitionReader[_]): Map[String, Long] =
+      try {
+        while (r.next()) r.get()
+        r.currentMetricsValues().map(x => x.name() -> x.value()).toMap
+      } finally r.close()
+    for (zones <- Seq(Array[ExactPred](IntCmpPred(0, 1000, 2999)),
+        Array[ExactPred](OrPred(IntCmpPred(0, 0, 255), IntCmpPred(0, 3840, Long.MaxValue))),
+        Array[ExactPred](StringCmpPred(1, StrOp.EQ, UTF8String.fromString("a"))))) {
+      val col = ReadFile(file, conf, Array(0, 1), zones).metrics
+      // n above the row count: the heap never fills, so no dynamic skip
+      val top = metrics(new BtrTopNReader(file, conf, types, Array(0, 1), zones, Array.empty,
+        TopNSpec(Seq(SortKeySpec(0, kind = 1, desc = true, nullsFirst = false)), 5000)))
+      val agg = metrics(new BtrAggReader(file, conf, types, Seq(CountSpec), zones))
+      val want = (col("chunksSkipped"), col("chunksTotal"))
+      assert(want._2 == 16 && want._1 > 0, s"${zones.mkString}: $col")
+      assert((top("chunksSkipped"), top("chunksTotal")) == want, s"${zones.mkString}: TopN $top vs $col")
+      assert((agg("chunksSkipped"), agg("chunksTotal")) == want, s"${zones.mkString}: COUNT(*) $agg vs $col")
+    }
   }
 
   test("count(col) pushdown: non-null counts fold from header null counts, no decode") {
@@ -463,7 +482,8 @@ class ExactFilterSpec extends AnyFunSuite {
     val bytes = { val in = fs.open(orig); try in.readAllBytes() finally in.close() }
 
     // sanity: the clean file counts correctly through the agg reader
-    val clean = new BtrAggReader(orig.toString, conf, Seq(CountSpec))
+    val types = ReadFile.colTypes(orig.toString)
+    val clean = new BtrAggReader(orig.toString, conf, types, Seq(CountSpec))
     assert(clean.next() && clean.get().getLong(0) == 2048)
     clean.close()
 
@@ -475,7 +495,7 @@ class ExactFilterSpec extends AnyFunSuite {
     fs.mkdirs(bf.getParent)
     val os = fs.create(bf, true); os.write(bad); os.close()
     val e = intercept[java.io.IOException] {
-      val r = new BtrAggReader(bf.toString, conf, Seq(CountSpec))
+      val r = new BtrAggReader(bf.toString, conf, types, Seq(CountSpec))
       try while (r.next()) r.get() finally r.close()
     }
     assert(e.getMessage.contains("part-00000") &&
@@ -500,6 +520,7 @@ class ExactFilterSpec extends AnyFunSuite {
     // the filter makes the chunk mixed and matches exactly its last 8 rows
     val e = intercept[java.io.IOException] {
       val r = new BtrAggReader(s"$dir/blocks/part-00000", conf,
+        Array(graft.codec.ColType.Integer.toInt, graft.codec.ColType.Integer.toInt),
         specs = Seq(CountSpec, SumSpec(1, isDouble = false)),
         exact = Array(IntCmpPred(0, 248, 255)))
       try while (r.next()) r.get() finally r.close()

@@ -137,8 +137,8 @@ class GroupAggPushdownSpec extends AnyFunSuite {
     val conf = spark.sparkContext.hadoopConfiguration
     var rows = 0L
     files.foreach { ip =>
-      val r = new BtrAggReader(
-        ip.asInstanceOf[BtrInputPartition].file, conf,
+      val file = ip.asInstanceOf[BtrInputPartition].file
+      val r = new BtrAggReader(file, conf, ReadFile.colTypes(file),
         specs = Seq(CountSpec, SumSpec(1, isDouble = false)),
         groupIdx = Array(0))
       while (r.next()) rows += 1

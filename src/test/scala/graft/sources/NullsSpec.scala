@@ -90,21 +90,15 @@ class NullsSpec extends AnyFunSuite {
     assert(files.length == 1)
     // IS NULL: the 15 null-free chunks are skipped unread
     locally {
-      val r = new BtrPartitionReader(files(0), conf, Array(0), Array(IsNullPred(1)))
-      var read = 0L
-      while (r.next()) read += 1
+      val r = ReadFile(files(0), conf, Array(0), Array(IsNullPred(1)))
       assert(r.chunksSkipped == 15, s"15 of 16 chunks have zero nulls, skipped=${r.chunksSkipped}")
-      assert(read == 256)
-      r.close()
+      assert(r.rows.length == 256)
     }
     // IS NOT NULL: exactly the all-null chunk is skipped
     locally {
-      val r = new BtrPartitionReader(files(0), conf, Array(0), Array(NotNullPred(1)))
-      var read = 0L
-      while (r.next()) read += 1
+      val r = ReadFile(files(0), conf, Array(0), Array(NotNullPred(1)))
       assert(r.chunksSkipped == 1, s"the one all-null chunk skips, skipped=${r.chunksSkipped}")
-      assert(read == 4096 - 256)
-      r.close()
+      assert(r.rows.length == 4096 - 256)
     }
     // end-to-end results stay exact through the pushed filters
     val back = spark.read.format("btr").load(dir)
@@ -112,6 +106,54 @@ class NullsSpec extends AnyFunSuite {
     assert(back.filter(col("i2").isNotNull).count() == 4096 - 256)
     assert(back.filter(col("i2").isNull).select("id").collect().map(_.getInt(0)).sorted.toSeq
       == (0 until 256))
+  }
+
+  test("array vectors: one class per type, nulls from the optional validity bitmap") {
+    val bits = Array[Byte](0x05) // rows 0 and 2 NULL
+    val iv = new IntArrayVector(Array(7, 8, 9, 10), bits)
+    assert(iv.hasNull && iv.numNulls == 2 && iv.isNullAt(0) && !iv.isNullAt(1) && iv.isNullAt(2))
+    assert(iv.getInt(1) == 8 && iv.getInts(1, 2).toSeq == Seq(8, 9))
+    val dv = new DoubleArrayVector(Array(0.5, 1.5, 2.5), bits)
+    assert(dv.hasNull && dv.numNulls == 2 && !dv.isNullAt(1) && dv.getDouble(1) == 1.5)
+    val strs = new graft.codec.DecodedStrings("abbccc".getBytes("UTF-8"), Array(0, 1, 3), Array(1, 2, 3), 3)
+    val sv = new StringArenaVector(strs, bits)
+    assert(sv.hasNull && sv.numNulls == 2 && sv.isNullAt(2))
+    assert(sv.getUTF8String(0) == null && sv.getBinary(2) == null)
+    assert(sv.getUTF8String(1).toString == "bb" && sv.getBinary(1).toSeq == "bb".getBytes("UTF-8").toSeq)
+    // without a bitmap: no nulls, every row a value
+    val plain = Seq(new IntArrayVector(Array(1, 2)), new DoubleArrayVector(Array(1.0, 2.0)),
+      new StringArenaVector(strs))
+    plain.foreach(v => assert(!v.hasNull && v.numNulls == 0 && !v.isNullAt(1)))
+    assert(new StringArenaVector(strs).getUTF8String(2).toString == "ccc")
+
+    // the DSv2 reader's batches carry the bitmaps: the all-null chunk of s_n
+    val dir = tmp("vectors")
+    BlockFiles.write(nullDf.coalesce(1), dir, BtrConfig(blockSize = 256))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val file = s"$dir/blocks/part-00000"
+    val r = new BtrColumnarReader(file, conf, ReadFile.colTypes(file), Array(0, 1, 3))
+    try {
+      var seen = 0
+      while (r.next()) {
+        val b = r.get()
+        val ids = b.column(0)
+        val sn = b.column(2)
+        assert(!ids.hasNull)
+        var nullS = 0
+        var i = 0
+        while (i < b.numRows()) {
+          val id = ids.getInt(i)
+          val wantNull = (id >= 512 && id < 768) || id % 3 == 0
+          assert(sn.isNullAt(i) == wantNull && (sn.getUTF8String(i) == null) == wantNull, s"s_n at id $id")
+          assert(b.column(1).isNullAt(i) == (id % 7 == 0), s"i_n at id $id")
+          if (wantNull) nullS += 1
+          i += 1
+        }
+        assert(sn.hasNull && sn.numNulls == nullS)
+        seen += b.numRows()
+      }
+      assert(seen == 4096)
+    } finally r.close()
   }
 
   test("file-level pruning: v2 zone index drops null-free files for IS NULL") {
@@ -197,18 +239,11 @@ class NullsSpec extends AnyFunSuite {
       .map(_.getPath).filter(_.getName.startsWith("part-")).minBy(_.getName)
     val bytes = { val in = fs.open(orig); try in.readAllBytes() finally in.close() }
 
-    def readAllRows(file: String): Seq[(Int, Any, Any, Any)] = {
-      val r = new BtrPartitionReader(file, conf, Array(0, 1, 2, 3), Array.empty)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(Int, Any, Any, Any)]
-      try while (r.next()) {
-        val row = r.get()
-        buf += ((row.getInt(0),
-          if (row.isNullAt(1)) null else row.getInt(1),
-          if (row.isNullAt(2)) null else row.getDouble(2),
-          if (row.isNullAt(3)) null else row.getUTF8String(3).toString))
-      } finally r.close()
-      buf.toSeq
-    }
+    def readAllRows(file: String): Seq[(Int, Any, Any, Any)] =
+      ReadFile(file, conf, Array(0, 1, 2, 3)).rows.map(row => (row.getInt(0),
+        if (row.isNullAt(1)) null else row.getInt(1),
+        if (row.isNullAt(2)) null else row.getDouble(2),
+        if (row.isNullAt(3)) null else row.getUTF8String(3).toString))
     val clean = readAllRows(orig.toString)
     assert(clean.length == 1500 && clean.exists(_._2 == null) && clean.exists(_._4 == null))
 

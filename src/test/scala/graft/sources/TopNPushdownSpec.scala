@@ -150,12 +150,12 @@ class TopNPushdownSpec extends AnyFunSuite {
     var skipped = 0L
     var total = 0L
     files.foreach { ip =>
-      val reader = new BtrTopNReader(
-        ip.asInstanceOf[BtrInputPartition].file, conf,
+      val file = ip.asInstanceOf[BtrInputPartition].file
+      val reader = new BtrTopNReader(file, conf, ReadFile.colTypes(file),
         requiredIdx = Array(0), zones = Array.empty, exact = Array.empty,
         TopNSpec(Seq(SortKeySpec(0, kind = 1, desc = false, nullsFirst = true)), 5))
       while (reader.next()) got += reader.get().getInt(0)
-      skipped += reader.chunksSkipped
+      skipped += reader.currentMetricsValues().find(_.name() == "chunksSkipped").get.value()
       reader.close()
     }
     assert(got.sorted.take(5) == Seq(0, 1, 2, 3, 4), s"wrong top rows: ${got.sorted.take(5)}")
