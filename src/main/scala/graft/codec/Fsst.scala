@@ -1,7 +1,7 @@
 package graft.codec
 
 import java.lang.invoke.{MethodHandles, VarHandle}
-import java.nio.{ByteBuffer, ByteOrder}
+import java.nio.ByteOrder
 
 /** FSST (Fast Static Symbol Table) string compression, re-derived from the
   * public paper (Boncz/Neumann/Leis, VLDB'20) — the reference links the
@@ -46,14 +46,23 @@ object Fsst {
     k
   }
 
-  /** The little-endian 8-byte window at `pos` of `data` (`bb` wraps it):
-    * one `getLong`, or `pack` of what is left within 8 bytes of the end.
-    */
-  @inline private[codec] def window(data: Array[Byte], bb: ByteBuffer, pos: Int): Long =
-    if (pos + 8 <= data.length) bb.getLong(pos) else pack(data, pos, data.length - pos)
+  private val U: sun.misc.Unsafe = {
+    val f = classOf[sun.misc.Unsafe].getDeclaredField("theUnsafe")
+    f.setAccessible(true)
+    f.get(null).asInstanceOf[sun.misc.Unsafe]
+  }
+  private val ByteBase = sun.misc.Unsafe.ARRAY_BYTE_BASE_OFFSET.toLong
+  private val BigEndian = ByteOrder.nativeOrder == ByteOrder.BIG_ENDIAN
 
-  private[codec] def le(data: Array[Byte]): ByteBuffer =
-    ByteBuffer.wrap(data).order(ByteOrder.LITTLE_ENDIAN)
+  /** The little-endian 8-byte window at `pos` of `data`: one unaligned
+    * `Unsafe.getLong` (bounds checked by the guard), or `pack` of what is
+    * left within 8 bytes of the end.
+    */
+  @inline private[codec] def window(data: Array[Byte], pos: Int): Long =
+    if (pos + 8 <= data.length) {
+      val w = U.getLong(data, ByteBase + pos)
+      if (BigEndian) java.lang.Long.reverseBytes(w) else w
+    } else pack(data, pos, data.length - pos)
 
   def train(sample: Array[Byte]): FsstTable = {
     val s =
@@ -94,14 +103,13 @@ object Fsst {
       */
     def nextGeneration(table: FsstTable): FsstTable = {
       val n = sample.length
-      val bb = le(sample)
       val m = table.matcher
       java.util.Arrays.fill(count1, 0)
       var nTouched = 0
       var prev = -1
       var pos = 0
       while (pos < n) {
-        val cl = m.longest(sample, bb, pos, n)
+        val cl = m.longest(sample, pos, n)
         val code = cl & 0xffff
         val cur = if (code != EscapeCode) code else 256 + (sample(pos) & 0xff)
         count1(cur) += 1
@@ -298,7 +306,6 @@ final class FsstTable(val symbols: Array[Array[Byte]]) {
   def compress(s: StrSlices, clens: Array[Int]): Array[Byte] = {
     val m = matcher
     val data = s.data
-    val bb = Fsst.le(data)
     var out = new Array[Byte](math.max(64L, s.totalBytes / 3).toInt)
     var op = 0
     var i = 0
@@ -310,7 +317,7 @@ final class FsstTable(val symbols: Array[Array[Byte]]) {
         out = java.util.Arrays.copyOf(out, math.min(Int.MaxValue - 16L, math.max(need, 2L * out.length)).toInt)
       val from = op
       while (pos < end) {
-        val cl = m.longest(data, bb, pos, end)
+        val cl = m.longest(data, pos, end)
         val code = cl & 0xffff
         out(op) = code.toByte
         if (code == Fsst.EscapeCode) { out(op + 1) = data(pos); op += 2 }
@@ -384,11 +391,11 @@ object FsstTable {
 
     /** Longest symbol that prefixes data[pos, end), as `code | len << 16`,
       * or `EscapeCode | 1 << 16` when none does; equal symbols match their
-      * lowest code. `bb` wraps `data` little-endian.
+      * lowest code.
       */
-    def longest(data: Array[Byte], bb: ByteBuffer, pos: Int, end: Int): Int = {
+    def longest(data: Array[Byte], pos: Int, end: Int): Int = {
       val r = end - pos
-      val w = Fsst.window(data, bb, pos)
+      val w = Fsst.window(data, pos)
       if (r < 2) return single(w.toInt & 0xff)
       val e = short(w.toInt & 0xffff)
       if ((e & HasLong) != 0 && r >= 3) {

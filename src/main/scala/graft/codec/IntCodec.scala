@@ -138,13 +138,15 @@ object IntCodec {
   }
 
   private def encDict(out: BufWriter, v: Array[Int], off: Int, len: Int, depth: Int, cfg: BtrConfig): Unit = {
-    val set = new java.util.TreeSet[Integer]()
+    val sorted = java.util.Arrays.copyOfRange(v, off, off + len)
+    java.util.Arrays.sort(sorted)
+    var n = 0
     var i = 0
-    while (i < len) { set.add(v(off + i)); i += 1 }
-    val dict = new Array[Int](set.size())
-    val it = set.iterator()
-    i = 0
-    while (it.hasNext) { dict(i) = it.next(); i += 1 }
+    while (i < len) {
+      if (n == 0 || sorted(i) != sorted(n - 1)) { sorted(n) = sorted(i); n += 1 }
+      i += 1
+    }
+    val dict = java.util.Arrays.copyOf(sorted, n)
     val codes = new Array[Int](len)
     i = 0
     while (i < len) { codes(i) = java.util.Arrays.binarySearch(dict, v(off + i)); i += 1 }
@@ -153,15 +155,15 @@ object IntCodec {
   }
 
   private def encFreq(out: BufWriter, v: Array[Int], off: Int, len: Int, depth: Int, cfg: BtrConfig): Unit = {
-    // mode of the chunk
-    val counts = new java.util.HashMap[Integer, Integer]()
-    var i = 0
-    while (i < len) { counts.merge(v(off + i), 1, (a, b) => a + b); i += 1 }
+    // mode of the chunk: the longest run of a sorted copy, the smallest value on ties
+    val sorted = java.util.Arrays.copyOfRange(v, off, off + len)
+    java.util.Arrays.sort(sorted)
     var top = v(off); var topN = -1
-    val it = counts.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getValue > topN || (e.getValue == topN && e.getKey < top)) { top = e.getKey; topN = e.getValue }
+    var i = 0
+    while (i < len) {
+      val start = i
+      while (i < len && sorted(i) == sorted(start)) i += 1
+      if (i - start > topN) { top = sorted(start); topN = i - start }
     }
     var nExc = 0
     i = 0

@@ -5,6 +5,7 @@ import graft.format.{BtrManifest, ColZone, ColumnMeta, ColumnStat, CompressedPar
 import graft.sources.BtrWrite
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write.WriterCommitMessage
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -250,13 +251,14 @@ object BlockFiles {
   /** Map-side encode + compressed range exchange (see write() doc).
     *
     * Each chunk travels as ONE frame record keyed by an order-preserving
-    * binary encoding of its first row's `rangeCols` values plus a per-chunk
-    * round-robin salt byte (a hot key's chunks spread over 16 writers
-    * instead of serializing one). The shuffle sorts each writer's frames
-    * by that key (Spark's sorter, which spills), so a writer's file holds
-    * its chunks in key order whatever order the input splits arrive in;
-    * the writer task then just concatenates them — no re-encode, so the
-    * reduce side is pure sequential IO.
+    * binary encoding of its first row's `rangeCols` values plus a salt byte
+    * (`chunkSalt`: round-robin over a split's chunks, offset by the split,
+    * so a hot key's chunks, or splits that share a first key, spread over
+    * 16 writers instead of serializing one). The shuffle sorts each
+    * writer's frames by that key (Spark's sorter, which spills), so a
+    * writer's file holds its chunks in key order whatever order the input
+    * splits arrive in; the writer task then just concatenates them — no
+    * re-encode, so the reduce side is pure sequential IO.
     *
     * SINGLE-PASS (round-6, guide §2.4): range bounds come from a cheap
     * up-front stride-sample of ONLY the key columns (a few thousand rows
@@ -301,12 +303,19 @@ object BlockFiles {
     // partition every frame key sits at its partition's minimum — row-
     // quantile bounds would send every frame to one writer (measured:
     // 753 MB into a single reduce task). Per input split this job scans
-    // ONLY the key columns, keeps a deterministic stride sample, sorts it,
-    // and emits the estimated key at each chunk-start quantile position
-    // with that chunk's true round-robin salt — reproducing the (key,
-    // salt) pairs the encode will emit. Byte-budget-closed chunks
-    // (maxChunkBytes) make the estimate coarser; bounds quality only
-    // affects file-size balance, never correctness. Every split is scanned:
+    // ONLY the key columns and emits each chunk start's key with that
+    // chunk's salt (`chunkSalt`) — reproducing the (key, salt) pairs the
+    // encode will emit. Chunk 0's key is EXACT: the job tracks the split's
+    // minimum row (`compareRangeKeys`, no per-row encode), which is the
+    // first row after the local sort. A sampled estimate there sits
+    // above the true minimum: with one chunk per split every frame key
+    // would fall below the bound its own split set, and the frames would
+    // pile into the lowest writer.
+    // Later chunks' keys are estimates: the job keeps a deterministic
+    // stride sample, sorts it and reads the key at each chunk-start
+    // quantile position. Byte-budget-closed chunks (maxChunkBytes) make
+    // the estimate coarser; bounds quality only affects file-size
+    // balance, never correctness. Every split is scanned:
     // with ~one chunk per split the emitted keys ARE the minimum viable
     // sample (a measured 16-of-96-split stride variant yielded duplicate
     // bounds, piled frames into few writers and lost ~0.8 s to the
@@ -317,12 +326,14 @@ object BlockFiles {
     val blockRows = cfg.blockSize
     val keyRdd = keyDf.queryExecution.toRdd
     val numSplits = keyRdd.getNumPartitions
-    val samples: Array[Array[Byte]] = keyRdd.mapPartitions { it =>
+    val samples: Array[Array[Byte]] = keyRdd.mapPartitionsWithIndex { (split, it) =>
       val keys = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
+      var minRow: InternalRow = null
       var stride = 1L
       var i = 0L
       while (it.hasNext) {
         val r = it.next()
+        if (minRow == null || BtrEncoder.compareRangeKeys(r, minRow, kIdx, kTypes) < 0) minRow = r.copy()
         if (i % stride == 0) {
           keys += BtrEncoder.encodeRangeKey(r, kIdx, kTypes)
           if (keys.length >= 2048) { // halve (keeps a stride sample), double stride
@@ -340,9 +351,10 @@ object BlockFiles {
         val emit = boundsEmission(nChunks, numSplits)
         Iterator.tabulate(emit) { e =>
           val ci = e.toLong * nChunks / emit
-          val pos = math.min(sorted.length - 1,
-            (ci * blockRows * sorted.length / math.max(1L, i)).toInt)
-          sorted(pos) :+ ((ci % 16).toByte)
+          val key =
+            if (ci == 0) BtrEncoder.encodeRangeKey(minRow, kIdx, kTypes)
+            else sorted(math.min(sorted.length - 1, (ci * blockRows * sorted.length / math.max(1L, i)).toInt))
+          key :+ chunkSalt(split, ci)
         }
       }
     }.collect()
@@ -352,7 +364,7 @@ object BlockFiles {
       else Array.tabulate(n - 1) { j => extended(((j + 1).toLong * extended.length / n).toInt) }
     val partitioner = new BinaryRangePartitioner(n, bounds)
 
-    val keyed = prepared.queryExecution.toRdd.mapPartitions { rows =>
+    val keyed = prepared.queryExecution.toRdd.mapPartitionsWithIndex { (split, rows) =>
       if (rows.isEmpty) Iterator.empty
       else {
         val enc = new BtrEncoder.PartitionEncodeIterator(
@@ -360,7 +372,7 @@ object BlockFiles {
         enc.grouped(schema.length).zipWithIndex.map { case (chunkParts, ci) =>
           // key captured from the chunk's FIRST row before its buffers were
           // reused (PartitionEncodeIterator.chunkKey)
-          (enc.chunkKey(ci) :+ (ci % 16).toByte, frameChunk(chunkParts))
+          (enc.chunkKey(ci) :+ chunkSalt(split, ci), frameChunk(chunkParts))
         }
       }
     }
@@ -387,6 +399,12 @@ object BlockFiles {
         throw e
     }
   }
+
+  /** Salt byte of input split `split`'s chunk `ci` in the compressed
+    * exchange: round-robin over 16 values, offset by the split so that
+    * splits whose first keys are equal do not all tie on salt 0.
+    */
+  def chunkSalt(split: Int, ci: Long): Byte = ((split + ci) % 16).toByte
 
   /** Key budget of the compressed exchange's bounds sample. */
   final val KeyBudget = 1 << 14

@@ -251,4 +251,34 @@ object BtrEncoder {
     }
     out.toByteArray
   }
+
+  /** Compares two rows' `keyCols` in `encodeRangeKey` order without
+    * encoding them — ints signed, doubles by total-order bits, strings by
+    * unsigned bytes — with a NULL field first, as the ascending local sort
+    * puts it (a NULL numeric field encodes as its zeroed slot).
+    */
+  def compareRangeKeys(a: InternalRow, b: InternalRow, keyCols: Array[Int], colTypes: Array[Int]): Int = {
+    var k = 0
+    while (k < keyCols.length) {
+      val c = keyCols(k)
+      val an = a.isNullAt(c)
+      val bn = b.isNullAt(c)
+      val r =
+        if (an || bn) java.lang.Boolean.compare(bn, an)
+        else colTypes(c) match {
+          case ColType.Integer => Integer.compare(a.getInt(c), b.getInt(c))
+          case ColType.Double => java.lang.Long.compare(totalOrder(a.getDouble(c)), totalOrder(b.getDouble(c)))
+          case ColType.String => a.getUTF8String(c).binaryCompare(b.getUTF8String(c))
+        }
+      if (r != 0) return r
+      k += 1
+    }
+    0
+  }
+
+  /** A double's IEEE-754 bits as a signed long in total order. */
+  private def totalOrder(d: Double): Long = {
+    val bits = java.lang.Double.doubleToLongBits(d)
+    if (bits < 0) bits ^ Long.MaxValue else bits
+  }
 }

@@ -234,6 +234,40 @@ class BtrSourceSpec extends AnyFunSuite {
       s"chunk zones must ascend: ${mins.result()}")
   }
 
+  test("compressed exchange: one-chunk splits spread over the writers") {
+    import spark.implicits._
+    val conf = spark.sparkContext.hadoopConfiguration
+    // 4 splits x 5000 rows, each one 8192-row chunk; keys shuffled within
+    // each split, so the bounds job's stride sample (every 4th row by the
+    // end) misses most split minima
+    def check(name: String, keysOf: Int => Seq[Int]): Unit = {
+      val dir = tmp(name)
+      val rows = (0 until 4).flatMap { s =>
+        new scala.util.Random(s).shuffle(keysOf(s)).map(k => (k, s"s$s-$k"))
+      }
+      val df = spark.sparkContext.parallelize(rows, 4).toDF("k", "v")
+      BlockFiles.write(df, dir, BtrConfig(blockSize = 8192), rangeCols = Seq("k"),
+        compressedExchange = true, numPartitions = 4)
+      val files = new java.io.File(new java.net.URI(s"$dir/blocks"))
+        .listFiles().map(_.getName).filter(_.startsWith("part-")).sorted
+      val chunks = files.map { f =>
+        val r = new FrameReader(s"$dir/blocks/$f", conf)
+        var n = 0
+        try while (r.nextHeader()) { n += 1; r.finishChunk() } finally r.close()
+        n
+      }
+      assert(chunks.toSeq == Seq(1, 1, 1, 1), s"$name: chunks per file ${files.zip(chunks).toSeq}")
+      val back = spark.read.format("btr").load(dir)
+      assert(back.rdd.getNumPartitions == 4, name)
+      assert(back.count() == 20000, name)
+      assert(back.except(df).count() == 0 && df.except(back).count() == 0, name)
+    }
+    // (a) distinct split minima 0..3: split s holds the keys ≡ s (mod 4)
+    check("cxr_spread1", s => (0 until 5000).map(j => 4 * j + s))
+    // (b) every split's minimum is key 0, the rest distinct
+    check("cxr_spread1_tie", s => 0 +: (1 until 5000).map(j => 4 * j + s))
+  }
+
   test("column rule: a chunk lacking a declared column, or holding it as another type, is a named error") {
     import spark.implicits._
     import org.apache.hadoop.fs.Path
