@@ -425,8 +425,8 @@ object Queries {
   }
 
   /** MIN/MAX/COUNT aggregate pushdown: answered from frame headers + zone
-    * maps without decoding blobs (BtrAggScan; per-chunk decode fallback only
-    * where a zone is absent). Oracle = the same aggregates over the raw
+    * maps without decoding blobs (BtrScan's aggregate mode; per-chunk
+    * decode fallback only where a zone is absent). Oracle = the same aggregates over the raw
     * parquet. Aliased identically on both sides for the hash compare.
     */
   private def qAggPush(s: SparkSession, dir: String): DataFrame = {

@@ -216,19 +216,23 @@ object BtrEncoder {
   }
 
   /** Order-preserving binary encoding of `keyCols` values: unsigned-
-    * lexicographic compare of the result matches (k0, k1, …) tuple order —
-    * ints sign-flipped big-endian, doubles IEEE-754 total-order bits,
-    * strings memcomparable (0x00 bytes escaped as 0x00 0xFF, terminated by
-    * 0x00 0x01, so a key containing NULs still sorts in Spark's
-    * binary-collation order). Shared by the chunk-key capture above and the
-    * compressed-exchange bounds sampler (BlockFiles).
+    * lexicographic compare of the result matches (k0, k1, …) tuple order
+    * with NULLs first, the ascending local sort's order. Each field is a
+    * presence byte, 0x00 for NULL (nothing follows) or 0x01 followed by the
+    * value: ints sign-flipped big-endian, doubles IEEE-754 total-order
+    * bits, strings memcomparable (0x00 bytes escaped as 0x00 0xFF,
+    * terminated by 0x00 0x01, so a key containing NULs still sorts in
+    * Spark's binary-collation order). Shared by the chunk-key capture above
+    * and the compressed-exchange bounds sampler (BlockFiles).
     */
   def encodeRangeKey(row: InternalRow, keyCols: Array[Int], colTypes: Array[Int]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream(32)
     var k = 0
     while (k < keyCols.length) {
       val c = keyCols(k)
-      colTypes(c) match {
+      val present = !row.isNullAt(c)
+      out.write(if (present) 1 else 0)
+      if (present) colTypes(c) match {
         case ColType.Integer =>
           val v = row.getInt(c) ^ 0x80000000
           out.write(v >>> 24); out.write(v >>> 16); out.write(v >>> 8); out.write(v)
@@ -254,8 +258,7 @@ object BtrEncoder {
 
   /** Compares two rows' `keyCols` in `encodeRangeKey` order without
     * encoding them — ints signed, doubles by total-order bits, strings by
-    * unsigned bytes — with a NULL field first, as the ascending local sort
-    * puts it (a NULL numeric field encodes as its zeroed slot).
+    * unsigned bytes — with a NULL field first.
     */
   def compareRangeKeys(a: InternalRow, b: InternalRow, keyCols: Array[Int], colTypes: Array[Int]): Int = {
     var k = 0

@@ -1,7 +1,7 @@
 package graft.engine
 
 import graft.codec.BtrConfig
-import graft.format.BtrManifest
+import graft.format.{BtrManifest, ColumnStat}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
@@ -27,19 +27,22 @@ object BtrTable {
 
   // ------------------------------------------------------------- manifest io
 
-  /** Atomic manifest publish: write to a dot-temp name, then rename over.
-    * A plain create-then-write leaves the manifest VISIBLE as an empty
-    * file between create and close — and the minimal JSON parser is total
-    * (empty input parses to an empty manifest), so readers/idempotency
-    * gates would mistake a crash in that window for a complete table.
+  /** Atomic publish of `dir/name`: write a dot-temp file, then rename it
+    * over the target (FileContext's OVERWRITE rename; delete + rename where
+    * the file system has no FileContext), failing when the rename does. A
+    * plain create-then-write leaves the file VISIBLE, empty or partial,
+    * between create and close — and the minimal manifest JSON parser is
+    * total (empty input parses to an empty manifest), so readers would
+    * mistake a crash in that window for a complete table. Shared by the
+    * manifest and the zone index.
     */
-  def writeManifest(spark: SparkSession, dir: String, m: BtrManifest): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val path = new Path(dir, ManifestFile)
-    val tmp = new Path(dir, s".$ManifestFile.tmp")
+  private[graft] def publishFile(
+      conf: org.apache.hadoop.conf.Configuration, dir: String, name: String, bytes: Array[Byte]): Unit = {
+    val path = new Path(dir, name)
+    val tmp = new Path(dir, s".$name.tmp")
     val fs = path.getFileSystem(conf)
     val out = fs.create(tmp, true)
-    try out.write(BtrManifest.toJson(m).getBytes("UTF-8"))
+    try out.write(bytes)
     finally out.close()
     val renamed =
       try {
@@ -51,8 +54,12 @@ object BtrTable {
           if (fs.exists(path)) fs.delete(path, false)
           fs.rename(tmp, path)
       }
-    if (!renamed) sys.error(s"could not publish manifest $tmp -> $path")
+    if (!renamed) throw new java.io.IOException(s"could not publish $tmp -> $path")
   }
+
+  def writeManifest(spark: SparkSession, dir: String, m: BtrManifest): Unit =
+    publishFile(spark.sparkContext.hadoopConfiguration, dir, ManifestFile,
+      BtrManifest.toJson(m).getBytes("UTF-8"))
 
   def readManifest(spark: SparkSession, dir: String): BtrManifest = {
     val path = new Path(dir, ManifestFile)
@@ -66,6 +73,42 @@ object BtrTable {
       BtrManifest.fromJson(new String(bytes.toByteArray, "UTF-8"))
     } finally in.close()
   }
+
+  /** The manifest of the table at `dir`, None when it is unpublished (no
+    * manifest file). Any other read error propagates: only an absent
+    * manifest means "not written yet".
+    */
+  private[graft] def published(spark: SparkSession, dir: String): Option[BtrManifest] =
+    try Some(readManifest(spark, dir))
+    catch { case _: java.io.FileNotFoundException => None }
+
+  /** What a read sees of a table: the table dirs holding its block files,
+    * in read order, and one manifest (schema and totals).
+    */
+  final case class Snapshot(dirs: Seq[String], manifest: BtrManifest)
+
+  /** THE publish rule, for every read. A dir whose manifest exists is one
+    * table. Otherwise it is a `batch=<id>/` layout (streaming sink,
+    * `writeResumable`), read as its contiguous published prefix under the
+    * prefix's summed manifest: an unpublished batch hides itself and every
+    * later one. A layout whose batch 0 is unpublished shows no batch; its
+    * first published batch lends the schema. A dir with neither is not a
+    * table: FileNotFoundException naming its manifest.
+    */
+  def snapshot(spark: SparkSession, dir: String): Snapshot = published(spark, dir) match {
+    case Some(m) => Snapshot(Seq(dir), m)
+    case None =>
+      val ids = publishedBatches(spark.sparkContext.hadoopConfiguration, dir)
+      if (ids.isEmpty)
+        throw new java.io.FileNotFoundException(
+          s"${new Path(dir, ManifestFile)} does not exist: no published btr table")
+      val dirs = (0L until contiguousPrefix(ids)).map(batchDir(dir, _))
+      val ms = dirs.map(readManifest(spark, _))
+      Snapshot(dirs, combine(ms.headOption.getOrElse(readManifest(spark, batchDir(dir, ids.head))), ms))
+  }
+
+  /** Sub-table `id` of a `batch=<id>/` layout. */
+  private[graft] def batchDir(dir: String, id: Long): String = s"$dir/batch=$id"
 
   /** Ids of the `batch=<id>/` sub-tables under `dir` whose manifest is
     * published, ascending (one glob, independent of table history).
@@ -86,6 +129,19 @@ object BtrTable {
     while (k < ids.length && ids(k.toInt) == k) k += 1
     k
   }
+
+  /** Totals of sub-table manifests `ms` under `head`'s schema, batch ids as
+    * completedPartitions (no sub-table: zero totals).
+    */
+  private def combine(head: BtrManifest, ms: Seq[BtrManifest]): BtrManifest =
+    head.copy(
+      numPartitions = ms.map(_.numPartitions).sum,
+      numRows = ms.map(_.numRows).sum,
+      rawBytes = ms.map(_.rawBytes).sum,
+      encBytes = ms.map(_.encBytes).sum,
+      completedPartitions = ms.indices,
+      columnStats = ms.map(_.columnStats).reduceOption(_.zip(_).map { case (x, y) => x + y })
+        .getOrElse(head.columnStats.map(_ => ColumnStat(0L, 0L, 0L, 0L, Nil))))
 
   // ------------------------------------------------------------------ write
 
@@ -118,25 +174,13 @@ object BtrTable {
     val spark = df.sparkSession
     BtrEncoder.validateSchema(df.schema)
     val bucketed = df.withColumn("__bucket", pmod(hash(df.columns.map(col): _*), lit(buckets)))
-    combine((0 until buckets).map { b =>
-      val bdir = s"$dir/batch=$b"
-      try readManifest(spark, bdir)
-      catch {
-        case _: java.io.FileNotFoundException =>
-          BlockFiles.write(bucketed.filter(col("__bucket") === b).drop("__bucket"), bdir, cfg)
-      }
-    })
+    val ms = (0 until buckets).map { b =>
+      val bdir = batchDir(dir, b)
+      published(spark, bdir).getOrElse(
+        BlockFiles.write(bucketed.filter(col("__bucket") === b).drop("__bucket"), bdir, cfg))
+    }
+    combine(ms.head, ms)
   }
-
-  /** Totals of sub-table manifests, batch ids as completedPartitions. */
-  private def combine(ms: Seq[BtrManifest]): BtrManifest =
-    ms.head.copy(
-      numPartitions = ms.map(_.numPartitions).sum,
-      numRows = ms.map(_.numRows).sum,
-      rawBytes = ms.map(_.rawBytes).sum,
-      encBytes = ms.map(_.encBytes).sum,
-      completedPartitions = ms.indices,
-      columnStats = ms.map(_.columnStats).reduce((a, b) => a.zip(b).map { case (x, y) => x + y }))
 
   // ------------------------------------------------------------------- read
 
@@ -180,19 +224,12 @@ object BtrTable {
     }: _*)
 
   /** Per-column codec-choice/ratio metrics (north rule: persisted metrics),
-    * read from the manifest's per-column stats — no scan. A `batch=*`
-    * table sums its contiguous published batches. Returned as a DataFrame
-    * so it can be written alongside the manifest.
+    * read from the snapshot's manifest — no scan (a `batch=*` table sums
+    * its contiguous published batches). Returned as a DataFrame so it can
+    * be written alongside the manifest.
     */
   def stats(spark: SparkSession, dir: String): DataFrame = {
-    val m =
-      try readManifest(spark, dir)
-      catch {
-        case e: java.io.FileNotFoundException =>
-          val n = contiguousPrefix(publishedBatches(spark.sparkContext.hadoopConfiguration, dir))
-          if (n == 0) throw e
-          combine((0L until n).map(b => readManifest(spark, s"$dir/batch=$b")))
-      }
+    val m = snapshot(spark, dir).manifest
     require(m.columnStats.length == m.columns.length,
       s"$dir has no per-column stats in its manifest (written before they existed); rewrite it")
     import spark.implicits._

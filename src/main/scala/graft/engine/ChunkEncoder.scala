@@ -6,7 +6,7 @@ import graft.format.{ColZone, CompressedPart}
 /** Per-chunk column encoders: one typed column chunk → one CompressedPart.
   * Pure per-task logic (no Spark classes) so it runs identically inside
   * mapPartitions and in unit tests — the Spark analog of the reference's
-  * in-memory Datablock compress (/root/reference/src/btrblocks.rs:299-326).
+  * in-memory Datablock::compress (/root/reference/src/btrblocks.rs:299-326).
   */
 object ChunkEncoder {
 

@@ -158,22 +158,8 @@ object ZoneIndex {
   }
 
   /** Atomic publish (dot-temp + rename-over), like the manifest. */
-  def write(conf: org.apache.hadoop.conf.Configuration, dir: String, entries: Seq[FileZone]): Unit = {
-    val path = new Path(dir, FileName)
-    val tmp = new Path(dir, s".$FileName.tmp")
-    val fs = path.getFileSystem(conf)
-    val out = fs.create(tmp, true)
-    try out.write(toBytes(entries))
-    finally out.close()
-    try {
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(path.toUri, conf)
-      fc.rename(tmp, path, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    } catch {
-      case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
-        if (fs.exists(path)) fs.delete(path, false)
-        fs.rename(tmp, path)
-    }
-  }
+  def write(conf: org.apache.hadoop.conf.Configuration, dir: String, entries: Seq[FileZone]): Unit =
+    graft.engine.BtrTable.publishFile(conf, dir, FileName, toBytes(entries))
 
   /** Driver-side size guard: beyond this the sidecar is ignored (with a
     * warning) rather than parsed on every planning — pruning degrades to

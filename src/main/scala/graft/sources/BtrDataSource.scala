@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.codec.DecodedStrings
-import graft.engine.{BlockFiles, BtrEncoder, BtrTable}
+import graft.engine.{BtrEncoder, BtrTable}
 import graft.format.ColZone
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -40,22 +40,9 @@ class BtrDataSource extends TableProvider with DataSourceRegister {
     p
   }
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val dir = dirOf(options)
-    val manifest =
-      try BtrTable.readManifest(SparkSession.active, dir)
-      catch {
-        case e: java.io.FileNotFoundException =>
-          // batch layout (streaming sink, resumable write): per-batch
-          // sub-tables under batch=<id>/, each with its own manifest — use
-          // the first published batch's schema (all batches share one)
-          val ids = BtrTable.publishedBatches(SparkSession.active.sparkContext.hadoopConfiguration, dir)
-          if (ids.isEmpty) throw e
-          BtrTable.readManifest(SparkSession.active, s"$dir/batch=${ids.head}")
-      }
-    StructType(manifest.columns.map(c =>
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
+    StructType(BtrTable.snapshot(SparkSession.active, dirOf(options)).manifest.columns.map(c =>
       StructField(c.name, BtrEncoder.sparkType(c.colType), nullable = c.nullable)))
-  }
 
   /** Writes pass the dataframe's schema straight through (no manifest to
     * infer from when creating a new table).
@@ -239,21 +226,15 @@ class BtrScanBuilder(dir: String, fullSchema: StructType)
       case _ => None
     }
     if (specs.forall(_.isDefined)) {
-      aggSpecs = specs.flatten
-      aggGroupIdx = groupCols.flatten.toArray
-      aggPushed = true
+      pushedAgg = Some(PushedAgg(specs.flatten, groupCols.flatten.toArray))
       true
     } else false
   }
 
-  private var aggSpecs: Seq[AggSpec] = Nil
-  private var aggGroupIdx: Array[Int] = Array.empty
-  private var aggPushed = false
+  private var pushedAgg: Option[PushedAgg] = None
 
   override def build(): Scan =
-    if (aggPushed)
-      new BtrAggScan(dir, fullSchema, aggSpecs, pushedZones, exact, aggGroupIdx)
-    else new BtrScan(dir, fullSchema, required, pushedZones, limit, exact, topN)
+    new BtrScan(dir, fullSchema, required, pushedZones, limit, exact, topN, pushedAgg)
 }
 
 /** One pushed aggregate — over the whole table, or per group when the
@@ -278,21 +259,39 @@ case class CountColSpec(colIdx: Int) extends AggSpec
   */
 case class SumSpec(colIdx: Int, isDouble: Boolean) extends AggSpec
 
-object BtrScan {
-  /** Block files of the table at `dir`: its own `blocks/`, or — for a
-    * `batch=<id>/` layout, which has none — those of the contiguous
-    * published batch prefix (an unpublished batch and every later one stay
-    * invisible). A single-table dir costs exactly one listing.
+/** A pushed aggregate: `specs` folded per group of the `groupIdx` columns
+  * (none: one group) by BtrAggReader, one partial row per block file (per
+  * group and file when grouped); Spark's final aggregate merges them.
+  */
+final case class PushedAgg(specs: Seq[AggSpec], groupIdx: Array[Int]) {
+  /** The partial-pushdown contract: group columns first (in GROUP BY
+    * order), then one partial per aggregate — Spark maps the output
+    * positionally.
     */
-  def listBlockFiles(dir: String): Array[InputPartition] =
-    try listBlockFiles(Seq(dir))
-    catch {
-      case e: java.io.FileNotFoundException =>
-        val ids = BtrTable.publishedBatches(SparkSession.active.sparkContext.hadoopConfiguration, dir)
-        if (ids.isEmpty) throw e
-        listBlockFiles((0L until BtrTable.contiguousPrefix(ids)).map(b => s"$dir/batch=$b"))
-    }
+  def schema(full: StructType): StructType =
+    StructType(groupIdx.toSeq.map(full.fields(_)) ++ specs.map {
+      case CountSpec => StructField("count", LongType, nullable = false)
+      case CountColSpec(c) => StructField(s"count(${full.fields(c).name})", LongType, nullable = false)
+      case MinMaxSpec(c, isMin) =>
+        val f = full.fields(c)
+        StructField(s"${if (isMin) "min" else "max"}(${f.name})", f.dataType, nullable = true)
+      case SumSpec(c, isDouble) =>
+        // the partial's type matches Sum's result type over it: Spark wraps
+        // this column in the final Sum, so int columns emit exact i64
+        StructField(s"sum(${full.fields(c).name})", if (isDouble) DoubleType else LongType, nullable = true)
+    })
 
+  def describe(full: StructType): String =
+    specs.map {
+      case CountSpec => "count(*)"
+      case CountColSpec(c) => s"count(${full.fieldNames(c)})"
+      case MinMaxSpec(c, isMin) => s"${if (isMin) "min" else "max"}(${full.fieldNames(c)})"
+      case SumSpec(c, _) => s"sum(${full.fieldNames(c)})"
+    }.mkString("aggs=[", ",", "]") +
+      (if (groupIdx.isEmpty) "" else s", group=[${groupIdx.map(full.fieldNames).mkString(",")}]")
+}
+
+object BtrScan {
   /** Block files of each table dir, in dir then file-name order. */
   def listBlockFiles(tableDirs: Seq[String]): Array[InputPartition] = {
     val conf = SparkSession.active.sparkContext.hadoopConfiguration
@@ -328,6 +327,25 @@ object BtrScan {
     }
 }
 
+/** THE read planner: every `btr` read — rows, a pushed aggregate, and each
+  * micro-batch of a stream — plans here. The table is the snapshot
+  * `BtrTable.snapshot` resolves (taken once, at planning, so a table whose
+  * manifest is gone fails whatever schema the read was given); its block
+  * files are listed, pruned by the file-level zone index, and read through
+  * one `BtrReaderFactory`.
+  *
+  * Row mode reads the `required` columns, columnar, or through a pushed
+  * TopN as rows. Aggregate mode (`agg`, the shape of Spark's own
+  * `ParquetScan.pushedAggregate`) reads the partial-aggregate schema,
+  * optionally under exact-claimed filters and GROUP BY (BtrAggReader):
+  * counts come from frame headers alone; min/max/sum from the per-chunk
+  * zones where present, decoding ONLY the zone-less chunks' blobs for the
+  * referenced column. With filters, chunks go three-way: zone-rejected →
+  * skipped unread; zones PROVE all rows match → headers/zones fold as in
+  * the unfiltered case; mixed → decode the filter + agg columns and fold
+  * row by row. An aggregate scan reports unknown statistics and takes no
+  * runtime filters.
+  */
 class BtrScan(
     dir: String,
     fullSchema: StructType,
@@ -335,21 +353,31 @@ class BtrScan(
     zones: Array[ExactPred],
     limit: Int = -1,
     exact: Array[ExactPred] = Array.empty,
-    topN: Option[TopNSpec] = None)
+    topN: Option[TopNSpec] = None,
+    agg: Option[PushedAgg] = None)
   extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeV2Filtering {
-  override def readSchema(): StructType = required
+  override def readSchema(): StructType = agg.fold(required)(_.schema(fullSchema))
   override def toBatch: Batch = this
-  override def description(): String =
-    s"BtrScan(dir=$dir, columns=${required.fieldNames.mkString(",")}" +
-      (if (zones.isEmpty) ""
-       else s", zoneFilters=${zones.map(z => s"${z.cols.map(fullSchema.fieldNames).mkString("&")}:$z").mkString(";")}" +
-         s", files=${plannedFiles.length}/${allFiles.length}") +
-      (if (exact.isEmpty) ""
-       else s", exactFilters=${exact.map(p => s"${p.cols.map(fullSchema.fieldNames).mkString("&")}:$p").mkString(";")}") +
-      topN.fold("")(t => s", orderedLimit=${t.keys.map(k =>
-        fullSchema.fieldNames(k.colIdx) + (if (k.desc) " DESC" else " ASC")).mkString(",")} n=${t.n}") +
-      (if (limit >= 0) s", limit=$limit)" else ")")
+
+  private def described(ps: Array[ExactPred]): String =
+    ps.map(p => s"${p.cols.map(fullSchema.fieldNames).mkString("&")}:$p").mkString(";")
+
+  private def filesText: String = s", files=${plannedFiles.length}/${allFiles.length}"
+
+  override def description(): String = agg match {
+    case Some(a) =>
+      s"BtrAggScan(dir=$dir, ${a.describe(fullSchema)}" +
+        (if (exact.isEmpty) "" else s", exactFilters=${described(exact)}$filesText") +
+        ", headers-only with per-chunk decode fallback)"
+    case None =>
+      s"BtrScan(dir=$dir, columns=${required.fieldNames.mkString(",")}" +
+        (if (zones.isEmpty) "" else s", zoneFilters=${described(zones)}$filesText") +
+        (if (exact.isEmpty) "" else s", exactFilters=${described(exact)}") +
+        topN.fold("")(t => s", orderedLimit=${t.keys.map(k =>
+          fullSchema.fieldNames(k.colIdx) + (if (k.desc) " DESC" else " ASC")).mkString(",")} n=${t.n}") +
+        (if (limit >= 0) s", limit=$limit)" else ")")
+  }
 
   /** Runtime (join-driven) filtering — the dynamic-partition-pruning analog
     * for the block format: when this table is equi-joined to a broadcast
@@ -359,8 +387,8 @@ class BtrScan(
     * predicates (string keys stay bytes), so whole files (zone index) and
     * chunks (frame zones) of fact data that cannot match any build key are
     * never read; an untranslatable predicate is simply not used (Spark
-    * still applies the real join). Every column is zone-eligible, so all
-    * of them are advertised.
+    * still applies the real join). Every output column is zone-eligible,
+    * so all of them are advertised (none in aggregate mode).
     */
   @volatile private var runtimeZones: Array[ExactPred] = Array.empty
   @volatile private var plannedCache: Array[InputPartition] = _
@@ -371,7 +399,8 @@ class BtrScan(
     // only the columns this scan OUTPUTS: Spark resolves these against the
     // (column-pruned) relation output, and an unresolvable name is an
     // AnalysisException, not a skipped optimization
-    required.fieldNames.map(org.apache.spark.sql.connector.expressions.Expressions.column)
+    if (agg.isDefined) Array.empty
+    else required.fieldNames.map(org.apache.spark.sql.connector.expressions.Expressions.column)
 
   override def filter(predicates: Array[Predicate]): Unit = {
     val zs = predicates.flatMap(PredTranslator(fullSchema, _, claim = false))
@@ -389,15 +418,17 @@ class BtrScan(
 
   @volatile private var factoryRef: BtrReaderFactory = _
 
-  /** Decoded-size statistics from the manifest — lets Catalyst see the
-    * real (uncompressed) relation size for join planning (e.g. broadcast
-    * a small decoded dimension) instead of guessing from file sizes.
+  /** The table as this scan reads it: taken once, at first use. */
+  private lazy val snapshot: BtrTable.Snapshot = BtrTable.snapshot(SparkSession.active, dir)
+
+  /** Decoded-size statistics from the snapshot's manifest — lets Catalyst
+    * see the real (uncompressed) relation size for join planning (e.g.
+    * broadcast a small decoded dimension) instead of guessing from file
+    * sizes. Unknown in aggregate mode, and for a stream, whose
+    * micro-batches read only the batches new to each offset range.
     */
   override def estimateStatistics(): Statistics = {
-    // a batch-layout dir (batch=* sub-tables) has no top-level manifest:
-    // report unknown rather than fail
-    val m = try Some(BtrTable.readManifest(SparkSession.active, dir))
-            catch { case _: java.io.FileNotFoundException => None }
+    val m = if (agg.isEmpty && !streaming) Some(snapshot.manifest) else None
     val frac =
       if (required.isEmpty) 0.05
       else required.fieldNames.length.toDouble / math.max(1, fullSchema.length)
@@ -413,7 +444,7 @@ class BtrScan(
     }
   }
 
-  private lazy val allFiles: Array[InputPartition] = BtrScan.listBlockFiles(dir)
+  private lazy val allFiles: Array[InputPartition] = BtrScan.listBlockFiles(snapshot.dirs)
 
   /** PLANNING-time file pruning (BtrScan.pruneFiles): a selective pushed
     * (or runtime) filter drops whole block files before a single task
@@ -432,14 +463,21 @@ class BtrScan(
 
   override def planInputPartitions(): Array[InputPartition] = plannedFiles
 
+  /** The files of `tableDirs` this scan's zones keep: the micro-batch
+    * stream plans each batch range here.
+    */
+  private[sources] def planFiles(tableDirs: Seq[String]): Array[InputPartition] =
+    BtrScan.pruneFiles(BtrScan.listBlockFiles(tableDirs), activeZones)
+
   override def supportedCustomMetrics(): Array[org.apache.spark.sql.connector.metric.CustomMetric] =
-    Array(new ChunksSkippedMetric, new ChunksTotalMetric,
-      new FilesSkippedMetric, new FilesTotalMetric)
+    Array[org.apache.spark.sql.connector.metric.CustomMetric](
+      new ChunksSkippedMetric, new ChunksTotalMetric, new FilesSkippedMetric, new FilesTotalMetric) ++
+      (if (agg.isEmpty) Nil else Seq(new AggChunksHeaderOnlyMetric, new AggChunksDecodedMetric))
 
   /** Planning-time pruning as DRIVER metrics (round-5 judge ask #8): with
     * chunksSkipped/chunksTotal from the tasks, "what did pruning save"
     * reads as two ratios in the Spark UI — files dropped before launch,
-    * chunks skipped inside surviving files.
+    * chunks skipped (or folded from headers) inside surviving files.
     */
   override def reportDriverMetrics(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
     if (streaming) Array.empty // per-batch planning happens in the stream
@@ -453,7 +491,7 @@ class BtrScan(
     val confB = ConfShim.broadcast(spark.sparkContext)
     val colIdx = required.fieldNames.map(n => fullSchema.fieldIndex(n))
     val f = BtrReaderFactory(confB, BtrEncoder.validateSchema(fullSchema), colIdx, zones, limit,
-      exact, topN)
+      exact, topN, agg)
     f.extraZones = runtimeZones
     factoryRef = f
     f
@@ -465,7 +503,7 @@ class BtrScan(
   override def toMicroBatchStream(checkpointLocation: String)
     : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
     streaming = true
-    new BtrMicroBatchStream(dir, fullSchema, required, zones, exact)
+    new BtrMicroBatchStream(dir, this)
   }
 }
 
@@ -476,144 +514,44 @@ class BtrScan(
   * batch prefix: the btr sink commits epochs 0,1,2… serially, and the
   * contiguity guard makes an out-of-order or in-flight
   * manifest invisible rather than letting a later batch be read before an
-  * earlier gap. Each micro-batch plans only the NEW batches' block files,
-  * through the same pushed zone/claimed-filter machinery as the batch
-  * scan — including per-batch-dir file-level zone-index pruning, so a
-  * selective standing query on a growing table skips whole batch files
-  * before any task launches. At 100 TB ingest rates the per-trigger cost
-  * is one manifest glob + the new batches' listings, independent of
-  * table history.
+  * earlier gap. The stream keeps only these offsets: each micro-batch's
+  * NEW batches plan through the scan's file planner and read through its
+  * reader factory (Spark pushes no filter into a micro-batch scan, so its
+  * zones are empty and every new file is read). At 100 TB ingest rates the
+  * per-trigger cost is one manifest glob + the new batches' listings,
+  * independent of table history.
   */
-class BtrMicroBatchStream(
-    dir: String,
-    fullSchema: StructType,
-    required: StructType,
-    zones: Array[ExactPred],
-    exact: Array[ExactPred])
+class BtrMicroBatchStream(dir: String, scan: BtrScan)
   extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
   import org.apache.spark.sql.connector.read.streaming.Offset
-
-  private def conf = SparkSession.active.sparkContext.hadoopConfiguration
 
   private case class BatchOffset(batches: Long) extends Offset {
     override def json: String = s"""{"batches":$batches}"""
   }
 
-  /** Length of the contiguous completed-batch prefix 0..k-1. */
-  private def completed(): Long =
-    BtrTable.contiguousPrefix(BtrTable.publishedBatches(conf, dir))
-
   override def initialOffset(): Offset = BatchOffset(0L)
-  override def latestOffset(): Offset = BatchOffset(completed())
+  override def latestOffset(): Offset = BatchOffset(BtrTable.contiguousPrefix(
+    BtrTable.publishedBatches(SparkSession.active.sparkContext.hadoopConfiguration, dir)))
   override def deserializeOffset(json: String): Offset =
     BatchOffset("""\d+""".r.findFirstIn(json).getOrElse(
       throw new IllegalArgumentException(s"bad btr stream offset: $json")).toLong)
 
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[BatchOffset].batches
-    val e = end.asInstanceOf[BatchOffset].batches
-    BtrScan.pruneFiles(BtrScan.listBlockFiles((s until e).map(id => s"$dir/batch=$id")), zones)
-  }
+  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
+    scan.planFiles((start.asInstanceOf[BatchOffset].batches until end.asInstanceOf[BatchOffset].batches)
+      .map(BtrTable.batchDir(dir, _)))
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val confB = ConfShim.broadcast(SparkSession.active.sparkContext)
-    val colIdx = required.fieldNames.map(n => fullSchema.fieldIndex(n))
-    BtrReaderFactory(confB, BtrEncoder.validateSchema(fullSchema), colIdx, zones, -1, exact)
-  }
+  override def createReaderFactory(): PartitionReaderFactory = scan.createReaderFactory()
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }
 
-/** Aggregate scan (COUNT(*)/COUNT(col)/MIN/MAX/SUM, optionally under
-  * exact-claimed filters and GROUP BY): one partial row per block file, or
-  * per group and file when grouped (BtrAggReader). Counts come from
-  * frame headers alone; min/max come from the per-chunk zone maps where
-  * present (exact extrema) and fall back to decoding ONLY the zone-less
-  * chunks' blobs for the referenced column. With filters, chunks go
-  * three-way: zone-rejected → skipped unread; zones PROVE all rows match →
-  * headers/zones fold as in the unfiltered case; mixed → decode the filter
-  * + agg columns and fold row-by-row. File-level zone-index pruning applies
-  * before any task launches, exactly like the row scan.
-  */
-class BtrAggScan(dir: String, fullSchema: StructType, specs: Seq[AggSpec],
-    zones: Array[ExactPred] = Array.empty, exact: Array[ExactPred] = Array.empty,
-    groupIdx: Array[Int] = Array.empty)
-  extends Scan with Batch {
-  // partial-pushdown contract: group columns first (in GROUP BY order),
-  // then one partial per aggregate — Spark maps the output positionally
-  private val outSchema = StructType(groupIdx.toSeq.map(fullSchema.fields(_)) ++ specs.map {
-    case CountSpec => StructField("count", org.apache.spark.sql.types.LongType, nullable = false)
-    case CountColSpec(c) =>
-      StructField(s"count(${fullSchema.fields(c).name})",
-        org.apache.spark.sql.types.LongType, nullable = false)
-    case MinMaxSpec(c, isMin) =>
-      val f = fullSchema.fields(c)
-      StructField(s"${if (isMin) "min" else "max"}(${f.name})", f.dataType, nullable = true)
-    case SumSpec(c, isDouble) =>
-      // the partial's type matches Sum's result type over it: Spark wraps
-      // this column in the final Sum, so int columns emit exact i64
-      StructField(s"sum(${fullSchema.fields(c).name})",
-        if (isDouble) org.apache.spark.sql.types.DoubleType
-        else org.apache.spark.sql.types.LongType, nullable = true)
-  })
-  override def readSchema(): StructType = outSchema
-  override def toBatch: Batch = this
-  override def description(): String = {
-    val what = specs.map {
-      case CountSpec => "count(*)"
-      case CountColSpec(c) => s"count(${fullSchema.fieldNames(c)})"
-      case MinMaxSpec(c, isMin) => s"${if (isMin) "min" else "max"}(${fullSchema.fieldNames(c)})"
-      case SumSpec(c, _) => s"sum(${fullSchema.fieldNames(c)})"
-    }.mkString(",")
-    s"BtrAggScan(dir=$dir, aggs=[$what]" +
-      (if (groupIdx.isEmpty) ""
-       else s", group=[${groupIdx.map(fullSchema.fieldNames).mkString(",")}]") +
-      (if (exact.isEmpty) ""
-       else s", exactFilters=${exact.map(p => s"${p.cols.map(fullSchema.fieldNames).mkString("&")}:$p").mkString(";")}" +
-         s", files=${plannedFiles.length}/${allFiles.length}") +
-      ", headers-only with per-chunk decode fallback)"
-  }
-
-  private lazy val allFiles: Array[InputPartition] = BtrScan.listBlockFiles(dir)
-  private lazy val plannedFiles: Array[InputPartition] = BtrScan.pruneFiles(allFiles, zones)
-
-  override def planInputPartitions(): Array[InputPartition] = plannedFiles
-
-  override def supportedCustomMetrics(): Array[org.apache.spark.sql.connector.metric.CustomMetric] =
-    Array(new ChunksSkippedMetric, new ChunksTotalMetric,
-      new AggChunksHeaderOnlyMetric, new AggChunksDecodedMetric,
-      new FilesSkippedMetric, new FilesTotalMetric)
-
-  /** Planning-time file pruning as driver metrics — parity with BtrScan:
-    * a filtered aggregate's "what did pruning save" is the same two-level
-    * ratio (files dropped before launch, chunks skipped/folded inside).
-    */
-  override def reportDriverMetrics(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(BtrTaskMetric("filesSkipped", allFiles.length - plannedFiles.length),
-      BtrTaskMetric("filesTotal", allFiles.length))
-
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val confB = ConfShim.broadcast(SparkSession.active.sparkContext)
-    BtrAggReaderFactory(confB, BtrEncoder.validateSchema(fullSchema), specs, zones, exact, groupIdx)
-  }
-}
-
-case class BtrAggReaderFactory(
-    confB: org.apache.spark.broadcast.Broadcast[ConfShim.SerConf],
-    colTypes: Array[Int],
-    specs: Seq[AggSpec],
-    zones: Array[ExactPred] = Array.empty,
-    exact: Array[ExactPred] = Array.empty,
-    groupIdx: Array[Int] = Array.empty)
-  extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new BtrAggReader(partition.asInstanceOf[BtrInputPartition].file, ConfShim.conf(confB),
-      colTypes, specs, zones, exact, groupIdx)
-}
-
 case class BtrInputPartition(file: String) extends InputPartition
 
+/** THE reader factory: a pushed aggregate reads through BtrAggReader, a
+  * pushed TopN through BtrTopNReader (both rows), anything else through
+  * BtrColumnarReader.
+  */
 case class BtrReaderFactory(
     confB: org.apache.spark.broadcast.Broadcast[ConfShim.SerConf],
     colTypes: Array[Int],
@@ -621,7 +559,8 @@ case class BtrReaderFactory(
     zones: Array[ExactPred],
     limit: Int = -1,
     exact: Array[ExactPred] = Array.empty,
-    topN: Option[TopNSpec] = None)
+    topN: Option[TopNSpec] = None,
+    agg: Option[PushedAgg] = None)
   extends PartitionReaderFactory {
 
   /** Runtime (join-driven) zone predicates, late-bound by BtrScan.filter():
@@ -636,18 +575,23 @@ case class BtrReaderFactory(
     * ColumnarBatches (vectorized operators, zero per-value boxing). With
     * exact-claimed filters the columnar reader enforces them itself:
     * all-match chunks stay zero-copy, mixed chunks compact the matching
-    * rows into fresh vectors. Only a pushed TopN reads rows: it keeps a
-    * bounded row heap.
+    * rows into fresh vectors. A pushed TopN (a bounded row heap) and a
+    * pushed aggregate (partial rows) read rows.
     */
-  override def supportColumnarReads(partition: InputPartition): Boolean = topN.isEmpty
+  override def supportColumnarReads(partition: InputPartition): Boolean = topN.isEmpty && agg.isEmpty
 
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new BtrTopNReader(partition.asInstanceOf[BtrInputPartition].file, ConfShim.conf(confB),
-      colTypes, requiredIdx, allZones, exact, topN.get)
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
+    val file = partition.asInstanceOf[BtrInputPartition].file
+    agg match {
+      case Some(a) =>
+        new BtrAggReader(file, ConfShim.conf(confB), colTypes, a.specs, allZones, exact, a.groupIdx)
+      case None =>
+        new BtrTopNReader(file, ConfShim.conf(confB), colTypes, requiredIdx, allZones, exact, topN.get)
+    }
+  }
 
   override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] =
-    new BtrColumnarReader(
-      partition.asInstanceOf[BtrInputPartition].file, ConfShim.conf(confB),
+    new BtrColumnarReader(partition.asInstanceOf[BtrInputPartition].file, ConfShim.conf(confB),
       colTypes, requiredIdx, allZones, limit, exact)
 }
 

@@ -244,7 +244,7 @@ class BtrStreamingWrite(
     keptIdx: Array[Int])
   extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
 
-  private def epochDir(epochId: Long) = s"$dir/batch=$epochId"
+  private def epochDir(epochId: Long) = BtrTable.batchDir(dir, epochId)
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
     : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory =
@@ -258,10 +258,7 @@ class BtrStreamingWrite(
     // replayed epoch: the manifest is the publish marker — only
     // manifest-ABSENT means not-done (a read error must propagate, never
     // trigger a second publish under a live manifest)
-    val done =
-      try BtrTable.readManifest(spark, edir).columns.nonEmpty
-      catch { case _: java.io.FileNotFoundException => false }
-    if (done) return
+    if (BtrTable.published(spark, edir).exists(_.columns.nonEmpty)) return
     // an all-empty epoch still publishes (an id gap would stall the
     // source's contiguous-prefix offset forever) — ensure the blocks dir
     // exists for listings
@@ -298,7 +295,7 @@ case class BtrStreamingWriterFactory(
     // epoch commit runs after the tasks, and a block file is created
     // without parent dirs: each task makes the epoch's blocks dir first
     val conf = ConfShim.conf(confB)
-    val blocks = new Path(s"$dir/batch=$epochId/blocks")
+    val blocks = new Path(s"${BtrTable.batchDir(dir, epochId)}/blocks")
     blocks.getFileSystem(conf).mkdirs(blocks)
     new BtrDataWriter(conf, blocks.toString, partitionId, taskId, schema, colTypes, cfg, keptIdx)
   }

@@ -1143,6 +1143,55 @@ class BtrSourceSpec extends AnyFunSuite {
     assert(spark.read.format("btr").load(dir).count() == 400)
   }
 
+  test("an explicit-schema read of a table whose manifest is gone fails, naming the manifest") {
+    import spark.implicits._
+    import org.apache.hadoop.fs.Path
+    val dir = tmp("unpublished")
+    BlockFiles.write((0 until 1000).map(i => (i, s"v$i")).toDF("id", "v"), dir, BtrConfig(blockSize = 256))
+    val schema = spark.read.format("btr").load(dir).schema
+    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(new Path(dir, graft.engine.BtrTable.ManifestFile), false)
+    val e = intercept[Exception](spark.read.schema(schema).format("btr").load(dir).count())
+    val fnf = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case f: java.io.FileNotFoundException => f }
+    assert(fnf.exists(_.getMessage.contains(graft.engine.BtrTable.ManifestFile)), e)
+  }
+
+  test("a batch=* table's statistics sum the rows of its published prefix") {
+    import spark.implicits._
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.connector.read.SupportsReportStatistics
+    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
+    val dir = tmp("batch_stats")
+    for (b <- 0 until 3)
+      BlockFiles.write((0 until 100 * (b + 1)).map(i => (i, s"v$i")).toDF("id", "v"), s"$dir/batch=$b")
+    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(new Path(s"$dir/batch=2/${graft.engine.BtrTable.ManifestFile}"), false)
+    val scan = spark.read.format("btr").load(dir).queryExecution.optimizedPlan
+      .collectFirst { case r: DataSourceV2ScanRelation => r.scan }.get
+    val rows = scan.asInstanceOf[SupportsReportStatistics].estimateStatistics().numRows()
+    assert(rows.isPresent && rows.getAsLong == 300L, rows)
+  }
+
+  test("compressed exchange: a NULL range key sorts first and round-trips") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.InternalRow
+    val dir = tmp("cxr_null_key")
+    val df = Seq[(String, Int)](("a", 1), (null, 2), ("b", 3)).toDF("k", "v")
+    BlockFiles.write(df, dir, BtrConfig.default, rangeCols = Seq("k"), compressedExchange = true)
+    val back = spark.read.format("btr").load(dir)
+    assert(back.count() == 3)
+    assert(back.except(df).count() == 0 && df.except(back).count() == 0)
+    // a NULL key field encodes below every value of its type, not as 0
+    def below(t: Byte, nul: InternalRow, least: InternalRow): Unit = {
+      def k(r: InternalRow) = graft.engine.BtrEncoder.encodeRangeKey(r, Array(0), Array(t.toInt))
+      assert(BlockFiles.UnsignedBytes.compare(k(nul), k(least)) < 0, ColType.name(t))
+    }
+    below(ColType.Integer, InternalRow(null), InternalRow(Int.MinValue))
+    below(ColType.Double, InternalRow(null), InternalRow(Double.NegativeInfinity))
+    below(ColType.String, InternalRow(null), InternalRow(UTF8String.fromString("")))
+  }
+
   test("range-partitioned blocks write") {
     import spark.implicits._
     val dir = tmp("range")

@@ -81,6 +81,23 @@ class BtrStreamSourceSpec extends AnyFunSuite {
       "streamed rows must equal the union of completed batches")
   }
 
+  test("a stream started on a dir with no published batch reads the batches as they land") {
+    val dir = tmp("empty_start")
+    new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .mkdirs(new org.apache.hadoop.fs.Path(dir))
+    val q = spark.readStream.schema(batchDf(0, 1).schema).format("btr").load(dir)
+      .writeStream.outputMode("append").format("memory").queryName("btrs_empty")
+      .option("checkpointLocation", tmp("empty_start_ckpt"))
+      .start()
+    try {
+      q.processAllAvailable()
+      assert(spark.table("btrs_empty").count() == 0)
+      BlockFiles.write(batchDf(0, 100), s"$dir/batch=0", BtrConfig(blockSize = 64))
+      q.processAllAvailable()
+      assert(spark.table("btrs_empty").count() == 100)
+    } finally q.stop()
+  }
+
   test("pushed filters prune inside the streaming scan (zone skip + claiming)") {
     val dir = tmp("filter")
     val ckpt = tmp("filter_ckpt")

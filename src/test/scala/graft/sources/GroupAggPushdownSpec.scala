@@ -133,7 +133,7 @@ class GroupAggPushdownSpec extends AnyFunSuite {
         min(col("n_bytes")).as("mn"), max(col("n_bytes")).as("mx")))
     // header-only proof at the reader level: run one file's reader directly
     // and check it decoded (at most) only group-boundary chunks
-    val files = BtrScan.listBlockFiles(dir.stripPrefix("file:"))
+    val files = BtrScan.listBlockFiles(Seq(dir.stripPrefix("file:")))
     val conf = spark.sparkContext.hadoopConfiguration
     var rows = 0L
     files.foreach { ip =>

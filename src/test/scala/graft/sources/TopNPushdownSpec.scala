@@ -141,7 +141,7 @@ class TopNPushdownSpec extends AnyFunSuite {
     val base = spark.range(0, 65536).selectExpr("CAST(id AS INT) AS k")
     BlockFiles.write(base.repartition(1), dir, BtrConfig(blockSize = 1024),
       rangeCols = Seq("k"))
-    val files = BtrScan.listBlockFiles(dir.stripPrefix("file:"))
+    val files = BtrScan.listBlockFiles(Seq(dir.stripPrefix("file:")))
     val conf = spark.sparkContext.hadoopConfiguration
     // run every partition's reader (the range exchange may split files):
     // each keeps a LOCAL top-5, filling its heap from its first chunk and
