@@ -421,7 +421,8 @@ object DedupOps {
     * unique representatives enter the sign-LSH join, and over-full sign
     * buckets are capped — an embedding corpus full of one boilerplate
     * vector would otherwise make O(bucket²) candidates carrying full
-    * Array[Float]s on both sides.
+    * Array[Float]s on both sides. Two vectors of different dimensions
+    * met in one bucket fail with an IllegalArgumentException naming both.
     */
   def embeddingPairs(
       df: DataFrame,
@@ -472,7 +473,8 @@ object DedupOps {
               i <- Iterator.range(0, sorted.length - 1)
               j <- Iterator.range(i + 1, sorted.length)
             } yield (sorted(i)._1, sorted(j)._1,
-              SimilarityOps.cosine(sorted(i)._2, sorted(j)._2), 0L)
+              SimilarityOps.cosine("embeddingPairs", sorted(i)._1, sorted(i)._2,
+                sorted(j)._1, sorted(j)._2), 0L)
           }
         }
         .toDF("id_a", "id_b", "cosine", "dropped"),

@@ -46,11 +46,14 @@ object SimilarityOps {
       })
     }
 
+  /** Cosine of two vectors of one dimension; vectors of two dimensions
+    * have none and fail with an IllegalArgumentException.
+    */
   def cosine(a: Array[Float], b: Array[Float]): Double = {
+    require(a.length == b.length, s"cosine of vectors of dimensions ${a.length} and ${b.length}")
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
-    val n = math.min(a.length, b.length)
-    while (i < n) {
+    while (i < a.length) {
       dot += a(i).toDouble * b(i)
       na += a(i).toDouble * a(i)
       nb += b(i).toDouble * b(i)
@@ -59,18 +62,30 @@ object SimilarityOps {
     if (na == 0 || nb == 0) 0.0 else dot / math.sqrt(na * nb)
   }
 
+  /** `cosine` of vector `idA` and vector `idB`; a dimension mismatch fails
+    * with an IllegalArgumentException naming both vectors.
+    */
+  def cosine(op: String, idA: Long, a: Array[Float], idB: Long, b: Array[Float]): Double = {
+    require(a.length == b.length,
+      s"$op: vector $idA has dimension ${a.length}, but vector $idB has dimension ${b.length}")
+    cosine(a, b)
+  }
+
   /** Shared ANN engine: ONE corpus pass with a k-bounded heap per query,
     * then a global per-query top-k merge of the (numQueries × k per
     * partition) partials. Queries are collected + broadcast — they must be
     * small, the premise of broadcast ANN. `bucketOf` maps a corpus vector
     * to its bucket; a query scores it only when the bucket is in the
     * query's `probes` set (null probes = exact/brute: score everything);
-    * it also gets the corpus id, for error messages.
+    * it also gets the corpus id, for error messages. A corpus vector of
+    * another dimension than the query it is scored against fails with an
+    * IllegalArgumentException naming both (`op` names the caller).
     * The shuffle carries only candidate ids+cosines, never the corpus —
     * the only shape that survives a 100 TB corpus (guide §2.3: shuffle
     * keys and metadata, not payloads).
     */
   private def heapTopK(
+      op: String,
       corpus: DataFrame,
       idCol: String,
       vecCol: String,
@@ -101,7 +116,7 @@ object SimilarityOps {
           var q = 0
           while (q < queries.length) {
             if (probes == null || java.util.Arrays.binarySearch(probes(q), b) >= 0) {
-              val c = round4(cosine(queries(q)._2, cvec))
+              val c = round4(cosine(op, queries(q)._1, queries(q)._2, cid, cvec))
               val h = heaps(q)
               if (h.size < k) h.add((c, cid))
               else {
@@ -150,14 +165,17 @@ object SimilarityOps {
       idCol: String,
       vecCol: String,
       k: Int): DataFrame =
-    heapTopK(corpus, idCol, vecCol, k,
+    heapTopK("bruteForceTopK", corpus, idCol, vecCol, k,
       collectQueries(queries, idCol, vecCol), (_, _) => 0, null)
 
   /** IVF (inverted-file) ANN: k-means centroids trained on a deterministic
     * driver-side sample partition the corpus into nCentroids buckets; each
     * query probes its nProbe nearest centroids' buckets, then exact top-k
     * within the candidates. Cost ≈ nProbe/nCentroids of the corpus per
-    * query; centroids broadcast, corpus bucketing is one map pass.
+    * query; centroids broadcast, corpus bucketing is one map pass. Every
+    * sample, query and corpus vector must have the first sample vector's
+    * dimension; a mismatch fails with an IllegalArgumentException naming
+    * the vector.
     */
   def ivfTopK(
       corpus: DataFrame,
@@ -178,11 +196,13 @@ object SimilarityOps {
     // so lowest-id training would model only the oldest shard and quietly
     // collapse recall (round-3 verdict #3). xxhash64 keeps the sample
     // reproducible and the plan a single bounded TakeOrdered job.
+    val sample = vecs.orderBy(xxhash64(col(idCol).cast("long")), col(idCol).cast("long"))
+      .limit(sampleSize).collect()
+    require(sample.nonEmpty, "empty corpus")
+    val dim = sample(0)._2.length
+    val ref = "the training sample vectors"
     val train: Array[Array[Float]] =
-      vecs.orderBy(xxhash64(col(idCol).cast("long")), col(idCol).cast("long"))
-        .limit(sampleSize).collect().map(_._2)
-    require(train.nonEmpty, "empty corpus")
-    val dim = train(0).length
+      sample.map { case (id, v) => checkDim("ivfTopK", "sample", id, v, ref, dim) }
     // deterministic init: evenly spaced sample vectors
     var centroids = Array.tabulate(math.min(nCentroids, train.length)) { c =>
       train((c.toLong * train.length / math.min(nCentroids, train.length)).toInt)
@@ -209,13 +229,14 @@ object SimilarityOps {
     // shape shuffled the bucketed corpus (vectors and all) through a join
     // plus a second exchange for the rank window (guide §2.3/§2.4)
     val qs = collectQueries(queries, idCol, vecCol)
-    val probes: Array[Array[Int]] = qs.map { case (_, qv) =>
+    val probes: Array[Array[Int]] = qs.map { case (id, qv) =>
+      checkDim("ivfTopK", "query", id, qv, ref, dim)
       val cents = centB.value
       val byDist = cents.indices.sortBy(c => -cosineD(cents(c), qv))
       byDist.take(nProbe).sorted.toArray
     }
-    heapTopK(corpus, idCol, vecCol, k, qs,
-      (_, v) => nearest(centB.value, v), probes)
+    heapTopK("ivfTopK", corpus, idCol, vecCol, k, qs,
+      (id, v) => nearest(centB.value, checkDim("ivfTopK", "corpus", id, v, ref, dim)), probes)
   }
 
   private def nearest(centroids: Array[Array[Double]], v: Array[Float]): Int = {
@@ -269,13 +290,18 @@ object SimilarityOps {
       val s = lshBucket("query", id, qv, dim, planes, seed)
       (Seq(s) ++ (0 until planes).map(b => s ^ (1 << b))).distinct.sorted.toArray
     }
-    heapTopK(corpus, idCol, vecCol, k, qs, lshBucket("corpus", _, _, dim, planes, seed), probes)
+    heapTopK("lshTopK", corpus, idCol, vecCol, k, qs, lshBucket("corpus", _, _, dim, planes, seed), probes)
   }
 
-  private def lshBucket(kind: String, id: Long, v: Array[Float], dim: Int, planes: Int, seed: Long): Int = {
-    if (v.length != dim) throw new IllegalArgumentException(
-      s"lshTopK: $kind vector $id has dimension ${v.length}, but the queries have dimension $dim")
-    signBucket(v, planes, seed)
+  private def lshBucket(kind: String, id: Long, v: Array[Float], dim: Int, planes: Int, seed: Long): Int =
+    signBucket(checkDim("lshTopK", kind, id, v, "the queries", dim), planes, seed)
+
+  /** `v`, vector `id` of the `kind` side of `op`, when it has `ref`'s
+    * dimension `dim`; otherwise a named IllegalArgumentException.
+    */
+  private def checkDim(op: String, kind: String, id: Long, v: Array[Float], ref: String, dim: Int): Array[Float] = {
+    require(v.length == dim, s"$op: $kind vector $id has dimension ${v.length}, but $ref have dimension $dim")
+    v
   }
 
   /** Sign-LSH bucket of one vector under the (seed, planes, v.length)-keyed

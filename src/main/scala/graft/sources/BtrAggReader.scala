@@ -1,38 +1,9 @@
 package graft.sources
 
-import graft.codec.DecodedStrings
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read.PartitionReader
 import org.apache.spark.unsafe.types.UTF8String
-
-/** Min/max fold helpers of the aggregate reader. Orderings are Spark's SQL
-  * semantics: ints as ints, doubles via Double.compare (NaN greatest,
-  * -0.0 < 0.0), strings via unsigned UTF-8 byte comparison. Fold state
-  * slots are AnyRef (java.lang boxes / byte arrays; null = no value yet —
-  * surfaces as SQL NULL).
-  */
-private[sources] object AggFolds {
-
-  def foldLong(acc: Array[AnyRef], s: Int, v: Long, isMin: Boolean): Unit = {
-    // int columns: zone longs always fit the column's Int values
-    val cur = acc(s).asInstanceOf[java.lang.Integer]
-    val vi = v.toInt
-    if (cur == null || (if (isMin) vi < cur else vi > cur)) acc(s) = Int.box(vi)
-  }
-
-  def foldDouble(acc: Array[AnyRef], s: Int, v: Double, isMin: Boolean): Unit = {
-    val cur = acc(s).asInstanceOf[java.lang.Double]
-    val c = if (cur == null) 0 else java.lang.Double.compare(v, cur)
-    if (cur == null || (if (isMin) c < 0 else c > 0)) acc(s) = Double.box(v)
-  }
-
-  def foldBytes(acc: Array[AnyRef], s: Int, v: Array[Byte], isMin: Boolean): Unit = {
-    val cur = acc(s).asInstanceOf[Array[Byte]]
-    val c = if (cur == null) 0 else java.util.Arrays.compareUnsigned(v, cur)
-    if (cur == null || (if (isMin) c < 0 else c > 0)) acc(s) = v
-  }
-}
 
 /** Aggregate pushdown reader (partial), grouped or not: one block file's
   * chunks fold into per-group COUNT/COUNT(col)/MIN/MAX/SUM partials;
@@ -52,7 +23,12 @@ private[sources] object AggFolds {
   * against the frame), rows match through `ExactPred.rowMatches` as in the
   * scan readers, and a chunk lacking an aggregated, grouped or filtered
   * column is the cursor's named error. COUNT(col) never decodes its column
-  * — the validity bitmap is header-resident.
+  * — the validity bitmap is header-resident (`loadValidity`).
+  *
+  * MIN/MAX fold the columns' boxed values in Spark's SQL order
+  * (`ArrayVector.compare`: ints as ints, doubles via Double.compare — NaN
+  * greatest, -0.0 < 0.0 — and strings via unsigned UTF-8 bytes); a fold
+  * slot is null until a value arrives, which surfaces as SQL NULL.
   *
   * The scale shape is `SELECT day, count(*) … GROUP BY day` on a
   * day-clustered 100 TB table: only chunks spanning a group boundary (or
@@ -88,8 +64,8 @@ class BtrAggReader(
   private var chunksHeaderOnly = 0L
   private var chunksDecoded = 0L
 
-  /** Key = group values in query order (Integer / normalized Double /
-    * UTF8String / null); array-content equality.
+  /** Key = group values in query order (`ArrayVector.key`: Integer /
+    * normalized Double / UTF8String / null); array-content equality.
     */
   private final class GKey(val vs: Array[AnyRef]) {
     override val hashCode: Int = java.util.Arrays.hashCode(vs)
@@ -113,10 +89,12 @@ class BtrAggReader(
   private var eof = false
   private var cur: InternalRow = _
 
+  /** The state of group `vs`; a new group's key is detached from the
+    * chunk arena, so the map never pins a chunk.
+    */
   private def state(vs: Array[AnyRef]): GState = {
-    val k = new GKey(vs)
-    var st = groups.get(k)
-    if (st == null) { st = new GState; groups.put(k, st) }
+    var st = groups.get(new GKey(vs))
+    if (st == null) { st = new GState; groups.put(new GKey(vs.map(ArrayVector.detach)), st) }
     st
   }
 
@@ -125,10 +103,6 @@ class BtrAggReader(
     * reaches the flush threshold before the end of the file.
     */
   private val single: GState = if (groupIdx.isEmpty) state(Array.empty) else null
-
-  /** Spark groups all NaNs together and -0.0 with 0.0. */
-  @inline private def normD(v: Double): Double =
-    if (v == 0.0d) 0.0d else if (java.lang.Double.isNaN(v)) Double.NaN else v
 
   private def flush(): Unit = {
     val it = groups.entrySet().iterator()
@@ -147,11 +121,7 @@ class BtrAggReader(
             if (!st.sumSeen(s)) null
             else if (isDouble) Double.box(st.sumD(s))
             else Long.box(st.sumL(s))
-          case _: MinMaxSpec => st.acc(s) match {
-            case null           => null
-            case b: Array[Byte] => UTF8String.fromBytes(b)
-            case x              => x
-          }
+          case _: MinMaxSpec => st.acc(s)
         }
         row.update(groupIdx.length + s, v)
         s += 1
@@ -181,7 +151,7 @@ class BtrAggReader(
             val mn = java.lang.Double.longBitsToDouble(z.lmin)
             val mx = java.lang.Double.longBitsToDouble(z.lmax)
             if (!(mn == mx)) return None // NaN never has a zone; -0.0==0.0 is one group
-            vs(g) = Double.box(normD(mn))
+            vs(g) = Double.box(ArrayVector.normD(mn))
           case 3 =>
             if (!java.util.Arrays.equals(z.smin, z.smax)) return None
             vs(g) = UTF8String.fromBytes(z.smin)
@@ -204,11 +174,12 @@ class BtrAggReader(
       aggs(s) match {
         case MinMaxSpec(c, isMin) =>
           val z = cursor.zone(c)
+          // int columns: zone longs always fit the column's Int values
           z.kind match {
-            case 1 => AggFolds.foldLong(st.acc, s, if (isMin) z.lmin else z.lmax, isMin)
-            case 2 => AggFolds.foldDouble(st.acc, s,
-              java.lang.Double.longBitsToDouble(if (isMin) z.lmin else z.lmax), isMin)
-            case 3 => AggFolds.foldBytes(st.acc, s, if (isMin) z.smin else z.smax, isMin)
+            case 1 => fold(st, s, Int.box((if (isMin) z.lmin else z.lmax).toInt), isMin)
+            case 2 => fold(st, s,
+              Double.box(java.lang.Double.longBitsToDouble(if (isMin) z.lmin else z.lmax)), isMin)
+            case 3 => fold(st, s, UTF8String.fromBytes(if (isMin) z.smin else z.smax), isMin)
             case _ => () // no zone: loaded below
           }
         case CountColSpec(c) =>
@@ -236,31 +207,29 @@ class BtrAggReader(
       chunksDecoded += 1
       cursor.load(need.map(s => specCol(aggs(s))).distinct.sorted.toArray)
       need.foreach { s =>
-        val c = specCol(aggs(s))
-        val nb = cursor.nulls(c)
+        val v = cursor.data(specCol(aggs(s)))
         var i = 0
         while (i < rows) {
-          if (!ExactPred.isNull(nb, i)) foldValue(st, s, cursor.data(c), i)
+          if (!v.isNullAt(i)) foldValue(st, s, v, i)
           i += 1
         }
       }
     }
   }
 
-  /** Fold row `i` of decoded column `values` into MIN/MAX or SUM slot `s`. */
-  private def foldValue(st: GState, s: Int, values: AnyRef, i: Int): Unit = aggs(s) match {
-    case MinMaxSpec(_, isMin) =>
-      values match {
-        case a: Array[Int]     => AggFolds.foldLong(st.acc, s, a(i), isMin)
-        case a: Array[Double]  => AggFolds.foldDouble(st.acc, s, a(i), isMin)
-        case d: DecodedStrings => AggFolds.foldBytes(st.acc, s, d.copy(i), isMin)
-      }
-    case _: SumSpec =>
-      values match {
-        case a: Array[Int]    => st.sumL(s) += a(i); st.sumSeen(s) = true
-        case a: Array[Double] => st.sumD(s) += a(i); st.sumSeen(s) = true
-        case _ => throw new IllegalStateException("string column under SUM pushdown")
-      }
+  /** Fold boxed value `v` into MIN/MAX slot `s`. */
+  private def fold(st: GState, s: Int, v: AnyRef, isMin: Boolean): Unit = {
+    val cur = st.acc(s)
+    val c = if (cur == null) 0 else ArrayVector.compare(v, cur)
+    if (cur == null || (if (isMin) c < 0 else c > 0)) st.acc(s) = v
+  }
+
+  /** Fold non-null row `i` of column vector `v` into MIN/MAX or SUM slot `s`. */
+  private def foldValue(st: GState, s: Int, v: ArrayVector, i: Int): Unit = aggs(s) match {
+    case MinMaxSpec(_, isMin) => fold(st, s, v.boxed(i), isMin)
+    case SumSpec(_, isDouble) =>
+      if (isDouble) st.sumD(s) += v.getDouble(i) else st.sumL(s) += v.getInt(i)
+      st.sumSeen(s) = true
     case _ => ()
   }
 
@@ -272,8 +241,9 @@ class BtrAggReader(
   }
 
   /** Row-level path: load filter (when not all-match) + group + agg
-    * columns, route each passing row to its group's state (the one state
-    * of an ungrouped aggregate, with no per-row key).
+    * columns and the COUNT(col) columns' validity, route each passing row
+    * to its group's state (the one state of an ungrouped aggregate, with no
+    * per-row key).
     */
   private def decodeRows(evalFilter: Boolean): Unit = {
     chunksDecoded += 1
@@ -283,32 +253,22 @@ class BtrAggReader(
     }
     val filterCols = if (evalFilter) exact.flatMap(_.cols) else Array.empty[Int]
     cursor.load((filterCols ++ groupIdx ++ aggCols).distinct.sorted)
+    cursor.loadValidity(aggs.collect { case CountColSpec(c) => c })
     val data = cursor.data
-    val nulls = cursor.nulls
     var i = 0
     while (i < cursor.chunkRows) {
       if (!evalFilter || cursor.rowMatches(i)) {
         val st = if (single != null) single else {
           val vs = new Array[AnyRef](groupIdx.length)
           var g = 0
-          while (g < groupIdx.length) {
-            val c = groupIdx(g)
-            vs(g) =
-              if (ExactPred.isNull(nulls(c), i)) null
-              else data(c) match {
-                case a: Array[Int]     => Int.box(a(i))
-                case a: Array[Double]  => Double.box(normD(a(i)))
-                case d: DecodedStrings => UTF8String.fromBytes(d.copy(i))
-              }
-            g += 1
-          }
+          while (g < groupIdx.length) { vs(g) = data(groupIdx(g)).key(i); g += 1 }
           state(vs)
         }
         st.count += 1
         var s = 0
         while (s < aggs.length) {
           val c = specCol(aggs(s))
-          if (c >= 0 && !ExactPred.isNull(nulls(c), i)) aggs(s) match {
+          if (c >= 0 && !data(c).isNullAt(i)) aggs(s) match {
             case _: CountColSpec => st.cnt(s) += 1
             case _               => foldValue(st, s, data(c), i)
           }

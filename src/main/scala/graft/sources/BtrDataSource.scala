@@ -1,6 +1,5 @@
 package graft.sources
 
-import graft.codec.DecodedStrings
 import graft.engine.{BtrEncoder, BtrTable}
 import graft.format.ColZone
 import org.apache.spark.sql.SparkSession
@@ -571,7 +570,7 @@ case class BtrReaderFactory(
 
   private def allZones: Array[ExactPred] = zones ++ extraZones
 
-  /** Decoded chunks are columnar arrays already — hand them to Spark as
+  /** Decoded chunks are column vectors already — hand them to Spark as
     * ColumnarBatches (vectorized operators, zero per-value boxing). With
     * exact-claimed filters the columnar reader enforces them itself:
     * all-match chunks stay zero-copy, mixed chunks compact the matching
@@ -602,8 +601,9 @@ case class BtrReaderFactory(
   * header, skips (unread) every chunk a static zone predicate rejects and
   * sets `chunkAllMatch` for the survivor; the reader then either drops it
   * (`skip()`, counted like a zone skip), folds it from the header alone
-  * (`zone`, `nulls`, `chunkRows`) or decodes the columns it needs
-  * (`load`). Pruned and unloaded columns' blobs are seeked over, never
+  * (`zone`, `chunkRows`) or decodes the columns it needs into `data`
+  * (`load`; `loadValidity` takes a column's validity bitmap alone, from
+  * the header). Pruned and unloaded columns' blobs are seeked over, never
   * read.
   *
   * One column rule: `colTypes` are the table's column types, and every
@@ -634,21 +634,16 @@ final class ChunkCursor(
   var chunksSkipped: Long = 0L
   var chunksTotal: Long = 0L
 
-  /** The current chunk's loaded columns (Array[Int] / Array[Double] /
-    * DecodedStrings), indexed by FILE column; columns not loaded are null.
+  /** The current chunk's loaded columns, indexed by FILE column, each
+    * vector carrying its validity bitmap; columns not loaded are null.
     */
-  val data = new Array[AnyRef](colTypes.length)
+  val data = new Array[ArrayVector](colTypes.length)
   var chunkRows = 0
   /** True when the zones PROVE every row of this chunk satisfies the
     * exact-claimed predicates — rowMatches need not be consulted.
     */
   var chunkAllMatch = true
 
-  /** The current chunk's validity bitmaps by file column (bit i set = row
-    * i NULL; null when the column has no nulls — placeholder values are
-    * masked by it). Header-resident: valid before any `load`.
-    */
-  def nulls: Array[Array[Byte]] = fr.nullBits
   /** Column `c`'s zone in the current chunk's header. */
   def zone(c: Int): ColZone = fr.zone(c)
 
@@ -656,7 +651,7 @@ final class ChunkCursor(
     * predicate? (Only consulted when !chunkAllMatch, after loading the
     * predicates' columns.)
     */
-  def rowMatches(i: Int): Boolean = ExactPred.rowMatches(exact, data, nulls, i)
+  def rowMatches(i: Int): Boolean = ExactPred.rowMatches(exact, data, i)
 
   private def checkColumns(): Unit = checked.foreach { c =>
     if (c >= fr.nCols)
@@ -674,7 +669,7 @@ final class ChunkCursor(
   def nextChunk(): Boolean = {
     if (fr == null) fr = new FrameReader(file, conf)
     else fr.finishChunk() // the previous chunk's unread blobs: seek, never read
-    java.util.Arrays.fill(data, null)
+    data.mapInPlace(_ => null)
     while (fr.nextHeader()) {
       chunksTotal += 1
       checkColumns()
@@ -695,6 +690,12 @@ final class ChunkCursor(
 
   /** Decode columns `cols` (ascending) of the current chunk into `data`. */
   def load(cols: Array[Int]): Unit = cols.foreach(c => data(c) = fr.decodeColumn(c))
+
+  /** Give each of `cols` not loaded yet its validity bitmap alone (a
+    * `ValidityVector`), read from the header with no decode.
+    */
+  def loadValidity(cols: Array[Int]): Unit =
+    cols.foreach(c => if (data(c) == null) data(c) = fr.validity(c))
 
   def metrics: Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
     Array(BtrTaskMetric("chunksSkipped", chunksSkipped), BtrTaskMetric("chunksTotal", chunksTotal))
@@ -740,13 +741,13 @@ class AggChunksDecodedMetric extends org.apache.spark.sql.connector.metric.Custo
 private[sources] case class BtrTaskMetric(name: String, value: Long)
   extends org.apache.spark.sql.connector.metric.CustomTaskMetric
 
-/** Columnar reader: one ColumnarBatch per decoded chunk, wrapping the
-  * decoded arrays directly (no per-value copies or boxing). With
-  * exact-claimed filters (round-5): a chunk the zones PROVE fully matching
-  * keeps the zero-copy vectors; a mixed chunk COMPACTS the matching rows
-  * into fresh vectors (ints/doubles copy values; strings share the decode
-  * arena and copy only offsets) — the scan stays columnar under claimed
-  * predicates instead of falling back to row-at-a-time.
+/** Columnar reader: one ColumnarBatch per decoded chunk, over the decoded
+  * vectors themselves (no per-value copies or boxing). With exact-claimed
+  * filters (round-5): a chunk the zones PROVE fully matching keeps the
+  * zero-copy vectors; a mixed chunk COMPACTS the matching rows into fresh
+  * vectors (`ArrayVector.gather`: ints/doubles copy values; strings share
+  * the decode arena and copy only offsets) — the scan stays columnar under
+  * claimed predicates instead of falling back to row-at-a-time.
   */
 class BtrColumnarReader(
     file: String,
@@ -765,20 +766,13 @@ class BtrColumnarReader(
   private var emittedRows = 0L
   private var batch: ColumnarBatch = _
 
-  private def vectorOf(values: AnyRef, nb: Array[Byte]): ColumnVector = values match {
-    case a: Array[Int]     => new IntArrayVector(a, nb)
-    case a: Array[Double]  => new DoubleArrayVector(a, nb)
-    case d: DecodedStrings => new StringArenaVector(d, nb)
-  }
-
   override def next(): Boolean = {
     if (limit >= 0 && emittedRows >= limit) return false
     while (cursor.nextChunk()) {
       cursor.load(readCols)
       val n =
         if (cursor.chunkAllMatch) {
-          batch = new ColumnarBatch(
-            requiredIdx.map(c => vectorOf(cursor.data(c), cursor.nulls(c))), cursor.chunkRows)
+          batch = new ColumnarBatch(requiredIdx.map(c => cursor.data(c): ColumnVector), cursor.chunkRows)
           cursor.chunkRows
         } else {
           // compact the matching row ids, then gather per column
@@ -792,44 +786,7 @@ class BtrColumnarReader(
           }
           if (m == 0) -1 // nothing survives; try the next chunk
           else {
-            val vectors = requiredIdx.map { c =>
-              val nb = cursor.nulls(c)
-              val cnb: Array[Byte] =
-                if (nb == null) null
-                else {
-                  val out = new Array[Byte]((m + 7) >> 3)
-                  var k = 0
-                  var any = false
-                  while (k < m) {
-                    if (ExactPred.isNull(nb, sel(k))) {
-                      out(k >> 3) = (out(k >> 3) | (1 << (k & 7))).toByte
-                      any = true
-                    }
-                    k += 1
-                  }
-                  if (any) out else null
-                }
-              val compacted: AnyRef = cursor.data(c) match {
-                case a: Array[Int] =>
-                  val out = new Array[Int](m)
-                  var k = 0
-                  while (k < m) { out(k) = a(sel(k)); k += 1 }
-                  out
-                case a: Array[Double] =>
-                  val out = new Array[Double](m)
-                  var k = 0
-                  while (k < m) { out(k) = a(sel(k)); k += 1 }
-                  out
-                case d: DecodedStrings =>
-                  val st = new Array[Int](m)
-                  val ln = new Array[Int](m)
-                  var k = 0
-                  while (k < m) { st(k) = d.starts(sel(k)); ln(k) = d.lens(sel(k)); k += 1 }
-                  new DecodedStrings(d.data, st, ln, m) // arena shared, offsets only
-              }
-              vectorOf(compacted, cnb)
-            }
-            batch = new ColumnarBatch(vectors, m)
+            batch = new ColumnarBatch(requiredIdx.map(c => cursor.data(c).gather(sel, m): ColumnVector), m)
             m
           }
         }

@@ -1,6 +1,5 @@
 package graft.sources
 
-import graft.codec.DecodedStrings
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read.PartitionReader
@@ -45,9 +44,9 @@ object BtrTopN {
   * compared EQUAL to 0.0 (Spark normalizes floating sort keys, so a
   * boundary -0.0/0.0 pair must tie here too or the secondary key would be
   * ignored). Claimed exact filters are enforced before a row competes.
-  * Kept rows copy their values out of the chunk arenas (entries outlive
-  * the chunk); rejected rows — the overwhelming majority — compare via
-  * zero-copy views first.
+  * Rows compete on their vectors' zero-copy `key`s; only a kept row copies
+  * its keys and its output values (`boxed`, -0.0 intact) off the chunk
+  * arenas, so entries outlive the chunk.
   */
 final class BtrTopNReader(
     file: String,
@@ -68,10 +67,6 @@ final class BtrTopNReader(
 
   private final class Entry(val ks: Array[AnyRef], val out: Array[AnyRef])
 
-  /** Spark sorts all NaNs as one greatest double and -0.0 equal to 0.0. */
-  private def normD(v: Double): Double =
-    if (v == 0.0d) 0.0d else if (java.lang.Double.isNaN(v)) Double.NaN else v
-
   /** Query-order comparison of one key: negative = `a` sorts before `b`. */
   private def cmpKey(k: SortKeySpec, a: AnyRef, b: AnyRef): Int = {
     if (a == null || b == null) {
@@ -79,13 +74,7 @@ final class BtrTopNReader(
       else if (a == null) { if (k.nullsFirst) -1 else 1 }
       else { if (k.nullsFirst) 1 else -1 }
     } else {
-      val c = k.kind match {
-        case 1 => Integer.compare(a.asInstanceOf[java.lang.Integer].intValue,
-          b.asInstanceOf[java.lang.Integer].intValue)
-        case 2 => java.lang.Double.compare(a.asInstanceOf[java.lang.Double].doubleValue,
-          b.asInstanceOf[java.lang.Double].doubleValue)
-        case _ => a.asInstanceOf[UTF8String].compareTo(b.asInstanceOf[UTF8String])
-      }
+      val c = ArrayVector.compare(a, b)
       if (k.desc) -c else c
     }
   }
@@ -122,7 +111,7 @@ final class BtrTopNReader(
         !nullCanTieOrBeat && {
           val best: AnyRef = primary.kind match {
             case 1 => Int.box((if (primary.desc) z.lmax else z.lmin).toInt)
-            case 2 => Double.box(normD(java.lang.Double.longBitsToDouble(
+            case 2 => Double.box(ArrayVector.normD(java.lang.Double.longBitsToDouble(
               if (primary.desc) z.lmax else z.lmin)))
             case _ => UTF8String.fromBytes(if (primary.desc) z.smax else z.smin)
           }
@@ -137,43 +126,15 @@ final class BtrTopNReader(
   private def keyView(i: Int): Array[AnyRef] = {
     val ks = new Array[AnyRef](keys.length)
     var j = 0
-    while (j < keys.length) {
-      val c = keyCols(j)
-      if (ExactPred.isNull(cursor.nulls(c), i)) ks(j) = null
-      else ks(j) = cursor.data(c) match {
-        case a: Array[Int]     => Int.box(a(i))
-        case a: Array[Double]  => Double.box(normD(a(i)))
-        case d: DecodedStrings => UTF8String.fromBytes(d.data, d.starts(i), d.lens(i))
-      }
-      j += 1
-    }
+    while (j < keys.length) { ks(j) = cursor.data(keyCols(j)).key(i); j += 1 }
     ks
   }
 
-  private def copyVal(c: Int, i: Int): AnyRef =
-    if (ExactPred.isNull(cursor.nulls(c), i)) null
-    else cursor.data(c) match {
-      case a: Array[Int]    => Int.box(a(i))
-      case a: Array[Double] => Double.box(a(i)) // OUTPUT keeps the raw value (-0.0 intact)
-      case d: DecodedStrings =>
-        UTF8String.fromBytes(
-          java.util.Arrays.copyOfRange(d.data, d.starts(i), d.starts(i) + d.lens(i)))
-    }
-
   private def materialize(i: Int, view: Array[AnyRef]): Entry = {
-    val ks = new Array[AnyRef](keys.length)
-    var j = 0
-    while (j < keys.length) {
-      ks(j) = view(j) match {
-        case s: UTF8String => s.copy() // off the chunk arena
-        case v             => v
-      }
-      j += 1
-    }
     val out = new Array[AnyRef](requiredIdx.length)
     var o = 0
-    while (o < requiredIdx.length) { out(o) = copyVal(requiredIdx(o), i); o += 1 }
-    new Entry(ks, out)
+    while (o < requiredIdx.length) { out(o) = cursor.data(requiredIdx(o)).boxed(i); o += 1 }
+    new Entry(view.map(ArrayVector.detach), out)
   }
 
   private def consume(): java.util.Iterator[Entry] = {

@@ -1,6 +1,5 @@
 package graft.sources
 
-import graft.codec.DecodedStrings
 import graft.format.ColZone
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -47,17 +46,11 @@ sealed trait ExactPred extends Serializable {
   def colIdx: Int
   /** Every column this predicate reads (compounds may span several). */
   def cols: Seq[Int] = Seq(colIdx)
-  /** Does a NULL row satisfy this predicate? */
-  def matchesNull: Boolean
-  /** Non-null row `i` of the decoded column (caller dispatches nulls). */
-  def matches(decoded: AnyRef, i: Int): Boolean
-  /** Does row `i` satisfy this predicate? `data(c)` / `nulls(c)` are file
-    * column c's decoded values / validity bitmap (null when the column has
-    * no nulls). Leaves read their own column with no closure in the way;
-    * compounds compose across columns.
+  /** Does row `i` satisfy this predicate? `cols(c)` is file column c's
+    * decoded vector. Leaves read their own column with no closure in the
+    * way; compounds compose across columns.
     */
-  def matchesRow(data: Array[AnyRef], nulls: Array[Array[Byte]], i: Int): Boolean =
-    if (ExactPred.isNull(nulls(colIdx), i)) matchesNull else matches(data(colIdx), i)
+  def matchesRow(cols: Array[ArrayVector], i: Int): Boolean
   /** Can the unit's zones (one `ColZone` per column: a chunk's frame
     * header or a file's zone-index entry) PROVE no row matches? Sound
     * (never rejects a unit holding a match); compounds compose across
@@ -73,6 +66,14 @@ sealed trait ExactPred extends Serializable {
   * and unknown nulls, so it never rejects and never proves a match).
   */
 sealed trait LeafPred extends ExactPred {
+  /** Does a NULL row satisfy this predicate? */
+  def matchesNull: Boolean
+  /** Non-null row `i` of the column's vector (matchesRow dispatches nulls). */
+  def matches(vec: ArrayVector, i: Int): Boolean
+  final def matchesRow(cols: Array[ArrayVector], i: Int): Boolean = {
+    val vec = cols(colIdx)
+    if (vec.isNullAt(i)) matchesNull else matches(vec, i)
+  }
   final def rejects(zs: IndexedSeq[ColZone]): Boolean = rejects(ColZone.of(zs, colIdx))
   final def allMatch(zs: IndexedSeq[ColZone]): Boolean = allMatch(ColZone.of(zs, colIdx))
   def rejects(z: ColZone): Boolean
@@ -82,19 +83,15 @@ sealed trait LeafPred extends ExactPred {
 object ExactPred {
   /** Spark's double ordering: -0.0 == 0.0, NaN greatest, NaN == NaN. */
   @inline def cmpD(a: Double, b: Double): Int =
-    java.lang.Double.compare(if (a == 0.0) 0.0 else a, if (b == 0.0) 0.0 else b)
-
-  @inline def isNull(nb: Array[Byte], i: Int): Boolean =
-    nb != null && ((nb(i >> 3) >> (i & 7)) & 1) == 1
+    java.lang.Double.compare(ArrayVector.normD(a), ArrayVector.normD(b))
 
   /** Does row `i` satisfy every predicate? THE row-match loop of the
     * readers (see `matchesRow` for the column layout).
     */
-  def rowMatches(preds: Array[ExactPred], data: Array[AnyRef], nulls: Array[Array[Byte]],
-      i: Int): Boolean = {
+  def rowMatches(preds: Array[ExactPred], cols: Array[ArrayVector], i: Int): Boolean = {
     var p = 0
     while (p < preds.length) {
-      if (!preds(p).matchesRow(data, nulls, i)) return false
+      if (!preds(p).matchesRow(cols, i)) return false
       p += 1
     }
     true
@@ -123,9 +120,9 @@ object StrOp { val GT = 0; val GTE = 1; val LT = 2; val LTE = 3; val EQ = 4 }
 /** value ∈ [lo, hi] over an INT column (bounds pre-rounded to ints). */
 case class IntCmpPred(colIdx: Int, lo: Long, hi: Long) extends LeafPred {
   def matchesNull = false
-  def matches(decoded: AnyRef, i: Int): Boolean = {
-    val v = decoded.asInstanceOf[Array[Int]](i).toLong
-    v >= lo && v <= hi
+  def matches(vec: ArrayVector, i: Int): Boolean = {
+    val x = vec.getInt(i).toLong
+    x >= lo && x <= hi
   }
   def rejects(z: ColZone): Boolean =
     z.kind == 1 && (z.lmax < lo || z.lmin > hi)
@@ -141,9 +138,9 @@ case class IntCmpPred(colIdx: Int, lo: Long, hi: Long) extends LeafPred {
 case class DoubleCmpPred(colIdx: Int, lo: Double, hi: Double) extends LeafPred {
   import ExactPred.cmpD
   def matchesNull = false
-  def matches(decoded: AnyRef, i: Int): Boolean = {
-    val v = decoded.asInstanceOf[Array[Double]](i)
-    cmpD(v, lo) >= 0 && cmpD(v, hi) <= 0
+  def matches(vec: ArrayVector, i: Int): Boolean = {
+    val x = vec.getDouble(i)
+    cmpD(x, lo) >= 0 && cmpD(x, hi) <= 0
   }
   def rejects(z: ColZone): Boolean =
     z.kind == 2 &&
@@ -164,10 +161,8 @@ case class StringCmpPred(colIdx: Int, op: Int, v: UTF8String) extends LeafPred {
   import ExactPred.cmpB
   @transient private lazy val vb: Array[Byte] = v.getBytes
   def matchesNull = false
-  def matches(decoded: AnyRef, i: Int): Boolean = {
-    val d = decoded.asInstanceOf[DecodedStrings]
-    val c = java.util.Arrays.compareUnsigned(
-      d.data, d.starts(i), d.starts(i) + d.lens(i), vb, 0, vb.length)
+  def matches(vec: ArrayVector, i: Int): Boolean = {
+    val c = java.util.Arrays.compareUnsigned(vec.arena, vec.start(i), vec.end(i), vb, 0, vb.length)
     op match {
       case StrOp.GT  => c > 0
       case StrOp.GTE => c >= 0
@@ -199,8 +194,8 @@ case class StringCmpPred(colIdx: Int, op: Int, v: UTF8String) extends LeafPred {
 case class IntInPred(colIdx: Int, vs: Seq[Long]) extends LeafPred {
   @transient private lazy val sorted: Array[Long] = vs.distinct.sorted.toArray
   def matchesNull = false
-  def matches(decoded: AnyRef, i: Int): Boolean =
-    java.util.Arrays.binarySearch(sorted, decoded.asInstanceOf[Array[Int]](i).toLong) >= 0
+  def matches(vec: ArrayVector, i: Int): Boolean =
+    java.util.Arrays.binarySearch(sorted, vec.getInt(i).toLong) >= 0
   def rejects(z: ColZone): Boolean = z.kind == 1 && {
     val p = ExactPred.insertionPoint(java.util.Arrays.binarySearch(sorted, z.lmin))
     p == sorted.length || sorted(p) > z.lmax
@@ -210,31 +205,31 @@ case class IntInPred(colIdx: Int, vs: Seq[Long]) extends LeafPred {
       java.util.Arrays.binarySearch(sorted, z.lmin) >= 0
 }
 
-/** IN over a DOUBLE column: members normalized (-0.0 → 0.0) and sorted in
-  * Spark's double order (java's total order, NaN greatest; a NaN member
-  * matches NaN rows and never lies inside a zone).
+/** IN over a DOUBLE column: members normalized (`ArrayVector.normD`) and
+  * sorted in Spark's double order (java's total order, NaN greatest; a NaN
+  * member matches NaN rows and never lies inside a zone).
   */
 case class DoubleInPred(colIdx: Int, vs: Seq[Double]) extends LeafPred {
+  import ArrayVector.normD
   import ExactPred.cmpD
-  @inline private def norm(v: Double): Double = if (v == 0.0) 0.0 else v
   @transient private lazy val sorted: Array[Double] = {
-    val a = vs.map(norm).toArray
+    val a = vs.map(normD).toArray
     java.util.Arrays.sort(a)
     a
   }
   def matchesNull = false
-  def matches(decoded: AnyRef, i: Int): Boolean =
-    java.util.Arrays.binarySearch(sorted, norm(decoded.asInstanceOf[Array[Double]](i))) >= 0
+  def matches(vec: ArrayVector, i: Int): Boolean =
+    java.util.Arrays.binarySearch(sorted, normD(vec.getDouble(i))) >= 0
   def rejects(z: ColZone): Boolean = z.kind == 2 && {
     val p = ExactPred.insertionPoint(java.util.Arrays.binarySearch(sorted,
-      norm(java.lang.Double.longBitsToDouble(z.lmin))))
+      normD(java.lang.Double.longBitsToDouble(z.lmin))))
     p == sorted.length || cmpD(sorted(p), java.lang.Double.longBitsToDouble(z.lmax)) > 0
   }
   def allMatch(z: ColZone): Boolean =
     z.kind == 2 && z.nullCount == 0 && {
       val mn = java.lang.Double.longBitsToDouble(z.lmin)
       cmpD(mn, java.lang.Double.longBitsToDouble(z.lmax)) == 0 &&
-        java.util.Arrays.binarySearch(sorted, norm(mn)) >= 0
+        java.util.Arrays.binarySearch(sorted, normD(mn)) >= 0
     }
 }
 
@@ -264,10 +259,7 @@ case class StringInPred(colIdx: Int, vs: Seq[UTF8String]) extends LeafPred {
     p < sorted.length && cmp(p, data, from, to) == 0
   }
   def matchesNull = false
-  def matches(decoded: AnyRef, i: Int): Boolean = {
-    val d = decoded.asInstanceOf[DecodedStrings]
-    contains(d.data, d.starts(i), d.starts(i) + d.lens(i))
-  }
+  def matches(vec: ArrayVector, i: Int): Boolean = contains(vec.arena, vec.start(i), vec.end(i))
   def rejects(z: ColZone): Boolean = z.kind == 3 && {
     val mn = z.smin
     val mx = z.smax
@@ -290,11 +282,9 @@ case class StartsWithPred(colIdx: Int, prefix: UTF8String) extends LeafPred {
   @transient private lazy val pb: Array[Byte] = prefix.getBytes
   @transient private lazy val succ: Array[Byte] = ExactPred.successor(pb)
   def matchesNull = false
-  def matches(decoded: AnyRef, i: Int): Boolean = {
-    val d = decoded.asInstanceOf[DecodedStrings]
-    d.lens(i) >= pb.length && java.util.Arrays.equals(
-      d.data, d.starts(i), d.starts(i) + pb.length, pb, 0, pb.length)
-  }
+  def matches(vec: ArrayVector, i: Int): Boolean =
+    vec.end(i) - vec.start(i) >= pb.length && java.util.Arrays.equals(
+      vec.arena, vec.start(i), vec.start(i) + pb.length, pb, 0, pb.length)
   def rejects(z: ColZone): Boolean =
     z.kind == 3 &&
       (cmpB(z.smax, pb) < 0 || (succ != null && cmpB(z.smin, succ) >= 0))
@@ -307,11 +297,9 @@ case class StartsWithPred(colIdx: Int, prefix: UTF8String) extends LeafPred {
 case class EndsWithPred(colIdx: Int, suffix: UTF8String) extends LeafPred {
   @transient private lazy val sb: Array[Byte] = suffix.getBytes
   def matchesNull = false
-  def matches(decoded: AnyRef, i: Int): Boolean = {
-    val d = decoded.asInstanceOf[DecodedStrings]
-    val off = d.starts(i) + d.lens(i) - sb.length
-    d.lens(i) >= sb.length && java.util.Arrays.equals(
-      d.data, off, off + sb.length, sb, 0, sb.length)
+  def matches(vec: ArrayVector, i: Int): Boolean = {
+    val off = vec.end(i) - sb.length
+    off >= vec.start(i) && java.util.Arrays.equals(vec.arena, off, vec.end(i), sb, 0, sb.length)
   }
   def rejects(z: ColZone): Boolean = false
   def allMatch(z: ColZone): Boolean = false
@@ -323,13 +311,13 @@ case class EndsWithPred(colIdx: Int, suffix: UTF8String) extends LeafPred {
 case class ContainsPred(colIdx: Int, needle: UTF8String) extends LeafPred {
   @transient private lazy val nb: Array[Byte] = needle.getBytes
   def matchesNull = false
-  def matches(decoded: AnyRef, i: Int): Boolean = {
-    val d = decoded.asInstanceOf[DecodedStrings]
+  def matches(vec: ArrayVector, i: Int): Boolean = {
     if (nb.length == 0) return true
-    val end = d.starts(i) + d.lens(i) - nb.length
-    var o = d.starts(i)
+    val data = vec.arena
+    val end = vec.end(i) - nb.length
+    var o = vec.start(i)
     while (o <= end) {
-      if (java.util.Arrays.equals(d.data, o, o + nb.length, nb, 0, nb.length)) return true
+      if (java.util.Arrays.equals(data, o, o + nb.length, nb, 0, nb.length)) return true
       o += 1
     }
     false
@@ -344,18 +332,13 @@ case class ContainsPred(colIdx: Int, needle: UTF8String) extends LeafPred {
   * pass-composition is plain `||` through matchesRow, each leaf consulting
   * its own column's null state. A unit is rejected only when BOTH sides
   * reject it (each against its own column's zone); either side proving
-  * every row proves the OR. The single-column matches/matchesNull path is
-  * never sound for a compound and fails loudly if called.
+  * every row proves the OR.
   */
 case class OrPred(l: ExactPred, r: ExactPred) extends ExactPred {
   def colIdx: Int = l.colIdx
   override def cols: Seq[Int] = (l.cols ++ r.cols).distinct
-  def matchesNull: Boolean =
-    throw new UnsupportedOperationException("compound predicates evaluate via matchesRow")
-  def matches(decoded: AnyRef, i: Int): Boolean =
-    throw new UnsupportedOperationException("compound predicates evaluate via matchesRow")
-  override def matchesRow(data: Array[AnyRef], nulls: Array[Array[Byte]], i: Int): Boolean =
-    l.matchesRow(data, nulls, i) || r.matchesRow(data, nulls, i)
+  def matchesRow(cols: Array[ArrayVector], i: Int): Boolean =
+    l.matchesRow(cols, i) || r.matchesRow(cols, i)
   def rejects(zs: IndexedSeq[ColZone]): Boolean = l.rejects(zs) && r.rejects(zs)
   def allMatch(zs: IndexedSeq[ColZone]): Boolean = l.allMatch(zs) || r.allMatch(zs)
 }
@@ -368,12 +351,8 @@ case class OrPred(l: ExactPred, r: ExactPred) extends ExactPred {
 case class AndPred(l: ExactPred, r: ExactPred) extends ExactPred {
   def colIdx: Int = l.colIdx
   override def cols: Seq[Int] = (l.cols ++ r.cols).distinct
-  def matchesNull: Boolean =
-    throw new UnsupportedOperationException("compound predicates evaluate via matchesRow")
-  def matches(decoded: AnyRef, i: Int): Boolean =
-    throw new UnsupportedOperationException("compound predicates evaluate via matchesRow")
-  override def matchesRow(data: Array[AnyRef], nulls: Array[Array[Byte]], i: Int): Boolean =
-    l.matchesRow(data, nulls, i) && r.matchesRow(data, nulls, i)
+  def matchesRow(cols: Array[ArrayVector], i: Int): Boolean =
+    l.matchesRow(cols, i) && r.matchesRow(cols, i)
   def rejects(zs: IndexedSeq[ColZone]): Boolean = l.rejects(zs) || r.rejects(zs)
   def allMatch(zs: IndexedSeq[ColZone]): Boolean = l.allMatch(zs) && r.allMatch(zs)
 }
@@ -381,7 +360,7 @@ case class AndPred(l: ExactPred, r: ExactPred) extends ExactPred {
 /** IS NULL (also `col <=> NULL`): rejects a unit KNOWN to hold no null. */
 case class IsNullPred(colIdx: Int) extends LeafPred {
   def matchesNull = true
-  def matches(decoded: AnyRef, i: Int): Boolean = false
+  def matches(vec: ArrayVector, i: Int): Boolean = false
   def rejects(z: ColZone): Boolean = z.nullCount == 0L
   def allMatch(z: ColZone): Boolean = z.nullCount > 0 && z.nullCount == z.rows
 }
@@ -389,7 +368,7 @@ case class IsNullPred(colIdx: Int) extends LeafPred {
 /** IS NOT NULL: rejects a unit KNOWN to be all-null. */
 case class NotNullPred(colIdx: Int) extends LeafPred {
   def matchesNull = false
-  def matches(decoded: AnyRef, i: Int): Boolean = true
+  def matches(vec: ArrayVector, i: Int): Boolean = true
   def rejects(z: ColZone): Boolean = z.nullCount > 0 && z.nullCount == z.rows
   def allMatch(z: ColZone): Boolean = z.nullCount == 0
 }

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.codec._
-import graft.engine.{BlockFiles, FrameHeader}
+import graft.engine.{BlockFiles, BtrEncoder, FrameHeader}
 import graft.format.ColZone
 import org.apache.hadoop.fs.Path
 
@@ -9,8 +9,9 @@ import org.apache.hadoop.fs.Path
   * header, then yields per-chunk frame headers (row count, per-column
   * types, blob lengths, one `ColZone` per column and the validity bitmaps)
   * with the blobs consumed on demand, and decodes a column's blob by its
-  * type (`decodeColumn`, the ONE per-chunk decode). Every DSv2 reader
-  * reads through `ChunkCursor`, the one chunk loop above it; tests and the
+  * type into an `ArrayVector` that carries the column's bitmap
+  * (`decodeColumn`, the ONE per-chunk decode). Every DSv2 reader reads
+  * through `ChunkCursor`, the one chunk loop above it; tests and the
   * per-layer benchmark call it directly.
   *
   * Every read is wrapped with file + offset + chunk context: at 100 TB a
@@ -44,10 +45,6 @@ final class FrameReader(file: String, conf: org.apache.hadoop.conf.Configuration
     * evaluate them); read one column through `zone`.
     */
   def zones: IndexedSeq[ColZone] = zs
-  /** Per-column validity bitmaps (bit i set = row i NULL; null when the
-    * column has no nulls).
-    */
-  def nullBits: Array[Array[Byte]] = h.nullBits
   /** Column `c`'s zone (`ColZone.of`: none beyond the chunk's width). */
   def zone(c: Int): ColZone = ColZone.of(zones, c)
 
@@ -136,29 +133,35 @@ final class FrameReader(file: String, conf: org.apache.hadoop.conf.Configuration
     b
   }
 
-  /** Read and decode column `c`'s blob by its column type: Array[Int],
-    * Array[Double] or DecodedStrings (one arena, no per-string arrays).
-    * NULL rows hold placeholders, masked by `nullBits(c)`. An unknown type
-    * or a decoded count other than the frame's (CRC-covered) `numRows` is
-    * a named corruption, so no reader folds or emits a short or long
-    * column.
+  /** Read and decode column `c`'s blob by its column type into the
+    * matching `ArrayVector` (strings as one arena, no per-string arrays),
+    * carrying the column's validity bitmap; NULL rows hold placeholders.
+    * An unknown type or a decoded count other than the frame's
+    * (CRC-covered) `numRows` is a named corruption, so no reader folds or
+    * emits a short or long column.
     */
-  def decodeColumn(c: Int): AnyRef = {
+  def decodeColumn(c: Int): ArrayVector = {
     val blob = readBlob(c)
     val t = colType(c)
-    val values: AnyRef =
-      if (t == ColType.Integer.toInt) IntCodec.decode(blob)
-      else if (t == ColType.Double.toInt) DoubleCodec.decode(blob)
-      else if (t == ColType.String.toInt) StringCodec.decodeSlices(new BufReader(blob))
-      else fail(s"unknown column type $t for column $c")
-    val n = values match {
-      case a: Array[Int]     => a.length
-      case a: Array[Double]  => a.length
-      case d: DecodedStrings => d.count
-    }
+    val nb = h.nullBits(c)
+    val (v, n) =
+      if (t == ColType.Integer.toInt) {
+        val a = IntCodec.decode(blob)
+        (new IntArrayVector(a, nb), a.length)
+      } else if (t == ColType.Double.toInt) {
+        val a = DoubleCodec.decode(blob)
+        (new DoubleArrayVector(a, nb), a.length)
+      } else if (t == ColType.String.toInt) {
+        val d = StringCodec.decodeSlices(new BufReader(blob))
+        (new StringArenaVector(d, nb), d.count)
+      } else fail(s"unknown column type $t for column $c")
     if (n != numRows) fail(s"column $c decoded $n values but the frame declares $numRows rows")
-    values
+    v
   }
+
+  /** Column `c`'s validity alone, from the header: no blob is read. */
+  def validity(c: Int): ArrayVector =
+    new ValidityVector(BtrEncoder.sparkType(colType(c)), h.nullBits(c))
 
   /** Skip all remaining unread blobs of the current chunk. */
   def finishChunk(): Unit = {

@@ -309,6 +309,30 @@ class OpsSpec extends AnyFunSuite {
       e.getMessage.contains("corpus vector 77 has dimension 6")), c.toString)
   }
 
+  test("brute-force, IVF and embedding-pair cosines refuse mixed dimensions") {
+    def failure(f: => Any): String = {
+      val e = intercept[Exception](f)
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case a: IllegalArgumentException => a.getMessage }
+        .getOrElse(fail(s"no IllegalArgumentException in $e"))
+    }
+    val rnd = new scala.util.Random(23)
+    val corpus = (1L to 40L).map(i => (i, Array.fill(8)(rnd.nextGaussian().toFloat)))
+    val mixed = (corpus :+ ((77L, Array.fill(6)(1f)))).toDF("vec_id", "embedding").repartition(2)
+    val queryDf = corpus.take(2).toDF("vec_id", "embedding")
+    val brute = failure(SimilarityOps.bruteForceTopK(mixed, queryDf, "vec_id", "embedding", 3).collect())
+    assert(brute.contains("has dimension 8") && brute.contains("vector 77 has dimension 6"), brute)
+    val ivf = failure(SimilarityOps.ivfTopK(mixed, queryDf, "vec_id", "embedding", 3).collect())
+    // the sample's first vector sets the dimension: either side may be named
+    assert(ivf.contains("ivfTopK: ") && ivf.contains("dimension 6") && ivf.contains("dimension 8"), ivf)
+    // planes = 0 puts every vector in one bucket: a dim-8 vector and its
+    // dim-6 prefix meet there, and over the prefix alone they score 1.0
+    val v8 = Array.tabulate(8)(i => (i + 1).toFloat)
+    val prefix = Seq((1L, v8), (2L, v8.take(6))).toDF("vec_id", "embedding")
+    val pairs = failure(DedupOps.embeddingPairs(prefix, "vec_id", "embedding", planes = 0).collect())
+    assert(pairs.contains("vector 1 has dimension 8") && pairs.contains("vector 2 has dimension 6"), pairs)
+  }
+
   test("ivfTopK: self-match is rank 1, recall overlaps brute force") {
     val rnd = new scala.util.Random(17)
     val corpus = (1L to 400L).map(i => (i, Array.fill(8)(rnd.nextGaussian().toFloat)))

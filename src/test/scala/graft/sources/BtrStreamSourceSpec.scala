@@ -98,7 +98,7 @@ class BtrStreamSourceSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("pushed filters prune inside the streaming scan (zone skip + claiming)") {
+  test("a filtered stream returns the matching rows of every batch") {
     val dir = tmp("filter")
     val ckpt = tmp("filter_ckpt")
     // ordered ids -> tight chunk zones inside each batch file

@@ -126,6 +126,32 @@ class NullsSpec extends AnyFunSuite {
     plain.foreach(v => assert(!v.hasNull && v.numNulls == 0 && !v.isNullAt(1)))
     assert(new StringArenaVector(strs).getUTF8String(2).toString == "ccc")
 
+    // gather compacts values and bitmap; 9 rows is not a whole bitmap byte
+    val iv10 = new IntArrayVector(Array.tabulate(10)(_ * 10), Array[Byte](0x21, 0x02)) // 0, 5, 9 NULL
+    val g = iv10.gather(Array(0, 2, 3, 4, 5, 6, 7, 8, 9), 9)
+    assert(g.hasNull && g.numNulls == 3 && (0 until 9).filter(g.isNullAt) == Seq(0, 4, 8))
+    assert(g.getInt(1) == 20 && g.getInt(3) == 40 && g.getInt(7) == 80)
+    // a selection with no NULL row drops the bitmap
+    val g3 = iv10.gather(Array(1, 2, 3), 3)
+    assert(!g3.hasNull && g3.numNulls == 0 && g3.getInts(0, 3).toSeq == Seq(10, 20, 30))
+    // keys normalize -0.0 and every NaN; raw boxed values keep -0.0
+    val odd = java.lang.Double.longBitsToDouble(0x7ff8000000000001L) // a NaN with a payload
+    val dk = new DoubleArrayVector(Array(-0.0, Double.NaN, odd, 1.5), Array[Byte](0x08)) // row 3 NULL
+    def bitsOf(x: AnyRef): Long = java.lang.Double.doubleToRawLongBits(x.asInstanceOf[java.lang.Double])
+    assert(bitsOf(dk.key(0)) == 0L && bitsOf(dk.boxed(0)) == java.lang.Double.doubleToRawLongBits(-0.0))
+    assert(bitsOf(dk.key(1)) == bitsOf(dk.key(2)) && dk.key(2).asInstanceOf[java.lang.Double].isNaN)
+    assert(dk.key(3) == null && dk.boxed(3) == null && iv.key(0) == null && iv.key(1) == Int.box(8))
+    // a string gather shares the arena; a key views it, a boxed value copies it
+    val sg = sv.gather(Array(1, 2), 2)
+    assert((sg.arena eq strs.data) && sg.getUTF8String(0).toString == "bb" && sg.isNullAt(1))
+    val sk = sv.key(1).asInstanceOf[org.apache.spark.unsafe.types.UTF8String]
+    val sb = sv.boxed(1).asInstanceOf[org.apache.spark.unsafe.types.UTF8String]
+    assert((sk.getBaseObject eq strs.data) && (sb.getBaseObject ne strs.data) && sk == sb)
+    // a validity-only vector answers nulls and refuses values
+    val vv = new ValidityVector(org.apache.spark.sql.types.IntegerType, bits)
+    assert(vv.isNullAt(0) && !vv.isNullAt(1) && vv.numNulls == 2)
+    intercept[UnsupportedOperationException](vv.getInt(1))
+
     // the DSv2 reader's batches carry the bitmaps: the all-null chunk of s_n
     val dir = tmp("vectors")
     BlockFiles.write(nullDf.coalesce(1), dir, BtrConfig(blockSize = 256))
